@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from xlink_spark import driver_queries as DQ  # noqa: E402
 from xlink_spark.flagship import linking_pipeline  # noqa: E402
+from xlink_spark.plans.storage import registry  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -29,10 +30,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """SQL-expressible operators (oracle-checked) + the flagship (rows-only)."""
     # The flagship LEADS the dict so correctness tooling that samples a
     # prefix of the registry always covers it; DQ.QUERIES is itself
-    # ordered product-first (see its definition).
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        "linking_pipeline": linking_pipeline  # UDF path: rows-only check
-    }
+    # ordered product-first (see its definition). Building any query
+    # releases the storage of the previous one (xlink_spark.plans.storage).
+    out: dict[str, Callable[[SparkSession, str], DataFrame]] = registry(
+        {"linking_pipeline": linking_pipeline}  # UDF path: rows-only check
+    )
     out.update(DQ.QUERIES)
     return out
 

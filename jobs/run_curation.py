@@ -22,8 +22,8 @@ committed snapshot. One JSON metrics line on stdout.
 The chain is plans/curation.curate_corpus: exact dedup (windowed drops) →
 quality gate → Gopher repetition gate → MinHash-LSH near-dup →
 decontamination vs --eval-docs → optional PII redaction; every expensive
-stage runs exactly once per job (the id-only drop-list is persisted and
-both outputs derive from it).
+stage runs exactly once per job (the id-only drop-list is checkpointed
+and both outputs derive from it).
 """
 
 from __future__ import annotations
@@ -32,9 +32,13 @@ import argparse
 import json
 import time
 
+from xlink_spark.plans.storage import scope
 
+
+@scope()
 def run_curation_job(spark, args) -> dict:
-    """The job body, importable for in-session testing."""
+    """The job body, importable for in-session testing. It runs in its own
+    storage scope: every frame it caches or checkpoints is freed on return."""
     from xlink_spark.plans.curation import curate_corpus
 
     quarantined = 0
@@ -48,7 +52,6 @@ def run_curation_job(spark, args) -> dict:
         docs = spark.read.parquet(args.documents)
     eval_docs = spark.read.parquet(args.eval_docs) if args.eval_docs else None
 
-    held: list = []
     kept, audit, drops = curate_corpus(
         docs,
         eval_docs,
@@ -58,43 +61,38 @@ def run_curation_job(spark, args) -> dict:
         redact=args.redact,
         neardup_threshold=args.neardup_threshold,
         contamination_ngram=args.contamination_ngram,
-        persisted_out=held,
     )
-    try:
-        if args.snapshots:
-            from xlink_spark.plans.snapshots import SnapshotStore
+    if args.snapshots:
+        from xlink_spark.plans.snapshots import SnapshotStore
 
-            store = SnapshotStore(args.snapshots)
-            drops_manifest = store.commit_table("curation_drops", drops)
-            audit_counts = {r["stage"]: r["n_dropped"] for r in audit.collect()}
-            kept_manifest = store.commit_table("curated_docs", kept, metrics=audit_counts)
-            # counts come from the committed manifests (parquet footers read
-            # driver-side at commit) — no recount jobs over the written data
-            n_kept = kept_manifest["rows"]
-            n_dropped = drops_manifest["rows"]
+        store = SnapshotStore(args.snapshots)
+        drops_manifest = store.commit_table("curation_drops", drops)
+        audit_counts = {r["stage"]: r["n_dropped"] for r in audit.collect()}
+        kept_manifest = store.commit_table("curated_docs", kept, metrics=audit_counts)
+        # counts come from the committed manifests (parquet footers read
+        # driver-side at commit) — no recount jobs over the written data
+        n_kept = kept_manifest["rows"]
+        n_dropped = drops_manifest["rows"]
+    else:
+        import os
+
+        from xlink_spark.plans.snapshots import parquet_dir_rows
+
+        drops.write.mode("overwrite").parquet(f"{args.output}/drops")
+        kept.write.mode("overwrite").parquet(f"{args.output}/kept")
+        audit_counts = {r["stage"]: r["n_dropped"] for r in audit.collect()}
+        # counts from the written files' parquet footers (driver-side
+        # metadata) — no recount job over data this job just wrote; the
+        # footer walk only sees the LOCAL filesystem, so a remote output
+        # URI (s3a://, hdfs://) falls back to a Spark count instead of
+        # silently reporting 0
+        kept_dir = f"{args.output}/kept"
+        if os.path.isdir(kept_dir):
+            n_kept = parquet_dir_rows(kept_dir)
         else:
-            import os
-
-            from xlink_spark.plans.snapshots import parquet_dir_rows
-
-            drops.write.mode("overwrite").parquet(f"{args.output}/drops")
-            kept.write.mode("overwrite").parquet(f"{args.output}/kept")
-            audit_counts = {r["stage"]: r["n_dropped"] for r in audit.collect()}
-            # counts from the written files' parquet footers (driver-side
-            # metadata) — no recount job over data this job just wrote; the
-            # footer walk only sees the LOCAL filesystem, so a remote output
-            # URI (s3a://, hdfs://) falls back to a Spark count instead of
-            # silently reporting 0
-            kept_dir = f"{args.output}/kept"
-            if os.path.isdir(kept_dir):
-                n_kept = parquet_dir_rows(kept_dir)
-            else:
-                n_kept = spark.read.parquet(kept_dir).count()
-            n_dropped = sum(audit_counts.values())
-        audit.write.mode("overwrite").parquet(f"{args.output}/audit")
-    finally:
-        for h in held:
-            h.unpersist()
+            n_kept = spark.read.parquet(kept_dir).count()
+        n_dropped = sum(audit_counts.values())
+    audit.write.mode("overwrite").parquet(f"{args.output}/audit")
     return {
         "n_in": n_kept + n_dropped + quarantined,
         "n_kept": n_kept,

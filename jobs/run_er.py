@@ -66,9 +66,13 @@ import time
 
 from pyspark.sql import functions as F
 
+from xlink_spark.plans.storage import hold, scope
 
+
+@scope()
 def run_er_job(spark, args) -> dict:
-    """The job body, importable for in-session testing."""
+    """The job body, importable for in-session testing. It runs in its own
+    storage scope: every frame it caches or checkpoints is freed on return."""
     from xlink_spark.operators.cluster import connected_components
     from xlink_spark.operators.linkage import (
         fs_em_weights,
@@ -362,472 +366,462 @@ def run_er_job(spark, args) -> dict:
     if args.label_expr:
         vec = vec.withColumn("_is_match", F.expr(args.label_expr))
     # vec fans out (weights + scoring); persist the narrow boolean rows
-    vec = vec.persist()
-    rep = None
+    vec = hold(vec)
     weights_repair = None
     repair_fields = []
-    try:
-        if level_fields:
-            from xlink_spark.operators.linkage import (
-                fs_score_levels,
-                match_weights_levels,
-            )
-
-            fl = {
-                f"lvl_{f}": (3 if f in level_fields else 2) for f in fields
-            }
-            weights = match_weights_levels(vec, fl, "_is_match")
-            mode = "supervised_levels"
-            scores = fs_score_levels(vec, weights, list(fl), ["id_a", "id_b"])
-        elif args.label_expr:
-            weights = match_weights(vec, agree_cols, "_is_match")
-            mode = "supervised"
-            scores = fs_score(vec, weights, agree_cols, ["id_a", "id_b"])
-        else:
-            weights = fs_em_weights(vec, agree_cols, iterations=args.em_iterations)
-            mode = "em"
-            scores = fs_score(vec, weights, agree_cols, ["id_a", "id_b"])
-        tf_fields = [
-            c.strip()
-            for c in (getattr(args, "tf_adjust_fields", None) or "").split(",")
-            if c.strip()
-        ]
-        bad_tf = [f for f in tf_fields if f not in fields or f in jw_fields]
-        if bad_tf:
-            raise ValueError(
-                "--tf-adjust-fields must name equality-compared --fields "
-                f"(not jw): {sorted(bad_tf)}"
-            )
-        if tf_fields and level_fields:
-            raise ValueError(
-                "--tf-adjust-fields cannot combine with --level-fields "
-                "(the tf swap is defined on the binary agreement weight)"
-            )
-        if tf_fields:
-            # Winkler term-frequency adjustment: pairs agreeing on a field
-            # swap the global agreement weight for the value-specific one.
-            # Both-NULL agreements (null-safe equality) have no shared
-            # value to look up, so they keep the global weight.
-            from xlink_spark.operators.linkage import (
-                tf_adjust_scores,
-                tf_value_weights,
-            )
-
-            for f in tf_fields:
-                tfw = tf_value_weights(recs, f, weights, f"agree_{f}")
-                agreeing = (
-                    vec.filter(F.col(f"agree_{f}"))
-                    .join(
-                        recs.select(
-                            F.col(idc).alias("id_a"), F.col(f).alias("value")
-                        ),
-                        "id_a",
-                    )
-                    .select("id_a", "id_b", "value")
-                )
-                scores = tf_adjust_scores(
-                    scores, agreeing, tfw, weights, f"agree_{f}",
-                    ["id_a", "id_b"],
-                ).select(
-                    "id_a",
-                    "id_b",
-                    F.col("score_tf_micro").alias("score_micro"),
-                )
-        if getattr(args, "posteriors", False):
-            # P(match | evidence): Bayes posterior from the FS score and
-            # the Laplace-smoothed prior odds. Supervised mode derives the
-            # prior from the labels; EM mode has none — require labels.
-            if not args.label_expr:
-                raise ValueError("--posteriors requires --label-expr")
-            from xlink_spark.operators.linkage import match_posteriors
-
-            prior = vec.agg(
-                (
-                    F.sum(F.when(F.col("_is_match"), 1).otherwise(0))
-                    + F.lit(1)
-                ).cast("long").alias("prior_num"),
-                (F.count(F.lit(1)) + F.lit(2)).cast("long").alias("prior_den"),
-            )
-            scores = match_posteriors(scores, prior)
-        review_lower = getattr(args, "review_lower_micro", None)
-        n_review = None
-        if review_lower is not None:
-            # FS two-threshold mode: [lower, upper) is the clerical-review
-            # band, written under output/review; only >= upper auto-links
-            from xlink_spark.operators.linkage import fs_decide
-
-            decided = fs_decide(
-                scores,
-                upper_micro=int(args.threshold_micro),
-                lower_micro=int(review_lower),
-            )
-            review = decided.filter(F.col("decision") == "possible")
-            review.write.mode("overwrite").parquet(f"{args.output}/review")
-            n_review = (
-                spark.read.parquet(f"{args.output}/review").count()
-            )
-        edges = scores.filter(
-            F.col("score_micro") >= F.lit(int(args.threshold_micro))
-        ).select(
-            F.col("id_a").cast("long").alias("src"),
-            F.col("id_b").cast("long").alias("dst"),
-            "score_micro",
+    if level_fields:
+        from xlink_spark.operators.linkage import (
+            fs_score_levels,
+            match_weights_levels,
         )
-        repair_fields = [
-            c.strip()
-            for c in (getattr(args, "repair_fields", None) or "").split(",")
-            if c.strip()
-        ]
-        cluster_algo = getattr(args, "cluster_algo", None) or "cc"
-        if cluster_algo not in (
-            "cc", "star", "center", "merge_center", "pivot", "one_to_one"
-        ):
-            raise ValueError(
-                "--cluster-algo must be cc, star, center, merge_center, "
-                f"pivot or one_to_one, got {cluster_algo!r}"
-            )
-        if repair_fields and cluster_algo in (
-            "star", "center", "pivot", "one_to_one"
-        ):
-            raise ValueError(
-                "--repair-fields repairs transitive chain merges; "
-                f"{cluster_algo} clusters cannot chain-merge — drop one "
-                "of the two flags"
-            )
-        if repair_fields:
-            # Escalation repair (linkage.repair_chain_merges): chain-merged
-            # clusters — components glued together by transitivity around a
-            # pair the scorer itself rejected — are re-adjudicated by a
-            # STRONGER comparator that adds the --repair-fields columns
-            # (the expensive fields a deployment consults only on demand).
-            dup = [f for f in repair_fields if f in fields]
-            if dup:
-                raise ValueError(
-                    f"--repair-fields already in --fields: {sorted(dup)}"
-                )
-            missing = [f for f in repair_fields if f not in recs.columns]
-            if missing:
-                raise ValueError(
-                    f"--repair-fields not in the records: {sorted(missing)}"
-                )
-            from xlink_spark.operators.linkage import repair_chain_merges
 
-            strong_fields = fields + repair_fields
-            # base-field agreements are already sitting in the persisted
-            # vec (including _is_match) — join ONLY the repair columns
-            # against the pairs instead of re-running every comparator
-            ra_r = recs.select(
-                F.col(idc).alias("id_a"),
-                *[F.col(f).alias(f"_a_{f}") for f in repair_fields],
-            )
-            rb_r = recs.select(
-                F.col(idc).alias("id_b"),
-                *[F.col(f).alias(f"_b_{f}") for f in repair_fields],
-            )
-            vec_extra = pairs.join(ra_r, "id_a").join(rb_r, "id_b").select(
-                "id_a", "id_b", *[_agree(f) for f in repair_fields]
-            )
-            if level_fields:
-                # reconstruct the binary agreements the strong comparator
-                # needs from the level gammas: exact equality is level 2
-                # for 3-level fields and level 1 for the 2-level ride-alongs
-                base_agrees = [
-                    (F.col(f"lvl_{f}") == (2 if f in level_fields else 1))
-                    .alias(f"agree_{f}")
-                    for f in fields
-                ]
-            else:
-                base_agrees = [F.col(f"agree_{f}") for f in fields]
-            keep = ["id_a", "id_b"] + (
-                ["_is_match"] if args.label_expr else []
-            )
-            vec_s = vec.select(*keep, *base_agrees).join(
-                vec_extra, ["id_a", "id_b"]
-            )
-            agree_s = [f"agree_{f}" for f in strong_fields]
-            # weights need the full candidate population (u-probabilities
-            # come from the non-matches); scoring below is restricted
-            vec_s = vec_s.persist()
-            try:
-                if args.label_expr:
-                    weights_repair = match_weights(vec_s, agree_s, "_is_match")
-                else:
-                    weights_repair = fs_em_weights(
-                        vec_s, agree_s, iterations=args.em_iterations
-                    )
-                # the repair consults strong scores ONLY for accepted edges
-                # (they are the only rows its edge-filter left-join reads),
-                # so score just that subset — at scale the expensive-field
-                # comparator never runs over the full candidate population
-                vec_edges = vec_s.join(
-                    edges.select(
-                        F.col("src").alias("id_a"),
-                        F.col("dst").alias("id_b"),
-                    ),
-                    ["id_a", "id_b"],
-                    "left_semi",
-                )
-                strong_scores = fs_score(
-                    vec_edges, weights_repair, agree_s, ["id_a", "id_b"]
-                )
-                rep = repair_chain_merges(
-                    scores,
-                    strong_scores,
-                    threshold_micro=int(args.threshold_micro),
-                    strong_threshold_micro=int(
-                        getattr(args, "repair_threshold_micro", None) or 0
-                    ),
-                )
-                # materialize before unpersisting the vectors it reads
-                rep = rep.persist()
-                n_flagged = rep.filter(F.col("was_flagged")).count()
-            finally:
-                vec_s.unpersist()
-            comp = rep.select("node", "component")
-        elif cluster_algo == "star":
-            # Star cover instead of transitive closure: every satellite is
-            # one hop from its center (diameter <= 2), so a single wrong
-            # edge contaminates one star instead of chain-welding two
-            # entities — the structural alternative to --repair-fields.
-            from xlink_spark.operators.cluster import star_clusters
+        fl = {
+            f"lvl_{f}": (3 if f in level_fields else 2) for f in fields
+        }
+        weights = match_weights_levels(vec, fl, "_is_match")
+        mode = "supervised_levels"
+        scores = fs_score_levels(vec, weights, list(fl), ["id_a", "id_b"])
+    elif args.label_expr:
+        weights = match_weights(vec, agree_cols, "_is_match")
+        mode = "supervised"
+        scores = fs_score(vec, weights, agree_cols, ["id_a", "id_b"])
+    else:
+        weights = fs_em_weights(vec, agree_cols, iterations=args.em_iterations)
+        mode = "em"
+        scores = fs_score(vec, weights, agree_cols, ["id_a", "id_b"])
+    tf_fields = [
+        c.strip()
+        for c in (getattr(args, "tf_adjust_fields", None) or "").split(",")
+        if c.strip()
+    ]
+    bad_tf = [f for f in tf_fields if f not in fields or f in jw_fields]
+    if bad_tf:
+        raise ValueError(
+            "--tf-adjust-fields must name equality-compared --fields "
+            f"(not jw): {sorted(bad_tf)}"
+        )
+    if tf_fields and level_fields:
+        raise ValueError(
+            "--tf-adjust-fields cannot combine with --level-fields "
+            "(the tf swap is defined on the binary agreement weight)"
+        )
+    if tf_fields:
+        # Winkler term-frequency adjustment: pairs agreeing on a field
+        # swap the global agreement weight for the value-specific one.
+        # Both-NULL agreements (null-safe equality) have no shared
+        # value to look up, so they keep the global weight.
+        from xlink_spark.operators.linkage import (
+            tf_adjust_scores,
+            tf_value_weights,
+        )
 
-            comp = star_clusters(
-                edges, rounds=int(getattr(args, "star_rounds", None) or 3)
-            ).select("node", F.col("center").alias("component"))
-        elif cluster_algo == "center":
-            # Similarity-ordered stars (Hassanzadeh-Miller CENTER): the
-            # strongest edges elect centers first; like star, a wrong
-            # edge contaminates one star instead of welding two entities
-            from xlink_spark.operators.cluster import center_clusters
-
-            comp = center_clusters(
-                edges, rounds=int(getattr(args, "star_rounds", None) or 3)
-            ).select("node", F.col("center").alias("component"))
-        elif cluster_algo == "pivot":
-            # KwikCluster pivots (LFMIS of the match graph): the
-            # permutation-ordered star sibling — sequential-greedy-exact,
-            # diameter <= 2, the correlation-clustering 3-approximation
-            from xlink_spark.operators.cluster import pivot_clusters
-
-            comp = pivot_clusters(
-                edges, rounds=int(getattr(args, "star_rounds", None) or 3)
-            ).select("node", F.col("cluster").alias("component"))
-        elif cluster_algo == "one_to_one":
-            # clean-clean linkage (the Splink link_only shape): each of
-            # the two internally-duplicate-free sources matches AT MOST
-            # once; K rounds of locally-dominant mutual-best equal the
-            # sequential best-first greedy matching
-            from xlink_spark.operators.linkage import one_to_one_matches
-
-            sexpr = getattr(args, "source_expr", None)
-            if not sexpr:
-                raise ValueError(
-                    "--source-expr (a boolean expression naming the left "
-                    "source) is required for --cluster-algo one_to_one"
-                )
-            side = recs.select(
-                F.col(idc).cast("long").alias("_sid"),
-                F.expr(sexpr).cast("boolean").alias("_side"),
-            )
-            e2 = (
-                edges.join(
-                    side.select(
-                        F.col("_sid").alias("src"),
-                        F.col("_side").alias("_side_a"),
-                    ),
-                    "src",
-                )
+        for f in tf_fields:
+            tfw = tf_value_weights(recs, f, weights, f"agree_{f}")
+            agreeing = (
+                vec.filter(F.col(f"agree_{f}"))
                 .join(
-                    side.select(
-                        F.col("_sid").alias("dst"),
-                        F.col("_side").alias("_side_b"),
+                    recs.select(
+                        F.col(idc).alias("id_a"), F.col(f).alias("value")
                     ),
-                    "dst",
+                    "id_a",
                 )
-                .filter(F.col("_side_a") != F.col("_side_b"))
-                .select(
-                    F.when(F.col("_side_a"), F.col("src"))
-                    .otherwise(F.col("dst"))
-                    .alias("_left"),
-                    F.when(F.col("_side_a"), F.col("dst"))
-                    .otherwise(F.col("src"))
-                    .alias("_right"),
-                    "score_micro",
-                )
+                .select("id_a", "id_b", "value")
             )
-            m = one_to_one_matches(
-                e2,
-                "_left",
-                "_right",
-                "score_micro",
-                rounds=int(getattr(args, "star_rounds", None) or 3),
+            scores = tf_adjust_scores(
+                scores, agreeing, tfw, weights, f"agree_{f}",
+                ["id_a", "id_b"],
+            ).select(
+                "id_a",
+                "id_b",
+                F.col("score_tf_micro").alias("score_micro"),
             )
-            comp = m.select(
-                F.col("_left").alias("node"),
-                F.least("_left", "_right").alias("component"),
-            ).unionByName(
-                m.select(
-                    F.col("_right").alias("node"),
-                    F.least("_left", "_right").alias("component"),
-                )
-            )
-        elif cluster_algo == "merge_center":
-            # CENTER plus cluster merges on record->foreign-center
-            # evidence — the middle ground before transitive closure
-            from xlink_spark.operators.cluster import merge_center_clusters
+    if getattr(args, "posteriors", False):
+        # P(match | evidence): Bayes posterior from the FS score and
+        # the Laplace-smoothed prior odds. Supervised mode derives the
+        # prior from the labels; EM mode has none — require labels.
+        if not args.label_expr:
+            raise ValueError("--posteriors requires --label-expr")
+        from xlink_spark.operators.linkage import match_posteriors
 
-            comp = merge_center_clusters(
-                edges, rounds=int(getattr(args, "star_rounds", None) or 3)
-            ).select("node", F.col("cluster").alias("component"))
-        else:
-            comp = connected_components(edges)
-        golden = golden_records(recs.drop("_key"), comp, idc, rules)
-
-        weights.write.mode("overwrite").parquet(f"{args.output}/weights")
-        scores.write.mode("overwrite").parquet(f"{args.output}/scores")
-        if weights_repair is not None:
-            weights_repair.write.mode("overwrite").parquet(
-                f"{args.output}/weights_repair"
-            )
-        asg = (
-            recs.select(F.col(idc).cast("long").alias("id"))
-            .join(
-                comp.select(
-                    F.col("node").alias("id"), F.col("component")
-                ),
-                "id",
-                "left",
-            )
-            .select(
-                "id", F.coalesce("component", F.col("id")).alias("cluster")
-            )
+        prior = vec.agg(
+            (
+                F.sum(F.when(F.col("_is_match"), 1).otherwise(0))
+                + F.lit(1)
+            ).cast("long").alias("prior_num"),
+            (F.count(F.lit(1)) + F.lit(2)).cast("long").alias("prior_den"),
         )
-        if args.snapshots:
-            from xlink_spark.plans.snapshots import SnapshotStore
+        scores = match_posteriors(scores, prior)
+    review_lower = getattr(args, "review_lower_micro", None)
+    n_review = None
+    if review_lower is not None:
+        # FS two-threshold mode: [lower, upper) is the clerical-review
+        # band, written under output/review; only >= upper auto-links
+        from xlink_spark.operators.linkage import fs_decide
 
-            store = SnapshotStore(args.snapshots)
-            m_cl = store.commit_table("er_clusters", asg)
-            m_go = store.commit_table("er_golden", golden)
-            n_records, n_golden = m_cl["rows"], m_go["rows"]
+        decided = fs_decide(
+            scores,
+            upper_micro=int(args.threshold_micro),
+            lower_micro=int(review_lower),
+        )
+        review = decided.filter(F.col("decision") == "possible")
+        review.write.mode("overwrite").parquet(f"{args.output}/review")
+        n_review = (
+            spark.read.parquet(f"{args.output}/review").count()
+        )
+    edges = scores.filter(
+        F.col("score_micro") >= F.lit(int(args.threshold_micro))
+    ).select(
+        F.col("id_a").cast("long").alias("src"),
+        F.col("id_b").cast("long").alias("dst"),
+        "score_micro",
+    )
+    repair_fields = [
+        c.strip()
+        for c in (getattr(args, "repair_fields", None) or "").split(",")
+        if c.strip()
+    ]
+    cluster_algo = getattr(args, "cluster_algo", None) or "cc"
+    if cluster_algo not in (
+        "cc", "star", "center", "merge_center", "pivot", "one_to_one"
+    ):
+        raise ValueError(
+            "--cluster-algo must be cc, star, center, merge_center, "
+            f"pivot or one_to_one, got {cluster_algo!r}"
+        )
+    if repair_fields and cluster_algo in (
+        "star", "center", "pivot", "one_to_one"
+    ):
+        raise ValueError(
+            "--repair-fields repairs transitive chain merges; "
+            f"{cluster_algo} clusters cannot chain-merge — drop one "
+            "of the two flags"
+        )
+    if repair_fields:
+        # Escalation repair (linkage.repair_chain_merges): chain-merged
+        # clusters — components glued together by transitivity around a
+        # pair the scorer itself rejected — are re-adjudicated by a
+        # STRONGER comparator that adds the --repair-fields columns
+        # (the expensive fields a deployment consults only on demand).
+        dup = [f for f in repair_fields if f in fields]
+        if dup:
+            raise ValueError(
+                f"--repair-fields already in --fields: {sorted(dup)}"
+            )
+        missing = [f for f in repair_fields if f not in recs.columns]
+        if missing:
+            raise ValueError(
+                f"--repair-fields not in the records: {sorted(missing)}"
+            )
+        from xlink_spark.operators.linkage import repair_chain_merges
+
+        strong_fields = fields + repair_fields
+        # base-field agreements are already sitting in the persisted
+        # vec (including _is_match) — join ONLY the repair columns
+        # against the pairs instead of re-running every comparator
+        ra_r = recs.select(
+            F.col(idc).alias("id_a"),
+            *[F.col(f).alias(f"_a_{f}") for f in repair_fields],
+        )
+        rb_r = recs.select(
+            F.col(idc).alias("id_b"),
+            *[F.col(f).alias(f"_b_{f}") for f in repair_fields],
+        )
+        vec_extra = pairs.join(ra_r, "id_a").join(rb_r, "id_b").select(
+            "id_a", "id_b", *[_agree(f) for f in repair_fields]
+        )
+        if level_fields:
+            # reconstruct the binary agreements the strong comparator
+            # needs from the level gammas: exact equality is level 2
+            # for 3-level fields and level 1 for the 2-level ride-alongs
+            base_agrees = [
+                (F.col(f"lvl_{f}") == (2 if f in level_fields else 1))
+                .alias(f"agree_{f}")
+                for f in fields
+            ]
         else:
-            asg.write.mode("overwrite").parquet(f"{args.output}/clusters")
-            golden.write.mode("overwrite").parquet(f"{args.output}/golden")
-            n_records = spark.read.parquet(f"{args.output}/clusters").count()
-            n_golden = spark.read.parquet(f"{args.output}/golden").count()
-        n_pairs = vec.count()
-        n_edges = edges.count()
-        group_col = getattr(args, "group_col", None)
-        n_group_links = None
-        if group_col:
-            from xlink_spark.operators.linkage import group_linkage_scores
-
-            # graded member evidence when --posteriors computed it,
-            # else binary match edges at sim 1000 (GES degenerates to
-            # the member-Jaccard of matched pairs)
-            if "posterior_ppm" in scores.columns:
-                sims = scores.filter(
-                    F.col("score_micro") >= F.lit(int(args.threshold_micro))
-                ).select(
-                    F.col("id_a").cast("long").alias("id_a"),
-                    F.col("id_b").cast("long").alias("id_b"),
-                    F.expr("posterior_ppm div 1000").cast("long").alias(
-                        "sim_ppt"
-                    ),
-                )
+            base_agrees = [F.col(f"agree_{f}") for f in fields]
+        keep = ["id_a", "id_b"] + (
+            ["_is_match"] if args.label_expr else []
+        )
+        vec_s = vec.select(*keep, *base_agrees).join(
+            vec_extra, ["id_a", "id_b"]
+        )
+        agree_s = [f"agree_{f}" for f in strong_fields]
+        # weights need the full candidate population (u-probabilities
+        # come from the non-matches); scoring below is restricted
+        vec_s = hold(vec_s)
+        try:
+            if args.label_expr:
+                weights_repair = match_weights(vec_s, agree_s, "_is_match")
             else:
-                sims = edges.select(
+                weights_repair = fs_em_weights(
+                    vec_s, agree_s, iterations=args.em_iterations
+                )
+            # the repair consults strong scores ONLY for accepted edges
+            # (they are the only rows its edge-filter left-join reads),
+            # so score just that subset — at scale the expensive-field
+            # comparator never runs over the full candidate population
+            vec_edges = vec_s.join(
+                edges.select(
                     F.col("src").alias("id_a"),
                     F.col("dst").alias("id_b"),
-                    F.lit(1000).cast("long").alias("sim_ppt"),
-                )
-            grp = recs.select(
-                F.col(idc).cast("long").alias("id"),
-                F.col(group_col).cast("string").alias("group"),
+                ),
+                ["id_a", "id_b"],
+                "left_semi",
             )
-            glinks = group_linkage_scores(
-                sims,
-                grp,
-                min_ges_ppt=getattr(args, "group_min_ges_ppt", None),
+            strong_scores = fs_score(
+                vec_edges, weights_repair, agree_s, ["id_a", "id_b"]
             )
-            glinks.write.mode("overwrite").parquet(
-                f"{args.output}/group_links"
+            rep = repair_chain_merges(
+                scores,
+                strong_scores,
+                threshold_micro=int(args.threshold_micro),
+                strong_threshold_micro=int(
+                    getattr(args, "repair_threshold_micro", None) or 0
+                ),
             )
-            n_group_links = spark.read.parquet(
-                f"{args.output}/group_links"
-            ).count()
-        gold_expr = getattr(args, "gold_expr", None)
-        eval_metrics = None
-        if gold_expr:
-            # Labeled-subset evaluation (--gold-expr): score the final
-            # clusters with the full gauge family over every record whose
-            # gold label is non-null, plus the CoNLL-2012 official average
-            # (mean of MUC / B³ / CEAF_e) — all exact bigint micro values.
-            from xlink_spark.eval.bcubed import (
-                adjusted_rand,
-                bcubed,
-                blanc,
-                muc,
-                vmeasure,
-            )
-            from xlink_spark.eval.ceaf import ceaf
+            # materialize before unpersisting the vectors it reads
+            rep = hold(rep)
+            n_flagged = rep.filter(F.col("was_flagged")).count()
+        finally:
+            vec_s.unpersist()
+        comp = rep.select("node", "component")
+    elif cluster_algo == "star":
+        # Star cover instead of transitive closure: every satellite is
+        # one hop from its center (diameter <= 2), so a single wrong
+        # edge contaminates one star instead of chain-welding two
+        # entities — the structural alternative to --repair-fields.
+        from xlink_spark.operators.cluster import star_clusters
 
-            glab = recs.select(
-                F.col(idc).cast("long").alias("id"),
-                F.expr(gold_expr).cast("long").alias("gold"),
-            ).filter(F.col("gold").isNotNull())
-            lab = (
-                asg.join(glab, "id")
-                .select(F.col("cluster").alias("pred"), "gold")
-                .persist()
+        comp = star_clusters(
+            edges, rounds=int(getattr(args, "star_rounds", None) or 3)
+        ).select("node", F.col("center").alias("component"))
+    elif cluster_algo == "center":
+        # Similarity-ordered stars (Hassanzadeh-Miller CENTER): the
+        # strongest edges elect centers first; like star, a wrong
+        # edge contaminates one star instead of welding two entities
+        from xlink_spark.operators.cluster import center_clusters
+
+        comp = center_clusters(
+            edges, rounds=int(getattr(args, "star_rounds", None) or 3)
+        ).select("node", F.col("center").alias("component"))
+    elif cluster_algo == "pivot":
+        # KwikCluster pivots (LFMIS of the match graph): the
+        # permutation-ordered star sibling — sequential-greedy-exact,
+        # diameter <= 2, the correlation-clustering 3-approximation
+        from xlink_spark.operators.cluster import pivot_clusters
+
+        comp = pivot_clusters(
+            edges, rounds=int(getattr(args, "star_rounds", None) or 3)
+        ).select("node", F.col("cluster").alias("component"))
+    elif cluster_algo == "one_to_one":
+        # clean-clean linkage (the Splink link_only shape): each of
+        # the two internally-duplicate-free sources matches AT MOST
+        # once; K rounds of locally-dominant mutual-best equal the
+        # sequential best-first greedy matching
+        from xlink_spark.operators.linkage import one_to_one_matches
+
+        sexpr = getattr(args, "source_expr", None)
+        if not sexpr:
+            raise ValueError(
+                "--source-expr (a boolean expression naming the left "
+                "source) is required for --cluster-algo one_to_one"
             )
-            try:
-                b = bcubed(lab).collect()[0]
-                m = muc(lab).collect()[0]
-                bl = blanc(lab).collect()[0]
-                ar = adjusted_rand(lab).collect()[0]
-                vm = vmeasure(lab).collect()[0]
-                eval_metrics = {
-                    "n_labeled": b["n_items"],
-                    "bcubed_f_micro": b["bcubed_f_micro"],
-                    "muc_f_micro": m["muc_f_micro"],
-                    "blanc_micro": bl["blanc_micro"],
-                    "ari_micro": (
-                        (ar["ari_num"] * 1000000) // ar["ari_den"]
-                        if ar["ari_den"]
-                        else 1000000
-                    ),
-                    "v_measure": round(vm["v_measure"], 6),
-                }
-                try:
-                    ce = ceaf(lab).collect()[0]
-                except ValueError as exc:
-                    # width guard: entangled components — CEAF's documented
-                    # hash-sample fallback is the caller's call, not ours
-                    eval_metrics["ceaf_err"] = str(exc)
-                else:
-                    eval_metrics["ceafm_f_micro"] = ce["ceafm_f_micro"]
-                    eval_metrics["ceafe_f_micro"] = ce["ceafe_f_micro"]
-                    eval_metrics["conll_f_micro"] = (
-                        b["bcubed_f_micro"]
-                        + m["muc_f_micro"]
-                        + ce["ceafe_f_micro"]
-                    ) // 3
-            finally:
-                lab.unpersist()
-        if level_fields:
-            w_rows = {
-                f"{r['field']}/L{r['level']}": r["w_micro"]
-                for r in weights.collect()
-            }
+        side = recs.select(
+            F.col(idc).cast("long").alias("_sid"),
+            F.expr(sexpr).cast("boolean").alias("_side"),
+        )
+        e2 = (
+            edges.join(
+                side.select(
+                    F.col("_sid").alias("src"),
+                    F.col("_side").alias("_side_a"),
+                ),
+                "src",
+            )
+            .join(
+                side.select(
+                    F.col("_sid").alias("dst"),
+                    F.col("_side").alias("_side_b"),
+                ),
+                "dst",
+            )
+            .filter(F.col("_side_a") != F.col("_side_b"))
+            .select(
+                F.when(F.col("_side_a"), F.col("src"))
+                .otherwise(F.col("dst"))
+                .alias("_left"),
+                F.when(F.col("_side_a"), F.col("dst"))
+                .otherwise(F.col("src"))
+                .alias("_right"),
+                "score_micro",
+            )
+        )
+        m = one_to_one_matches(
+            e2,
+            "_left",
+            "_right",
+            "score_micro",
+            rounds=int(getattr(args, "star_rounds", None) or 3),
+        )
+        comp = m.select(
+            F.col("_left").alias("node"),
+            F.least("_left", "_right").alias("component"),
+        ).unionByName(
+            m.select(
+                F.col("_right").alias("node"),
+                F.least("_left", "_right").alias("component"),
+            )
+        )
+    elif cluster_algo == "merge_center":
+        # CENTER plus cluster merges on record->foreign-center
+        # evidence — the middle ground before transitive closure
+        from xlink_spark.operators.cluster import merge_center_clusters
+
+        comp = merge_center_clusters(
+            edges, rounds=int(getattr(args, "star_rounds", None) or 3)
+        ).select("node", F.col("cluster").alias("component"))
+    else:
+        comp = connected_components(edges)
+    golden = golden_records(recs.drop("_key"), comp, idc, rules)
+
+    weights.write.mode("overwrite").parquet(f"{args.output}/weights")
+    scores.write.mode("overwrite").parquet(f"{args.output}/scores")
+    if weights_repair is not None:
+        weights_repair.write.mode("overwrite").parquet(
+            f"{args.output}/weights_repair"
+        )
+    asg = (
+        recs.select(F.col(idc).cast("long").alias("id"))
+        .join(
+            comp.select(
+                F.col("node").alias("id"), F.col("component")
+            ),
+            "id",
+            "left",
+        )
+        .select(
+            "id", F.coalesce("component", F.col("id")).alias("cluster")
+        )
+    )
+    if args.snapshots:
+        from xlink_spark.plans.snapshots import SnapshotStore
+
+        store = SnapshotStore(args.snapshots)
+        m_cl = store.commit_table("er_clusters", asg)
+        m_go = store.commit_table("er_golden", golden)
+        n_records, n_golden = m_cl["rows"], m_go["rows"]
+    else:
+        asg.write.mode("overwrite").parquet(f"{args.output}/clusters")
+        golden.write.mode("overwrite").parquet(f"{args.output}/golden")
+        n_records = spark.read.parquet(f"{args.output}/clusters").count()
+        n_golden = spark.read.parquet(f"{args.output}/golden").count()
+    n_pairs = vec.count()
+    n_edges = edges.count()
+    group_col = getattr(args, "group_col", None)
+    n_group_links = None
+    if group_col:
+        from xlink_spark.operators.linkage import group_linkage_scores
+
+        # graded member evidence when --posteriors computed it,
+        # else binary match edges at sim 1000 (GES degenerates to
+        # the member-Jaccard of matched pairs)
+        if "posterior_ppm" in scores.columns:
+            sims = scores.filter(
+                F.col("score_micro") >= F.lit(int(args.threshold_micro))
+            ).select(
+                F.col("id_a").cast("long").alias("id_a"),
+                F.col("id_b").cast("long").alias("id_b"),
+                F.expr("posterior_ppm div 1000").cast("long").alias(
+                    "sim_ppt"
+                ),
+            )
         else:
-            w_rows = {
-                r["field"]: (r["w_agree_micro"], r["w_disagree_micro"])
-                for r in weights.collect()
+            sims = edges.select(
+                F.col("src").alias("id_a"),
+                F.col("dst").alias("id_b"),
+                F.lit(1000).cast("long").alias("sim_ppt"),
+            )
+        grp = recs.select(
+            F.col(idc).cast("long").alias("id"),
+            F.col(group_col).cast("string").alias("group"),
+        )
+        glinks = group_linkage_scores(
+            sims,
+            grp,
+            min_ges_ppt=getattr(args, "group_min_ges_ppt", None),
+        )
+        glinks.write.mode("overwrite").parquet(
+            f"{args.output}/group_links"
+        )
+        n_group_links = spark.read.parquet(
+            f"{args.output}/group_links"
+        ).count()
+    gold_expr = getattr(args, "gold_expr", None)
+    eval_metrics = None
+    if gold_expr:
+        # Labeled-subset evaluation (--gold-expr): score the final
+        # clusters with the full gauge family over every record whose
+        # gold label is non-null, plus the CoNLL-2012 official average
+        # (mean of MUC / B³ / CEAF_e) — all exact bigint micro values.
+        from xlink_spark.eval.bcubed import (
+            adjusted_rand,
+            bcubed,
+            blanc,
+            muc,
+            vmeasure,
+        )
+        from xlink_spark.eval.ceaf import ceaf
+
+        glab = recs.select(
+            F.col(idc).cast("long").alias("id"),
+            F.expr(gold_expr).cast("long").alias("gold"),
+        ).filter(F.col("gold").isNotNull())
+        lab = hold(asg.join(glab, "id").select(F.col("cluster").alias("pred"), "gold"))
+        try:
+            b = bcubed(lab).collect()[0]
+            m = muc(lab).collect()[0]
+            bl = blanc(lab).collect()[0]
+            ar = adjusted_rand(lab).collect()[0]
+            vm = vmeasure(lab).collect()[0]
+            eval_metrics = {
+                "n_labeled": b["n_items"],
+                "bcubed_f_micro": b["bcubed_f_micro"],
+                "muc_f_micro": m["muc_f_micro"],
+                "blanc_micro": bl["blanc_micro"],
+                "ari_micro": (
+                    (ar["ari_num"] * 1000000) // ar["ari_den"]
+                    if ar["ari_den"]
+                    else 1000000
+                ),
+                "v_measure": round(vm["v_measure"], 6),
             }
-    finally:
-        vec.unpersist()
-        if rep is not None:
-            rep.unpersist()
+            try:
+                ce = ceaf(lab).collect()[0]
+            except ValueError as exc:
+                # width guard: entangled components — CEAF's documented
+                # hash-sample fallback is the caller's call, not ours
+                eval_metrics["ceaf_err"] = str(exc)
+            else:
+                eval_metrics["ceafm_f_micro"] = ce["ceafm_f_micro"]
+                eval_metrics["ceafe_f_micro"] = ce["ceafe_f_micro"]
+                eval_metrics["conll_f_micro"] = (
+                    b["bcubed_f_micro"]
+                    + m["muc_f_micro"]
+                    + ce["ceafe_f_micro"]
+                ) // 3
+        finally:
+            lab.unpersist()
+    if level_fields:
+        w_rows = {
+            f"{r['field']}/L{r['level']}": r["w_micro"]
+            for r in weights.collect()
+        }
+    else:
+        w_rows = {
+            r["field"]: (r["w_agree_micro"], r["w_disagree_micro"])
+            for r in weights.collect()
+        }
     out = {
         "mode": mode,
         "blocking": blocking,

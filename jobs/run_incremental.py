@@ -40,6 +40,8 @@ import argparse
 import json
 import time
 
+from xlink_spark.plans.storage import hold, scope
+
 
 def _additive_window(store, last_cc: int, batch_id: int) -> list[int] | None:
     """Link batches in (last_cc, batch_id] IF the window is provably
@@ -140,8 +142,10 @@ def _commit_clusters(spark, store, batch_id: int) -> int:
     return store.manifest("clusters", batch_id)["rows"]
 
 
+@scope()
 def run_incremental_job(spark, args) -> dict:
-    """The job body, importable for in-session testing."""
+    """The job body, importable for in-session testing. It runs in its own
+    storage scope: every frame it caches or checkpoints is freed on return."""
     from pyspark.sql import functions as F
 
     from xlink_spark.operators.spans import plain_text, span_sequence_key
@@ -190,31 +194,28 @@ def run_incremental_job(spark, args) -> dict:
         delta = table_diff(old_fp, new_fp, ["doc_id"])
     else:
         delta = new_docs.select("doc_id", F.lit("added").alias("change"))
-    delta = delta.persist()
+    delta = hold(delta)
     counts = {r["change"]: r["n"] for r in delta.groupBy("change").agg(
         F.count(F.lit(1)).alias("n")).collect()}
 
-    try:
-        # link ONLY the added/changed docs; the semi join prunes the new
-        # corpus before any text leaves the scan
-        todo = new_docs.join(
-            delta.filter(F.col("change") != "removed").select("doc_id"),
-            "doc_id",
-            "semi",
-        )
-        plain = todo.select("doc_id", plain_text("spans").alias("text"))
-        link_increment(store, batch_id, plain, wemb, eemb)
-        n_linked = store.manifest("links", batch_id)["rows"]
+    # link ONLY the added/changed docs; the semi join prunes the new
+    # corpus before any text leaves the scan
+    todo = new_docs.join(
+        delta.filter(F.col("change") != "removed").select("doc_id"),
+        "doc_id",
+        "semi",
+    )
+    plain = todo.select("doc_id", plain_text("spans").alias("text"))
+    link_increment(store, batch_id, plain, wemb, eemb)
+    n_linked = store.manifest("links", batch_id)["rows"]
 
-        # retractions: docs whose old links are stale (changed docs get
-        # fresh links in this batch; removed docs get none)
-        retract = delta.filter(F.col("change") != "added").select(
-            "doc_id", "change"
-        )
-        store.commit("retractions", batch_id, retract)
-        store.commit("corpus_fp", batch_id, new_fp)
-    finally:
-        delta.unpersist()
+    # retractions: docs whose old links are stale (changed docs get
+    # fresh links in this batch; removed docs get none)
+    retract = delta.filter(F.col("change") != "added").select(
+        "doc_id", "change"
+    )
+    store.commit("retractions", batch_id, retract)
+    store.commit("corpus_fp", batch_id, new_fp)
 
     # steady-state maintenance: once the links trail outgrows the bound,
     # fold retractions into a single current-view iteration (readers keep

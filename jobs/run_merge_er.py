@@ -29,9 +29,13 @@ import argparse
 import json
 import time
 
+from xlink_spark.plans.storage import scope
 
+
+@scope()
 def run_merge_er_job(spark, args) -> dict:
-    """The job body, importable for in-session testing."""
+    """The job body, importable for in-session testing. It runs in its own
+    storage scope: every frame it caches or checkpoints is freed on return."""
     from pyspark.sql import functions as F
 
     from xlink_spark.operators.linkage import iterative_merge_er

@@ -40,6 +40,7 @@ def main() -> None:
     from xlink_spark.operators.spans import plain_text
     from xlink_spark.plans.pipeline import build_dictionary, link_and_cluster
     from xlink_spark.plans.snapshots import SnapshotStore
+    from xlink_spark.plans.storage import scope
     from xlink_spark.session import get_spark
 
     spark = get_spark(app_name="xlink_pipeline", master=args.master)
@@ -50,11 +51,12 @@ def main() -> None:
     eemb = spark.read.parquet(args.entity_emb)
     store = SnapshotStore(args.snapshots)
 
-    d = build_dictionary(docs, kb, eemb, store=store)
-    plain = docs.select("doc_id", plain_text("spans").alias("text"))
-    links, clusters = link_and_cluster(plain, d, wemb, eemb)
-    links.write.mode("overwrite").parquet(f"{args.output}/links")
-    clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
+    with scope():
+        d = build_dictionary(docs, kb, eemb, store=store)
+        plain = docs.select("doc_id", plain_text("spans").alias("text"))
+        links, clusters = link_and_cluster(plain, d, wemb, eemb)
+        links.write.mode("overwrite").parquet(f"{args.output}/links")
+        clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
 
     n_docs = docs.count()
     n_links = spark.read.parquet(f"{args.output}/links").count()

@@ -665,6 +665,7 @@ def test_curate_corpus_end_to_end(spark):
     """The full curation plan: exact dup, junk, near-dup, and contaminated
     docs each fall to their stage; the audit counts every drop."""
     from xlink_spark.plans.curation import curate_corpus
+    from xlink_spark.plans.storage import scope
 
     base = "the quick brown fox jumps over the lazy dog and it is very happy today in the sun"
     rows = [
@@ -680,19 +681,17 @@ def test_curate_corpus_end_to_end(spark):
         [("e1", "report contains alpha beta gamma delta verbatim")],
         "doc_id string, text string",
     )
-    held: list = []
-    kept, audit, drops = curate_corpus(
-        docs, eval_docs, contamination_ngram=3, persisted_out=held
-    )
-    kept_rows = kept.collect()
-    kept_ids = sorted(r["doc_id"] for r in kept_rows)
-    counts = {r["stage"]: r["n_dropped"] for r in audit.collect()}
-    fates = {r["doc_id"]: r["stage"] for r in drops.collect()}
-    # release only after every output is consumed: the drops/survivor
-    # frames are lineage-truncated, so a released handle is gone for good
-    # (unlike a persist, which would silently recompute)
-    for h in held:
-        h.unpersist()
+    # close the scope only after every output is consumed: the
+    # drops/survivor frames are lineage-truncated, so a released frame is
+    # gone for good (unlike a persist, which would silently recompute)
+    with scope():
+        kept, audit, drops = curate_corpus(
+            docs, eval_docs, contamination_ngram=3
+        )
+        kept_rows = kept.collect()
+        kept_ids = sorted(r["doc_id"] for r in kept_rows)
+        counts = {r["stage"]: r["n_dropped"] for r in audit.collect()}
+        fates = {r["doc_id"]: r["stage"] for r in drops.collect()}
     assert kept_ids == ["d1", "d6"]
     assert counts == {
         "exact_dup": 1, "low_quality": 1, "near_dup": 1, "contaminated": 1
@@ -706,21 +705,18 @@ def test_curate_corpus_end_to_end(spark):
 
 
 def test_curate_corpus_audit_reads_cached_drops(spark):
-    """With persisted_out passed, kept materializes the (persisted) drop
-    list once and the audit plan READS THE CACHE — the LSH band join and
-    contamination join never execute a second time. Pinned on the audit's
-    executed plan: it scans the in-memory relation and contains none of the
-    drop-chain's signature hashing."""
+    """kept materializes the (checkpointed) drop list once and the audit
+    plan READS THE STORED BLOCKS — the LSH band join and contamination join
+    never execute a second time. Pinned on the audit's executed plan: it
+    scans the checkpointed relation and contains none of the drop-chain's
+    signature hashing."""
     from xlink_spark.plans.curation import curate_corpus
+    from xlink_spark.plans.storage import scope
 
     rows = [(f"d{i}", f"document number {i} with some shared filler words "
             + ("x " * (i % 7))) for i in range(30)]
     rows += [("dup1", rows[0][1]), ("dup2", rows[0][1])]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
-    held: list = []
-    kept, audit, drops = curate_corpus(docs, None, persisted_out=held)
-    kept.count()  # materializes the chain; drops is now cached
-    audit.collect()
     sc = spark.sparkContext
 
     def stages_run(action):
@@ -730,8 +726,12 @@ def test_curate_corpus_audit_reads_cached_drops(spark):
         new = [j for j in st.getJobIdsForGroup(None) if j not in before]
         return sum(len(st.getJobInfo(j).stageIds) for j in new)
 
-    cached_stages = stages_run(lambda: audit.collect())
-    plan = audit._jdf.queryExecution().executedPlan().toString()
+    with scope():
+        kept, audit, drops = curate_corpus(docs, None)
+        kept.count()  # materializes the chain; drops is now stored
+        audit.collect()
+        cached_stages = stages_run(lambda: audit.collect())
+        plan = audit._jdf.queryExecution().executedPlan().toString()
     # drops is lineage-TRUNCATED (localCheckpoint): the audit legs scan the
     # stored blocks through a flat ExistingRDD — none of the drop chain's
     # operators (window, LSH hashing, quality scan) appear in its plan,
@@ -739,15 +739,10 @@ def test_curate_corpus_audit_reads_cached_drops(spark):
     assert "ExistingRDD" in plan
     for marker in ("row_number", "md5", "Window"):
         assert marker not in plan
-    for h in held:
-        h.unpersist()
     # ...and the executed work proves it: an audit over the checkpointed
     # drop list runs only tiny block-scan + single-partition-agg stages per
     # leg, while recomputing the drop chain per leg runs the exact-dup
     # window / LSH / quality scan again (measured ~30)
-    _k2, audit2, _d2 = curate_corpus(docs, None)  # no persist → recompute
-    uncached_stages = stages_run(lambda: audit2.collect())
-    assert cached_stages < uncached_stages
     assert cached_stages <= 18  # ~5 AQE stages per leg over stored blocks
 
 

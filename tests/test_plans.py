@@ -7,8 +7,15 @@ broadcast, and the scoring stage stays inside whole-stage codegen.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
+
+from bench import SF_DIR
+
+# the t1 smoke tables (TESTDATA.md): the sf0.001 sibling of the bench data
+SF0001 = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 
 def _plan(df) -> str:
@@ -200,60 +207,63 @@ def test_curation_gate_cache_is_narrow(spark):
     whose footprint scales with corpus TEXT width would be ~a corpus copy
     in MEMORY_AND_DISK at 100 TB. Text must flow once through the kept
     chain; only after_quality (whose text feeds two real branches) and the
-    id-narrow lists may persist, and NO persisted handle except
+    id-narrow lists may persist, and NO registered frame except
     after_quality carries the text column."""
     from xlink_spark.plans.curation import curate_corpus
+    from xlink_spark.plans.storage import scope
 
     rows = [(f"d{i}", f"document number {i} with plain ordinary filler words "
             + ("pad " * (i % 5))) for i in range(20)]
     rows.append(("dup", rows[0][1]))
     docs = spark.createDataFrame(rows, "doc_id string, text string")
-    held: list = []
-    kept, audit, drops = curate_corpus(docs, None, persisted_out=held)
-    text_carrying = [h for h in held if "text" in h.columns]
-    # exactly one full-width persist: the post-gate survivor table
-    assert len(text_carrying) == 1
-    gate = [h for h in held if "quality" in h.columns and "text" not in h.columns]
-    assert len(gate) == 1 and set(gate[0].columns) == {
-        "doc_id", "content_hash", "quality",
-    }
-    # counts unchanged by the narrowing
-    counts = {r["stage"]: r["n_dropped"] for r in audit.collect()}
-    assert counts["exact_dup"] == 1
-    assert kept.count() + sum(counts.values()) == 21
-    for h in held:
-        h.unpersist()
+    with scope() as s:
+        kept, audit, drops = curate_corpus(docs, None)
+        held = s.frames
+        text_carrying = [h for h in held if "text" in h.columns]
+        # exactly one full-width persist: the post-gate survivor table
+        assert len(text_carrying) == 1
+        gate = [h for h in held if "quality" in h.columns and "text" not in h.columns]
+        assert len(gate) == 1 and set(gate[0].columns) == {
+            "doc_id", "content_hash", "quality",
+        }
+        # counts unchanged by the narrowing
+        counts = {r["stage"]: r["n_dropped"] for r in audit.collect()}
+        assert counts["exact_dup"] == 1
+        assert kept.count() + sum(counts.values()) == 21
+
+
+def _rdd_ids(spark) -> set:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _sql_cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_curation_held_release_frees_all_storage(spark):
-    """The persisted_out contract must release EVERYTHING — including the
+    """A storage scope must release EVERYTHING — including the
     lineage-truncated (localCheckpoint) frames, whose blocks live as RDD
     storage that ``DataFrame.unpersist`` alone would never touch. A leak
     here accumulates a drop-list + survivor copy per curation call until
     the storage pool fills (the observed evictBlocksToFreeSpace livelock).
-    Pin: after unpersisting every handle, the context reports zero cached
-    RDDs and the SQL cache is empty."""
+    Pin: once the scope closes, the context reports zero cached RDDs and
+    the SQL cache is empty."""
     from xlink_spark.plans.curation import curate_corpus
-
-    sc = spark.sparkContext
-
-    def rdd_ids():
-        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+    from xlink_spark.plans.storage import scope
 
     spark.catalog.clearCache()
-    baseline = rdd_ids()  # other suites may leave internal (e.g. MLlib) blocks
+    baseline = _rdd_ids(spark)  # other suites may leave internal (e.g. MLlib) blocks
     rows = [(f"d{i}", f"document number {i} with plain ordinary filler words "
             + ("pad " * (i % 5))) for i in range(20)]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
-    held: list = []
-    kept, audit, drops = curate_corpus(docs, None, persisted_out=held)
-    audit.collect()
-    kept.count()
-    # the checkpointed frames materialized real blocks
-    assert rdd_ids() - baseline
-    for h in held:
-        h.unpersist()
-    assert rdd_ids() - baseline == set()
+    with scope():
+        kept, audit, drops = curate_corpus(docs, None)
+        audit.collect()
+        kept.count()
+        # the checkpointed frames materialized real blocks
+        assert _rdd_ids(spark) - baseline
+    assert _rdd_ids(spark) - baseline == set()
+    assert _sql_cache_empty(spark)
 
 
 def test_linking_pipeline_ascii_python_is_one_arrow_scan(spark):
@@ -281,17 +291,16 @@ def test_linking_seeded_ascii_python_is_one_arrow_scan(spark):
     once, at persist time — plan TEXT shows it once per printed
     InMemoryRelation, so count cache scans, not MapInPandas strings). No
     other Python, no cartesian product, broadcast dictionary joins."""
-    from xlink_spark.driver_queries import _SEEDED_HELD, q_linking_seeded_ascii
+    from xlink_spark.driver_queries import q_linking_seeded_ascii
+    from xlink_spark.plans.storage import scope
 
-    plan = _plan(q_linking_seeded_ascii(spark, "/root/testdata/sf0.001"))
+    with scope():
+        plan = _plan(q_linking_seeded_ascii(spark, SF0001))
     assert plan.count("InMemoryTableScan") == 2
     for marker in ("BatchEvalPython", "ArrowEvalPython"):
         assert marker not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
-    for h in list(_SEEDED_HELD):
-        h.unpersist()
-    _SEEDED_HELD.clear()
 
 
 def test_round5_session2_queries_are_pure_jvm(spark):
@@ -412,3 +421,156 @@ def test_fs_threshold_sweep_query_plan_shape(spark):
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan
     assert "CartesianProduct" not in plan
+
+
+# ---- storage lifetime (plans/storage) -------------------------------------
+
+
+def _stored(df) -> bool:
+    """True while a frame's SQL cache entry or checkpoint blocks exist."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        return plan.rdd().getStorageLevel().isValid()
+    return df._jdf.storageLevel().isValid()
+
+
+def test_storage_nested_scope_frees_only_its_own_frames(spark):
+    from xlink_spark.plans.storage import cut, hold, scope
+
+    with scope() as outer:
+        a = hold(spark.range(10), eager=True)
+        with scope() as inner:
+            b = hold(spark.range(20), eager=True)
+            c = cut(spark.range(30), eager=True)
+            assert [id(f) for f in inner.frames] == [id(b), id(c)]
+            assert _stored(b) and _stored(c)
+        assert inner.frames == [] and not _stored(b) and not _stored(c)
+        assert [id(f) for f in outer.frames] == [id(a)] and _stored(a)
+        # a lazy cut registers too; its blocks appear on first use
+        d = cut(spark.range(40), eager=False)
+        assert d.count() == 40 and _stored(d)
+    assert not _stored(a) and not _stored(d)
+
+
+def test_storage_scope_frees_frames_on_exception(spark):
+    """A failed commit must not leak cached blocks into the retry."""
+    from xlink_spark.plans.storage import cut, hold, scope
+
+    frames = []
+    with pytest.raises(RuntimeError, match="commit failed"):
+        with scope():
+            frames += [hold(spark.range(5), eager=True), cut(spark.range(6), eager=True)]
+            raise RuntimeError("commit failed")
+    assert frames and not any(_stored(f) for f in frames)
+
+
+def test_storage_outside_scope_registers_nothing(spark):
+    """Outside any scope hold/cut are plain persist/localCheckpoint: the
+    frame stays stored and no scope keeps a reference to it."""
+    from xlink_spark.plans import storage
+
+    before = list(storage.query_scope.frames)
+    a = storage.hold(spark.range(7), eager=True)
+    c = storage.cut(spark.range(8), eager=True)
+    assert storage._open == [] and storage.query_scope.frames == before
+    assert _stored(a) and _stored(c)
+    # the caller owns them: free through a scope of its own
+    s = storage.Scope()
+    s.frames += [a, c]
+    s.release()
+    assert not _stored(a) and not _stored(c)
+    # a frame released twice (an early unpersist, then its scope) is fine
+    s.frames += [a, c]
+    s.release()
+
+
+def test_storage_release_after_session_stop_does_not_raise(tmp_path):
+    """A registry query's frames may outlive their session (two sessions in
+    one process): releasing them after ``stop()`` is a no-op."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from xlink_spark.plans.storage import Scope, cut, hold
+from xlink_spark.session import get_spark
+
+spark = get_spark(app_name="stopped_release", master="local[1]", shuffle_partitions=1)
+s = Scope()
+with s.open():
+    hold(spark.range(5), eager=True)
+    cut(spark.range(6), eager=True)
+assert len(s.frames) == 2
+spark.stop()
+s.release()
+assert s.frames == []
+print("released")
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, capture_output=True,
+        text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "released" in out.stdout
+
+
+def test_registry_queries_leave_no_storage(spark):
+    """Every bench HEADLINE query, built and counted through the registry:
+    once its scope is released, no RDD storage beyond the starting baseline
+    is left and the SQL cache is empty — including the localCheckpoint
+    blocks of the iterative operators. ``curation_plan`` (cached, eager-
+    and lazy-checkpointed frames) also runs the way bench.py times it, cold
+    then warm: building it again frees the cold build's frames."""
+    import __spark_entry__ as entrymod
+    from bench import HEADLINE
+    from xlink_spark.plans.storage import query_scope
+
+    spark.catalog.clearCache()
+    baseline = _rdd_ids(spark)
+    qs = entrymod.queries()
+    for name in HEADLINE:
+        qs[name](spark, SF0001).count()
+        if name == "curation_plan":
+            cold = list(query_scope.frames)
+            qs[name](spark, SF0001).count()
+            warm = {id(f) for f in query_scope.frames}
+            assert cold and warm.isdisjoint(id(f) for f in cold)
+        query_scope.release()
+        assert _rdd_ids(spark) - baseline == set(), name
+        assert _sql_cache_empty(spark), name
+
+
+def test_storage_calls_live_in_storage_module():
+    """The lifetime decision lives in plans/storage.py only: no other module
+    of the library or the jobs persists, caches or checkpoints directly, and
+    the retired hand-off lists are gone."""
+    import ast
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    own = os.path.join(root, "xlink_spark", "plans", "storage.py")
+    # the retired names, spelled so that this file does not contain them
+    retired = re.compile(r"persisted_[o]ut|_HELD\b")
+    offenders = []
+    for top in ("xlink_spark", "jobs"):
+        for dirpath, _dirs, files in os.walk(os.path.join(root, top)):
+            for fn in files:
+                path = os.path.join(dirpath, fn)
+                if not fn.endswith(".py") or path == own:
+                    continue
+                with open(path) as f:
+                    src = f.read()
+                rel = os.path.relpath(path, root)
+                for node in ast.walk(ast.parse(src)):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in ("persist", "cache", "localCheckpoint")
+                    ):
+                        offenders.append(f"{rel}:{node.lineno} .{node.func.attr}(")
+                for i, line in enumerate(src.splitlines(), 1):
+                    if retired.search(line):
+                        offenders.append(f"{rel}:{i} {line.strip()}")
+    assert offenders == []

@@ -26,6 +26,7 @@ from xlink_spark.operators import dedup as DD
 from xlink_spark.operators import sampling as SAMP
 from xlink_spark.operators import similarity as SIM
 from xlink_spark.operators import textstats as TS
+from xlink_spark.plans.storage import cut, hold, registry
 
 Query = Callable[[SparkSession, str], DataFrame]
 
@@ -1826,7 +1827,7 @@ def q_linking_pipeline_ascii(spark, sf_dir):
     # truncates the composed plan the scoring tail re-analyzes (measured
     # 1-2s driver gaps between jobs on this query) and materializes the
     # e_given_m chain once instead of three times
-    egm = q_e_given_m(spark, sf_dir).localCheckpoint(eager=False)
+    egm = cut(q_e_given_m(spark, sf_dir), eager=False)
     entity_emb = _hash_embeddings_md5(
         spark, sf_dir, egm.select("entity_id"), "entity_id"
     )
@@ -1936,9 +1937,6 @@ from gated where link_prob > 0.008 and believe > 0.2
 """
 
 
-_SEEDED_HELD: list = []
-
-
 def q_linking_seeded_ascii(spark, sf_dir):
     """The COMPLETE has-prob flagship, fully oracled — linking_pipeline_ascii
     PLUS the unambiguous-seed context-entity pool (xlink.py:115-145 +
@@ -1968,26 +1966,21 @@ def q_linking_seeded_ascii(spark, sf_dir):
     # mentions fans out to the context branch AND the seed branch — exactly
     # the flagship's fan-out point, handled the same way: persist the narrow
     # mention rows eagerly so the Python detection scan runs ONCE (union
-    # legs share no common subplans). Repeat-call hygiene mirrors
-    # _CURATION_HELD: each new call releases the previous call's handle.
-    while _SEEDED_HELD:
-        try:
-            _SEEDED_HELD.pop().unpersist()
-        except Exception:
-            pass
+    # legs share no common subplans).
     docs_norm, dct = _detection_base(spark, sf_dir)
-    mentions = resolve_conflicts(
-        detect_mentions_join(docs_norm, dct, max_words=2), weighted=True
-    ).persist()
-    mentions.count()
-    _SEEDED_HELD.append(mentions)
+    mentions = hold(
+        resolve_conflicts(
+            detect_mentions_join(docs_norm, dct, max_words=2), weighted=True
+        ),
+        eager=True,
+    )
     word_emb = _hash_embeddings_md5(
         spark, sf_dir, _tokens(spark, sf_dir).select("tok"), "tok"
     )
     # five consumers (entity-vector keys, the refined dictionary's seed
     # and candidate sides) — lazy checkpoint, the q_linking_pipeline_ascii
     # pattern (plan truncation + single materialization)
-    egm = q_e_given_m(spark, sf_dir).localCheckpoint(eager=False)
+    egm = cut(q_e_given_m(spark, sf_dir), eager=False)
     entity_emb = _hash_embeddings_md5(
         spark, sf_dir, egm.select("entity_id"), "entity_id"
     )
@@ -2078,9 +2071,6 @@ from gated where link_prob > 0.008 and believe > 0.2
 """
 
 
-_CURATION_HELD: list = []
-
-
 def _curation_corpus(spark, sf_dir):
     """The curation test corpus: every doc gets a per-doc PII footer (so
     redaction does real work), then ∪ 60%-token truncations (+100000 —
@@ -2131,16 +2121,6 @@ def q_curation_plan(spark, sf_dir):
     """
     from xlink_spark.plans.curation import curate_corpus
 
-    # repeat-call hygiene: a query function can't unpersist after its caller
-    # materializes, so each NEW call releases the previous call's handles
-    # (bench runs cold+warm pairs; the harness clearCache covers the rest).
-    # Handles may belong to an already-STOPPED session (two sessions in one
-    # process) — a dead handle has nothing cached, so just drop it.
-    while _CURATION_HELD:
-        try:
-            _CURATION_HELD.pop().unpersist()
-        except Exception:
-            pass
     corpus, eval_docs = _curation_corpus(spark, sf_dir)
     # The FIXTURE corpus is a derived-expression table (3x replication +
     # per-doc string surgery), and the curation plan consumes the raw docs
@@ -2150,11 +2130,8 @@ def q_curation_plan(spark, sf_dir):
     # once persisted). A deployment corpus is a parquet scan with pushdown
     # (jobs/run_curation), so this persist covers only the synthetic
     # fixture; default MEMORY_AND_DISK keeps it spill-safe.
-    corpus = corpus.persist()
-    eval_docs = eval_docs.persist()
-    held = _CURATION_HELD
-    held.append(corpus)
-    held.append(eval_docs)
+    corpus = hold(corpus)
+    eval_docs = hold(eval_docs)
     kept, _audit, drops = curate_corpus(
         corpus,
         eval_docs,
@@ -2167,10 +2144,9 @@ def q_curation_plan(spark, sf_dir):
         bands=4,
         contamination_ngram=3,
         contamination_min_hits=2,
-        persisted_out=held,
     )
-    # the persisted drop-list serves both fate branches within the single
-    # materialization; the harness (bench/driver) clears cache per query
+    # the checkpointed drop-list serves both fate branches within the single
+    # materialization
     return drops.select(
         "doc_id",
         F.col("stage").alias("fate"),
@@ -3398,8 +3374,7 @@ def q_jaccard_pairs_exact(spark, sf_dir):
     # the (doc, shingle) rows feed three consumers inside the join; at this
     # bench scale recomputing the scan-speed shingle explode measures FASTER
     # than persisting 400k narrow rows (cache materialization + lost codegen
-    # fusion), so no persisted_out here — at 100 TB, where the upstream is
-    # an I/O-bound corpus scan, callers pass persisted_out to scan once
+    # fusion), so no persist here
     corpus = _doc_pairs_corpus(spark, sf_dir)
     sh = shingles(corpus, n=3)  # already one row per (doc, shingle)
     return jaccard_join_exact(
@@ -3982,9 +3957,6 @@ SQL_ENTITY_RELATEDNESS = (
 )
 
 
-_RERANK_HELD: list = []
-
-
 def q_coherence_rerank(spark, sf_dir):
     """Collective linking: one coherence iteration over the local prior
     scores (operators/relatedness.coherence_rerank). Candidates = resolved
@@ -4006,19 +3978,13 @@ def q_coherence_rerank(spark, sf_dir):
         entity_relatedness,
     )
 
-    while _RERANK_HELD:
-        try:
-            _RERANK_HELD.pop().unpersist()
-        except Exception:
-            pass
     res = q_detected_mentions(spark, sf_dir).filter(F.col("parse_from") == "ma")
     ma = q_mention_anchors(spark, sf_dir)
     maw = ma.withColumn(
         "tot", F.sum("cnt").over(Window.partitionBy("mention"))
     )
-    cand = (
-        res.join(F.broadcast(maw), res["surface"] == maw["mention"])
-        .select(
+    cand = hold(
+        res.join(F.broadcast(maw), res["surface"] == maw["mention"]).select(
             "doc_id",
             "start",
             "end",
@@ -4026,11 +3992,9 @@ def q_coherence_rerank(spark, sf_dir):
             F.expr("(cnt * 1000000) div tot").cast("long").alias(
                 "believe_micro"
             ),
-        )
-        .persist()
+        ),
+        eager=True,
     )
-    cand.count()
-    _RERANK_HELD.append(cand)
     rnw = Window.partitionBy("doc_id", "start", "end").orderBy(
         F.col("believe_micro").desc(), F.col("entity_id").asc()
     )
@@ -4361,9 +4325,6 @@ SQL_FS_MATCH_WEIGHTS = (
 )
 
 
-_FS_HELD: list = []
-
-
 def q_fs_pair_scores(spark, sf_dir):
     """FS pairwise linkage scores (operators/linkage.fs_score): per-pair
     Σ of agreement/disagreement weights in exact bigint micro-units over
@@ -4372,16 +4333,9 @@ def q_fs_pair_scores(spark, sf_dir):
     flip cross-engine). Labels ride along for eval composition."""
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
     # vec fans out three ways (weight estimation, scoring melt, label
     # join-back); persist the narrow boolean rows once.
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     return scores.join(
@@ -4426,17 +4380,11 @@ def q_coherence_iterate2(spark, sf_dir):
         entity_relatedness,
     )
 
-    while _RERANK_HELD:
-        try:
-            _RERANK_HELD.pop().unpersist()
-        except Exception:
-            pass
     res = q_detected_mentions(spark, sf_dir).filter(F.col("parse_from") == "ma")
     ma = q_mention_anchors(spark, sf_dir)
     maw = ma.withColumn("tot", F.sum("cnt").over(Window.partitionBy("mention")))
-    cand = (
-        res.join(F.broadcast(maw), res["surface"] == maw["mention"])
-        .select(
+    cand = hold(
+        res.join(F.broadcast(maw), res["surface"] == maw["mention"]).select(
             "doc_id",
             "start",
             "end",
@@ -4444,11 +4392,9 @@ def q_coherence_iterate2(spark, sf_dir):
             F.expr("(cnt * 1000000) div tot").cast("long").alias(
                 "believe_micro"
             ),
-        )
-        .persist()
+        ),
+        eager=True,
     )
-    cand.count()
-    _RERANK_HELD.append(cand)
     rnw = Window.partitionBy("doc_id", "start", "end").orderBy(
         F.col("believe_micro").desc(), F.col("entity_id").asc()
     )
@@ -4537,16 +4483,9 @@ def q_fs_threshold_sweep(spark, sf_dir):
         threshold_sweep,
     )
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
     # vec fans out three ways (weights, scoring melt, label join-back) —
     # the same fan-out q_fs_pair_scores persists for
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"]).join(
         vec.select("id_a", "id_b", "is_match"), ["id_a", "id_b"]
@@ -4715,9 +4654,6 @@ SQL_SOFT_TFIDF_SCORES = (
 )
 
 
-_PPRL_HELD: list = []
-
-
 def q_pprl_dice_scores(spark, sf_dir):
     """Privacy-preserving linkage comparator (pprl.bloom_encode +
     bloom_dice_scores — Schnell, Bachteler & Reiher 2009) over the SNM
@@ -4733,19 +4669,13 @@ def q_pprl_dice_scores(spark, sf_dir):
     from xlink_spark.operators.linkage import sorted_neighborhood_pairs
     from xlink_spark.operators.pprl import bloom_dice_scores, bloom_encode
 
-    while _PPRL_HELD:
-        try:
-            _PPRL_HELD.pop().unpersist()
-        except Exception:
-            pass
     recs = _linkage_records(spark, sf_dir)
     pairs = sorted_neighborhood_pairs(
         recs, "key", ["name"], "id", window=4
     ).select("id_a", "id_b")
     # the encode chain (gram md5 + two distincts + the 4-word bit_or
     # pivot) feeds BOTH score sides; persist the tiny encoding table once
-    enc = bloom_encode(recs, "id", "name").persist()
-    _PPRL_HELD.append(enc)
+    enc = hold(bloom_encode(recs, "id", "name"))
     return bloom_dice_scores(pairs, enc)
 
 
@@ -4851,14 +4781,8 @@ def q_pprl_hlsh_pairs(spark, sf_dir):
     )
     # the encode chain feeds four consumers (both HLSH bucket join sides
     # + both Dice score sides); unpersisted it re-executed per consumer —
-    # persist the tiny encoding table once (held-handle contract)
-    while _PPRL_HELD:
-        try:
-            _PPRL_HELD.pop().unpersist()
-        except Exception:
-            pass
-    enc = bloom_encode(recs, "id", "text").persist()
-    _PPRL_HELD.append(enc)
+    # persist the tiny encoding table once
+    enc = hold(bloom_encode(recs, "id", "text"))
     cand = hlsh_candidate_pairs(enc)
     return bloom_dice_scores(cand, enc).filter(F.col("dice_ppt") >= 900)
 
@@ -4964,14 +4888,7 @@ def q_er_golden_records(spark, sf_dir):
         match_weights,
     )
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -5062,14 +4979,7 @@ def q_fused_golden_values(spark, sf_dir):
         truth_discovery,
     )
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -5164,14 +5074,7 @@ def q_fs_review_bands(spark, sf_dir):
     bands are non-empty at every sf (measured)."""
     from xlink_spark.operators.linkage import fs_decide, fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"]).join(
         vec.select("id_a", "id_b", "is_match"), ["id_a", "id_b"]
@@ -5206,14 +5109,7 @@ def q_er_pairwise_f1(spark, sf_dir):
         pairwise_f1,
     )
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -5563,14 +5459,7 @@ def q_clustering_ari(spark, sf_dir):
     from xlink_spark.operators.cluster import connected_components
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -5849,14 +5738,7 @@ def q_clustering_muc(spark, sf_dir):
     from xlink_spark.operators.cluster import connected_components
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -5923,14 +5805,7 @@ def q_clustering_blanc(spark, sf_dir):
     from xlink_spark.operators.cluster import connected_components
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -6020,14 +5895,7 @@ def q_clustering_ceaf(spark, sf_dir):
     from xlink_spark.operators.cluster import connected_components
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -6172,14 +6040,7 @@ def q_clustering_conll(spark, sf_dir):
     from xlink_spark.operators.cluster import connected_components
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -6187,18 +6048,15 @@ def q_clustering_conll(spark, sf_dir):
     )
     comp = connected_components(edges)
     recs = _linkage_records(spark, sf_dir).select("id")
-    asg = (
+    asg = hold(
         recs.join(
             comp.select(F.col("node").alias("id"), "component"), "id", "left"
-        )
-        .select(
+        ).select(
             F.coalesce(F.col("component"), F.col("id")).alias("pred"),
             F.pmod(F.col("id"), F.lit(10000000)).alias("gold"),
-        )
-        .persist()
+        ),
+        eager=True,
     )
-    asg.count()
-    _FS_HELD.append(asg)  # unpersisted by the next FS-family query
     b = bcubed(asg).select("n_items", "bcubed_f_micro")
     m = muc(asg).select("muc_f_micro")
     c = ceaf(asg).select("ceafe_f_micro")
@@ -6290,14 +6148,7 @@ def q_star_clusters(spark, sf_dir):
     from xlink_spark.operators.cluster import star_clusters
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -6379,14 +6230,7 @@ def q_center_clusters(spark, sf_dir):
     from xlink_spark.operators.cluster import center_clusters
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -6409,14 +6253,7 @@ def q_merge_center_clusters(spark, sf_dir):
     from xlink_spark.operators.cluster import merge_center_clusters
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -6591,14 +6428,7 @@ def q_pivot_clusters(spark, sf_dir):
     from xlink_spark.operators.cluster import pivot_clusters
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -6692,14 +6522,7 @@ def q_one_to_one_matches(spark, sf_dir):
         one_to_one_matches,
     )
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     cross = scores.filter(
@@ -7550,14 +7373,7 @@ def q_mutual_best_pairs(spark, sf_dir):
         mutual_best_matches,
     )
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     side_a = F.col("id_a") < 10000000
@@ -7619,14 +7435,7 @@ def q_link_constraints(spark, sf_dir):
         match_weights,
     )
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -7765,14 +7574,7 @@ def q_constrained_links(spark, sf_dir):
         match_weights,
     )
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select("id_a", "id_b")
@@ -7855,14 +7657,7 @@ def q_clustering_vmeasure(spark, sf_dir):
     from xlink_spark.operators.cluster import connected_components
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -8631,15 +8426,9 @@ def q_fs_tf_scores(spark, sf_dir):
     )
 
     recs = _linkage_records(spark, sf_dir)
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
     # vec feeds the weights collect, the score chain, and the prior/join
-    # consumers — persist once (the _FS_HELD release contract)
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    _FS_HELD.append(vec)
+    # consumers — persist once
+    vec = hold(_linkage_vectors(spark, sf_dir))
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     tfw = tf_value_weights(recs, "name", w, "agree_name")
@@ -8698,15 +8487,9 @@ def q_fs_match_probabilities(spark, sf_dir):
         match_weights,
     )
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
     # vec feeds the weights collect, the score chain, and the prior/join
-    # consumers — persist once (the _FS_HELD release contract)
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    _FS_HELD.append(vec)
+    # consumers — persist once
+    vec = hold(_linkage_vectors(spark, sf_dir))
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     sc = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     prior = vec.agg(
@@ -8757,15 +8540,9 @@ def q_fs_calibration(spark, sf_dir):
         match_weights,
     )
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
     # vec feeds the weights collect, the score chain, and the prior/join
-    # consumers — persist once (the _FS_HELD release contract)
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    _FS_HELD.append(vec)
+    # consumers — persist once
+    vec = hold(_linkage_vectors(spark, sf_dir))
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     sc = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     prior = vec.agg(
@@ -8829,15 +8606,9 @@ def q_cluster_cohesion(spark, sf_dir):
     from xlink_spark.operators.cluster import connected_components
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
     # vec feeds the weights collect, the score chain, and the prior/join
-    # consumers — persist once (the _FS_HELD release contract)
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    _FS_HELD.append(vec)
+    # consumers — persist once
+    vec = hold(_linkage_vectors(spark, sf_dir))
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     edges = scores.filter(F.col("score_micro") >= 0).select(
@@ -8923,19 +8694,11 @@ def q_cluster_repair(spark, sf_dir):
     )
 
     # both comparison-vector chains are consumed twice each (the
-    # match_weights collect + the score consumers) — persist them once,
-    # released by the next FS-family query (the _FS_HELD contract)
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    _FS_HELD.append(vec)
+    # match_weights collect + the score consumers) — persist them once
+    vec = hold(_linkage_vectors(spark, sf_dir))
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
-    vec4 = _linkage_vectors4(spark, sf_dir).persist()
-    _FS_HELD.append(vec4)
+    vec4 = hold(_linkage_vectors4(spark, sf_dir))
     w4 = match_weights(vec4, _FIELDS4, "is_match")
     strong = fs_score(vec4, w4, _FIELDS4, ["id_a", "id_b"])
     return repair_chain_merges(scores, strong)
@@ -9007,20 +8770,13 @@ def q_repair_f1_gain(spark, sf_dir):
     )
 
     # vec feeds three consumers (weights collect, scores, the labeled
-    # pairs), vec4 two — persist both once (the _FS_HELD contract; this
-    # query replays the whole repair arc twice for before/after F1, so
-    # unpersisted chains were re-executed ~6x)
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    _FS_HELD.append(vec)
+    # pairs), vec4 two — persist both once (this query replays the whole
+    # repair arc twice for before/after F1, so unpersisted chains were
+    # re-executed ~6x)
+    vec = hold(_linkage_vectors(spark, sf_dir))
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
-    vec4 = _linkage_vectors4(spark, sf_dir).persist()
-    _FS_HELD.append(vec4)
+    vec4 = hold(_linkage_vectors4(spark, sf_dir))
     w4 = match_weights(vec4, _FIELDS4, "is_match")
     strong = fs_score(vec4, w4, _FIELDS4, ["id_a", "id_b"])
 
@@ -9820,14 +9576,7 @@ def q_clustering_objective(spark, sf_dir):
     from xlink_spark.operators.cluster import connected_components
     from xlink_spark.operators.linkage import fs_score, match_weights
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    vec.count()
-    _FS_HELD.append(vec)
+    vec = hold(_linkage_vectors(spark, sf_dir), eager=True)
     recs = _linkage_records(spark, sf_dir)
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     scores = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
@@ -9891,15 +9640,9 @@ def q_active_learning_batch(spark, sf_dir):
         uncertainty_sample,
     )
 
-    while _FS_HELD:
-        try:
-            _FS_HELD.pop().unpersist()
-        except Exception:
-            pass
     # vec feeds the weights collect, the score chain, and the prior/join
-    # consumers — persist once (the _FS_HELD release contract)
-    vec = _linkage_vectors(spark, sf_dir).persist()
-    _FS_HELD.append(vec)
+    # consumers — persist once
+    vec = hold(_linkage_vectors(spark, sf_dir))
     w = match_weights(vec, _LINKAGE_FIELDS, "is_match")
     sc = fs_score(vec, w, _LINKAGE_FIELDS, ["id_a", "id_b"])
     prior = vec.agg(
@@ -10191,7 +9934,8 @@ SQL_LEARNED_BLOCKING_PAIRS = (
 # __spark_entry__) carries the product: the hash-oracled flagship variants,
 # the composed curation plan, and one representative per round-5 ER family —
 # legacy SURVEY-§2 rows follow. Contents and per-name oracle SQL unchanged.
-QUERIES: dict[str, Query] = {
+# Each builder's storage lives until the next registry query is built.
+QUERIES: dict[str, Query] = registry({
     "linking_pipeline_ascii": q_linking_pipeline_ascii,
     "linking_seeded_ascii": q_linking_seeded_ascii,
     "curation_plan": q_curation_plan,
@@ -10347,7 +10091,7 @@ QUERIES: dict[str, Query] = {
     "block_split_plan": q_block_split_plan,
     "progressive_snm": q_progressive_snm,
     "cluster_cohesion": q_cluster_cohesion,
-}
+})
 
 ORACLES: dict[str, str] = {
     "freq_m": SQL_FREQ_M,

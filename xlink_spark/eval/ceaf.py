@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from xlink_spark.operators.cluster import connected_components
+from xlink_spark.plans.storage import cut
 
 _MICRO = 1_000_000
 
@@ -170,7 +171,7 @@ def ceaf(
     )
     # LAZY checkpoint: the stats aggregation below (the loop's one driver
     # action) materializes the blocks; each DP level then rereads them
-    ranked = ranked.localCheckpoint(eager=False)
+    ranked = cut(ranked, eager=False)
 
     # ONE tiny driver action on the checkpointed frame: the oriented
     # level count plus the width guards (guards on the UNFLIPPED dims —
@@ -247,7 +248,7 @@ def ceaf(
             # stays O(checkpoint_every) deep) while execution defers to the
             # single final aggregation — the whole subset-DP runs as ONE
             # Spark job instead of one per checkpoint interval
-            dp = dp.localCheckpoint(eager=False)
+            dp = cut(dp, eager=False)
 
     per_comp = dp.groupBy("component").agg(
         F.max("best3").alias("b3"), F.max("best4").alias("b4")

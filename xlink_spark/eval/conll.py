@@ -22,9 +22,11 @@ from pyspark.sql import functions as F
 from xlink_spark.config import DEFAULT, EngineConfig
 from xlink_spark.eval.f1 import linking_prf, mention_prf
 from xlink_spark.plans.pipeline import Dictionary, link_corpus
+from xlink_spark.plans.storage import hold, scope
 from xlink_spark.sources.conll import conll_stats, read_aida_conll
 
 
+@scope()
 def eval_on_conll(
     spark: SparkSession,
     conll_path: str,
@@ -38,20 +40,15 @@ def eval_on_conll(
 
     Returns {'dataset': conll_stats row, 'mention': P/R/F1 on spans,
     'linking': pairwise linking P/R/F1 + blocked accuracy (the gate
-    metric)}.
+    metric)}. Runs in its own storage scope: an F1 sweep calling eval
+    repeatedly must not accumulate cached blocks.
     """
     docs, gold = read_aida_conll(spark, conll_path, kb_uris)
     # three scoring actions consume these — cache so the parse runs once
     # and the expensive linking DAG runs once, not per metric
-    docs = docs.cache()
-    gold = gold.cache()
-    # persisted_out: link_corpus persists intermediates internally; without a
-    # handle an F1 sweep calling eval repeatedly accumulates cached blocks
-    # until executor storage is exhausted
-    held: list = []
-    links = link_corpus(
-        docs, d, word_emb, entity_emb, cfg, persisted_out=held
-    ).cache()
+    docs = hold(docs)
+    gold = hold(gold)
+    links = hold(link_corpus(docs, d, word_emb, entity_emb, cfg))
     gold_linked = gold.filter(F.col("entity_id") != "NIL")
     # NIL convention: gold-NIL mentions are excluded from the linking score
     # ENTIRELY — a prediction at a NIL gold span must not count as a false
@@ -61,13 +58,8 @@ def eval_on_conll(
         "doc_id", "start", "end"
     )
     links_for_linking = links.join(nil_spans, ["doc_id", "start", "end"], "left_anti")
-    try:
-        return {
-            "dataset": conll_stats(gold).collect()[0].asDict(),
-            "mention": mention_prf(gold, links),
-            "linking": linking_prf(gold_linked, links_for_linking),
-        }
-    finally:
-        # don't leak cached blocks across repeated evaluations
-        for df_ in (links, gold, docs, *held):
-            df_.unpersist()
+    return {
+        "dataset": conll_stats(gold).collect()[0].asDict(),
+        "mention": mention_prf(gold, links),
+        "linking": linking_prf(gold_linked, links_for_linking),
+    }

@@ -25,6 +25,7 @@ from xlink_spark.config import DEFAULT, DictionaryConfig
 from xlink_spark.operators import detect as DT
 from xlink_spark.operators import probs as PR
 from xlink_spark.operators import scoring as SC
+from xlink_spark.plans.storage import hold
 
 
 def _tokens(plain: DataFrame) -> DataFrame:
@@ -63,25 +64,23 @@ def linking_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan has thousands of natural splits and this repartition is a no-op
     # cost — here it is the difference between 1-way and N-way detection)
     par = spark.sparkContext.defaultParallelism * 2
-    plain = (
+    plain = hold(
         docs.select(
             F.col("doc_id").cast("string").alias("doc_id"),
             "source",
             F.lower("text").alias("text"),
-        )
-        .repartition(par, "doc_id")
-        .cache()
+        ).repartition(par, "doc_id")
     )
 
     toks = _tokens(plain)
-    ma = (
+    ma = hold(
         toks.select(
             F.col("tok").alias("mention"),
             F.concat_ws("@", "tok", "source").alias("entity_id"),
         )
         .groupBy("mention", "entity_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    ).cache()
+    )
 
     probs = PR.four_probs(ma)
     freq = toks.groupBy(F.col("tok").alias("mention")).agg(F.count(F.lit(1)).alias("freq"))
@@ -90,16 +89,17 @@ def linking_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_emb = emb.count()
     # both tables are consumed by several broadcast builds + an infer_dim
     # probe — cache so each derivation chain runs once
-    entity_emb = _hash_embeddings(ma.select("entity_id"), "entity_id", emb, n_emb).cache()
-    word_emb = _hash_embeddings(toks.select("tok"), "tok", emb, n_emb).cache()
+    entity_emb = hold(_hash_embeddings(ma.select("entity_id"), "entity_id", emb, n_emb))
+    word_emb = hold(_hash_embeddings(toks.select("tok"), "tok", emb, n_emb))
 
     surface_dict = DT.build_surface_dict(ma)
     # mentions is the fan-out point now (ctx branch + seed branch): persist
     # the NARROW mention rows eagerly — a lazy persist lets concurrent AQE
     # branches race the same uncached plan, and the old alternative
     # (persisting the 20x-exploded candidate table) costs 20x the memory
-    mentions = DT.resolve_conflicts(DT.detect_mentions(plain, surface_dict)).persist()
-    mentions.count()
+    mentions = hold(
+        DT.resolve_conflicts(DT.detect_mentions(plain, surface_dict)), eager=True
+    )
     ctx = SC.context_word_vector(SC.attach_context(mentions, plain), word_emb)
     # seeds derive from the DICTIONARY + mentions (surface grain), not from
     # the exploded candidate table — the plan is one linear chain, so no

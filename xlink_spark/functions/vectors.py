@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType
+from pyspark.sql.types import DoubleType
 
 
 def _col(c: Column | str) -> Column:
@@ -43,27 +43,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     """
     na, nb = norm(a), norm(b)
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot(a, b) / (na * nb))
-
-
-@pandas_udf(DoubleType())
-def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched cosine for wide scoring joins.
-
-    Used when each batch carries many (entity_vec, ctx_vec) pairs of the same
-    dimension — one vectorized numpy matmul per Arrow batch instead of one
-    `aggregate` expression per row. Rows with nulls or zero norms score 0.
-    """
-    out = np.zeros(len(a), dtype=np.float64)
-    mask = a.notna() & b.notna()
-    if mask.any():
-        av = np.stack(a[mask].to_numpy())
-        bv = np.stack(b[mask].to_numpy())
-        num = np.einsum("ij,ij->i", av, bv)
-        den = np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.where(den > 0, num / den, 0.0)
-        out[mask.to_numpy()] = sims
-    return pd.Series(out)
 
 
 def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
@@ -146,23 +125,6 @@ def make_entity_sim_udf(spark, entity_emb, key_col: str = "key", vec_col: str = 
         return pd.Series(out)
 
     return entity_ctx_sim
-
-
-@pandas_udf(ArrayType(DoubleType()))
-def mean_pool_udf(vecs: pd.Series) -> pd.Series:
-    """GROUPED_AGG-free mean pool: input is array<array<float>> per row.
-
-    Mean of a list of vectors; null/empty list → null (callers decide the
-    empty-context convention — sim=0 for words xlink.py:319 vs sim=1 for
-    entities on the has-prob path xlink.py:329).
-    """
-
-    def pool(v):
-        if v is None or len(v) == 0:
-            return None
-        return np.mean(np.stack(v), axis=0).astype(np.float64).tolist()
-
-    return vecs.map(pool)
 
 
 def mean_pool_expr(vecs: Column | str) -> Column:

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xlink_spark.plans.snapshots import SnapshotStore
+from xlink_spark.plans.storage import cut
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -95,7 +96,7 @@ def connected_components(
             start_iter, cur, resumed = last[0] + 1, last[1](spark), True
     # eager: the first large-star consumes cur on BOTH union branches, so
     # the blocks must exist before the loop's first job
-    cur = cur.localCheckpoint(eager=True)
+    cur = cut(cur, eager=True)
     # the canonical INPUT edges (full original node set), reused by the
     # roots pass below — only valid when the loop started from the input,
     # not from a resumed mid-run snapshot
@@ -117,7 +118,7 @@ def connected_components(
         # (eager ckpt + separate signature collect). At toy scale the loop
         # is driver/job-overhead-bound, so this halves the round cost;
         # at cluster scale it removes one full pass over the edge state.
-        small = _canonical(_small_star(big)).localCheckpoint(eager=False)
+        small = cut(_canonical(_small_star(big)), eager=False)
         # cheap convergence signature: count + xor of hashes (order-free,
         # overflow-free under ANSI mode)
         sig = small.agg(
@@ -511,7 +512,7 @@ def star_clusters(
     ka = adj.join(key, "a").join(
         key.select(F.col("a").alias("b"), F.col("k").alias("kb")), "b"
     )
-    cur = ka.localCheckpoint(eager=True)
+    cur = cut(ka, eager=True)
     assigned = []
     for rnd in range(1, rounds + 1):
         nbr_max = cur.groupBy("a", "k").agg(F.max("kb").alias("mk"))
@@ -540,12 +541,12 @@ def star_clusters(
         # consumes it on both anti-join legs, so its blocks are computed and
         # persisted inside cur's job — one Spark job per round instead of
         # three, with the same truncated lineage for every later consumer
-        done = centers.unionByName(sats).localCheckpoint(eager=False)
+        done = cut(centers.unionByName(sats), eager=False)
         assigned.append(done)
-        cur = (
+        cur = cut(
             cur.join(done.select("a"), "a", "anti")
-            .join(done.select(F.col("a").alias("b")), "b", "anti")
-            .localCheckpoint(eager=True)
+            .join(done.select(F.col("a").alias("b")), "b", "anti"),
+            eager=True,
         )
         if cur.isEmpty():
             break
@@ -656,7 +657,7 @@ def center_clusters(
     nodes = canon.select(F.col("cs").alias("a")).unionByName(
         canon.select(F.col("cd").alias("a"))
     ).distinct()
-    cur = both.localCheckpoint(eager=True)
+    cur = cut(both, eager=True)
     spark = edges.sparkSession
     centers = spark.createDataFrame([], "node long")
     assigned: list[DataFrame] = []
@@ -691,25 +692,28 @@ def center_clusters(
             .filter(F.col("c") == 2)
         )
         new_centers = fired.select(F.col("bcs").alias("node"))
-        done = _union_all(
-            [
-                att,
-                fired.select(
-                    F.col("bcd").alias("node"),
-                    F.col("bcs").alias("center"),
-                    F.lit(rnd).cast("int").alias("round"),
-                ),
-                new_centers.select(
-                    "node",
-                    F.col("node").alias("center"),
-                    F.lit(rnd).cast("int").alias("round"),
-                ),
-            ]
-        ).localCheckpoint(eager=True)
+        done = cut(
+            _union_all(
+                [
+                    att,
+                    fired.select(
+                        F.col("bcd").alias("node"),
+                        F.col("bcs").alias("center"),
+                        F.lit(rnd).cast("int").alias("round"),
+                    ),
+                    new_centers.select(
+                        "node",
+                        F.col("node").alias("center"),
+                        F.lit(rnd).cast("int").alias("round"),
+                    ),
+                ]
+            ),
+            eager=True,
+        )
         assigned.append(done)
-        centers = centers.unionByName(new_centers).localCheckpoint(eager=True)
+        centers = cut(centers.unionByName(new_centers), eager=True)
         sats = done.filter(F.col("node") != F.col("center")).select("node")
-        cur = (
+        cur = cut(
             cur.join(sats.select(F.col("node").alias("n")), "n", "anti")
             .join(sats.select(F.col("node").alias("m")), "m", "anti")
             .join(
@@ -723,8 +727,8 @@ def center_clusters(
                 "left",
             )
             .filter(F.col("_cn").isNull() | F.col("_cm").isNull())
-            .drop("_cn", "_cm")
-            .localCheckpoint(eager=True)
+            .drop("_cn", "_cm"),
+            eager=True,
         )
         if cur.isEmpty():
             break
@@ -859,7 +863,7 @@ def pivot_clusters(edges: DataFrame, rounds: int = 3) -> DataFrame:
     assignment join at the end; lineage truncated per round via
     localCheckpoint — the star_clusters precedent.
     """
-    adj = (
+    adj = cut(
         _canonical(edges)
         .select(
             F.explode(
@@ -870,15 +874,15 @@ def pivot_clusters(edges: DataFrame, rounds: int = 3) -> DataFrame:
             ).alias("e")
         )
         .select("e.a", "e.b")
-        .distinct()
+        .distinct(),
         # materialized ONCE: the rounds consume it AND the final
         # assignment pass re-reads it — without this the whole upstream
         # chain (often an FS scoring DAG) recomputes per consumer
-        .localCheckpoint(eager=True)
+        eager=True,
     )
     cur = adj
     # LAZY: materialized inside round 1's single eager job (see below)
-    pool = adj.select("a").distinct().localCheckpoint(eager=False)
+    pool = cut(adj.select("a").distinct(), eager=False)
     nodes = pool  # the materialized universe, reused by the leftover select
     pivot_frames = []
     for rnd in range(1, rounds + 1):
@@ -889,11 +893,11 @@ def pivot_clusters(edges: DataFrame, rounds: int = 3) -> DataFrame:
         # cur) is computed and persisted by ONE Spark job per round instead
         # of three, with identical truncated lineage for later consumers
         # (the isEmpty probe and the final union read persisted blocks).
-        pivots = (
+        pivots = cut(
             pool.join(nbr_min, "a", "left")
             .filter(F.col("mn").isNull() | (F.col("a") < F.col("mn")))
-            .select("a", F.lit(rnd).cast("int").alias("round"))
-            .localCheckpoint(eager=False)
+            .select("a", F.lit(rnd).cast("int").alias("round")),
+            eager=False,
         )
         pivot_frames.append(pivots)
         dominated = (
@@ -901,15 +905,15 @@ def pivot_clusters(edges: DataFrame, rounds: int = 3) -> DataFrame:
             .select("a")
             .distinct()
         )
-        pool = (
+        pool = cut(
             pool.join(pivots.select("a"), "a", "anti")
-            .join(dominated, "a", "anti")
-            .localCheckpoint(eager=False)
+            .join(dominated, "a", "anti"),
+            eager=False,
         )
-        cur = (
+        cur = cut(
             cur.join(pool, "a", "semi")
-            .join(pool.select(F.col("a").alias("b")), "b", "semi")
-            .localCheckpoint(eager=True)
+            .join(pool.select(F.col("a").alias("b")), "b", "semi"),
+            eager=True,
         )
         if pool.isEmpty():
             break
@@ -1029,23 +1033,24 @@ def canopy_clusters(
         if nodes is not None
         else sym.select("a").distinct()
     )
-    pool = pool.localCheckpoint(eager=True)
+    pool = cut(pool, eager=True)
     # restrict edges to the declared universe up front: a caller-supplied
     # ``nodes`` table may be a subset of the edge endpoints, and a
     # neighbor outside the pool must not veto a center election
-    cur_edges = (
+    cur_edges = cut(
         sym.join(pool, "a", "semi")
-        .join(pool.select(F.col("a").alias("b")), "b", "semi")
-        .localCheckpoint(eager=True)
+        .join(pool.select(F.col("a").alias("b")), "b", "semi"),
+        eager=True,
     )
     member_frames = []
     for rnd in range(1, rounds + 1):
         nbr_min = cur_edges.groupBy("a").agg(F.min("b").alias("mn"))
-        centers = (
+        centers = cut(
             pool.join(nbr_min, "a", "left")
             .filter(F.col("mn").isNull() | (F.col("a") < F.col("mn")))
-            .select("a")
-        ).localCheckpoint(eager=True)
+            .select("a"),
+            eager=True,
+        )
         members = (
             cur_edges.join(centers.select(F.col("a").alias("b")), "b")
             .select(
@@ -1061,7 +1066,7 @@ def canopy_clusters(
                 )
             )
         )
-        member_frames.append(members.localCheckpoint(eager=True))
+        member_frames.append(cut(members, eager=True))
         removed = (
             cur_edges.filter(F.col("sim") >= F.lit(int(tight)))
             .join(centers.select(F.col("a").alias("b")), "b")
@@ -1069,11 +1074,11 @@ def canopy_clusters(
             .unionByName(centers.select("a"))
             .distinct()
         )
-        pool = pool.join(removed, "a", "anti").localCheckpoint(eager=True)
-        cur_edges = (
+        pool = cut(pool.join(removed, "a", "anti"), eager=True)
+        cur_edges = cut(
             cur_edges.join(pool, "a", "semi")
-            .join(pool.select(F.col("a").alias("b")), "b", "semi")
-            .localCheckpoint(eager=True)
+            .join(pool.select(F.col("a").alias("b")), "b", "semi"),
+            eager=True,
         )
         if pool.isEmpty():
             break

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from xlink_spark.functions.text import tokens_lower
+from xlink_spark.plans.storage import hold
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -242,7 +243,6 @@ def minhash_dedup(
     bands: int = 4,
     threshold: float = 0.8,
     max_bucket: int | None = 1000,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline → verified duplicate pairs.
 
@@ -254,18 +254,10 @@ def minhash_dedup(
 
     The shingle table feeds FOUR consumers (signatures, both sides of the
     intersection join, set sizes); persisting it beats re-exploding the
-    corpus per consumer — measured 2x on the bench corpus. The persist
-    happens ONLY when the caller passes ``persisted_out`` to receive the
-    handle and unpersist it after materializing (same contract as
-    ``link_corpus``): an unowned persist would leak cached executor blocks
-    across calls, which costs more than the recompute it saves.
+    corpus per consumer — measured 2x on the bench corpus. The cache
+    belongs to the caller's storage scope (``plans/storage``).
     """
-    sh = shingles(docs, text_col, id_col, shingle_n)
-    if persisted_out is not None:
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted_out.append(sh)
+    sh = hold(shingles(docs, text_col, id_col, shingle_n))
     sig = minhash_signatures(sh, id_col, num_hashes)
     cand = lsh_candidate_pairs(
         sig, id_col, bands, max_bucket=max_bucket, num_hashes=num_hashes

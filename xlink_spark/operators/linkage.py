@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from xlink_spark.plans.storage import cut, hold
+
 MICRO = 1_000_000
 
 
@@ -113,10 +115,8 @@ def global_sort_ranks(
     # could misalign with the rank pass's partitions. localCheckpoint
     # materializes the partitioning once (an eager job at construction —
     # the price of boundary consistency) and both consumers read it.
-    part = (
-        records.repartitionByRange(n_parts, *order)
-        .localCheckpoint()
-        .withColumn("_pid", F.spark_partition_id())
+    part = cut(records.repartitionByRange(n_parts, *order), eager=True).withColumn(
+        "_pid", F.spark_partition_id()
     )
     pcnt = part.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
     pw = (
@@ -1650,28 +1650,30 @@ def repair_chain_merges(
     # to accidentally recompute (measured 2x wall on a 12M-record run)
     # LAZY: materialized by the first CC's eager canonical checkpoint —
     # still evaluated exactly once for all four consumers
-    sc = _canon(scores, id_a, id_b, score_col, "_s").localCheckpoint(
-        eager=False
-    )
+    sc = cut(_canon(scores, id_a, id_b, score_col, "_s"), eager=False)
     strong = _canon(
         strong_scores, id_a, id_b, strong_score_col, "_t"
     ).groupBy("_lo", "_hi").agg(F.min("_t").alias("_t"))
 
     edges0 = sc.filter(F.col("_s") >= F.lit(int(threshold_micro)))
-    comp0 = connected_components(
-        edges0.select(F.col("_lo").alias("src"), F.col("_hi").alias("dst"))
-    ).localCheckpoint(eager=False)  # read by flagged, edges1, nodes0 —
-    # lazy, materialized by the downstream eager CC checkpoint
+    # read by flagged, edges1, nodes0 — lazy, materialized by the
+    # downstream eager CC checkpoint
+    comp0 = cut(
+        connected_components(
+            edges0.select(F.col("_lo").alias("src"), F.col("_hi").alias("dst"))
+        ),
+        eager=False,
+    )
     ca = comp0.select(F.col("node").alias("_lo"), F.col("component").alias("_c0"))
     cb = comp0.select(F.col("node").alias("_hi"), F.col("component").alias("_c1"))
-    flagged = (
+    flagged = cut(
         sc.filter(F.col("_s") < F.lit(int(threshold_micro)))
         .join(ca, "_lo")
         .join(cb, "_hi")
         .filter(F.col("_c0") == F.col("_c1"))
         .select(F.col("_c0").alias("_flag"))
-        .distinct()
-        .localCheckpoint(eager=False)  # tiny; read by edges1 and nodes0
+        .distinct(),
+        eager=False,  # tiny; read by edges1 and nodes0
     )
     # re-cluster ONLY the flagged components: unflagged components keep
     # their full edge set, so their repaired assignment is comp0's by
@@ -1679,7 +1681,7 @@ def repair_chain_merges(
     # recompute the same labels. Restricting the input to flagged-interior
     # survivors makes the re-cluster cost scale with the FLAGGED subgraph
     # (the audit-grain fraction of the corpus), not with the corpus.
-    edges1 = (
+    edges1 = cut(
         edges0.join(ca, "_lo")
         .join(flagged, F.col("_c0") == F.col("_flag"))
         .join(strong, ["_lo", "_hi"], "left")
@@ -1688,8 +1690,8 @@ def repair_chain_merges(
         # pass); checkpointing keeps the strong-comparator join chain —
         # the expensive-field consultation — to a single execution (lazy:
         # CC's own eager canonical checkpoint materializes it)
-        .select("_lo", "_hi")
-        .localCheckpoint(eager=False)
+        .select("_lo", "_hi"),
+        eager=False,
     )
     comp1 = connected_components(
         edges1.select(F.col("_lo").alias("src"), F.col("_hi").alias("dst"))
@@ -1811,7 +1813,7 @@ def allpairs_jaccard_pairs(
     num_partitions = int(
         records.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    sorted_toks = (
+    sorted_toks = cut(
         tok_rows.join(freq, "tok")
         .repartition(num_partitions, "_id")
         .groupBy("_id")
@@ -1821,8 +1823,8 @@ def allpairs_jaccard_pairs(
                 lambda s: s["tok"],
             ).alias("_sorted")
         )
-        .select("_id", "_sorted", F.size("_sorted").alias("_n"))
-        .localCheckpoint(eager=True)
+        .select("_id", "_sorted", F.size("_sorted").alias("_n")),
+        eager=True,
     )
     # p = n - alpha(n) + 1, all integer: ceil(a/b) = (a + b - 1) div b
     if measure == "jaccard":
@@ -2398,24 +2400,24 @@ def one_to_one_matches(
     wb = Window.partitionBy(right_col).orderBy(
         F.col(score_col).desc(), F.col(left_col).asc()
     )
-    cur = pairs.localCheckpoint(eager=True)
+    cur = cut(pairs, eager=True)
     accepted = []
     for rnd in range(1, rounds + 1):
-        m = (
+        m = cut(
             cur.withColumn("_rn_a", F.row_number().over(wa))
             .withColumn("_rn_b", F.row_number().over(wb))
             .filter((F.col("_rn_a") == 1) & (F.col("_rn_b") == 1))
             .drop("_rn_a", "_rn_b")
-            .withColumn("round", F.lit(rnd).cast("int"))
+            .withColumn("round", F.lit(rnd).cast("int")),
             # LAZY: cur's eager checkpoint below consumes m on both
             # anti-join legs, so one job per round materializes both
-            .localCheckpoint(eager=False)
+            eager=False,
         )
         accepted.append(m)
-        cur = (
+        cur = cut(
             cur.join(m.select(left_col), left_col, "anti")
-            .join(m.select(right_col), right_col, "anti")
-            .localCheckpoint(eager=True)
+            .join(m.select(right_col), right_col, "anti"),
+            eager=True,
         )
         if cur.isEmpty():
             break
@@ -2730,14 +2732,14 @@ def vector_blocking_pairs(
         # gram scan 4x dominates — eager-checkpoint it once (the Vernica
         # materialization-point precedent in allpairs_jaccard_pairs).
         # Default False keeps plan construction action-free.
-        vec = vec.localCheckpoint(eager=True)
+        vec = cut(vec, eager=True)
     spark = records.sparkSession
-    # the plane-sum and verify exchanges are CPU-dense on tiny bytes
-    # (``planes`` multiply-accumulates per vector row; one dot product per
-    # candidate) — size them explicitly (REPARTITION_BY_NUM is exempt from
-    # AQE coalescing, which was measured collapsing both to ONE task; the
-    # downstream aggregations reuse the pinned hash partitioning, so no
-    # exchange is added)
+    # the plane-sum exchange is CPU-dense on tiny bytes (``planes``
+    # multiply-accumulates per vector row) — size it explicitly
+    # (REPARTITION_BY_NUM is exempt from AQE coalescing, which was measured
+    # collapsing it to ONE task; the downstream aggregation reuses the
+    # pinned hash partitioning, so no exchange is added). The verify
+    # exchange below is not pinned and stays subject to AQE coalescing.
     num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     signs = spark.range(dim).select(
         F.col("id").alias("d"),
@@ -2917,29 +2919,30 @@ def iterative_merge_er(
         )
         va = vals.select(F.col("eid").alias("ea"), "fld", "val")
         vb = vals.select(F.col("eid").alias("eb"), "fld", "val")
-        edges = (
+        edges = cut(
             cand.join(va, "ea")
             .join(vb, ["eb", "fld", "val"])
             .groupBy("ea", "eb")
             .agg(F.count_distinct("fld").alias("_nf"))
             .filter(F.col("_nf") == nf)
-            .select(F.col("ea").alias("src"), F.col("eb").alias("dst"))
-        ).localCheckpoint(eager=True)
+            .select(F.col("ea").alias("src"), F.col("eb").alias("dst")),
+            eager=True,
+        )
         if edges.isEmpty():
             break
         rounds_used += 1
         comp = connected_components(edges).select(
             F.col("node").alias("eid"), F.col("component")
         )
-        relabel = lambda df: (  # noqa: E731 — round-local helper
+        relabel = lambda df: cut(  # noqa: E731 — round-local helper
             df.join(comp, "eid", "left")
             .withColumn("eid", F.coalesce("component", "eid"))
             .drop("component")
-            .distinct()
+            .distinct(),
             # LAZY: the next round's eager edge checkpoint (or the final
             # members projection) materializes the relabeled state —
             # lineage truncates identically with one fewer job per round
-            .localCheckpoint(eager=False)
+            eager=False,
         )
         vals = relabel(vals)
         members = relabel(members)
@@ -3051,11 +3054,7 @@ def collective_er(
             )
             .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         )
-        all_edges = (
-            all_edges.unionByName(accepted).distinct().localCheckpoint(
-                eager=True
-            )
-        )
+        all_edges = cut(all_edges.unionByName(accepted).distinct(), eager=True)
         grown = all_edges.count()
         if grown == n_edges:
             break
@@ -3064,13 +3063,13 @@ def collective_er(
         comp = connected_components(all_edges).select(
             F.col("node"), F.col("component")
         )
-        asg = (
+        asg = cut(
             uni.join(comp, "node", "left")
             .select(
                 "node",
                 F.coalesce("component", "node").cast("long").alias("cluster"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     else:
         converged = False
@@ -3494,13 +3493,12 @@ def learn_blocking_scheme(
     b = mem.select(
         F.col("_p"), F.col("_b"), F.col("_id").alias("id_b")
     )
-    cov = (
+    cov = hold(
         F.broadcast(pos)
         .join(a, "id_a")
         .join(b, ["_p", "_b", "id_b"])
         .select("_p", "id_a", "id_b")
-        .distinct()
-        .persist()
+        .distinct(),
     )
     spark = memberships.sparkSession
     chosen: list[tuple] = []
@@ -3551,9 +3549,9 @@ def learn_blocking_scheme(
             picked = cov.where(F.col("_p") == row["_p"]).select(
                 "id_a", "id_b"
             )
-            remaining = remaining.join(
-                picked, ["id_a", "id_b"], "left_anti"
-            ).localCheckpoint(eager=True)
+            remaining = cut(
+                remaining.join(picked, ["id_a", "id_b"], "left_anti"), eager=True
+            )
     finally:
         cov.unpersist()
     return spark.createDataFrame(

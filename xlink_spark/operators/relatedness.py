@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from xlink_spark.plans.storage import cut
+
 MICRO = 1_000_000
 
 
@@ -83,7 +85,7 @@ def entity_relatedness(
             .drop("_deg")
         )
     if materialize:
-        ln = ln.localCheckpoint(eager=True)
+        ln = cut(ln, eager=True)
     cnt = ln.groupBy("entity_id").agg(F.count(F.lit(1)).alias("n_in"))
     n_docs = ln.agg(F.count_distinct("doc_id").alias("n_docs"))
     a = ln.select("doc_id", F.col("entity_id").alias("entity_a"))

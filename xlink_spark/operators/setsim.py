@@ -100,7 +100,6 @@ def jaccard_join_exact(
     threshold_ppm: int = 500_000,
     id_col: str = "doc_id",
     assume_distinct: bool = False,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """All unordered doc pairs with exact set-Jaccard >= threshold_ppm/1e6.
 
@@ -116,17 +115,12 @@ def jaccard_join_exact(
     is already distinct (e.g. ``dedup.shingles`` output).
 
     ``doc_shingles`` feeds THREE consumers (the shingle-frequency table,
-    the ranked prefixes, and the verify sets) — without a persist Spark
-    recomputes its whole upstream (the shingle explode over the corpus)
-    once per consumer. Pass ``persisted_out`` (a list) to persist the
-    narrow (id, shingle) rows and receive the handle for unpersisting —
-    the same contract as ``dedup.minhash_dedup``.
+    the ranked prefixes, and the verify sets), so Spark recomputes its
+    upstream once per consumer; a caller whose upstream is an expensive
+    scan passes a held frame (``plans/storage.hold``).
     """
     if not assume_distinct:
         doc_shingles = doc_shingles.select(id_col, "shingle").distinct()
-    if persisted_out is not None:
-        doc_shingles = doc_shingles.persist()
-        persisted_out.append(doc_shingles)
     cands = prefix_candidates(doc_shingles, threshold_ppm, id_col)
     sets = doc_shingles.groupBy(F.col(id_col).alias("_id")).agg(
         F.collect_set("shingle").alias("_set"),

@@ -18,7 +18,7 @@ each doc appears at most once, labeled by the first stage that dropped it.
 The survivor set is a single anti-join of the corpus against that list, and
 the audit is a per-stage count over the SAME list — so materializing
 (kept, audit) computes each expensive stage (LSH band join, contamination
-join) exactly once when the list is persisted (it is id+stage only — a few
+join) exactly once when the list is checkpointed (it is id+stage only — a few
 bytes per dropped doc). Nothing per-group is ever collected: the exact-dup
 path is a ``row_number`` window (dedup.exact_dup_drops), not a
 collect_list, so degenerate hash groups stream through their reducer.
@@ -50,45 +50,7 @@ from pyspark.sql import functions as F
 
 from xlink_spark.operators import dedup as DD
 from xlink_spark.operators.textstats import quality_score
-
-
-class _CheckpointHandle:
-    """Held-list shim for a lineage-truncated (localCheckpoint) frame.
-
-    ``DataFrame.unpersist`` only clears the SQL cache, which a local
-    checkpoint never enters — its blocks live as RDD storage tied to the
-    LogicalRDD. This shim frees those blocks through the analyzed plan's
-    RDD, so the ``persisted_out`` contract (owner calls ``unpersist()`` on
-    every handle) releases checkpoint storage too.
-    """
-
-    def __init__(self, df: DataFrame):
-        self.df = df
-        self.columns = df.columns
-
-    @property
-    def is_cached(self) -> bool:  # held-contract introspection
-        return True
-
-    def unpersist(self, blocking: bool = False):
-        try:
-            self.df._jdf.queryExecution().analyzed().rdd().unpersist(blocking)
-        except Exception:
-            pass  # stopped session / already released — nothing cached
-        return self.df
-
-
-def _truncate(df: DataFrame, persisted_out: list | None) -> DataFrame:
-    """localCheckpoint (lazy) + register a release handle.
-
-    Only active under ``persisted_out`` — the default call stays pure plan
-    construction (no storage side effects), mirroring the persist contract.
-    """
-    if persisted_out is None:
-        return df
-    out = df.localCheckpoint(eager=False)
-    persisted_out.append(_CheckpointHandle(out))
-    return out
+from xlink_spark.plans.storage import cut, hold
 
 
 def curation_drops(
@@ -105,7 +67,6 @@ def curation_drops(
     bands: int = 4,
     contamination_ngram: int = 13,
     contamination_min_hits: int = 1,
-    persisted_out: list | None = None,
 ) -> tuple[DataFrame, list[str]]:
     """The chained drop-list: ``((doc_id, stage), stage_names)``.
 
@@ -147,14 +108,12 @@ def curation_drops(
         ).withColumn(
             "top_bigram_frac_u", F.coalesce("top_bigram_frac_u", F.lit(0))
         )
-    if persisted_out is not None:
-        # Served twice: once by the after_quality anti-join legs, once by
-        # the drops-union legs. It is a plain SQL cache (not a checkpoint)
-        # because nothing nests UNDER it — the pyramid-poison documented in
-        # the module docstring needs nested caches; one shallow cache under
-        # a truncation boundary is the cheap, safe case. Owner unpersists.
-        facts = facts.persist()
-        persisted_out.append(facts)
+    # Served twice: once by the after_quality anti-join legs, once by the
+    # drops-union legs. It is a plain SQL cache (not a checkpoint) because
+    # nothing nests UNDER it — the pyramid-poison documented in the module
+    # docstring needs nested caches; one shallow cache under a truncation
+    # boundary is the cheap, safe case.
+    facts = hold(facts)
 
     w = Window.partitionBy("content_hash").orderBy(id_col)
     exact_drops = (
@@ -190,9 +149,7 @@ def curation_drops(
     # both read the stored blocks, and everything downstream plans against
     # a flat scan instead of the facts pyramid (see module docstring).
     gate_dropped = reduce(DataFrame.unionByName, parts).select(id_col)
-    after_quality = _truncate(
-        docs.join(gate_dropped, id_col, "left_anti"), persisted_out
-    )
+    after_quality = cut(docs.join(gate_dropped, id_col, "left_anti"), eager=False)
 
     # 3. near-dup: banded-LSH pairs (cap active), larger id loses
     pairs = DD.minhash_dedup(
@@ -203,21 +160,19 @@ def curation_drops(
         num_hashes=num_hashes,
         bands=bands,
         threshold=neardup_threshold,
-        persisted_out=persisted_out,
     )
     near_drops = (
         pairs.select(F.col("doc_b").alias(id_col))
         .distinct()
         .select(id_col, F.lit("near_dup").alias("stage"))
     )
-    if persisted_out is not None and eval_docs is not None:
+    if eval_docs is not None:
         # near_drops feeds BOTH the drop-list union and (through after_near)
         # the contamination branch; Spark shares no common subplans across
         # union legs, so without this persist the LSH band join + Jaccard
         # verify — the most expensive shuffles in the chain — would execute
         # twice in the first materialization. The list is id-only (tiny).
-        near_drops = near_drops.persist()
-        persisted_out.append(near_drops)
+        near_drops = hold(near_drops)
     stages.append("near_dup")
     parts.append(near_drops)
 
@@ -251,7 +206,6 @@ def curate_corpus(
     bands: int = 4,
     contamination_ngram: int = 13,
     contamination_min_hits: int = 1,
-    persisted_out: list | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Chain dedup → quality → near-dup → decontamination over ``docs``.
 
@@ -264,13 +218,11 @@ def curate_corpus(
     * ``drops`` — the (doc_id, stage) list itself, for per-doc accounting.
 
     ``kept`` and ``audit`` both derive from the single ``drops`` list, so
-    with ``persisted_out`` passed the expensive stages (LSH band join,
-    contamination join) run ONCE no matter how many of the three outputs are
-    materialized: ``drops`` is lineage-truncated (localCheckpoint, id+stage
-    only) and a release handle is appended to the list for the caller to
-    unpersist — the library-wide contract. Without ``persisted_out`` nothing
-    is persisted or checkpointed (leak-free default) and each materialized
-    output recomputes the chain.
+    the expensive stages (LSH band join, contamination join) run ONCE no
+    matter how many of the three outputs are materialized: ``drops`` is
+    lineage-truncated (localCheckpoint, id+stage only). The cached and
+    checkpointed frames belong to the caller's storage scope
+    (``plans/storage``): materialize every output before it is released.
     """
     drops, stages = curation_drops(
         docs,
@@ -286,17 +238,15 @@ def curate_corpus(
         bands=bands,
         contamination_ngram=contamination_ngram,
         contamination_min_hits=contamination_min_hits,
-        persisted_out=persisted_out,
     )
-    if persisted_out is not None:
-        # the stage-wise union stacks partitions (n_stages × input parts);
-        # coalesce the narrow id+stage list back to the session's
-        # parallelism — merges map work, no extra shuffle. Then TRUNCATE:
-        # kept and audit need the list's VALUES, not its lineage, and a
-        # cached (rather than checkpointed) drop list would nest the whole
-        # five-stage pyramid into every downstream plan (module docstring).
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        drops = _truncate(drops.coalesce(max(par, 1)), persisted_out)
+    # the stage-wise union stacks partitions (n_stages × input parts);
+    # coalesce the narrow id+stage list back to the session's parallelism —
+    # merges map work, no extra shuffle. Then TRUNCATE: kept and audit need
+    # the list's VALUES, not its lineage, and a cached (rather than
+    # checkpointed) drop list would nest the whole five-stage pyramid into
+    # every downstream plan (module docstring).
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    drops = cut(drops.coalesce(max(par, 1)), eager=False)
 
     kept = docs.join(drops.select(id_col), id_col, "left_anti").withColumn(
         "quality", quality_score(text_col)

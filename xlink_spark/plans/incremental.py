@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from xlink_spark.config import DEFAULT, EngineConfig
 from xlink_spark.plans.pipeline import Dictionary, link_corpus
 from xlink_spark.plans.snapshots import SnapshotStore
+from xlink_spark.plans.storage import scope
 
 _STAGES = (
     "mention_anchors",
@@ -67,26 +68,21 @@ def link_increment(
     Idempotent per batch_id: an already-committed batch is returned from its
     snapshot without recomputation (safe to re-run after a crash).
     ``dictionary``: pass a preloaded Dictionary to skip the per-call
-    snapshot reads (streaming loads it once for the whole query). Any
-    DataFrames the linking plan persists are unpersisted after the commit —
-    repeated batches must not accumulate cached blocks.
+    snapshot reads (streaming loads it once for the whole query). The
+    linking plan's cached and checkpointed frames are freed after the
+    commit — repeated batches must not accumulate cached blocks.
     """
     spark = new_docs_plain.sparkSession
     if batch_id in store.iterations("links"):
         return store.read_iteration(spark, "links", batch_id)
     d = dictionary if dictionary is not None else load_dictionary(spark, store)
-    held: list = []
-    try:
-        links = link_corpus(
-            new_docs_plain, d, word_emb, entity_emb, cfg, persisted_out=held
-        )
+    # the scope also closes on a failed commit: it must not leak cached
+    # blocks into the retry
+    with scope():
+        links = link_corpus(new_docs_plain, d, word_emb, entity_emb, cfg)
         store.commit(
             "links", batch_id, links, metrics={"batch_id": batch_id}
         )
-    finally:
-        # a failed commit must not leak cached blocks into the retry
-        for p_ in held:
-            p_.unpersist()
     # return THIS batch's committed snapshot, not the latest iteration —
     # re-running an older gap batch after newer ones committed must hand
     # back the gap batch's rows

@@ -25,6 +25,7 @@ from xlink_spark.operators import scoring as SC
 from xlink_spark.operators.cluster import cluster_links
 from xlink_spark.operators.spans import plain_text
 from xlink_spark.plans.snapshots import SnapshotStore
+from xlink_spark.plans.storage import hold
 
 
 @dataclass
@@ -92,18 +93,12 @@ def link_corpus(
     word_emb: DataFrame,
     entity_emb: DataFrame,
     cfg: EngineConfig = DEFAULT,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """The full linking query: plain docs → final (mention, entity) links.
 
     Output: (doc_id, start, end, surface, entity_id, believe, parse_from).
     Two detection passes (the reference's 'ma' and 'tt' automata,
     xlink.py:111/181) — two map-only scans, no extra shuffle.
-
-    ``persisted_out``: callers that invoke this repeatedly (micro-batch
-    streaming) pass a list to receive every DataFrame this plan persists;
-    unpersist them once the result is materialized, or cached blocks
-    accumulate across batches until executor storage is exhausted.
     """
     pcfg = cfg.predictor
 
@@ -125,10 +120,7 @@ def link_corpus(
         )
     # fan-out point (ctx branch + seed branch): persist the NARROW mention
     # rows eagerly so concurrent branches don't race the same uncached plan
-    ma_mentions = DT.resolve_conflicts(ma_detected).persist()
-    if persisted_out is not None:
-        persisted_out.append(ma_mentions)
-    ma_mentions.count()
+    ma_mentions = hold(DT.resolve_conflicts(ma_detected), eager=True)
     ma_ctx = SC.context_word_vector(
         SC.attach_context(ma_mentions, docs_plain, pcfg), word_emb,
         tokenizer=pcfg.context_tokenizer,

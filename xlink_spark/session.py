@@ -45,14 +45,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE coalesces by shuffle BYTES (64 MB advisory); our Python
-        # detection stage is CPU-bound on small text bytes, so without a
-        # floor AQE collapses it to a handful of tasks and idles the rest
-        # of the cluster. Keep at least one partition per core.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionNum",
-            str(max(shuffle_partitions, 1)),
-        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
