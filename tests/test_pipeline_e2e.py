@@ -8,20 +8,34 @@ Gates (BASELINE.md §B):
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
 from xlink_spark.config import DEFAULT
 from xlink_spark.eval.f1 import linking_prf, mention_prf
 from xlink_spark.operators.spans import plain_text, span_sequence_key
-from xlink_spark.plans.pipeline import build_dictionary, link_and_cluster, link_corpus
+from xlink_spark.plans.pipeline import (
+    Dictionary,
+    build_dictionary,
+    link_and_cluster,
+    link_corpus,
+)
 from xlink_spark.plans.snapshots import SnapshotStore
 
 
 @pytest.fixture(scope="module")
 def built(sdfs):
     docs, kb, wemb, eemb, gold = sdfs
+    # without a snapshot store every dictionary table is a lazy plan over
+    # the corpus, re-derived by each of its consumers in every linking run
+    # (~700 Spark jobs per link_corpus count instead of ~100) — cache the
+    # tables once for the module's linking runs
     d = build_dictionary(docs, kb, eemb)
+    d = Dictionary(
+        **{f.name: getattr(d, f.name).cache() for f in dataclasses.fields(d)}
+    )
     plain = docs.select("doc_id", plain_text("spans").alias("text")).cache()
     links = link_corpus(plain, d, wemb, eemb).cache()
     links.count()
