@@ -69,6 +69,13 @@ from pyspark.sql import functions as F
 from xlink_spark.plans.storage import hold, scope
 
 
+def _opt(args, name: str, default):
+    """The option's parsed value, or ``default`` when it was not given. An
+    explicit 0 is kept, so the operator's own range check rejects it."""
+    value = getattr(args, name, None)
+    return default if value is None else value
+
+
 @scope()
 def run_er_job(spark, args) -> dict:
     """The job body, importable for in-session testing. It runs in its own
@@ -149,14 +156,11 @@ def run_er_job(spark, args) -> dict:
     elif blocking == "suffix":
         from xlink_spark.operators.linkage import suffix_blocking_pairs
 
-        # explicit None check: `or 4` would silently rewrite an (invalid)
-        # 0 instead of letting the operator's min_len guard reject it
-        sml = getattr(args, "suffix_min_len", None)
         pairs = suffix_blocking_pairs(
             recs,
             "_key",
             idc,
-            min_len=4 if sml is None else int(sml),
+            min_len=int(_opt(args, "suffix_min_len", 4)),
             max_block_size=max_block,
         )
     elif blocking == "qgram":
@@ -166,7 +170,7 @@ def run_er_job(spark, args) -> dict:
             recs,
             "_key",
             idc,
-            q=int(getattr(args, "qgram_q", None) or 4),
+            q=int(_opt(args, "qgram_q", 4)),
             max_block_size=max_block,
             threshold_ppt=getattr(args, "qgram_threshold_ppt", None),
         )
@@ -180,9 +184,7 @@ def run_er_job(spark, args) -> dict:
             recs.withColumn("_toks", F.split(F.col("_key"), "\\s+")),
             "_toks",
             idc,
-            threshold_ppt=int(
-                getattr(args, "allpairs_threshold_ppt", None) or 600
-            ),
+            threshold_ppt=int(_opt(args, "allpairs_threshold_ppt", 600)),
             max_block_size=max_block,
             measure=getattr(args, "allpairs_measure", None) or "jaccard",
         )
@@ -195,10 +197,10 @@ def run_er_job(spark, args) -> dict:
             recs,
             "_key",
             idc,
-            q=int(getattr(args, "qgram_q", None) or 4),
-            loose=int(getattr(args, "canopy_loose", None) or 1),
-            tight=int(getattr(args, "canopy_tight", None) or 2),
-            rounds=int(getattr(args, "canopy_rounds", None) or 3),
+            q=int(_opt(args, "qgram_q", 4)),
+            loose=int(_opt(args, "canopy_loose", 1)),
+            tight=int(_opt(args, "canopy_tight", 2)),
+            rounds=int(_opt(args, "canopy_rounds", 3)),
             max_block_size=50 if max_block is None else max_block,
         )
     elif blocking == "blocksplit":
@@ -214,7 +216,7 @@ def run_er_job(spark, args) -> dict:
             "_key",
             idc,
             max_pairs_per_task=int(
-                getattr(args, "split_target_pairs", None) or 1_000_000
+                _opt(args, "split_target_pairs", 1_000_000)
             ),
         ).select("id_a", "id_b")
     elif blocking == "vector":
@@ -230,12 +232,10 @@ def run_er_job(spark, args) -> dict:
             recs,
             "_key",
             idc,
-            q=int(getattr(args, "qgram_q", None) or 3),
-            planes=int(getattr(args, "vector_planes", None) or 48),
-            band_rows=int(getattr(args, "vector_band_rows", None) or 8),
-            threshold_ppt=int(
-                getattr(args, "vector_threshold_ppt", None) or 750
-            ),
+            q=int(_opt(args, "qgram_q", 3)),
+            planes=int(_opt(args, "vector_planes", 48)),
+            band_rows=int(_opt(args, "vector_band_rows", 8)),
+            threshold_ppt=int(_opt(args, "vector_threshold_ppt", 750)),
         ).select("id_a", "id_b")
     elif blocking == "edjoin":
         from xlink_spark.operators.linkage import edit_distance_join
@@ -249,8 +249,8 @@ def run_er_job(spark, args) -> dict:
             recs,
             "_key",
             idc,
-            k=int(getattr(args, "edjoin_max_edits", None) or 1),
-            q=int(getattr(args, "qgram_q", None) or 2),
+            k=int(_opt(args, "edjoin_max_edits", 1)),
+            q=int(_opt(args, "qgram_q", 2)),
             method=getattr(args, "edjoin_method", None) or "prefix",
         ).select("id_a", "id_b")
     elif blocking == "multipass":
@@ -577,7 +577,7 @@ def run_er_job(spark, args) -> dict:
                 strong_scores,
                 threshold_micro=int(args.threshold_micro),
                 strong_threshold_micro=int(
-                    getattr(args, "repair_threshold_micro", None) or 0
+                    _opt(args, "repair_threshold_micro", 0)
                 ),
             )
             # materialize before unpersisting the vectors it reads
@@ -594,7 +594,7 @@ def run_er_job(spark, args) -> dict:
         from xlink_spark.operators.cluster import star_clusters
 
         comp = star_clusters(
-            edges, rounds=int(getattr(args, "star_rounds", None) or 3)
+            edges, rounds=int(_opt(args, "star_rounds", 3))
         ).select("node", F.col("center").alias("component"))
     elif cluster_algo == "center":
         # Similarity-ordered stars (Hassanzadeh-Miller CENTER): the
@@ -603,7 +603,7 @@ def run_er_job(spark, args) -> dict:
         from xlink_spark.operators.cluster import center_clusters
 
         comp = center_clusters(
-            edges, rounds=int(getattr(args, "star_rounds", None) or 3)
+            edges, rounds=int(_opt(args, "star_rounds", 3))
         ).select("node", F.col("center").alias("component"))
     elif cluster_algo == "pivot":
         # KwikCluster pivots (LFMIS of the match graph): the
@@ -612,7 +612,7 @@ def run_er_job(spark, args) -> dict:
         from xlink_spark.operators.cluster import pivot_clusters
 
         comp = pivot_clusters(
-            edges, rounds=int(getattr(args, "star_rounds", None) or 3)
+            edges, rounds=int(_opt(args, "star_rounds", 3))
         ).select("node", F.col("cluster").alias("component"))
     elif cluster_algo == "one_to_one":
         # clean-clean linkage (the Splink link_only shape): each of
@@ -662,7 +662,7 @@ def run_er_job(spark, args) -> dict:
             "_left",
             "_right",
             "score_micro",
-            rounds=int(getattr(args, "star_rounds", None) or 3),
+            rounds=int(_opt(args, "star_rounds", 3)),
         )
         comp = m.select(
             F.col("_left").alias("node"),
@@ -679,7 +679,7 @@ def run_er_job(spark, args) -> dict:
         from xlink_spark.operators.cluster import merge_center_clusters
 
         comp = merge_center_clusters(
-            edges, rounds=int(getattr(args, "star_rounds", None) or 3)
+            edges, rounds=int(_opt(args, "star_rounds", 3))
         ).select("node", F.col("cluster").alias("component"))
     else:
         comp = connected_components(edges)
@@ -846,7 +846,7 @@ def run_er_job(spark, args) -> dict:
     return out
 
 
-def main() -> None:
+def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser()
     ap.add_argument("--records", required=True)
     ap.add_argument("--output", required=True)
@@ -918,8 +918,8 @@ def main() -> None:
     ap.add_argument(
         "--qgram-q",
         type=int,
-        default=4,
-        help="qgram blocking: gram width",
+        help="gram width of qgram and canopy blocking (default 4), vector "
+        "blocking (default 3) and edjoin (default 2)",
     )
     ap.add_argument(
         "--allpairs-threshold-ppt",
@@ -1058,7 +1058,11 @@ def main() -> None:
     )
     ap.add_argument("--snapshots", help="commit clusters/golden via the SnapshotStore")
     ap.add_argument("--master", default=None)
-    args = ap.parse_args()
+    return ap
+
+
+def main() -> None:
+    args = build_parser().parse_args()
 
     from xlink_spark.session import get_spark
 

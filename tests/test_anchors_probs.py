@@ -66,6 +66,17 @@ def test_extract_mention_anchors_counts(sdfs, corpus):
     assert got == dict(want)
 
 
+
+def test_extract_out_links_distinct_per_doc(sdfs, corpus):
+    """G1: one (doc, entity) edge per distinct anchor target of the doc."""
+    docs, *_ = sdfs
+    got = sorted(map(tuple, AN.extract_out_links(docs).collect()))
+    want = sorted(
+        set(zip(corpus.gold_mentions["doc_id"], corpus.gold_mentions["entity_id"]))
+    )
+    assert got == want and len(got) < len(corpus.gold_mentions)
+
+
 def test_filter_mention_anchors_thresholds(spark):
     ma = spark.createDataFrame(
         [("a", "e1", 5), ("b", "e2", 1), ("c", "e3", 3), ("c", "e4", 1)],

@@ -37,6 +37,23 @@ def test_entity_dictionary_roundtrip(spark, tmp_path):
     assert {r["entity_id"] for r in kb2.collect()} == {"e1", "e2"}
 
 
+
+def test_strip_zh_spaces_matches_reference_regex(spark):
+    """C5: a single space between two non-ASCII-letter chars is removed;
+    two passes, as the reference loop rescans overlapping matches."""
+    import re
+
+    from xlink_spark.functions.text import strip_zh_spaces
+
+    texts = ["中 文 字", "Graph theory", "矩阵 a 理论", "1 2 3", "中  文", ""]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    got = [r["s"] for r in df.select(strip_zh_spaces("t").alias("s")).collect()]
+    pat = r"([^a-zA-Z])( )([^a-zA-Z])"
+    want = [re.sub(pat, r"\1\3", re.sub(pat, r"\1\3", t)) for t in texts]
+    assert got == want
+    assert got[:4] == ["中文字", "Graph theory", "矩阵 a 理论", "123"]
+
+
 def test_entity_abstract_embedding(spark):
     kb = spark.createDataFrame(
         [("e1", "alpha beta"), ("e2", "unknownword")],

@@ -537,6 +537,54 @@ def test_run_er_job_blocking_strategies(spark, tmp_path):
         run("bogus", "name", "bad")
 
 
+
+def test_run_er_cli_defaults_and_explicit_zero(spark, tmp_path, monkeypatch):
+    """Options left off the command line fall back to each blocking
+    method's own default (edjoin's gram width is 2, not qgram's 4); an
+    explicit 0 reaches the operator's range check instead of silently
+    becoming the default."""
+    import pytest as _pytest
+
+    from xlink_spark.operators import linkage as LK
+
+    sys.path.insert(0, _JOBS_DIR)
+    from run_er import build_parser, run_er_job
+
+    src = str(tmp_path / "records_cli")
+    spark.createDataFrame(
+        [(1, "alpha beta"), (2, "alpha betb")], "id long, name string"
+    ).write.parquet(src)
+
+    def parse(*extra):
+        return build_parser().parse_args(
+            ["--records", src, "--output", str(tmp_path / "out"),
+             "--id-col", "id", "--key-expr", "name", "--fields", "name",
+             *extra]
+        )
+
+    seen = {}
+
+    class _Stop(Exception):
+        pass
+
+    def fake_edit_distance_join(recs, key_col, id_col, **kw):
+        seen.update(kw)
+        raise _Stop
+
+    with monkeypatch.context() as mp:
+        mp.setattr(LK, "edit_distance_join", fake_edit_distance_join)
+        with _pytest.raises(_Stop):
+            run_er_job(spark, parse("--blocking", "edjoin"))
+    assert seen == {"k": 1, "q": 2, "method": "prefix"}
+
+    with _pytest.raises(ValueError, match="k must be >= 1"):
+        run_er_job(spark, parse("--blocking", "edjoin", "--edjoin-max-edits", "0"))
+    with _pytest.raises(ValueError, match="threshold_ppt"):
+        run_er_job(
+            spark, parse("--blocking", "allpairs", "--allpairs-threshold-ppt", "0")
+        )
+
+
 def test_run_er_job_multipass_blocking(spark, tmp_path):
     """--blocking multipass recovers twins whose PRIMARY sort key is the
     corrupted field: pass 1 keys on the (corrupted) name, pass 2 on

@@ -48,28 +48,43 @@ def test_empty_context_conventions(spark):
     which is 1 for BOTH reference passes (xlink.py:329-334 — the shared
     cal_candidate_context_entities_sim; 0 is the GM predictor convention,
     Predictor.py:210, exposed via the parameter)."""
-    cands = spark.createDataFrame(
-        [("d", 0, 2, "aa", "ma", "aa", "e1", 1.0, [1.0, 0.0], None)],
+    mentions = spark.createDataFrame(
+        [("d", 0, 2, "aa", "ma", None)],
         "doc_id string, start int, end int, surface string, parse_from string,"
-        "mention string, entity_id string, p double, entity_vec array<double>,"
         "ctx_vec array<double>",
     )
+    ma = spark.createDataFrame([("aa", "e1", 1)], "mention string, entity_id string, cnt long")
+    egm = spark.createDataFrame([("aa", "e1", 1.0)], "mention string, entity_id string, p double")
+    emb = spark.createDataFrame([("e1", [1.0, 0.0])], "key string, vec array<double>")
+    cands = SC.candidate_table(mentions, ma, egm, emb)
     seeds = spark.createDataFrame(
         [], "doc_id string, start int, end int, seed_vec array<double>"
     )
     doc_agg = spark.createDataFrame(
         [], "doc_id string, doc_sum array<double>, doc_seed_cnt long"
     )
-    has_prob = SC.context_entity_vector(cands, seeds, doc_agg, empty_sim=1.0).collect()[0]
+    has_prob = SC.context_entity_vector(
+        cands, seeds, doc_agg, empty_sim=1.0, entity_emb=emb
+    ).collect()[0]
+    assert has_prob["ctx_word_sim"] == 0.0
     assert has_prob["ctx_ent_sim"] == 1.0
-    no_prob = SC.context_entity_vector(cands, seeds, doc_agg, empty_sim=0.0).collect()[0]
+    no_prob = SC.context_entity_vector(
+        cands, seeds, doc_agg, empty_sim=0.0, entity_emb=emb
+    ).collect()[0]
     assert no_prob["ctx_ent_sim"] == 0.0
     lp = spark.createDataFrame([("aa", 0.5)], "mention string, link_prob double")
     scored = SC.score_has_prob(
-        SC.context_entity_vector(cands, seeds, doc_agg, empty_sim=1.0), lp
+        SC.context_entity_vector(cands, seeds, doc_agg, empty_sim=1.0, entity_emb=emb),
+        lp,
     ).collect()
     # word_sim = 0 (null ctx) ⇒ cand_believe = 0 ⇒ believe = 0.25 > 0.2 ⇒ kept
     assert len(scored) == 1 and abs(scored[0]["believe"] - 0.25) < 1e-12
+
+
+def _two_axis_emb(spark):
+    return spark.createDataFrame(
+        [("e1", [1.0, 0.0]), ("e2", [0.0, 1.0])], "key string, vec array<double>"
+    )
 
 
 def test_pool_exclusion_modes(spark):
@@ -77,20 +92,21 @@ def test_pool_exclusion_modes(spark):
     no-prob pool drops entity-overlapping seeds for SEEDED mentions only
     (xlink.py:241-254)."""
     # doc has two seeds: m1→e1 (vec [1,0]), m2→e2 (vec [0,1]).
+    emb = _two_axis_emb(spark)
     cands = spark.createDataFrame(
         [
-            ("d", 0, 2, "m1", "ma", "m1", "e1", 1.0, [1.0, 0.0]),
-            ("d", 5, 7, "m2", "ma", "m2", "e2", 1.0, [0.0, 1.0]),
+            ("d", 0, 2, "m1", "ma", "m1", "e1", 1.0),
+            ("d", 5, 7, "m2", "ma", "m2", "e2", 1.0),
         ],
         "doc_id string, start int, end int, surface string, parse_from string,"
-        "mention string, entity_id string, p double, entity_vec array<double>",
+        "mention string, entity_id string, p double",
     )
-    seeds, doc_agg = SC.seed_pool(cands)
+    seeds, doc_agg = SC.seed_pool(cands, emb)
     # has-prob semantics: pool = ALL seeds ⇒ [1,1] for both mentions
     got = {
         r["entity_id"]: r["ctx_ent_sim"]
         for r in SC.context_entity_vector(
-            cands, seeds, doc_agg, empty_sim=1.0, exclusion="none"
+            cands, seeds, doc_agg, empty_sim=1.0, entity_emb=emb, exclusion="none"
         ).collect()
     }
     assert got["e1"] == pytest.approx(1 / math.sqrt(2))
@@ -100,7 +116,8 @@ def test_pool_exclusion_modes(spark):
     got = {
         r["entity_id"]: r["ctx_ent_sim"]
         for r in SC.context_entity_vector(
-            cands, seeds, doc_agg, empty_sim=1.0, exclusion="candidate_overlap"
+            cands, seeds, doc_agg, empty_sim=1.0, entity_emb=emb,
+            exclusion="candidate_overlap",
         ).collect()
     }
     assert got["e1"] == pytest.approx(0.0)
@@ -112,18 +129,20 @@ def test_candidate_overlap_spares_unseeded_mentions(spark):
     an entity with one of its candidates (xlink.py:235-240: the exclusion
     branch runs only for mentions with a result_cand)."""
     # m1 (amb: e1, e2) is unseeded; m2 (unambiguous: e1) seeds the doc.
+    emb = _two_axis_emb(spark)
     cands = spark.createDataFrame(
         [
-            ("d", 0, 2, "m1", "ma", "m1", "e1", 0.5, [1.0, 0.0]),
-            ("d", 0, 2, "m1", "ma", "m1", "e2", 0.5, [0.0, 1.0]),
-            ("d", 5, 7, "m2", "ma", "m2", "e1", 1.0, [1.0, 0.0]),
+            ("d", 0, 2, "m1", "ma", "m1", "e1", 0.5),
+            ("d", 0, 2, "m1", "ma", "m1", "e2", 0.5),
+            ("d", 5, 7, "m2", "ma", "m2", "e1", 1.0),
         ],
         "doc_id string, start int, end int, surface string, parse_from string,"
-        "mention string, entity_id string, p double, entity_vec array<double>",
+        "mention string, entity_id string, p double",
     )
-    seeds, doc_agg = SC.seed_pool(cands)
+    seeds, doc_agg = SC.seed_pool(cands, emb)
     out = SC.context_entity_vector(
-        cands, seeds, doc_agg, empty_sim=1.0, exclusion="candidate_overlap"
+        cands, seeds, doc_agg, empty_sim=1.0, entity_emb=emb,
+        exclusion="candidate_overlap",
     )
     got = {(r["start"], r["entity_id"]): r["ctx_ent_sim"] for r in out.collect()}
     # m1 unseeded ⇒ pool = [1,0] (the e1 seed stays despite the overlap)
@@ -131,6 +150,41 @@ def test_candidate_overlap_spares_unseeded_mentions(spark):
     assert got[(0, "e2")] == pytest.approx(0.0)
     # m2 seeded, its candidate e1 matches the only seed ⇒ empty pool ⇒ 1
     assert got[(5, "e1")] == pytest.approx(1.0)
+
+
+def test_scoring_plan_construction_runs_no_spark_job(spark):
+    """Building the candidate table and the context-entity similarity is
+    action-free: no probe job runs before the caller's own action."""
+    mentions = spark.createDataFrame(
+        [("d", 0, 2, "m1", "ma", [0.6, 0.8]), ("d", 5, 7, "m2", "ma", None)],
+        "doc_id string, start int, end int, surface string, parse_from string,"
+        "ctx_vec array<double>",
+    )
+    ma = spark.createDataFrame(
+        [("m1", "e1", 2), ("m1", "e2", 1), ("m2", "e2", 1)],
+        "mention string, entity_id string, cnt long",
+    )
+    egm = spark.createDataFrame(
+        [("m1", "e1", 0.6), ("m1", "e2", 0.4), ("m2", "e2", 1.0)],
+        "mention string, entity_id string, p double",
+    )
+    emb = _two_axis_emb(spark)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup() or [])
+    seeds, doc_agg = SC.seed_pool_from_dictionary(mentions, ma, egm, emb)
+    cands = SC.context_entity_vector(
+        SC.candidate_table(mentions, ma, egm, emb),
+        seeds, doc_agg, empty_sim=1.0, entity_emb=emb,
+    )
+    assert set(tracker.getJobIdsForGroup() or []) - before == set()
+    got = {
+        (r["start"], r["entity_id"]): (r["ctx_word_sim"], r["ctx_ent_sim"])
+        for r in cands.collect()
+    }
+    # m2 → e2 is the doc's only seed: pool [0,1]
+    assert got[(0, "e1")] == (pytest.approx(0.6), pytest.approx(0.0))
+    assert got[(0, "e2")] == (pytest.approx(0.8), pytest.approx(1.0))
+    assert got[(5, "e2")] == (0.0, pytest.approx(1.0))
 
 
 def test_believe_fusion_and_gates(spark):

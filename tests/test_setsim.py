@@ -5,6 +5,7 @@ from __future__ import annotations
 import itertools
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from xlink_spark.operators import setsim as SS
@@ -53,9 +54,19 @@ def test_threshold_boundary_pair_is_decided_exactly(spark):
     assert SS.jaccard_join_exact(sh, threshold_ppm=500_001).count() == 0
 
 
-def test_prefix_candidates_complete_and_pruning(spark):
-    """Candidates ⊇ all true pairs, and the prefix join PRUNES: docs sharing
-    only the corpus-wide head shingle never become candidates at high t."""
+def test_threshold_ppm_outside_unit_interval_raises(spark):
+    sh = _mk_shingles(spark, {"a": {"x"}, "b": {"x"}})
+    for bad in (0, -1, SS.PPM + 1):
+        with pytest.raises(ValueError):
+            SS.jaccard_join_exact(sh, threshold_ppm=bad)
+
+
+def test_ppjoin_candidates_complete_and_pruning(spark):
+    """The kernel's candidate stage at the adapter's ppm scale: candidates ⊇
+    all true pairs, and the prefix join PRUNES: docs sharing only the
+    corpus-wide head shingle never become candidates at high t."""
+    from xlink_spark.operators.linkage import _ppjoin_candidates
+
     # every doc contains the head shingle "common"; only d0/d1 are near-dups
     docs = {
         "d0": {"common", "a", "b", "c"},
@@ -63,11 +74,13 @@ def test_prefix_candidates_complete_and_pruning(spark):
         "d2": {"common", "e", "f", "g", "h", "i"},
         "d3": {"common", "j", "k", "l", "m", "n"},
     }
-    sh = _mk_shingles(spark, docs)
-    cands = {
-        (r["doc_a"], r["doc_b"])
-        for r in SS.prefix_candidates(sh, 500_000).collect()
-    }
+    sets = _mk_shingles(spark, docs).groupBy("doc_id").agg(
+        F.collect_set("shingle").alias("_set")
+    )
+    _sorted, cand_rows = _ppjoin_candidates(
+        sets, "_set", "doc_id", t=500_000, scale=SS.PPM, measure="jaccard"
+    )
+    cands = {(r["id_a"], r["id_b"]) for r in cand_rows.collect()}
     true_pairs = {(a, b) for a, b, *_ in _brute(docs, 500_000)}
     assert true_pairs <= cands
     assert ("d2", "d3") not in cands  # head-shingle-only overlap pruned
@@ -106,8 +119,7 @@ def test_exact_join_is_superset_of_lsh_at_same_threshold(spark):
 
 def test_duplicate_shingle_rows_are_deduped_by_default(spark):
     """Duplicate (doc, shingle) rows inflate counts and silently DROP true
-    pairs unless deduped — the default must protect, with assume_distinct
-    as the explicit scale opt-out."""
+    pairs unless deduped — the join must protect against them."""
     docs = {"a": {"x", "y"}, "b": {"x", "y"}}
     clean = _mk_shingles(spark, docs)
     dup = clean.union(clean.where(F.col("doc_id") == "a"))  # doc a doubled
@@ -115,9 +127,6 @@ def test_duplicate_shingle_rows_are_deduped_by_default(spark):
         (r["doc_a"], r["doc_b"], r["inter"], r["uni"]) for r in df.collect()
     )
     assert key(SS.jaccard_join_exact(dup)) == key(SS.jaccard_join_exact(clean))
-    assert key(SS.jaccard_join_exact(clean, assume_distinct=True)) == [
-        ("a", "b", 2, 2)
-    ]
 
 
 def test_plan_has_no_cartesian(spark):

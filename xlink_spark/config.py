@@ -63,8 +63,6 @@ class ClusterConfig:
     """Transitive clustering (large-star/small-star CC) knobs."""
 
     match_threshold: float = 0.2      # edges = pairs with believe >= this
-    max_iterations: int = 50          # CC converges in O(log n); hard stop
-    checkpoint_every: int = 1         # snapshot each iteration (resumable)
 
 
 @dataclass(frozen=True)
@@ -72,10 +70,6 @@ class EngineConfig:
     dictionary: DictionaryConfig = field(default_factory=DictionaryConfig)
     predictor: PredictorConfig = field(default_factory=PredictorConfig)
     cluster: ClusterConfig = field(default_factory=ClusterConfig)
-    # hot blocking keys are replicated this many ways when salting (detect.py)
-    skew_salt_buckets: int = 8
-    # a key is "hot" if its candidate-list length exceeds this
-    hot_key_min_candidates: int = 64
     # dictionary tables broadcast in the candidate explosion up to this many
     # rows; beyond it the salted shuffle join takes over
     broadcast_dict_max_rows: int = 5_000_000

@@ -3371,15 +3371,9 @@ def q_jaccard_pairs_exact(spark, sf_dir):
     from xlink_spark.operators.dedup import shingles
     from xlink_spark.operators.setsim import jaccard_join_exact
 
-    # the (doc, shingle) rows feed three consumers inside the join; at this
-    # bench scale recomputing the scan-speed shingle explode measures FASTER
-    # than persisting 400k narrow rows (cache materialization + lost codegen
-    # fusion), so no persist here
     corpus = _doc_pairs_corpus(spark, sf_dir)
-    sh = shingles(corpus, n=3)  # already one row per (doc, shingle)
-    return jaccard_join_exact(
-        sh, threshold_ppm=500_000, assume_distinct=True
-    ).orderBy("doc_a", "doc_b")
+    sh = shingles(corpus, n=3)
+    return jaccard_join_exact(sh, threshold_ppm=500_000).orderBy("doc_a", "doc_b")
 
 
 SQL_JACCARD_PAIRS_EXACT = f"""

@@ -87,8 +87,8 @@ def linking_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     lp = PR.link_prob(probs["link_m"], freq)
 
     n_emb = emb.count()
-    # both tables are consumed by several broadcast builds + an infer_dim
-    # probe — cache so each derivation chain runs once
+    # both tables are consumed by several broadcast builds — cache so each
+    # derivation chain runs once
     entity_emb = hold(_hash_embeddings(ma.select("entity_id"), "entity_id", emb, n_emb))
     word_emb = hold(_hash_embeddings(toks.select("tok"), "tok", emb, n_emb))
 
@@ -115,11 +115,3 @@ def linking_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     links = SC.score_has_prob(cands, lp, DEFAULT.predictor)
     return links
-
-
-def linking_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive entity clusters over the flagship links."""
-    from xlink_spark.operators.cluster import cluster_links
-
-    links = linking_pipeline(spark, sf_dir)
-    return cluster_links(links, threshold=DEFAULT.cluster.match_threshold)

@@ -1,20 +1,15 @@
-"""Vector math — native column expressions first, Arrow-batched UDFs second.
+"""Vector math as native column expressions.
 
 The reference computes cosine similarity with numpy inside per-document
-Python loops (xlink.py:318-336). Here the default path is a pure column
-expression (`F.zip_with` + `F.aggregate`) that stays JVM-side; a pandas UDF
-variant exists for wide fan-out scoring where one Arrow batch amortizes
-better. Both are deterministic (sequential element order).
+Python loops (xlink.py:318-336). Here every vector op is a pure column
+expression (`F.zip_with` + `F.aggregate`) that stays JVM-side and is
+deterministic (sequential element order).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 
 def _col(c: Column | str) -> Column:
@@ -43,88 +38,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     """
     na, nb = norm(a), norm(b)
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot(a, b) / (na * nb))
-
-
-def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Dot product as a flat codegen expression (known dimension).
-
-    Unlike zip_with+aggregate (which allocates an intermediate array and
-    folds with boxed doubles per row), this expands to ``dim`` primitive
-    multiply-adds inside whole-stage codegen — zero allocation per row.
-    The difference is decisive on 10^7+-row scoring stages.
-    """
-    ca, cb = _col(a), _col(b)
-    out = None
-    for i in range(dim):
-        term = F.element_at(ca, i + 1).cast("double") * F.element_at(cb, i + 1).cast("double")
-        out = term if out is None else out + term
-    return out
-
-
-def cosine_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Cosine with known dimension — flat codegen, zero-norm ⇒ 0.0."""
-    na = F.sqrt(dot_fixed(a, a, dim))
-    nb = F.sqrt(dot_fixed(b, b, dim))
-    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(
-        dot_fixed(a, b, dim) / (na * nb)
-    )
-
-
-def unit_fixed(a: Column | str, dim: int) -> Column:
-    """Unit-normalize an array column (known dim); zero vector ⇒ null."""
-    ca = _col(a)
-    nrm = F.sqrt(dot_fixed(ca, ca, dim))
-    return F.when(
-        nrm > 0,
-        F.array(*[F.element_at(ca, i + 1).cast("double") / nrm for i in range(dim)]),
-    )
-
-
-def infer_dim(df, vec_col: str = "vec") -> int | None:
-    """Vector dimension from the first row (None on empty input)."""
-    row = df.select(F.size(_col(vec_col)).alias("d")).first()
-    return row["d"] if row else None
-
-
-def make_entity_sim_udf(spark, entity_emb, key_col: str = "key", vec_col: str = "vec"):
-    """Factory: pandas UDF computing cosine(entity_vec[entity_id], ctx_vec).
-
-    The entity table is collected and broadcast as a {id: np.float32[dim]}
-    dict (bounded by the KB — for KBs beyond broadcast size use the
-    JVM-expression path instead). Per Arrow batch: one vectorized einsum
-    over the batch's stacked context vectors against the looked-up entity
-    rows — no JVM garbage, no per-row Python.
-
-    Null ctx or unknown entity ⇒ 0.0 (matches the empty-context word-sim
-    convention, xlink.py:319).
-    """
-    rows = entity_emb.select(key_col, vec_col).collect()
-    emb = {r[key_col]: np.asarray(r[vec_col], dtype=np.float32) for r in rows}
-    dim = len(next(iter(emb.values()))) if emb else 0
-    bc = spark.sparkContext.broadcast(emb)
-
-    @pandas_udf(DoubleType())
-    def entity_ctx_sim(entity_id: pd.Series, ctx: pd.Series) -> pd.Series:
-        d = bc.value
-        n = len(entity_id)
-        out = np.zeros(n, dtype=np.float64)
-        if n == 0 or dim == 0:
-            return pd.Series(out)
-        zero = np.zeros(dim, dtype=np.float32)
-        E = np.stack([d.get(e, zero) for e in entity_id])
-        mask = ctx.notna().to_numpy()
-        if mask.any():
-            C = np.stack(
-                [np.asarray(c, dtype=np.float64) for c in ctx[mask]]
-            )
-            Em = E[mask].astype(np.float64)
-            num = np.einsum("ij,ij->i", Em, C)
-            den = np.linalg.norm(Em, axis=1) * np.linalg.norm(C, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out[mask] = np.where(den > 0, num / den, 0.0)
-        return pd.Series(out)
-
-    return entity_ctx_sim
 
 
 def mean_pool_expr(vecs: Column | str) -> Column:

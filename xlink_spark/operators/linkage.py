@@ -1730,9 +1730,9 @@ def allpairs_jaccard_pairs(
     DISTINCT-token similarity is ≥ threshold_ppt/1000, found WITHOUT the
     all-token self-join q-gram blocking pays. This is the RECORD-BLOCKING
     front-end of the prefix-filter principle — multi-measure, purge knob,
-    (id_a, id_b, n_shared, n_a, n_b) output that FS scoring composes with;
-    the document-shingle near-dup path over ppm thresholds is
-    ``operators/setsim.jaccard_join_exact`` (same lemma, dedup contract).
+    (id_a, id_b, n_shared, n_a, n_b) output that FS scoring composes with.
+    It and the document-shingle path ``operators/setsim.jaccard_join_exact``
+    (ppm thresholds) share one kernel, ``_ppjoin``; here its scale is 1000.
     ``measure`` picks the similarity (the PPJoin family's standard trio,
     each with its own sound prefix and length bound):
 
@@ -1789,7 +1789,34 @@ def allpairs_jaccard_pairs(
         raise ValueError("threshold_ppt must be in (0, 1000]")
     if measure not in ("jaccard", "cosine", "dice"):
         raise ValueError(f"unknown measure: {measure!r}")
-    t = int(threshold_ppt)
+    return _ppjoin(
+        records,
+        tokens_col,
+        id_col,
+        t=int(threshold_ppt),
+        scale=1000,
+        measure=measure,
+        max_block_size=max_block_size,
+    )
+
+
+def _ppjoin_candidates(
+    records: DataFrame,
+    tokens_col: str,
+    id_col: str,
+    *,
+    t: int,
+    scale: int,
+    measure: str,
+    max_block_size: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The PPJoin kernel's candidate stage at threshold ``t / scale``:
+    ``(sorted_toks, cands)`` — each record's rarest-first token list
+    (``_id``, ``_sorted``, ``_n``; eagerly checkpointed) and the prefix,
+    length and positional-filtered (id_a, id_b) rows, one per shared
+    prefix token (not deduplicated). ``allpairs_jaccard_pairs`` documents
+    the filters; ``scale`` is 1000 there and 10⁶ for
+    ``setsim.jaccard_join_exact``."""
     base = records.select(
         F.col(id_col).alias("_id"),
         F.array_distinct(F.col(tokens_col)).alias("_toks"),
@@ -1813,6 +1840,7 @@ def allpairs_jaccard_pairs(
     num_partitions = int(
         records.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
+    # _n is a bigint so that n·t stays exact at scale 10⁶
     sorted_toks = cut(
         tok_rows.join(freq, "tok")
         .repartition(num_partitions, "_id")
@@ -1823,16 +1851,18 @@ def allpairs_jaccard_pairs(
                 lambda s: s["tok"],
             ).alias("_sorted")
         )
-        .select("_id", "_sorted", F.size("_sorted").alias("_n")),
+        .select("_id", "_sorted", F.size("_sorted").cast("long").alias("_n")),
         eager=True,
     )
     # p = n - alpha(n) + 1, all integer: ceil(a/b) = (a + b - 1) div b
     if measure == "jaccard":
-        alpha = (F.col("_n") * F.lit(t) + F.lit(999)) / F.lit(1000)
+        alpha = (F.col("_n") * F.lit(t) + F.lit(scale - 1)) / F.lit(scale)
     elif measure == "cosine":
-        alpha = (F.col("_n") * F.lit(t * t) + F.lit(999999)) / F.lit(1000000)
-    else:  # dice: ceil(t*n / (2000 - t))
-        alpha = (F.col("_n") * F.lit(t) + F.lit(2000 - t - 1)) / F.lit(2000 - t)
+        alpha = (F.col("_n") * F.lit(t * t) + F.lit(scale**2 - 1)) / F.lit(scale**2)
+    else:  # dice: ceil(t*n / (2*scale - t))
+        alpha = (F.col("_n") * F.lit(t) + F.lit(2 * scale - t - 1)) / F.lit(
+            2 * scale - t
+        )
     prefix_len = F.col("_n") - alpha.cast("long") + F.lit(1)
     prefix = sorted_toks.select(
         "_id",
@@ -1865,15 +1895,15 @@ def allpairs_jaccard_pairs(
     # within the measure's factor of each other (holds automatically for
     # true pairs, so filtering candidates never costs recall)
     if measure == "jaccard":
-        len_ok = F.lit(1000) * F.least("n_a", "n_b") >= F.lit(t) * F.greatest(
+        len_ok = F.lit(scale) * F.least("n_a", "n_b") >= F.lit(t) * F.greatest(
             "n_a", "n_b"
         )
     elif measure == "cosine":
-        len_ok = F.lit(1000000) * F.least("n_a", "n_b") >= F.lit(
+        len_ok = F.lit(scale**2) * F.least("n_a", "n_b") >= F.lit(
             t * t
         ) * F.greatest("n_a", "n_b")
     else:  # dice
-        len_ok = F.lit(2000 - t) * F.least("n_a", "n_b") >= F.lit(
+        len_ok = F.lit(2 * scale - t) * F.least("n_a", "n_b") >= F.lit(
             t
         ) * F.greatest("n_a", "n_b")
     # positional filter (PPJoin, Xiao et al. 2008): a candidate row whose
@@ -1892,15 +1922,15 @@ def allpairs_jaccard_pairs(
         F.col("n_b") - F.col("_pb") - F.lit(1),
     )
     if measure == "jaccard":
-        pos_ok = F.lit(1000) * rem >= F.lit(t) * (
+        pos_ok = F.lit(scale) * rem >= F.lit(t) * (
             F.col("n_a") + F.col("n_b") - rem
         )
     elif measure == "cosine":
-        pos_ok = F.lit(1000000) * rem * rem >= F.lit(t * t) * F.col(
+        pos_ok = F.lit(scale**2) * rem * rem >= F.lit(t * t) * F.col(
             "n_a"
         ) * F.col("n_b")
     else:  # dice
-        pos_ok = F.lit(2000) * rem >= F.lit(t) * (F.col("n_a") + F.col("n_b"))
+        pos_ok = F.lit(2 * scale) * rem >= F.lit(t) * (F.col("n_a") + F.col("n_b"))
     # candidates go to verification WITHOUT a pre-distinct: a qualifying
     # pair is generated once per shared prefix token (bounded by the prefix
     # length), so deduping first pays a full candidate-set hash aggregation
@@ -1911,16 +1941,38 @@ def allpairs_jaccard_pairs(
     # pinned against AQE coalescing — and the dedup runs on the verified
     # RESULT rows (246k here), reusing the same partitioning. Identical
     # output: n_shared/n_a/n_b are functions of the pair.
-    n_parts = int(
-        records.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     cands = (
         a.join(b, "tok")
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(len_ok)
         .filter(pos_ok)
         .select("id_a", "id_b")
-        .repartition(n_parts, "id_a", "id_b")
+        .repartition(num_partitions, "id_a", "id_b")
+    )
+    return sorted_toks, cands
+
+
+def _ppjoin(
+    records: DataFrame,
+    tokens_col: str,
+    id_col: str,
+    *,
+    t: int,
+    scale: int,
+    measure: str,
+    max_block_size: int | None = None,
+) -> DataFrame:
+    """The one PPJoin kernel: ``_ppjoin_candidates`` plus exact
+    verification at threshold ``t / scale`` (``t`` an integer in
+    (0, scale]). Returns distinct (id_a, id_b, n_shared, n_a, n_b)."""
+    sorted_toks, cands = _ppjoin_candidates(
+        records,
+        tokens_col,
+        id_col,
+        t=t,
+        scale=scale,
+        measure=measure,
+        max_block_size=max_block_size,
     )
     full = sorted_toks.select("_id", "_sorted")
     verified = (
@@ -1937,17 +1989,17 @@ def allpairs_jaccard_pairs(
         )
         .filter(
             (
-                F.lit(1000) * F.col("n_shared")
+                F.lit(scale) * F.col("n_shared")
                 >= F.lit(t) * (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
             )
             if measure == "jaccard"
             else (
-                F.lit(1000000) * F.col("n_shared") * F.col("n_shared")
+                F.lit(scale**2) * F.col("n_shared") * F.col("n_shared")
                 >= F.lit(t * t) * F.col("n_a") * F.col("n_b")
             )
             if measure == "cosine"
             else (
-                F.lit(2000) * F.col("n_shared")
+                F.lit(2 * scale) * F.col("n_shared")
                 >= F.lit(t) * (F.col("n_a") + F.col("n_b"))
             )
         )

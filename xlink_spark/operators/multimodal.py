@@ -77,14 +77,6 @@ def media_refs(docs: DataFrame) -> DataFrame:
     return m.select("doc_id", F.col("s.media_ref").alias("media_ref"), F.col("s.offset").alias("offset"))
 
 
-def _fake_feature(payload: bytes | None, ref: str, dim: int) -> list[float]:
-    """Deterministic content-derived pseudo-feature (decoder stand-in)."""
-    h = hashlib.sha256((payload or ref.encode())[:1024]).digest()
-    rng = np.random.RandomState(int.from_bytes(h[:4], "big"))
-    v = rng.normal(size=dim).astype(np.float32)
-    return (v / np.linalg.norm(v)).tolist()
-
-
 def extract_features(
     assets: DataFrame, dim: int = 16, fake: bool = False, batch_rows: int = 64
 ) -> DataFrame:

@@ -10,8 +10,10 @@ is a DataFrame transform over the exploded (mention × candidate) table:
             └─ candidates ⋈ e_given_m ⋈ entity_embeddings
                      └─ believe fusion (C9/C10) → gates (F6-F8) → top-1 (W4)
 
-Cosines are JVM-side column expressions (functions.vectors.cosine) — the
-whole scoring stage is one shuffle-free projection after the joins.
+Cosines are JVM-side column expressions: both context vectors and the
+broadcast entity vectors are unit-normalized once, so each candidate's
+cosine is one functions.vectors.dot — the whole scoring stage is one
+shuffle-free projection after the joins.
 
 Semantic pins (tests hold these):
   * empty context words ⇒ word_sim = 0            (xlink.py:319)
@@ -39,21 +41,13 @@ from pyspark.sql import functions as F
 
 from xlink_spark.config import PredictorConfig
 from xlink_spark.functions.text import tokens_lower
-from xlink_spark.functions.vectors import (
-    cosine,
-    dot,
-    infer_dim,
-    make_entity_sim_udf,
-    mean_pool_expr,
-)
+from xlink_spark.functions.vectors import cosine, dot, mean_pool_expr, norm as vnorm
 
 
-def _unit_entity_emb(entity_emb: DataFrame, dim: int) -> DataFrame:
+def _unit_entity_emb(entity_emb: DataFrame) -> DataFrame:
     """(entity_id, entity_unit) — normalized ONCE on the small (broadcast)
     side via HOFs (row count is KB-bounded), so the per-candidate cosine is
     a single compact dot product."""
-    from xlink_spark.functions.vectors import norm as vnorm
-
     e = entity_emb.select(
         F.col("key").alias("entity_id"),
         F.col("vec"),
@@ -189,7 +183,6 @@ def candidate_table(
     e_given_m: DataFrame,
     entity_emb: DataFrame,
     broadcast_dict: bool = True,
-    udf_scoring: bool = False,
 ) -> DataFrame:
     """Explode mention × candidate with prior + embedding columns.
 
@@ -229,38 +222,21 @@ def candidate_table(
         # this stage, then drop BOTH vectors: downstream consumers re-attach
         # entity vectors by broadcast, so candidate rows stay ~narrow-row
         # sized through every shuffle, sort, and cache.
-        if udf_scoring:
-            sim_udf = make_entity_sim_udf(
-                mentions.sparkSession, entity_emb, key_col="key", vec_col="vec"
-            )
-            cands = cands.withColumn(
-                "ctx_word_sim", sim_udf(F.col("entity_id"), F.col("ctx_vec"))
-            ).drop("ctx_vec", "entity_vec")
-        else:
-            dim = infer_dim(entity_emb, "vec")
-            if dim:
-                # ctx_vec arrives unit-normalized from context_word_vector;
-                # normalize the entity side once (broadcast) → ONE dot per
-                # candidate (cosine needs 3 array folds; a fully-unrolled
-                # dot_fixed exceeds the JIT's huge-method limit and drops to
-                # the bytecode interpreter — measured 2.7x slower)
-                cands = cands.join(
-                    F.broadcast(_unit_entity_emb(entity_emb, dim)), "entity_id", "left"
-                )
-                sim = F.when(
-                    F.col("ctx_vec").isNull() | F.col("entity_unit").isNull(),
-                    F.lit(0.0),
-                ).otherwise(dot("entity_unit", "ctx_vec"))
-                cands = cands.withColumn("ctx_word_sim", sim).drop(
-                    "ctx_vec", "entity_vec", "entity_unit"
-                )
-            else:
-                cands = cands.withColumn(
-                    "ctx_word_sim",
-                    F.when(F.col("ctx_vec").isNull(), F.lit(0.0)).otherwise(
-                        cosine("entity_vec", "ctx_vec")
-                    ),
-                ).drop("ctx_vec", "entity_vec")
+        # ctx_vec arrives unit-normalized from context_word_vector; the
+        # entity side is normalized once (broadcast) → ONE dot per candidate
+        # (cosine needs 3 array folds; a dot unrolled into one expression per
+        # dimension exceeds the JIT's huge-method limit and drops to the
+        # bytecode interpreter — measured 2.7x slower)
+        cands = cands.join(
+            F.broadcast(_unit_entity_emb(entity_emb)), "entity_id", "left"
+        )
+        sim = F.when(
+            F.col("ctx_vec").isNull() | F.col("entity_unit").isNull(),
+            F.lit(0.0),
+        ).otherwise(dot("entity_unit", "ctx_vec"))
+        cands = cands.withColumn("ctx_word_sim", sim).drop(
+            "ctx_vec", "entity_vec", "entity_unit"
+        )
     return cands
 
 
@@ -342,7 +318,7 @@ def seed_pool_from_dictionary(
     return seeds, doc_agg_from_seeds(seeds)
 
 
-def seed_pool(candidates: DataFrame, entity_emb: DataFrame | None = None) -> DataFrame:
+def seed_pool(candidates: DataFrame, entity_emb: DataFrame) -> DataFrame:
     """Unambiguous-mention seeds (xlink.py:115-145).
 
     A mention with exactly one surviving candidate contributes that entity's
@@ -352,38 +328,25 @@ def seed_pool(candidates: DataFrame, entity_emb: DataFrame | None = None) -> Dat
     seed list is reduced immediately so nothing wide outlives this
     aggregation.
 
-    With ``entity_emb`` given, the candidate shuffle carries only ids — the
-    seed vector is broadcast-joined after the uniqueness aggregation (the
-    at-scale path); otherwise the candidate rows must carry ``entity_vec``.
+    The candidate shuffle carries only ids — the seed vector is
+    broadcast-joined from ``entity_emb`` after the uniqueness aggregation.
     """
-    if entity_emb is not None:
-        counts = candidates.groupBy(*MENTION_KEY).agg(F.count(F.lit(1)).alias("n"))
-        unambig = counts.filter(F.col("n") == 1).select(*MENTION_KEY)
-        seeds = (
-            candidates.select(*MENTION_KEY, "entity_id")
-            .join(unambig, MENTION_KEY, "left_semi")
-            .join(
-                F.broadcast(
-                    entity_emb.select(
-                        F.col("key").alias("entity_id"), F.col("vec").alias("seed_vec")
-                    )
-                ),
-                "entity_id",
-                "inner",
-            )
-            .select(*MENTION_KEY, F.col("entity_id").alias("seed_eid"), "seed_vec")
+    counts = candidates.groupBy(*MENTION_KEY).agg(F.count(F.lit(1)).alias("n"))
+    unambig = counts.filter(F.col("n") == 1).select(*MENTION_KEY)
+    seeds = (
+        candidates.select(*MENTION_KEY, "entity_id")
+        .join(unambig, MENTION_KEY, "left_semi")
+        .join(
+            F.broadcast(
+                entity_emb.select(
+                    F.col("key").alias("entity_id"), F.col("vec").alias("seed_vec")
+                )
+            ),
+            "entity_id",
+            "inner",
         )
-    else:
-        w_m = Window.partitionBy(*MENTION_KEY)
-        seeds = (
-            candidates.withColumn("n_cands", F.count(F.lit(1)).over(w_m))
-            .filter(F.col("n_cands") == 1)
-            .select(
-                *MENTION_KEY,
-                F.col("entity_id").alias("seed_eid"),
-                F.col("entity_vec").alias("seed_vec"),
-            )
-        )
+        .select(*MENTION_KEY, F.col("entity_id").alias("seed_eid"), "seed_vec")
+    )
     return seeds, doc_agg_from_seeds(seeds)
 
 
@@ -412,7 +375,7 @@ def context_entity_vector(
     seeds: DataFrame,
     doc_agg: DataFrame,
     empty_sim: float,
-    entity_emb: DataFrame | None = None,
+    entity_emb: DataFrame,
     exclusion: str = "none",
 ) -> DataFrame:
     """A8 + U3: per-candidate context-entity similarity.
@@ -431,8 +394,11 @@ def context_entity_vector(
 
     The pool vector is materialized per MENTION (not per candidate) and
     joined to the exploded candidates last — at 10^12 docs the wide columns
-    move once per mention, and the per-candidate work is a single cosine
-    against a broadcast-joined entity vector.
+    move once per mention, and the candidates shuffle NARROW (no vectors).
+    The pool vector is UNIT-normalized once per mention (the /cnt mean
+    cancels), the entity side once per entity (broadcast from
+    ``entity_emb``), so the per-candidate cosine is a single compact dot
+    product. A candidate whose entity vector is all zero scores 0.
     ``empty_sim`` is the empty-pool convention: the reference's shared
     cal_candidate_context_entities_sim returns 1 on an empty pool for BOTH
     passes (xlink.py:329-334); the GM predictor (Predictor.py:210) uses 0.
@@ -509,64 +475,24 @@ def context_entity_vector(
             lambda a, b: a - b.cast("double"),
         ),
     )
-    if entity_emb is not None:
-        # at-scale path: candidates shuffle NARROW (no vectors). Pool vector
-        # is UNIT-normalized once per mention (the /cnt mean cancels), the
-        # entity side once per entity (broadcast) — per-candidate cosine is
-        # a single compact dot product. (An Arrow-batched UDF variant —
-        # make_entity_sim_udf — measured FASTER at low core counts but
-        # regressed under JVM+Python oversubscription at local[32].)
-        dim = infer_dim(entity_emb, "vec")
-        from xlink_spark.functions.vectors import norm as vnorm
-
-        mp = mp.select(*pool_key, pool_raw.alias("_praw"))
-        mp = mp.withColumn("_nrm", vnorm("_praw")).select(
-            *pool_key,
-            F.when(
-                F.col("_praw").isNotNull() & (F.col("_nrm") > 0),
-                F.transform("_praw", lambda x: x / F.col("_nrm")),
-            ).alias("pool_vec"),
-        )
-        c = candidates.drop("entity_vec").join(mp, pool_key, "left")
-        if dim:
-            c = c.join(
-                F.broadcast(_unit_entity_emb(entity_emb, dim)), "entity_id", "left"
-            )
-            sim = F.when(F.col("entity_unit").isNull(), F.lit(0.0)).otherwise(
-                dot("entity_unit", "pool_vec")
-            )
-        else:
-            c = c.join(
-                F.broadcast(
-                    entity_emb.select(
-                        F.col("key").alias("entity_id"), F.col("vec").alias("entity_vec")
-                    )
-                ),
-                "entity_id",
-                "left",
-            )
-            sim = cosine("entity_vec", "pool_vec")
-        c = c.withColumn(
-            "ctx_ent_sim",
-            F.when(F.col("pool_vec").isNull(), F.lit(empty_sim)).otherwise(sim),
-        )
-        return c.drop("pool_vec", "entity_vec", "entity_unit")
-    else:
-        mp = mp.select(
-            *pool_key,
-            F.when(
-                pool_raw.isNotNull(),
-                F.transform(pool_raw, lambda x: x / pool_cnt),
-            ).alias("pool_vec"),
-        )
-        c = candidates.join(mp, pool_key, "left")
-        c = c.withColumn(
-            "ctx_ent_sim",
-            F.when(F.col("pool_vec").isNull(), F.lit(empty_sim)).otherwise(
-                cosine("entity_vec", "pool_vec")
-            ),
-        )
-    return c.drop("pool_vec")
+    mp = mp.select(*pool_key, pool_raw.alias("_praw"))
+    mp = mp.withColumn("_nrm", vnorm("_praw")).select(
+        *pool_key,
+        F.when(
+            F.col("_praw").isNotNull() & (F.col("_nrm") > 0),
+            F.transform("_praw", lambda x: x / F.col("_nrm")),
+        ).alias("pool_vec"),
+    )
+    c = candidates.drop("entity_vec").join(mp, pool_key, "left")
+    c = c.join(F.broadcast(_unit_entity_emb(entity_emb)), "entity_id", "left")
+    sim = F.when(F.col("entity_unit").isNull(), F.lit(0.0)).otherwise(
+        dot("entity_unit", "pool_vec")
+    )
+    c = c.withColumn(
+        "ctx_ent_sim",
+        F.when(F.col("pool_vec").isNull(), F.lit(empty_sim)).otherwise(sim),
+    )
+    return c.drop("pool_vec", "entity_unit")
 
 
 def score_has_prob(

@@ -1,105 +1,27 @@
-"""Exact set-similarity join via prefix filtering (PPJoin-family).
+"""Exact set-similarity join (PPJoin-family) over document shingles.
 
 MinHash-LSH (operators/dedup.minhash_dedup) is the probabilistic near-dup
 path: cheap at any scale, but banding can MISS true pairs near the
-threshold. This module is the exact complement — every pair with set-Jaccard
->= t is found, no randomness — using the prefix-filtering principle
-(Chaudhuri et al. SSJoin / Xiao et al. PPJoin):
-
-order every document's shingles by one global total order (document
-frequency ascending, then shingle — rarest first); if J(x, y) >= t, then the
-(|x| - ceil(t*|x|) + 1)-prefixes of x and y MUST share a shingle, so an
-equi-join on prefix shingles alone generates a complete candidate set. Proof
-sketch: let c be the first shared shingle in the global order; if c sits
-after x's prefix, every shared shingle does, so |x∩y| <= |x| - L_x =
-ceil(t*|x|) - 1 < t*|x| <= t*|x∪y| <= |x∩y| — contradiction (symmetric
-in y).
-
-Why this shape at 100 TB: the candidate join touches only prefix rows —
-the RAREST shingles of each doc, by construction — so join buckets stay
-small even when the corpus shares a huge head vocabulary (the frequent
-shingles that would explode a naive shingle self-join are exactly the ones
-prefixes exclude). Thresholds are integer ppm and every comparison is exact
-bigint cross-multiplication — no float boundary ambiguity, engine-portable.
-The verify step carries each doc's shingle-set array across only the
-candidate pairs.
-
-The record-linkage counterpart of this principle — multi-measure
-(jaccard/cosine/dice), oversize-prefix-block purge, ppt thresholds, and the
-(id_a, id_b, n_shared, n_a, n_b) contract FS scoring composes with — is
-``operators/linkage.allpairs_jaccard_pairs`` (the ER job's ``--blocking
-allpairs``); this module stays the document-shingle dedup path.
+threshold. ``jaccard_join_exact`` is the exact complement — every pair with
+set-Jaccard >= t is found, no randomness. It adapts the one prefix-filter
+kernel, ``operators/linkage._ppjoin`` (the ER job's ``--blocking allpairs``
+runs the same kernel through ``allpairs_jaccard_pairs``), to integer ppm
+thresholds and the (doc_a, doc_b, inter, uni, jac_ppm) contract.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from xlink_spark.operators.linkage import _ppjoin
 
 PPM = 1_000_000
-
-
-def prefix_candidates(
-    doc_shingles: DataFrame, threshold_ppm: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Complete candidate pairs (doc_a < doc_b) for Jaccard >= t.
-
-    ``doc_shingles``: distinct (id_col, shingle) rows. Prefix length per doc
-    is n - ceil(t*n) + 1 with ceil computed in exact integer arithmetic.
-    """
-    sh = doc_shingles.select(F.col(id_col).alias("_id"), "shingle")
-    df_ = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    ranked = (
-        sh.join(df_, "shingle")
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("_id").orderBy("_df", "shingle")
-            ),
-        )
-        .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy("_id")))
-    )
-    # L = n - ceil(t*n) + 1 ; ceil(t*n) = (t_ppm*n + PPM-1) div PPM, exact
-    prefix = ranked.where(
-        F.col("_rn")
-        <= F.col("_n")
-        - F.expr(f"({threshold_ppm}L * _n + {PPM - 1}) div {PPM}")
-        + F.lit(1)
-    ).select("_id", "shingle", "_rn", "_n")
-    x, y = prefix.alias("x"), prefix.alias("y")
-    # PPJoin filters on top of the prefix match — both exact-integer, both
-    # completeness-preserving (the first shared shingle in the global order
-    # always passes them for a true pair):
-    #   length: J >= t forces t*|x| <= |y| (symmetric)
-    #   positional: overlap <= 1 + min(remaining after this shingle), and a
-    #   true pair needs overlap >= ceil(t/(1+t)*(nx+ny))
-    alpha_req = F.expr(
-        f"({threshold_ppm}L * (x._n + y._n) + {PPM + threshold_ppm - 1})"
-        f" div {PPM + threshold_ppm}"
-    )
-    return (
-        x.join(y, "shingle")
-        .where(
-            (F.col("x._id") < F.col("y._id"))
-            & (F.col("y._n") * PPM >= F.lit(threshold_ppm) * F.col("x._n"))
-            & (F.col("x._n") * PPM >= F.lit(threshold_ppm) * F.col("y._n"))
-            & (
-                F.lit(1)
-                + F.least(
-                    F.col("x._n") - F.col("x._rn"), F.col("y._n") - F.col("y._rn")
-                )
-                >= alpha_req
-            )
-        )
-        .select(F.col("x._id").alias("doc_a"), F.col("y._id").alias("doc_b"))
-        .distinct()
-    )
 
 
 def jaccard_join_exact(
     doc_shingles: DataFrame,
     threshold_ppm: int = 500_000,
     id_col: str = "doc_id",
-    assume_distinct: bool = False,
 ) -> DataFrame:
     """All unordered doc pairs with exact set-Jaccard >= threshold_ppm/1e6.
 
@@ -108,56 +30,24 @@ def jaccard_join_exact(
     cross-multiplication ``inter * 1e6 >= t_ppm * uni`` so a pair exactly at
     the threshold is decided identically on every engine.
 
-    Correctness REQUIRES one row per (doc, shingle): duplicate rows inflate
-    the per-doc counts while the intersection stays set-valued, silently
-    undercounting Jaccard and dropping true pairs. Deduped here by default;
-    pass ``assume_distinct=True`` to skip the extra exchange when the input
-    is already distinct (e.g. ``dedup.shingles`` output).
-
-    ``doc_shingles`` feeds THREE consumers (the shingle-frequency table,
-    the ranked prefixes, and the verify sets), so Spark recomputes its
-    upstream once per consumer; a caller whose upstream is an expensive
-    scan passes a held frame (``plans/storage.hold``).
+    ``doc_shingles``: (id_col, shingle) rows; duplicate rows are harmless,
+    because each doc's shingles are reduced to a ``collect_set`` before the
+    kernel runs. The kernel eagerly checkpoints the per-doc rarest-first
+    shingle lists (``plans/storage.cut``), so building this frame already
+    runs Spark jobs.
     """
-    if not assume_distinct:
-        doc_shingles = doc_shingles.select(id_col, "shingle").distinct()
-    cands = prefix_candidates(doc_shingles, threshold_ppm, id_col)
-    sets = doc_shingles.groupBy(F.col(id_col).alias("_id")).agg(
-        F.collect_set("shingle").alias("_set"),
-        F.count(F.lit(1)).alias("_n"),
+    if not (0 < threshold_ppm <= PPM):
+        raise ValueError(f"threshold_ppm must be in (0, {PPM}]")
+    sets = doc_shingles.groupBy(id_col).agg(F.collect_set("shingle").alias("_set"))
+    pairs = _ppjoin(
+        sets, "_set", id_col, t=int(threshold_ppm), scale=PPM, measure="jaccard"
     )
-    j = (
-        cands.join(
-            sets.select(
-                F.col("_id").alias("doc_a"),
-                F.col("_set").alias("_sa"),
-                F.col("_n").alias("_na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            sets.select(
-                F.col("_id").alias("doc_b"),
-                F.col("_set").alias("_sb"),
-                F.col("_n").alias("_nb"),
-            ),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("_sa", "_sb")).cast("long").alias("inter"),
-            "_na",
-            "_nb",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "inter",
-            (F.col("_na") + F.col("_nb") - F.col("inter")).cast("long").alias("uni"),
-        )
-    )
-    return j.where(F.col("inter") * PPM >= F.lit(threshold_ppm) * F.col("uni")).select(
+    return pairs.select(
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
+        F.col("n_shared").alias("inter"),
+        (F.col("n_a") + F.col("n_b") - F.col("n_shared")).alias("uni"),
+    ).select(
         "doc_a",
         "doc_b",
         "inter",

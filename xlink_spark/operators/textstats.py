@@ -86,16 +86,6 @@ def quality_score_raw(text: Column | str) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def language_scores(text: Column | str) -> list[Column]:
-    """Per-language stopword-hit counts (the textcat-style profile score)."""
-    toks = tokens_lower(text)
-    out = []
-    for lang, words in STOPWORDS.items():
-        sw = F.array(*[F.lit(w) for w in words])
-        out.append(F.size(F.filter(toks, lambda t: F.array_contains(sw, t))).alias(f"score_{lang}"))
-    return out
-
-
 def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Pick the language with the most stopword hits; 'und' when all zero.
 
