@@ -106,6 +106,48 @@ def test_dictionary_build_resumes(sdfs, tmp_path):
     assert d2.mention_anchors.count() == n1
 
 
+def test_title_dictionary_pass_emits_tt_link(spark, tmp_path):
+    """The no-prob pass end to end: a KB title that is never an anchor but
+    occurs in the text is detected from the title dictionary, scored by
+    its context-word similarity, and emitted as a 'tt' link."""
+    from xlink_spark.operators.spans import parse_markup_to_spans
+
+    raw = spark.createDataFrame(
+        [
+            ("t1", "[[e_paris|paris]] is big and paris is old"),
+            ("t2", "we saw [[e_paris|paris]] again in paris"),
+            ("t3", "rhone lyon rhone"),
+        ],
+        "doc_id string, text string",
+    )
+    docs = parse_markup_to_spans(raw)
+    kb = spark.createDataFrame(
+        [("e_paris", "paris"), ("e_lyon", "lyon"), ("e_lyon_fc", "lyon")],
+        "entity_id string, surface_norm string",
+    )
+    # non-unit vectors: the word-sim must normalize both sides
+    eemb = spark.createDataFrame(
+        [("e_paris", [1.0, 0.0, 0.0]), ("e_lyon", [0.0, 0.0, 2.0]),
+         ("e_lyon_fc", [0.0, 1.0, 0.0])],
+        "key string, vec array<double>",
+    )
+    wemb = spark.createDataFrame(
+        [("paris", [1.0, 0.0, 0.0]), ("rhone", [0.0, 0.0, 3.0])],
+        "key string, vec array<double>",
+    )
+    d = build_dictionary(docs, kb, eemb, store=SnapshotStore(str(tmp_path / "s")))
+    plain = docs.select("doc_id", plain_text("spans").alias("text"))
+    links = link_corpus(plain, d, wemb, eemb)
+    tt = [
+        (r["doc_id"], r["start"], r["entity_id"])
+        for r in links.filter(F.col("parse_from") == "tt").collect()
+    ]
+    # word-sim: e_lyon 1.0 (seed, > 0.45), e_lyon_fc 0.0; the seeded
+    # mention's pool drops the overlapping seed ⇒ empty ⇒ ent_sim 1;
+    # believe 0.5·1 + 0.5·1 = 1.0 beats e_lyon_fc's 0.5
+    assert tt == [("t3", 6, "e_lyon")]
+
+
 def test_join_path_pipeline_equals_broadcast_pipeline(built, sdfs):
     """Forcing the big-dictionary regime (broadcast_dict_max_rows=0) must
     reproduce the broadcast pipeline's links exactly — the same pin as the
