@@ -75,27 +75,6 @@ def test_resolve_conflicts_weighted_ma_beats_tt(spark):
     assert got2 == ["tttt"]
 
 
-def test_salted_join_equals_plain_join(spark):
-    mentions = spark.createDataFrame(
-        [("d%d" % i, i, i + 5, "China", "ma") for i in range(50)]
-        + [("dx", 0, 4, "rare", "ma")],
-        "doc_id string, start int, end int, surface string, parse_from string",
-    )
-    anchors = spark.createDataFrame(
-        [("china", "e%d" % k, k + 1) for k in range(70)] + [("rare", "e9", 2)],
-        "mention string, entity_id string, cnt long",
-    )
-    plain = DT.candidate_join(mentions, anchors)
-    hot = DT.hot_keys(anchors, min_candidates=64)
-    assert [r["mention"] for r in hot.collect()] == ["china"]
-    salted = DT.candidate_join(mentions, anchors, hot=hot, n_salt=4)
-    key = lambda df: sorted(
-        (r["doc_id"], r["start"], r["entity_id"], r["cnt"]) for r in df.collect()
-    )
-    assert key(plain) == key(salted)
-    assert plain.count() == 50 * 70 + 1
-
-
 def test_join_path_detection_equals_broadcast_path(spark):
     """detect_mentions_join (dictionary-as-table, the big-dictionary path)
     must produce the same post-resolve_conflicts winners as the broadcast
@@ -266,11 +245,12 @@ def test_cjk_char_granularity_detection(spark):
     assert won_j == won
 
 
-def test_cjk_linking_end_to_end(spark):
+def test_cjk_linking_end_to_end(spark, tmp_path):
     """zh corpus end to end: anchors -> dictionary (freq covers zh surfaces
     with no whitespace) -> detection -> linking."""
     from xlink_spark.operators.spans import plain_text
     from xlink_spark.plans.pipeline import build_dictionary, link_corpus
+    from xlink_spark.plans.snapshots import SnapshotStore
     from pyspark.sql import functions as F
 
     from xlink_spark.operators.spans import parse_markup_to_spans
@@ -289,7 +269,7 @@ def test_cjk_linking_end_to_end(spark):
     emb = spark.createDataFrame(
         [("e_bali", [1.0, 0.0]), ("e_fa", [0.0, 1.0])], "key string, vec array<double>"
     )
-    d = build_dictionary(docs, kb, emb)
+    d = build_dictionary(docs, kb, emb, store=SnapshotStore(str(tmp_path / "s")))
     # freq must cover the zh surfaces (no whitespace n-grams exist)
     freqs = {r["mention"]: r["freq"] for r in d.link_prob.select("mention", "freq_m").withColumnRenamed("freq_m", "freq").collect()}
     assert freqs.get("巴黎", 0) >= 4 and freqs.get("法国", 0) >= 2

@@ -8,8 +8,6 @@ Gates (BASELINE.md §B):
 
 from __future__ import annotations
 
-import dataclasses
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,7 +15,6 @@ from xlink_spark.config import DEFAULT
 from xlink_spark.eval.f1 import linking_prf, mention_prf
 from xlink_spark.operators.spans import plain_text, span_sequence_key
 from xlink_spark.plans.pipeline import (
-    Dictionary,
     build_dictionary,
     link_and_cluster,
     link_corpus,
@@ -26,16 +23,10 @@ from xlink_spark.plans.snapshots import SnapshotStore
 
 
 @pytest.fixture(scope="module")
-def built(sdfs):
+def built(sdfs, tmp_path_factory):
     docs, kb, wemb, eemb, gold = sdfs
-    # without a snapshot store every dictionary table is a lazy plan over
-    # the corpus, re-derived by each of its consumers in every linking run
-    # (~700 Spark jobs per link_corpus count instead of ~100) — cache the
-    # tables once for the module's linking runs
-    d = build_dictionary(docs, kb, eemb)
-    d = Dictionary(
-        **{f.name: getattr(d, f.name).cache() for f in dataclasses.fields(d)}
-    )
+    store = SnapshotStore(str(tmp_path_factory.mktemp("built") / "snap"))
+    d = build_dictionary(docs, kb, eemb, store=store)
     plain = docs.select("doc_id", plain_text("spans").alias("text")).cache()
     links = link_corpus(plain, d, wemb, eemb).cache()
     links.count()
@@ -150,8 +141,8 @@ def test_title_dictionary_pass_emits_tt_link(spark, tmp_path):
 
 def test_join_path_pipeline_equals_broadcast_pipeline(built, sdfs):
     """Forcing the big-dictionary regime (broadcast_dict_max_rows=0) must
-    reproduce the broadcast pipeline's links exactly — the same pin as the
-    salted-join test, end to end."""
+    reproduce the broadcast pipeline's links exactly: detection through the
+    dictionary-as-table join and a shuffled (non-broadcast) candidate join."""
     import dataclasses
 
     _, plain, links = built

@@ -46,13 +46,13 @@ def test_candidate_join_is_broadcast(spark):
     from xlink_spark.operators import scoring as SC
 
     mentions = spark.createDataFrame(
-        [("d1", 0, 5, "china", "ma")],
-        "doc_id string, start int, end int, surface string, parse_from string",
+        [("d1", 0, 5, "china", "ma", [1.0, 0.0])],
+        "doc_id string, start int, end int, surface string, parse_from string,"
+        "ctx_vec array<double>",
     )
-    ma = spark.createDataFrame([("china", "e1", 3)], "mention string, entity_id string, cnt long")
     egm = spark.createDataFrame([("china", "e1", 1.0)], "mention string, entity_id string, p double")
     emb = spark.createDataFrame([("e1", [1.0, 0.0])], "key string, vec array<float>")
-    cands = SC.candidate_table(mentions, ma, egm, emb)
+    cands = SC.candidate_table(mentions, egm, emb)
     plan = _plan(cands)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan  # dictionary explosion must not SMJ
@@ -573,4 +573,32 @@ def test_storage_calls_live_in_storage_module():
                 for i, line in enumerate(src.splitlines(), 1):
                     if retired.search(line):
                         offenders.append(f"{rel}:{i} {line.strip()}")
+    assert offenders == []
+
+
+def test_has_prob_pass_lives_in_pipeline_module():
+    """The has-prob pass is written once, in plans/pipeline.py
+    (link_has_prob): no other module of the library calls the seed-pool or
+    context-entity stages directly."""
+    import ast
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    own = os.path.join(root, "xlink_spark", "plans", "pipeline.py")
+    guarded = ("seed_pool_from_dictionary", "context_entity_vector")
+    offenders = []
+    for dirpath, _dirs, files in os.walk(os.path.join(root, "xlink_spark")):
+        for fn in files:
+            path = os.path.join(dirpath, fn)
+            if not fn.endswith(".py") or path == own:
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            rel = os.path.relpath(path, root)
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in guarded:
+                    offenders.append(f"{rel}:{node.lineno} {name}(")
     assert offenders == []

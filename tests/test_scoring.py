@@ -9,27 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from xlink_spark.config import PredictorConfig
-from xlink_spark.functions.vectors import cosine, mean_pool_expr
 from xlink_spark.operators import scoring as SC
-
-
-def test_cosine_expr(spark):
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0]), ([0.0, 0.0], [1.0, 0.0])],
-        "a array<double>, b array<double>",
-    )
-    got = [r["c"] for r in df.select(cosine("a", "b").alias("c")).collect()]
-    assert got == [1.0, 0.0, 0.0]
-
-
-def test_mean_pool_expr(spark):
-    df = spark.createDataFrame(
-        [([[1.0, 2.0], [3.0, 4.0]],), ([],)],
-        "vecs array<array<double>>",
-    )
-    got = [r["m"] for r in df.select(mean_pool_expr("vecs").alias("m")).collect()]
-    assert got[0] == [2.0, 3.0]
-    assert got[1] is None
 
 
 def test_attach_context_window_bounds(spark):
@@ -44,41 +24,75 @@ def test_attach_context_window_bounds(spark):
 
 
 def test_empty_context_conventions(spark):
-    """ctx empty ⇒ word_sim 0 (xlink.py:319); empty ent pool ⇒ empty_sim,
-    which is 1 for BOTH reference passes (xlink.py:329-334 — the shared
-    cal_candidate_context_entities_sim; 0 is the GM predictor convention,
-    Predictor.py:210, exposed via the parameter)."""
+    """ctx empty ⇒ word_sim 0 (xlink.py:319); empty ent pool ⇒ ent_sim 1,
+    the shared cal_candidate_context_entities_sim of BOTH reference passes
+    (xlink.py:329-334)."""
     mentions = spark.createDataFrame(
         [("d", 0, 2, "aa", "ma", None)],
         "doc_id string, start int, end int, surface string, parse_from string,"
         "ctx_vec array<double>",
     )
-    ma = spark.createDataFrame([("aa", "e1", 1)], "mention string, entity_id string, cnt long")
     egm = spark.createDataFrame([("aa", "e1", 1.0)], "mention string, entity_id string, p double")
     emb = spark.createDataFrame([("e1", [1.0, 0.0])], "key string, vec array<double>")
-    cands = SC.candidate_table(mentions, ma, egm, emb)
+    cands = SC.candidate_table(mentions, egm, emb)
     seeds = spark.createDataFrame(
         [], "doc_id string, start int, end int, seed_vec array<double>"
     )
     doc_agg = spark.createDataFrame(
         [], "doc_id string, doc_sum array<double>, doc_seed_cnt long"
     )
-    has_prob = SC.context_entity_vector(
-        cands, seeds, doc_agg, empty_sim=1.0, entity_emb=emb
-    ).collect()[0]
+    scored_cands = SC.context_entity_vector(cands, seeds, doc_agg, entity_emb=emb)
+    has_prob = scored_cands.collect()[0]
     assert has_prob["ctx_word_sim"] == 0.0
     assert has_prob["ctx_ent_sim"] == 1.0
-    no_prob = SC.context_entity_vector(
-        cands, seeds, doc_agg, empty_sim=0.0, entity_emb=emb
-    ).collect()[0]
-    assert no_prob["ctx_ent_sim"] == 0.0
     lp = spark.createDataFrame([("aa", 0.5)], "mention string, link_prob double")
-    scored = SC.score_has_prob(
-        SC.context_entity_vector(cands, seeds, doc_agg, empty_sim=1.0, entity_emb=emb),
-        lp,
-    ).collect()
+    scored = SC.score_has_prob(scored_cands, lp).collect()
     # word_sim = 0 (null ctx) ⇒ cand_believe = 0 ⇒ believe = 0.25 > 0.2 ⇒ kept
     assert len(scored) == 1 and abs(scored[0]["believe"] - 0.25) < 1e-12
+
+
+def test_candidate_table_over_title_dictionary(spark):
+    """The no-prob pass's dictionary has no prior column: candidate_table
+    joins it as is. A zero-norm entity vector scores word_sim 0; a
+    candidate with no embedding is dropped (F4/F6)."""
+    mentions = spark.createDataFrame(
+        [("d", 0, 4, "Lyon", "tt", [0.6, 0.8])],
+        "doc_id string, start int, end int, surface string, parse_from string,"
+        "ctx_vec array<double>",
+    )
+    titles = spark.createDataFrame(
+        [("lyon", "e_city"), ("lyon", "e_zero"), ("lyon", "e_noemb")],
+        "mention string, entity_id string",
+    )
+    emb = spark.createDataFrame(
+        [("e_city", [3.0, 4.0]), ("e_zero", [0.0, 0.0])],
+        "key string, vec array<double>",
+    )
+    cands = SC.candidate_table(mentions, titles, emb)
+    assert "p" not in cands.columns
+    assert not any(c in cands.columns for c in ("ctx_vec", "entity_unit"))
+    got = {r["entity_id"]: r["ctx_word_sim"] for r in cands.collect()}
+    assert got == {"e_city": pytest.approx(1.0), "e_zero": 0.0}
+
+
+def test_empty_vocabulary_gives_null_context_and_zero_word_sim(spark):
+    """An empty word-embedding table: every mention's ctx_vec is null and
+    every candidate's word_sim is 0 (xlink.py:319)."""
+    mentions = spark.createDataFrame(
+        [("d", 0, 2, "aa", "ma"), ("d", 7, 9, "bb", "ma")],
+        "doc_id string, start int, end int, surface string, parse_from string",
+    )
+    docs = spark.createDataFrame([("d", "aa and bb too")], "doc_id string, text string")
+    wemb = spark.createDataFrame([], "key string, vec array<double>")
+    ctx = SC.context_word_vector(SC.attach_context(mentions, docs), wemb)
+    assert [r["ctx_vec"] for r in ctx.collect()] == [None, None]
+    egm = spark.createDataFrame(
+        [("aa", "e1", 1.0), ("bb", "e1", 0.5), ("bb", "e2", 0.5)],
+        "mention string, entity_id string, p double",
+    )
+    cands = SC.candidate_table(ctx, egm, _two_axis_emb(spark))
+    sims = [r["ctx_word_sim"] for r in cands.collect()]
+    assert sims == [0.0, 0.0, 0.0]
 
 
 def _two_axis_emb(spark):
@@ -106,7 +120,7 @@ def test_pool_exclusion_modes(spark):
     got = {
         r["entity_id"]: r["ctx_ent_sim"]
         for r in SC.context_entity_vector(
-            cands, seeds, doc_agg, empty_sim=1.0, entity_emb=emb, exclusion="none"
+            cands, seeds, doc_agg, entity_emb=emb, exclusion="none"
         ).collect()
     }
     assert got["e1"] == pytest.approx(1 / math.sqrt(2))
@@ -116,8 +130,7 @@ def test_pool_exclusion_modes(spark):
     got = {
         r["entity_id"]: r["ctx_ent_sim"]
         for r in SC.context_entity_vector(
-            cands, seeds, doc_agg, empty_sim=1.0, entity_emb=emb,
-            exclusion="candidate_overlap",
+            cands, seeds, doc_agg, entity_emb=emb, exclusion="candidate_overlap"
         ).collect()
     }
     assert got["e1"] == pytest.approx(0.0)
@@ -141,8 +154,7 @@ def test_candidate_overlap_spares_unseeded_mentions(spark):
     )
     seeds, doc_agg = SC.seed_pool(cands, emb)
     out = SC.context_entity_vector(
-        cands, seeds, doc_agg, empty_sim=1.0, entity_emb=emb,
-        exclusion="candidate_overlap",
+        cands, seeds, doc_agg, entity_emb=emb, exclusion="candidate_overlap"
     )
     got = {(r["start"], r["entity_id"]): r["ctx_ent_sim"] for r in out.collect()}
     # m1 unseeded ⇒ pool = [1,0] (the e1 seed stays despite the overlap)
@@ -160,10 +172,6 @@ def test_scoring_plan_construction_runs_no_spark_job(spark):
         "doc_id string, start int, end int, surface string, parse_from string,"
         "ctx_vec array<double>",
     )
-    ma = spark.createDataFrame(
-        [("m1", "e1", 2), ("m1", "e2", 1), ("m2", "e2", 1)],
-        "mention string, entity_id string, cnt long",
-    )
     egm = spark.createDataFrame(
         [("m1", "e1", 0.6), ("m1", "e2", 0.4), ("m2", "e2", 1.0)],
         "mention string, entity_id string, p double",
@@ -171,10 +179,9 @@ def test_scoring_plan_construction_runs_no_spark_job(spark):
     emb = _two_axis_emb(spark)
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup() or [])
-    seeds, doc_agg = SC.seed_pool_from_dictionary(mentions, ma, egm, emb)
+    seeds, doc_agg = SC.seed_pool_from_dictionary(mentions, egm, emb)
     cands = SC.context_entity_vector(
-        SC.candidate_table(mentions, ma, egm, emb),
-        seeds, doc_agg, empty_sim=1.0, entity_emb=emb,
+        SC.candidate_table(mentions, egm, emb), seeds, doc_agg, entity_emb=emb
     )
     assert set(tracker.getJobIdsForGroup() or []) - before == set()
     got = {
@@ -193,12 +200,11 @@ def test_believe_fusion_and_gates(spark):
     cands = spark.createDataFrame(
         [
             # winner: high sims
-            ("d", 0, 2, "mm", "ma", "mm", "e1", 0.9, [1.0, 0.0], [1.0, 0.0]),
-            ("d", 0, 2, "mm", "ma", "mm", "e2", 0.1, [0.0, 1.0], [1.0, 0.0]),
+            ("d", 0, 2, "mm", "ma", "mm", "e1", 0.9, 1.0),
+            ("d", 0, 2, "mm", "ma", "mm", "e2", 0.1, 0.0),
         ],
         "doc_id string, start int, end int, surface string, parse_from string,"
-        "mention string, entity_id string, p double, entity_vec array<double>,"
-        "ctx_vec array<double>",
+        "mention string, entity_id string, p double, ctx_word_sim double",
     ).withColumn("ctx_ent_sim", F.lit(1.0))
     lp = spark.createDataFrame([("mm", 0.5)], "mention string, link_prob double")
     got = SC.score_has_prob(cands, lp, cfg).collect()
@@ -215,12 +221,11 @@ def test_believe_fusion_and_gates(spark):
 def test_top1_deterministic_tiebreak(spark):
     cands = spark.createDataFrame(
         [
-            ("d", 0, 2, "mm", "ma", "mm", "e2", 0.5, [1.0, 0.0], [1.0, 0.0]),
-            ("d", 0, 2, "mm", "ma", "mm", "e1", 0.5, [1.0, 0.0], [1.0, 0.0]),
+            ("d", 0, 2, "mm", "ma", "mm", "e2", 0.5, 1.0),
+            ("d", 0, 2, "mm", "ma", "mm", "e1", 0.5, 1.0),
         ],
         "doc_id string, start int, end int, surface string, parse_from string,"
-        "mention string, entity_id string, p double, entity_vec array<double>,"
-        "ctx_vec array<double>",
+        "mention string, entity_id string, p double, ctx_word_sim double",
     ).withColumn("ctx_ent_sim", F.lit(1.0))
     lp = spark.createDataFrame([("mm", 0.5)], "mention string, link_prob double")
     got = SC.score_has_prob(cands, lp).collect()
@@ -231,12 +236,12 @@ def test_no_prob_gates(spark):
     cfg = PredictorConfig()
     cands = spark.createDataFrame(
         [
-            ("d", 0, 2, "tt", "tt", "tt", "e1", [1.0, 0.0], [1.0, 0.0]),
-            ("d", 5, 7, "uu", "tt", "uu", "e2", [1.0, 0.0], [0.2, 1.0]),
+            ("d", 0, 2, "tt", "tt", "tt", "e1", 1.0),
+            # cosine of [1, 0] and [0.2, 1]
+            ("d", 5, 7, "uu", "tt", "uu", "e2", 0.2 / math.sqrt(1.04)),
         ],
         "doc_id string, start int, end int, surface string, parse_from string,"
-        "mention string, entity_id string, entity_vec array<double>,"
-        "ctx_vec array<double>",
+        "mention string, entity_id string, ctx_word_sim double",
     ).withColumn("ctx_ent_sim", F.lit(1.0))
     got = SC.score_no_prob(cands, cfg).collect()
     # e1: word_sim 1 > 0.3, believe = 0.5·1 + 0.5·1 = 1 > 0.5 ⇒ kept
@@ -287,12 +292,11 @@ def test_strict_reference_bug_modes(spark):
     check (xlink.py:299/310 → no-prob mentions always dropped)."""
     cands = spark.createDataFrame(
         [
-            ("d", 0, 2, "mm", "tt", "mm", "e1", [1.0, 0.0], 0.9),
-            ("d", 0, 2, "mm", "tt", "mm", "e2", [1.0, 0.0], 0.6),
+            ("d", 0, 2, "mm", "tt", "mm", "e1", 0.9),
+            ("d", 0, 2, "mm", "tt", "mm", "e2", 0.6),
         ],
         "doc_id string, start int, end int, surface string, parse_from string,"
-        "mention string, entity_id string, entity_vec array<double>,"
-        "ctx_word_sim double",
+        "mention string, entity_id string, ctx_word_sim double",
     )
     intended = SC.seed_argmax(cands).collect()
     assert [r["entity_id"] for r in intended] == ["e1"]  # true argmax
@@ -348,10 +352,6 @@ def test_seed_pool_from_dictionary_equals_candidate_seed_pool(spark):
         ],
         "doc_id string, start int, end int, surface string, parse_from string",
     )
-    ma = spark.createDataFrame(
-        [("aa", "e1", 3), ("bb", "e2", 2), ("bb", "e3", 1), ("cc", "e9", 1)],
-        "mention string, entity_id string, cnt long",
-    )
     egm = spark.createDataFrame(
         [("aa", "e1", 1.0), ("bb", "e2", 0.7), ("bb", "e3", 0.3), ("cc", "e9", 1.0)],
         "mention string, entity_id string, p double",
@@ -361,12 +361,10 @@ def test_seed_pool_from_dictionary_equals_candidate_seed_pool(spark):
         "key string, vec array<double>",
     )
     cands = SC.candidate_table(
-        SC.attach_context(mentions, spark.createDataFrame(
-            [("d1", "aa is bb"), ("d2", "xx aa and cc")], "doc_id string, text string")),
-        ma, egm, emb,
+        mentions.withColumn("ctx_vec", F.lit(None).cast("array<double>")), egm, emb
     )
     s_old, agg_old = SC.seed_pool(cands, emb)
-    s_new, agg_new = SC.seed_pool_from_dictionary(mentions, ma, egm, emb)
+    s_new, agg_new = SC.seed_pool_from_dictionary(mentions, egm, emb)
     key = lambda df: sorted(
         (r["doc_id"], r["start"], r["end"], r["seed_eid"], tuple(r["seed_vec"]))
         for r in df.collect()

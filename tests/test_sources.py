@@ -220,6 +220,7 @@ def test_eval_on_conll_end_to_end(spark, tmp_path):
     with gold offsets matching the predictor's char-exact spans."""
     from xlink_spark.eval.conll import eval_on_conll
     from xlink_spark.plans.pipeline import build_dictionary
+    from xlink_spark.plans.snapshots import SnapshotStore
 
     docs = spark.createDataFrame(
         [
@@ -237,7 +238,7 @@ def test_eval_on_conll_end_to_end(spark, tmp_path):
          ("paris", [1.0, 0.0]), ("france", [0.0, 1.0]), ("near", [0.5, 0.5])],
         "key string, vec array<double>",
     )
-    d = build_dictionary(docs, kb, emb)
+    d = build_dictionary(docs, kb, emb, store=SnapshotStore(str(tmp_path / "s")))
     conll = (
         "-DOCSTART- (1)\n"
         "paris\tB\tparis\tP\thttp://en.wikipedia.org/wiki/Paris\n"

@@ -71,7 +71,8 @@ class EngineConfig:
     predictor: PredictorConfig = field(default_factory=PredictorConfig)
     cluster: ClusterConfig = field(default_factory=ClusterConfig)
     # dictionary tables broadcast in the candidate explosion up to this many
-    # rows; beyond it the salted shuffle join takes over
+    # rows; beyond it the candidate join shuffles and AQE's skew-join
+    # splitting handles the hot surfaces
     broadcast_dict_max_rows: int = 5_000_000
 
 

@@ -1833,9 +1833,9 @@ def q_linking_pipeline_ascii(spark, sf_dir):
     )
     ctx = SC.attach_context(mentions, docs_norm.select("doc_id", "text"), window=50)
     ctxv = SC.context_word_vector(ctx, word_emb)
-    cands = SC.candidate_table(
-        ctxv, egm.select("mention", "entity_id"), egm, entity_emb
-    ).withColumn("ctx_ent_sim", F.lit(1.0))
+    cands = SC.candidate_table(ctxv, egm, entity_emb).withColumn(
+        "ctx_ent_sim", F.lit(1.0)
+    )
     lp = q_link_prob(spark, sf_dir).select("mention", "link_prob")
     links = SC.score_has_prob(cands, lp, DEFAULT.predictor)
     return links.select(
@@ -1946,11 +1946,12 @@ def q_linking_seeded_ascii(spark, sf_dir):
     candidate's entity vector against the unit-normalized pool
     (empty pool ⇒ 1, the reference's cal_candidate_context_entities_sim
     convention), and cand_believe = P(e|m)^0.02 · word_sim · ent_sim. This
-    runs stage-for-stage the same operator sequence as flagship.py
-    (seed_pool_from_dictionary → candidate_table → context_entity_vector →
-    score_has_prob), so every stage of the flagship DAG now has a green
-    hash oracle. The raw self-supervised dictionary is maximally ambiguous
-    (every token under every source — no seeds could exist), so this query
+    runs the same has-prob pass function as flagship.py and link_corpus
+    (plans.pipeline.link_has_prob: seed_pool_from_dictionary →
+    candidate_table → context_entity_vector → score_has_prob), so every
+    stage of the flagship DAG has a green hash oracle. The raw
+    self-supervised dictionary is maximally ambiguous (every token under
+    every source — no seeds could exist), so this query
     applies the F3-style prior refinement (p ≥ 0.08) the reference applies
     when refining its dictionary; at that threshold both seed surfaces and
     multi-candidate surfaces exist at both sf. Engine-parity margins
@@ -1960,19 +1961,12 @@ def q_linking_seeded_ascii(spark, sf_dir):
     (round(int/int, 6) is bit-identical cross-engine).
     """
     from xlink_spark.config import DEFAULT
-    from xlink_spark.operators import scoring as SC
     from xlink_spark.operators.detect import detect_mentions_join, resolve_conflicts
+    from xlink_spark.plans.pipeline import link_has_prob
 
-    # mentions fans out to the context branch AND the seed branch — exactly
-    # the flagship's fan-out point, handled the same way: persist the narrow
-    # mention rows eagerly so the Python detection scan runs ONCE (union
-    # legs share no common subplans).
     docs_norm, dct = _detection_base(spark, sf_dir)
-    mentions = hold(
-        resolve_conflicts(
-            detect_mentions_join(docs_norm, dct, max_words=2), weighted=True
-        ),
-        eager=True,
+    mentions = resolve_conflicts(
+        detect_mentions_join(docs_norm, dct, max_words=2), weighted=True
     )
     word_emb = _hash_embeddings_md5(
         spark, sf_dir, _tokens(spark, sf_dir).select("tok"), "tok"
@@ -1984,8 +1978,6 @@ def q_linking_seeded_ascii(spark, sf_dir):
     entity_emb = _hash_embeddings_md5(
         spark, sf_dir, egm.select("entity_id"), "entity_id"
     )
-    ctx = SC.attach_context(mentions, docs_norm.select("doc_id", "text"), window=50)
-    ctxv = SC.context_word_vector(ctx, word_emb)
     # F3-style dictionary refinement (filter_anchors semantics): the raw
     # self-supervised dictionary is maximally ambiguous (every token appears
     # under every source), so unambiguous seed surfaces only exist after the
@@ -1994,18 +1986,12 @@ def q_linking_seeded_ascii(spark, sf_dir):
     # ratios, bit-identical on both sides (nearest raw p is ≥1.1e-4 from the
     # threshold anyway, measured at both sf).
     egm_f = egm.filter(F.col("p") >= 0.08)
-    seeds, doc_agg = SC.seed_pool_from_dictionary(
-        mentions, egm_f.select("mention", "entity_id"), egm_f, entity_emb
-    )
-    cands = SC.candidate_table(
-        ctxv, egm_f.select("mention", "entity_id"), egm_f, entity_emb
-    )
-    cands = SC.context_entity_vector(
-        cands, seeds, doc_agg, empty_sim=1.0, entity_emb=entity_emb,
-        exclusion="none",  # has-prob pass: pool includes own seed
-    )
     lp = q_link_prob(spark, sf_dir).select("mention", "link_prob")
-    links = SC.score_has_prob(cands, lp, DEFAULT.predictor)
+    # the pass persists the mentions eagerly at their fan-out (context
+    # branch + seed branch), so the Python detection scan runs ONCE
+    links = link_has_prob(
+        mentions, docs_norm, egm_f, lp, word_emb, entity_emb, DEFAULT.predictor
+    )
     return links.select(
         "doc_id",
         F.col("start").cast("long").alias("start"),
@@ -2765,8 +2751,8 @@ def q_skew_salt_plan(spark, sf_dir):
     output = token occurrences × candidate entities, salted where the
     estimate exceeds the per-task target. The north rule's "salting hot
     blocking keys" made a measured, reproducible artifact instead of a
-    fixed config (detect.candidate_join's n_salt); exact integer ceil
-    arithmetic end to end."""
+    fixed config (a single replication factor for every hot key); exact
+    integer ceil arithmetic end to end."""
     from xlink_spark.operators.skew import join_salt_plan
 
     probe = _tokens(spark, sf_dir).select(F.col("tok").alias("key"))

@@ -10,10 +10,11 @@ corpus at /root/testdata:
     row pmod(xxhash64(entity), |embeddings|) (deterministic pseudo-vectors)
   * word embeddings: same construction over tokens
 
-Then the real pipeline runs end-to-end: broadcast-dict detection → conflict
-windows → candidate join → prior + context-cosine fusion → gates → top-1 →
-transitive clustering. Rows-only correctness (no SQL oracle — the scoring
-UDF path is pinned by pytest goldens instead).
+Then the pipeline's has-prob pass (plans.pipeline.link_has_prob) runs
+end-to-end: broadcast-dict detection → conflict windows → seed pool +
+candidate join → prior + context-cosine fusion → gates → top-1. Rows-only
+correctness (no SQL oracle here — the registry's linking_seeded_ascii
+oracles the same pass on the ascii corpus).
 """
 
 from __future__ import annotations
@@ -21,10 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xlink_spark.config import DEFAULT, DictionaryConfig
+from xlink_spark.config import DEFAULT
 from xlink_spark.operators import detect as DT
 from xlink_spark.operators import probs as PR
-from xlink_spark.operators import scoring as SC
+from xlink_spark.plans.pipeline import link_has_prob
 from xlink_spark.plans.storage import hold
 
 
@@ -93,25 +94,8 @@ def linking_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     word_emb = hold(_hash_embeddings(toks.select("tok"), "tok", emb, n_emb))
 
     surface_dict = DT.build_surface_dict(ma)
-    # mentions is the fan-out point now (ctx branch + seed branch): persist
-    # the NARROW mention rows eagerly — a lazy persist lets concurrent AQE
-    # branches race the same uncached plan, and the old alternative
-    # (persisting the 20x-exploded candidate table) costs 20x the memory
-    mentions = hold(
-        DT.resolve_conflicts(DT.detect_mentions(plain, surface_dict)), eager=True
+    mentions = DT.resolve_conflicts(DT.detect_mentions(plain, surface_dict))
+    return link_has_prob(
+        mentions, plain, probs["e_given_m"], lp, word_emb, entity_emb,
+        DEFAULT.predictor,
     )
-    ctx = SC.context_word_vector(SC.attach_context(mentions, plain), word_emb)
-    # seeds derive from the DICTIONARY + mentions (surface grain), not from
-    # the exploded candidate table — the plan is one linear chain, so no
-    # persist/materialization barrier is needed at the candidate fan-out
-    # (the old seed_pool(cands) formulation forced a 20x-exploded cache)
-    seeds, doc_agg = SC.seed_pool_from_dictionary(
-        mentions, ma, probs["e_given_m"], entity_emb
-    )
-    cands = SC.candidate_table(ctx, ma, probs["e_given_m"], entity_emb)
-    cands = SC.context_entity_vector(
-        cands, seeds, doc_agg, empty_sim=1.0, entity_emb=entity_emb,
-        exclusion="none",  # has-prob pass: pool includes own seed
-    )
-    links = SC.score_has_prob(cands, lp, DEFAULT.predictor)
-    return links

@@ -17,12 +17,12 @@ Spark-first redesign:
   ``row_number`` per group picks the winner (weight desc, length desc,
   start asc). No UDF, no heap — the reference's k-way heap merge
   (MentionParser.py:141-210) is an artifact of streaming.
-* ``candidate_join`` / ``salt_hot_keys`` — the at-scale blocking join:
-  when the dictionary exceeds broadcast limits, detected surfaces equi-join
-  ``mention_anchors`` on the normalized surface. Zipf-head surfaces
-  ("china"-like) are salted: the probe side gets a per-row salt, the dict
-  side is replicated per salt bucket, so no single reducer owns a hot key.
-  AQE skew-join is the backstop (session.py).
+* ``detect_mentions_join`` — the big-dictionary path: when the dictionary
+  exceeds broadcast limits, the n-gram spans equi-join the dictionary as a
+  table. The candidate explosion that follows (scoring.candidate_table)
+  then shuffles on the surface key, and AQE's skew-join splitting
+  (session.py) breaks up Zipf-head ("china"-like) surfaces; a
+  data-planned salted join is skew.apply_salt_plan.
 """
 
 from __future__ import annotations
@@ -85,7 +85,8 @@ def build_surface_dict(
     surface.
 
     At 10^12-doc scale the 'ma' dict is bounded by the KB (~10^7 surfaces,
-    ~100 MB) — broadcastable; beyond that, ``candidate_join`` is the path.
+    ~100 MB) — broadcastable; beyond that, ``detect_mentions_join`` is the
+    path.
     """
     d: dict[str, tuple[int, str]] = {}
     for r in (title_entities.select("mention").distinct().collect() if title_entities is not None else []):
@@ -332,57 +333,3 @@ def resolve_conflicts(mentions: DataFrame, weighted: bool = False) -> DataFrame:
         .filter(F.col("rn") == 1)
         .drop("new_group", "grp", "rn")
     )
-
-
-def hot_keys(mention_anchors: DataFrame, min_candidates: int = 64) -> DataFrame:
-    """Surfaces whose candidate fan-out marks them as skew risks."""
-    return (
-        mention_anchors.groupBy("mention")
-        .agg(F.count(F.lit(1)).alias("n_cands"), F.sum("cnt").alias("links"))
-        .filter(F.col("n_cands") >= min_candidates)
-        .select("mention")
-    )
-
-
-def candidate_join(
-    mentions: DataFrame,
-    mention_anchors: DataFrame,
-    hot: DataFrame | None = None,
-    n_salt: int = 8,
-) -> DataFrame:
-    """J1 at scale: blocking join of detected mentions to candidates.
-
-    Joins ``lower(surface)`` = ``mention``. With ``hot`` given, hot keys are
-    salted: probe rows get ``salt = pmod(hash(doc_id, start), n_salt)``; the
-    build side is replicated n_salt ways for hot keys only (cold keys keep
-    salt 0, no replication). Output is identical to the unsalted join —
-    pinned by test — but no reducer receives a whole hot key.
-    """
-    probe = mentions.withColumn("mention", F.lower("surface"))
-    if hot is None:
-        return probe.join(mention_anchors, "mention", "inner").drop("mention")
-    hot_marked = F.broadcast(hot.withColumn("is_hot", F.lit(True)))
-    probe = (
-        probe.join(hot_marked, "mention", "left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("is_hot"),
-                F.pmod(F.hash("doc_id", "start"), F.lit(n_salt)),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("is_hot")
-    )
-    build = (
-        mention_anchors.join(hot_marked, "mention", "left")
-        .withColumn(
-            "salt",
-            F.explode(
-                F.when(
-                    F.col("is_hot"), F.sequence(F.lit(0), F.lit(n_salt - 1))
-                ).otherwise(F.array(F.lit(0)))
-            ),
-        )
-        .drop("is_hot")
-    )
-    return probe.join(build, ["mention", "salt"], "inner").drop("mention", "salt")

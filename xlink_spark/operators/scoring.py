@@ -2,24 +2,31 @@
 §2.4 A7/A8, §2.5 W3-W5, §2.8 C8-C11).
 
 Reference lifecycle: xlink.py:107-354. Set-oriented redesign — every stage
-is a DataFrame transform over the exploded (mention × candidate) table:
+is a DataFrame transform over the exploded (mention × candidate) table,
+and BOTH passes (has-prob 'ma', no-prob 'tt') share it:
 
   mentions ─┬─ attach_context ── context_word_vector (A7)
-            ├─ seeds (unambiguous mentions, xlink.py:115-145)
+            ├─ seeds: 'ma' = unambiguous surfaces (seed_pool_from_dictionary,
+            │         xlink.py:115-145); 'tt' = seed_argmax (W5)
             │        └─ per-doc seed pool → context_entity_vector (A8, U3)
-            └─ candidates ⋈ e_given_m ⋈ entity_embeddings
+            └─ candidate_table: ⋈ dictionary ⋈ entity_embeddings → ctx_word_sim
                      └─ believe fusion (C9/C10) → gates (F6-F8) → top-1 (W4)
 
-Cosines are JVM-side column expressions: both context vectors and the
-broadcast entity vectors are unit-normalized once, so each candidate's
-cosine is one functions.vectors.dot — the whole scoring stage is one
-shuffle-free projection after the joins.
+The dictionary is ONE table keyed (mention, entity_id): ``e_given_m`` for
+the has-prob pass (it carries the prior ``p``), ``title_entities`` for the
+no-prob pass. Cosines are JVM-side column expressions: both context vectors
+and the broadcast entity vectors are unit-normalized once, so each
+candidate's cosine is one functions.vectors.dot — the whole scoring stage
+is one shuffle-free projection after the joins. candidate_table scores
+``ctx_word_sim`` and drops every vector; the scoring functions read only
+similarity columns.
 
 Semantic pins (tests hold these):
   * empty context words ⇒ word_sim = 0            (xlink.py:319)
   * empty context entities ⇒ ent_sim = 1 on BOTH passes — the shared
     cal_candidate_context_entities_sim (xlink.py:329-334); the GM
-    predictor's 0-convention (Predictor.py:210) is a different class
+    predictor's 0-convention (Predictor.py:210) belongs to a predictor
+    this rebuild does not implement
   * has-prob pool = ALL unambiguous seeds, own seed INCLUDED
     (xlink.py:157-161); no-prob pool: seeded mentions drop seeds whose
     entity matches any of their candidates (xlink.py:241-254)
@@ -41,7 +48,7 @@ from pyspark.sql import functions as F
 
 from xlink_spark.config import PredictorConfig
 from xlink_spark.functions.text import tokens_lower
-from xlink_spark.functions.vectors import cosine, dot, mean_pool_expr, norm as vnorm
+from xlink_spark.functions.vectors import dot, norm as vnorm
 
 
 def _unit_entity_emb(entity_emb: DataFrame) -> DataFrame:
@@ -121,6 +128,11 @@ def context_word_vector(
     dim_row = word_emb.select(F.size("vec").alias("d")).first()
     dim = dim_row["d"] if dim_row else 0
     carry = [c for c in mentions_ctx.columns if c not in (*MENTION_KEY, "ctx_prev", "ctx_after")]
+    if not dim:
+        # empty vocabulary — no mention gets a context vector
+        return mentions_ctx.select(
+            *MENTION_KEY, *carry, F.lit(None).cast("array<double>").alias("ctx_vec")
+        )
     toks = mentions_ctx.select(
         *MENTION_KEY,
         *carry,
@@ -134,122 +146,88 @@ def context_word_vector(
     vecs = toks.join(
         F.broadcast(word_emb.withColumnRenamed("key", "word")), "word", "left"
     )
-    if dim:
-        sums = [
-            F.sum(F.element_at("vec", d + 1).cast("double")).alias(f"_s{d}")
-            for d in range(dim)
-        ]
-        pooled = vecs.groupBy(*MENTION_KEY).agg(
-            *[F.first(c).alias(c) for c in carry],
-            *sums,
-        )
-        # UNIT-normalized context vector (the /n mean cancels in the norm):
-        # downstream cosine collapses to a single dot product per candidate.
-        # The norm is materialized as its own column FIRST — inlining a
-        # 64-term norm into each of 64 array elements builds a >64KB codegen
-        # method that silently falls back to interpreted evaluation.
-        # Empty-context mentions have all-null sums ⇒ null norm ⇒ null
-        # ctx_vec, the same contract the join-back produced.
-        pooled = pooled.withColumn(
-            "_nrm",
-            F.sqrt(sum(F.col(f"_s{d}") * F.col(f"_s{d}") for d in range(dim))),
-        )
-        return pooled.select(
-            *MENTION_KEY,
-            *carry,
-            "_nrm",
-            F.array(*[F.col(f"_s{d}") for d in range(dim)]).alias("_arr"),
-        ).select(
-            *MENTION_KEY,
-            *carry,
-            F.when(
-                F.col("_nrm") > 0,
-                F.transform("_arr", lambda x: x / F.col("_nrm")),
-            ).alias("ctx_vec"),
-        )
-    # empty vocabulary — no mention gets a context vector
+    sums = [
+        F.sum(F.element_at("vec", d + 1).cast("double")).alias(f"_s{d}")
+        for d in range(dim)
+    ]
     pooled = vecs.groupBy(*MENTION_KEY).agg(
         *[F.first(c).alias(c) for c in carry],
-        F.collect_list("vec").alias("vecs"),
+        *sums,
+    )
+    # UNIT-normalized context vector (the /n mean cancels in the norm):
+    # downstream cosine collapses to a single dot product per candidate.
+    # The norm is materialized as its own column FIRST — inlining a
+    # 64-term norm into each of 64 array elements builds a >64KB codegen
+    # method that silently falls back to interpreted evaluation.
+    # Empty-context mentions have all-null sums ⇒ null norm ⇒ null
+    # ctx_vec, the same contract the join-back produced.
+    pooled = pooled.withColumn(
+        "_nrm",
+        F.sqrt(sum(F.col(f"_s{d}") * F.col(f"_s{d}") for d in range(dim))),
     )
     return pooled.select(
-        *MENTION_KEY, *carry, mean_pool_expr("vecs").alias("ctx_vec")
+        *MENTION_KEY,
+        *carry,
+        "_nrm",
+        F.array(*[F.col(f"_s{d}") for d in range(dim)]).alias("_arr"),
+    ).select(
+        *MENTION_KEY,
+        *carry,
+        F.when(
+            F.col("_nrm") > 0,
+            F.transform("_arr", lambda x: x / F.col("_nrm")),
+        ).alias("ctx_vec"),
     )
 
 
 def candidate_table(
     mentions: DataFrame,
-    mention_anchors: DataFrame,
-    e_given_m: DataFrame,
+    dictionary: DataFrame,
     entity_emb: DataFrame,
     broadcast_dict: bool = True,
 ) -> DataFrame:
-    """Explode mention × candidate with prior + embedding columns.
+    """Explode mention × candidate and score the context-word cosine.
 
-    F6/F4 at predict time: candidates without an embedding are dropped
-    (inner join), as are candidates absent from e_given_m (xlink.py:196-206,
-    Predictor.py:117-126).
+    ``dictionary``: (mention, entity_id[, p]) — ``e_given_m`` for the
+    has-prob pass, ``title_entities`` for the no-prob pass; its other
+    columns ride along. Joined once on ``lower(surface)``. F6/F4 at predict
+    time: candidates without an embedding are dropped (inner join,
+    xlink.py:196-206, Predictor.py:117-126).
 
-    Scale shape: the entity-embedding side is broadcast (bounded by the KB),
-    so the exploded candidate rows never shuffle their vectors — the only
-    wide column that moves in a shuffle is one ctx_vec per MENTION, never
-    per candidate. Context columns (ctx_prev/ctx_after) are dropped here;
-    they have served their purpose upstream.
+    ``mentions`` is context_word_vector's output: each candidate's
+    ``ctx_word_sim`` is scored here from its ``ctx_vec`` and every vector
+    is dropped. A null context or a zero-norm entity vector scores 0
+    (xlink.py:319).
+
+    Scale shape: the entity side is broadcast (bounded by the KB), so the
+    exploded candidate rows never shuffle vectors — the only wide column
+    that moves in a shuffle is one ctx_vec per MENTION, never per
+    candidate. Context strings (ctx_prev/ctx_after) are dropped here; they
+    have served their purpose upstream.
     """
     narrow = mentions.drop("ctx_prev", "ctx_after")
     # Dictionary tables are KB-bounded: broadcast them so the candidate
     # explosion never shuffles detected mentions by surface — the surface
     # key is Zipf-skewed (few distinct heads carry most rows) and a
-    # sort-merge join on it collapses to a handful of hot reducers. When
-    # the dictionary outgrows broadcast (huge KBs), set
-    # broadcast_dict=False and pre-salt with detect.candidate_join instead.
+    # sort-merge join on it collapses to a handful of hot reducers. Beyond
+    # broadcast size (broadcast_dict=False) the join shuffles and relies on
+    # AQE's skew-join splitting (session.py) for the hot surfaces.
     maybe_b = F.broadcast if broadcast_dict else (lambda df: df)
     cands = narrow.withColumn("mention", F.lower("surface")).join(
-        maybe_b(mention_anchors.select("mention", "entity_id")), "mention", "inner"
+        maybe_b(dictionary), "mention", "inner"
     )
-    cands = cands.join(maybe_b(e_given_m), ["mention", "entity_id"], "inner")
-    cands = cands.join(
-        F.broadcast(
-            entity_emb.select(
-                F.col("key").alias("entity_id"), F.col("vec").alias("entity_vec")
-            )
-        ),
-        "entity_id",
-        "inner",
-    )
-    if "ctx_vec" in cands.columns:
-        # score the word-context cosine HERE, while both vectors are live in
-        # this stage, then drop BOTH vectors: downstream consumers re-attach
-        # entity vectors by broadcast, so candidate rows stay ~narrow-row
-        # sized through every shuffle, sort, and cache.
-        # ctx_vec arrives unit-normalized from context_word_vector; the
-        # entity side is normalized once (broadcast) → ONE dot per candidate
-        # (cosine needs 3 array folds; a dot unrolled into one expression per
-        # dimension exceeds the JIT's huge-method limit and drops to the
-        # bytecode interpreter — measured 2.7x slower)
-        cands = cands.join(
-            F.broadcast(_unit_entity_emb(entity_emb)), "entity_id", "left"
-        )
-        sim = F.when(
-            F.col("ctx_vec").isNull() | F.col("entity_unit").isNull(),
-            F.lit(0.0),
-        ).otherwise(dot("entity_unit", "ctx_vec"))
-        cands = cands.withColumn("ctx_word_sim", sim).drop(
-            "ctx_vec", "entity_vec", "entity_unit"
-        )
-    return cands
-
-
-def _ensure_word_sim(candidates: DataFrame) -> DataFrame:
-    """Compute ctx_word_sim from vectors when not already present."""
-    if "ctx_word_sim" in candidates.columns:
-        return candidates
-    return candidates.withColumn(
-        "ctx_word_sim",
-        F.when(F.col("ctx_vec").isNull(), F.lit(0.0)).otherwise(
-            cosine("entity_vec", "ctx_vec")
-        ),
-    )
+    # ONE inner join with the unit-normalized entity side: it is the
+    # embedding filter and the vector source at once. ctx_vec arrives
+    # unit-normalized from context_word_vector → ONE dot per candidate
+    # (a dot unrolled into one expression per dimension exceeds the JIT's
+    # huge-method limit and drops to the bytecode interpreter — measured
+    # 2.7x slower)
+    cands = cands.join(F.broadcast(_unit_entity_emb(entity_emb)), "entity_id", "inner")
+    sim = F.when(
+        F.col("ctx_vec").isNull() | F.col("entity_unit").isNull(),
+        F.lit(0.0),
+    ).otherwise(dot("entity_unit", "ctx_vec"))
+    return cands.withColumn("ctx_word_sim", sim).drop("ctx_vec", "entity_unit")
 
 
 def _drop_arrays(df: DataFrame) -> DataFrame:
@@ -260,10 +238,23 @@ def _drop_arrays(df: DataFrame) -> DataFrame:
     return df.drop(*arr) if arr else df
 
 
+def seed_vectors(seeds: DataFrame, entity_emb: DataFrame) -> DataFrame:
+    """(doc_id, start, end, seed_eid, seed_vec): each seed's entity vector,
+    broadcast-joined from ``entity_emb`` (seeds without one are dropped)."""
+    return seeds.join(
+        F.broadcast(
+            entity_emb.select(
+                F.col("key").alias("seed_eid"), F.col("vec").alias("seed_vec")
+            )
+        ),
+        "seed_eid",
+        "inner",
+    ).select(*MENTION_KEY, "seed_eid", "seed_vec")
+
+
 def seed_pool_from_dictionary(
     mentions: DataFrame,
-    mention_anchors: DataFrame,
-    e_given_m: DataFrame,
+    dictionary: DataFrame,
     entity_emb: DataFrame,
     broadcast_dict: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
@@ -278,21 +269,14 @@ def seed_pool_from_dictionary(
     no longer needs to persist the candidate table just to derive seeds
     (the plan becomes a single linear chain).
 
-    ``mentions``: detected mentions with ``surface``; returns the same
+    ``mentions``: detected mentions with ``surface``; ``dictionary``: the
+    same (mention, entity_id) table candidate_table joins. Returns the same
     (seeds, doc_agg) pair as ``seed_pool``.
     """
-    surf = (
-        mention_anchors.select("mention", "entity_id")
-        .join(
-            e_given_m.select("mention", "entity_id"),
-            ["mention", "entity_id"],
-            "left_semi",
-        )
-        .join(
-            entity_emb.select(F.col("key").alias("entity_id")),
-            "entity_id",
-            "left_semi",
-        )
+    surf = dictionary.select("mention", "entity_id").join(
+        entity_emb.select(F.col("key").alias("entity_id")),
+        "entity_id",
+        "left_semi",
     )
     surf1 = (
         surf.groupBy("mention")
@@ -301,19 +285,11 @@ def seed_pool_from_dictionary(
         .select("mention", "seed_eid")
     )
     maybe_b = F.broadcast if broadcast_dict else (lambda df: df)
-    seeds = (
-        mentions.select(*MENTION_KEY, F.lower("surface").alias("mention"))
-        .join(maybe_b(surf1), "mention", "inner")
-        .join(
-            F.broadcast(
-                entity_emb.select(
-                    F.col("key").alias("seed_eid"), F.col("vec").alias("seed_vec")
-                )
-            ),
-            "seed_eid",
-            "inner",
-        )
-        .select(*MENTION_KEY, "seed_eid", "seed_vec")
+    seeds = seed_vectors(
+        mentions.select(*MENTION_KEY, F.lower("surface").alias("mention")).join(
+            maybe_b(surf1), "mention", "inner"
+        ),
+        entity_emb,
     )
     return seeds, doc_agg_from_seeds(seeds)
 
@@ -333,19 +309,11 @@ def seed_pool(candidates: DataFrame, entity_emb: DataFrame) -> DataFrame:
     """
     counts = candidates.groupBy(*MENTION_KEY).agg(F.count(F.lit(1)).alias("n"))
     unambig = counts.filter(F.col("n") == 1).select(*MENTION_KEY)
-    seeds = (
-        candidates.select(*MENTION_KEY, "entity_id")
-        .join(unambig, MENTION_KEY, "left_semi")
-        .join(
-            F.broadcast(
-                entity_emb.select(
-                    F.col("key").alias("entity_id"), F.col("vec").alias("seed_vec")
-                )
-            ),
-            "entity_id",
-            "inner",
-        )
-        .select(*MENTION_KEY, F.col("entity_id").alias("seed_eid"), "seed_vec")
+    seeds = seed_vectors(
+        candidates.select(*MENTION_KEY, F.col("entity_id").alias("seed_eid")).join(
+            unambig, MENTION_KEY, "left_semi"
+        ),
+        entity_emb,
     )
     return seeds, doc_agg_from_seeds(seeds)
 
@@ -374,7 +342,6 @@ def context_entity_vector(
     candidates: DataFrame,
     seeds: DataFrame,
     doc_agg: DataFrame,
-    empty_sim: float,
     entity_emb: DataFrame,
     exclusion: str = "none",
 ) -> DataFrame:
@@ -389,8 +356,6 @@ def context_entity_vector(
       mention's pool drops every seed whose entity_id matches any of the
       mention's candidates; unseeded mentions keep the full pool. Requires
       ``seeds`` to carry a ``seed_eid`` column.
-    * ``"own"`` — drop exactly the mention's own seed row. Not a reference
-      semantics; kept for A/B comparison and tests.
 
     The pool vector is materialized per MENTION (not per candidate) and
     joined to the exploded candidates last — at 10^12 docs the wide columns
@@ -398,10 +363,9 @@ def context_entity_vector(
     The pool vector is UNIT-normalized once per mention (the /cnt mean
     cancels), the entity side once per entity (broadcast from
     ``entity_emb``), so the per-candidate cosine is a single compact dot
-    product. A candidate whose entity vector is all zero scores 0.
-    ``empty_sim`` is the empty-pool convention: the reference's shared
-    cal_candidate_context_entities_sim returns 1 on an empty pool for BOTH
-    passes (xlink.py:329-334); the GM predictor (Predictor.py:210) uses 0.
+    product. A candidate whose entity vector is all zero scores 0. An empty
+    pool scores 1 on BOTH passes — the reference's shared
+    cal_candidate_context_entities_sim (xlink.py:329-334).
     """
     if exclusion == "none":
         # the pool is a PER-DOC quantity here (no per-mention exclusion):
@@ -416,16 +380,7 @@ def context_entity_vector(
         pool_key = list(MENTION_KEY)
         mention_keys = candidates.select(*MENTION_KEY).distinct()
         mp = mention_keys.join(doc_agg, "doc_id", "left")
-    if exclusion == "own":
-        mp = mp.join(
-            seeds.select(*MENTION_KEY, F.col("seed_vec").alias("_ex_vec")),
-            MENTION_KEY,
-            "left",
-        ).withColumn(
-            "_ex_cnt",
-            F.when(F.col("_ex_vec").isNotNull(), F.lit(1)).otherwise(F.lit(0)),
-        )
-    elif exclusion == "candidate_overlap":
+    if exclusion == "candidate_overlap":
         seeded = seeds.select(*MENTION_KEY).distinct().withColumn("_seeded", F.lit(1))
         doc_seeds = seeds.select(
             "doc_id", F.col("seed_eid").alias("entity_id"), "seed_vec"
@@ -483,14 +438,14 @@ def context_entity_vector(
             F.transform("_praw", lambda x: x / F.col("_nrm")),
         ).alias("pool_vec"),
     )
-    c = candidates.drop("entity_vec").join(mp, pool_key, "left")
+    c = candidates.join(mp, pool_key, "left")
     c = c.join(F.broadcast(_unit_entity_emb(entity_emb)), "entity_id", "left")
     sim = F.when(F.col("entity_unit").isNull(), F.lit(0.0)).otherwise(
         dot("entity_unit", "pool_vec")
     )
     c = c.withColumn(
         "ctx_ent_sim",
-        F.when(F.col("pool_vec").isNull(), F.lit(empty_sim)).otherwise(sim),
+        F.when(F.col("pool_vec").isNull(), F.lit(1.0)).otherwise(sim),
     )
     return c.drop("pool_vec", "entity_unit")
 
@@ -503,8 +458,9 @@ def score_has_prob(
 ) -> DataFrame:
     """The has-prob scoring path (xlink.py:147-176, 347-354).
 
-    Expects candidates with ``ctx_vec``, ``ctx_ent_sim``, ``p`` (=P(e|m)),
-    ``entity_vec``. Produces per-mention winners with believe scores:
+    Expects candidates with ``ctx_word_sim`` (candidate_table),
+    ``ctx_ent_sim`` (context_entity_vector) and ``p`` (=P(e|m)). Produces
+    per-mention winners with believe scores:
 
       cand_believe = P(e|m)^α · word_sim · ent_sim       (believe_score_v2)
       mention_believe = (best_cand_believe + link_prob)/2 (xlink.py:172-173)
@@ -517,11 +473,10 @@ def score_has_prob(
     None-guard.
     """
     cfg = cfg or PredictorConfig()
-    scored = _ensure_word_sim(candidates)
     if cfg.believe_version == 1:
         if entity_prior is None:
             raise ValueError("believe_version=1 requires entity_prior")
-        scored = scored.join(
+        scored = candidates.join(
             F.broadcast(entity_prior.select("entity_id", "prior")),
             "entity_id",
             "left",
@@ -535,7 +490,7 @@ def score_has_prob(
             ),
         )
     else:
-        scored = scored.withColumn(
+        scored = candidates.withColumn(
             "cand_believe",
             F.pow("p", F.lit(cfg.prior_power))
             * F.col("ctx_word_sim")
@@ -567,8 +522,9 @@ def score_no_prob(
 ) -> DataFrame:
     """The no-prob (title-dict) path — xlink.py:179-270.
 
-    Expects candidates with ``ctx_vec``, ``ctx_ent_sim`` (empty ⇒ 1),
-    ``entity_vec``. believe = w·word_sim + (1−w)·ent_sim.
+    Expects candidates with ``ctx_word_sim`` (candidate_table) and
+    ``ctx_ent_sim`` (context_entity_vector; empty pool ⇒ 1).
+    believe = w·word_sim + (1−w)·ent_sim.
 
     Gate semantics pinned to the reference: the word-sim threshold gates
     the MENTION, not the candidates — a mention survives iff ANY candidate
@@ -579,7 +535,7 @@ def score_no_prob(
     believe > np_believe_th.
     """
     cfg = cfg or PredictorConfig()
-    scored = _ensure_word_sim(candidates).withColumn(
+    scored = candidates.withColumn(
         "believe",
         cfg.np_words_weight * F.col("ctx_word_sim")
         + (1 - cfg.np_words_weight) * F.col("ctx_ent_sim"),
@@ -613,6 +569,9 @@ def seed_argmax(
 ) -> DataFrame:
     """W5: per-mention argmax by word_sim, kept iff sim > seed threshold.
 
+    Expects candidates with ``ctx_word_sim`` (candidate_table); returns
+    (doc_id, start, end, entity_id, ctx_word_sim) per kept mention.
+
     Default = intended semantics of xlink.py:213-225. The reference's bug
     (xlink.py:218-222): ``max_sim = -1`` is never updated, so
     ``candidate.context_words_sim > max_sim`` is always true and
@@ -622,7 +581,7 @@ def seed_argmax(
     against reference outputs (insertion order ≙ ascending entity_id here).
     """
     cfg = cfg or PredictorConfig()
-    scored = _drop_arrays(_ensure_word_sim(candidates))
+    scored = _drop_arrays(candidates)
     if strict_reference_bugs:
         pick = Window.partitionBy(*MENTION_KEY).orderBy(F.col("entity_id").desc())
         return (

@@ -1,20 +1,20 @@
 """Data-driven skew handling for the blocking join.
 
-The north rule calls for salting hot blocking keys explicitly. detect.py's
-``candidate_join`` salts with a FIXED replication factor over a caller-
-supplied hot-key list; at 10^12 documents the hot set and the right
-replication factor per key are data, not configuration — a country-name
-anchor may need 500 salt buckets while a merely-warm surface needs 3.
-This module derives the plan from observed counts and applies it:
+The north rule calls for salting hot blocking keys explicitly. A FIXED
+replication factor over a hand-picked hot-key list does not scale: at
+10^12 documents the hot set and the right replication factor per key are
+data, not configuration — a country-name anchor may need 500 salt buckets
+while a merely-warm surface needs 3. This module derives the plan from
+observed counts and applies it:
 
 * ``join_salt_plan`` — per-key estimated join output = n_probe · n_build
   (the actual cost a reducer pays for that key, not either side's count
   alone); keys whose estimate exceeds ``target_rows_per_task`` get
   ``salt_factor = ceil(est / target)``. Two map-side-combinable counts and
   one narrow (key, count) join — never touches the wide rows.
-* ``apply_salt_plan`` — the variable-factor generalization of
-  detect.candidate_join's salting: probe rows of a planned key scatter to
-  ``pmod(hash(entropy), salt_factor)``; the build side replicates that key
+* ``apply_salt_plan`` — a variable-factor salted join: probe rows of a
+  planned key scatter to ``pmod(hash(entropy), salt_factor)``; the build
+  side replicates that key
   ``salt_factor`` times. Unplanned keys keep salt 0 with no replication.
   Output is row-identical to the plain join (pinned by test); no reducer
   owns more than ~target rows of any key.

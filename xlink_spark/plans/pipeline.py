@@ -8,6 +8,8 @@ Two halves, mirroring the reference:
 * ``link_corpus`` — the online predictor (xlink.py:107-354) as one batch
   DAG over the whole corpus: detection → candidates → scoring (both the
   has-prob and no-prob passes) → merge → transitive clustering.
+  ``link_has_prob`` is the has-prob pass on its own, shared with the
+  flagship and the seeded ascii registry query.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xlink_spark.config import DEFAULT, EngineConfig
+from xlink_spark.config import DEFAULT, EngineConfig, PredictorConfig
 from xlink_spark.operators import anchors as AN
 from xlink_spark.operators import detect as DT
 from xlink_spark.operators import probs as PR
@@ -44,15 +46,18 @@ def build_dictionary(
     docs: DataFrame,
     kb_entities: DataFrame,
     entity_emb: DataFrame,
-    store: SnapshotStore | None = None,
+    store: SnapshotStore,
     cfg: EngineConfig = DEFAULT,
 ) -> Dictionary:
-    """Steps 1-8 of the reference pipeline as snapshot-committed stages."""
+    """Steps 1-8 of the reference pipeline as snapshot-committed stages.
+
+    Every stage is committed to ``store`` (or read back from it), so the
+    returned tables are snapshot reads: each linking run consumes them
+    without re-deriving the dictionary from the corpus.
+    """
     spark = docs.sparkSession
 
     def stage(name: str, compute):
-        if store is None:
-            return compute()
         return store.get_or_compute(spark, name, compute)
 
     plain = docs.select("doc_id", plain_text("spans").alias("text"))
@@ -87,6 +92,49 @@ def build_dictionary(
     return Dictionary(ma_full, title_entities, e_given_m, entity_prior, m_given_e, lp)
 
 
+def link_has_prob(
+    mentions: DataFrame,
+    docs_plain: DataFrame,
+    e_given_m: DataFrame,
+    link_prob: DataFrame,
+    word_emb: DataFrame,
+    entity_emb: DataFrame,
+    pcfg: PredictorConfig,
+    entity_prior: DataFrame | None = None,
+    broadcast_dict: bool = True,
+) -> DataFrame:
+    """The has-prob ('ma') pass over resolved mentions (xlink.py:107-176):
+    context words → unambiguous-seed pool → candidates ⋈ ``e_given_m`` →
+    context-entity similarity → believe fusion, gates and top-1.
+
+    ``entity_prior`` is only read when ``pcfg.believe_version == 1`` (C10
+    v1). Output: (doc_id, start, end, surface, entity_id, believe,
+    parse_from='ma').
+    """
+    # fan-out point (ctx branch + seed branch): persist the NARROW mention
+    # rows eagerly so concurrent branches don't race the same uncached plan
+    # (the alternative, persisting the 20x-exploded candidate table, costs
+    # 20x the memory)
+    mentions = hold(mentions, eager=True)
+    ctx = SC.context_word_vector(
+        SC.attach_context(mentions, docs_plain, pcfg), word_emb,
+        tokenizer=pcfg.context_tokenizer,
+    )
+    # seeds derive from the dictionary + mentions at SURFACE grain — the
+    # exploded candidate table is consumed exactly once (a linear chain, no
+    # 20x-exploded persist)
+    seeds, doc_agg = SC.seed_pool_from_dictionary(
+        mentions, e_given_m, entity_emb, broadcast_dict=broadcast_dict
+    )
+    cands = SC.candidate_table(ctx, e_given_m, entity_emb, broadcast_dict=broadcast_dict)
+    # has-prob pool: ALL unambiguous seeds, own seed included; empty ⇒ 1
+    # (xlink.py:157-161, 329-334)
+    cands = SC.context_entity_vector(
+        cands, seeds, doc_agg, entity_emb=entity_emb, exclusion="none"
+    )
+    return SC.score_has_prob(cands, link_prob, pcfg, entity_prior=entity_prior)
+
+
 def link_corpus(
     docs_plain: DataFrame,
     d: Dictionary,
@@ -98,15 +146,17 @@ def link_corpus(
 
     Output: (doc_id, start, end, surface, entity_id, believe, parse_from).
     Two detection passes (the reference's 'ma' and 'tt' automata,
-    xlink.py:111/181) — two map-only scans, no extra shuffle.
+    xlink.py:111/181) — two map-only scans, no extra shuffle. Both passes
+    build their candidates with the same candidate_table.
     """
     pcfg = cfg.predictor
 
     # ---- has-prob pass -----------------------------------------------------
     # dictionary tables broadcast while KB-sized; beyond the threshold BOTH
     # detection (dictionary-as-table n-gram equi-join) and the candidate
-    # explosion (salted shuffle join) stay fully distributed — nothing is
-    # ever collected to the driver in the big-dictionary regime
+    # explosion (shuffle join, hot surfaces split by AQE's skew join) stay
+    # fully distributed — nothing is ever collected to the driver in the
+    # big-dictionary regime
     bcast = d.mention_anchors.count() <= cfg.broadcast_dict_max_rows
     if bcast:
         ma_dict = DT.build_surface_dict(d.mention_anchors)
@@ -118,100 +168,55 @@ def link_corpus(
                 "parse_from", F.lit("ma")
             ),
         )
-    # fan-out point (ctx branch + seed branch): persist the NARROW mention
-    # rows eagerly so concurrent branches don't race the same uncached plan
-    ma_mentions = hold(DT.resolve_conflicts(ma_detected), eager=True)
-    ma_ctx = SC.context_word_vector(
-        SC.attach_context(ma_mentions, docs_plain, pcfg), word_emb,
-        tokenizer=pcfg.context_tokenizer,
-    )
-    # seeds derive from the dictionary + mentions at SURFACE grain — the
-    # exploded candidate table is consumed exactly once (a linear chain, no
-    # 20x-exploded persist)
-    seeds, doc_agg = SC.seed_pool_from_dictionary(
-        ma_mentions, d.mention_anchors, d.e_given_m, entity_emb,
-        broadcast_dict=bcast,
-    )
-    ma_cands = SC.candidate_table(
-        ma_ctx, d.mention_anchors, d.e_given_m, entity_emb, broadcast_dict=bcast
-    )
-    # has-prob pool: ALL unambiguous seeds, own seed included; empty ⇒ 1
-    # (xlink.py:157-161, 329-334)
-    ma_cands = SC.context_entity_vector(
-        ma_cands, seeds, doc_agg, empty_sim=1.0, entity_emb=entity_emb,
-        exclusion="none",
-    )
     # entity_prior is only consumed when pcfg.believe_version == 1 (C10 v1);
     # passing it unconditionally keeps the flag usable from the main pipeline
-    prob_links = SC.score_has_prob(
-        ma_cands, d.link_prob, pcfg, entity_prior=d.entity_prior
+    prob_links = link_has_prob(
+        DT.resolve_conflicts(ma_detected), docs_plain, d.e_given_m, d.link_prob,
+        word_emb, entity_emb, pcfg, entity_prior=d.entity_prior,
+        broadcast_dict=bcast,
     )
 
     # ---- no-prob pass (title dict) ------------------------------------------
     n_tt = d.title_entities.count()
-    no_prob_links = None
-    if n_tt > 0:
-        if n_tt <= cfg.broadcast_dict_max_rows:
-            # build_surface_dict marks its first arg 'ma'; relabel for tt
-            tt_dict = DT.build_surface_dict(d.title_entities, None)
-            tt_dict = {s: (nw, "tt") for s, (nw, _) in tt_dict.items()}
-            tt_detected = DT.detect_mentions(docs_plain, tt_dict)
-        else:
-            tt_detected = DT.detect_mentions_join(
-                docs_plain,
-                d.title_entities.select("mention").withColumn(
-                    "parse_from", F.lit("tt")
-                ),
-            )
-        tt_mentions = DT.resolve_conflicts(tt_detected)
-        tt_ctx = SC.context_word_vector(
-            SC.attach_context(
-                tt_mentions, docs_plain, pcfg, window=pcfg.np_context_window
-            ),
-            word_emb,
-            tokenizer=pcfg.context_tokenizer,
-        )
-        tt_cands = (
-            tt_ctx.withColumn("mention", F.lower("surface"))
-            .join(d.title_entities, "mention", "inner")
-            .join(
-                F.broadcast(
-                    entity_emb.select(
-                        F.col("key").alias("entity_id"), F.col("vec").alias("entity_vec")
-                    )
-                ),
-                "entity_id",
-                "inner",
-            )
-        )
-        # eager word-sim + vector drop, as in candidate_table
-        tt_cands = SC._ensure_word_sim(tt_cands).drop("ctx_vec")
-        tt_seeds = SC.seed_argmax(
-            tt_cands, pcfg, strict_reference_bugs=pcfg.strict_reference_bugs
-        )
-        tt_seed_vecs = (
-            tt_cands.join(tt_seeds.select(*SC.MENTION_KEY, F.col("entity_id").alias("seed_eid")),
-                          SC.MENTION_KEY, "inner")
-            .filter(F.col("entity_id") == F.col("seed_eid"))
-            .select(*SC.MENTION_KEY, "seed_eid", F.col("entity_vec").alias("seed_vec"))
-        )
-        tt_doc_agg = SC.doc_agg_from_seeds(tt_seed_vecs)
-        # no-prob pool: seeded mentions drop entity-overlapping seeds
-        # (xlink.py:241-254); empty pool ⇒ 1, SAME as the has-prob pass —
-        # the shared cal_candidate_context_entities_sim (xlink.py:329-334).
-        # With believe = w·word_sim + (1−w)·ent_sim and th 0.5, an
-        # empty_sim of 0 would silently suppress the whole tt pass in
-        # seed-less docs (believe could never exceed 0.5·word_sim).
-        tt_cands = SC.context_entity_vector(
-            tt_cands, tt_seed_vecs, tt_doc_agg, empty_sim=1.0, entity_emb=entity_emb,
-            exclusion="candidate_overlap",
-        )
-        no_prob_links = SC.score_no_prob(tt_cands, pcfg)
-
-    if no_prob_links is None:
+    if n_tt == 0:
         return prob_links
+    tt_bcast = n_tt <= cfg.broadcast_dict_max_rows
+    if tt_bcast:
+        # build_surface_dict marks its first arg 'ma'; relabel for tt
+        tt_dict = DT.build_surface_dict(d.title_entities, None)
+        tt_dict = {s: (nw, "tt") for s, (nw, _) in tt_dict.items()}
+        tt_detected = DT.detect_mentions(docs_plain, tt_dict)
+    else:
+        tt_detected = DT.detect_mentions_join(
+            docs_plain,
+            d.title_entities.select("mention").withColumn("parse_from", F.lit("tt")),
+        )
+    tt_ctx = SC.context_word_vector(
+        SC.attach_context(
+            DT.resolve_conflicts(tt_detected), docs_plain, pcfg,
+            window=pcfg.np_context_window,
+        ),
+        word_emb,
+        tokenizer=pcfg.context_tokenizer,
+    )
+    tt_cands = SC.candidate_table(
+        tt_ctx, d.title_entities, entity_emb, broadcast_dict=tt_bcast
+    )
+    tt_seeds = SC.seed_vectors(
+        SC.seed_argmax(
+            tt_cands, pcfg, strict_reference_bugs=pcfg.strict_reference_bugs
+        ).select(*SC.MENTION_KEY, F.col("entity_id").alias("seed_eid")),
+        entity_emb,
+    )
+    # no-prob pool: seeded mentions drop entity-overlapping seeds
+    # (xlink.py:241-254); empty pool ⇒ 1, SAME as the has-prob pass — the
+    # shared cal_candidate_context_entities_sim (xlink.py:329-334)
+    tt_cands = SC.context_entity_vector(
+        tt_cands, tt_seeds, SC.doc_agg_from_seeds(tt_seeds), entity_emb=entity_emb,
+        exclusion="candidate_overlap",
+    )
     return SC.merge_results(
-        prob_links, no_prob_links,
+        prob_links, SC.score_no_prob(tt_cands, pcfg),
         strict_reference_bugs=pcfg.strict_reference_bugs,
     )
 

@@ -24,8 +24,9 @@ def get_spark(
 
     * **AQE on** (+ skew-join splitting): head anchors such as country names
       produce skewed blocking keys; AQE splits oversized post-shuffle
-      partitions at runtime, complementing the explicit salting done in
-      :mod:`xlink_spark.operators.detect`.
+      partitions at runtime. The non-broadcast candidate join
+      (scoring.candidate_table with broadcast_dict=False) relies on this;
+      :mod:`xlink_spark.operators.skew` plans explicit salting.
     * **Arrow on**: every Python crossing is an Arrow batch (pandas UDFs /
       mapInPandas); row-at-a-time Python UDFs are banned in this codebase.
     * **shuffle partitions ~ cores locally**; on a real cluster this should
