@@ -1,4 +1,4 @@
-"""Dedup family + similarity search + textstats + multimodal plumbing."""
+"""Dedup family + similarity search + textstats."""
 
 from __future__ import annotations
 
@@ -161,57 +161,6 @@ def test_language_id(spark):
     assert got == {"e1": "en", "d1": "de", "f1": "fr", "s1": "es", "z1": "zh", "u1": "und"}
 
 
-def test_multimodal_plumbing(spark, sdfs):
-    from xlink_spark.operators import multimodal as MM
-
-    docs, *_ = sdfs
-    refs = MM.media_refs(docs)
-    assert refs.count() > 0
-    assets = MM.synthesize_assets(docs)
-    assert assets.filter(F.col("payload").isNull()).count() == 0
-    assert assets.filter(F.col("meta.width").isNull()).count() == 0
-    # stubbed decoder: errors recorded, features null
-    feats = MM.extract_features(assets, fake=False)
-    assert feats.filter(F.col("decode_error").isNotNull()).count() == assets.count()
-    # fake decoder: deterministic unit features
-    f1 = MM.extract_features(assets, fake=True).orderBy("media_ref").collect()
-    f2 = MM.extract_features(assets, fake=True).orderBy("media_ref").collect()
-    assert [r["feature"] for r in f1] == [r["feature"] for r in f2]
-    import numpy as np
-
-    assert abs(np.linalg.norm(f1[0]["feature"]) - 1.0) < 1e-5
-
-
-def test_multimodal_feature_neardup_end_to_end(spark, sdfs):
-    """Media pipeline: spans → refs → assets → fake features → SRP near-dup.
-
-    Decoders are stubbed (no media libs in env) but every Spark-side hop —
-    binary payloads, Arrow batching, feature schema, bucketed ANN — is real.
-    """
-    from xlink_spark.operators import multimodal as MM
-
-    docs, *_ = sdfs
-    assets = MM.synthesize_assets(docs)
-    feats = MM.extract_features(assets, dim=8, fake=True).filter(
-        F.col("feature").isNotNull()
-    )
-    n = feats.count()
-    assert n == assets.count()
-    emb = feats.select(
-        F.col("media_ref").alias("vec_id"), F.col("feature").alias("embedding")
-    )
-    # union with itself → guaranteed near-dups; SRP buckets must find them
-    twin = emb.select(F.concat(F.col("vec_id"), F.lit("#t")).alias("vec_id"), "embedding")
-    both = emb.unionByName(twin)
-    topk = SIM.bucketed_topk(both, dim=8, k=1, bits=4)
-    got = {r["query_id"]: (r["neighbor_id"], r["cos"]) for r in topk.collect()}
-    hits = sum(
-        1 for r, (nb, cos) in got.items()
-        if (nb == r + "#t" or r == nb + "#t") and cos >= 0.999999
-    )
-    assert hits >= n  # every asset finds its twin (in at least one direction)
-
-
 def test_simhash_near_pairs_matches_brute_force(spark):
     """Banded Hamming LSH over 64-bit SimHash: for k < bands the pigeonhole
     guarantee makes the blocked join EXACTLY equal to brute-force Hamming
@@ -294,139 +243,6 @@ def test_semantic_dedup(spark):
     assert got[10] == (0, True) and got[11] == (0, False)
     assert got[20] == (1, True) and got[21] == (1, False)
     assert got[12][0] == 0 and got[12][1]  # near but below threshold: kept
-
-
-def test_real_bmp_wav_decode_to_srp_neardup(spark):
-    """REAL media decode, no fake path: hand-built BMP and WAV payloads
-    decode to pixel/sample histogram features (verified against a driver-side
-    recomputation), corrupt payloads yield typed error rows, and the decoded
-    image features run through SRP near-dup finding the perturbed twin."""
-    import numpy as np
-
-    from xlink_spark.operators import multimodal as MM
-
-    rng = np.random.RandomState(3)
-    img_a = rng.randint(0, 256, size=(8, 6, 3)).astype(np.uint8)
-    img_b = img_a.copy()
-    img_b[0, 0] = [255, 255, 255]  # 2-pixel perturbation → near-dup twin
-    img_b[1, 1] = [0, 0, 0]
-    img_c = rng.randint(0, 256, size=(8, 6, 3)).astype(np.uint8)
-    wave = np.sin(np.linspace(0, 40 * np.pi, 4000)) * 0.7
-    rows = [
-        ("bmp_a", "image", bytearray(MM.make_bmp(img_a))),
-        ("bmp_b", "image", bytearray(MM.make_bmp(img_b))),
-        ("bmp_c", "image", bytearray(MM.make_bmp(img_c))),
-        ("wav_a", "audio", bytearray(MM.make_wav(wave))),
-        ("bad_bmp", "image", bytearray(b"BM" + b"\x01" * 20)),  # truncated header
-    ]
-    assets = spark.createDataFrame(rows, "media_ref string, kind string, payload binary")
-    feats = {
-        r["media_ref"]: (r["feature"], r["decode_error"])
-        for r in MM.extract_features(assets, dim=16, fake=False).collect()
-    }
-    # corrupt payload: typed error row, no task failure
-    assert feats["bad_bmp"][0] is None and "truncated" in feats["bad_bmp"][1]
-    for ref in ("bmp_a", "bmp_b", "bmp_c", "wav_a"):
-        f, err = feats[ref]
-        assert err is None and f is not None and len(f) == 16
-        assert abs(np.linalg.norm(f) - 1.0) < 1e-5
-    # the decoded feature IS the pixel histogram (real decode, not a hash):
-    gray = img_a.mean(axis=2)
-    h, _ = np.histogram(gray.ravel(), bins=16, range=(0.0, 256.0))
-    expected = h / np.linalg.norm(h)
-    assert np.allclose(feats["bmp_a"][0], expected, atol=1e-6)
-    # expected amplitudes go through the same int16 PCM quantization the
-    # encoder applies and the decoder reverses
-    q = (np.clip(wave, -1, 1) * 32767.0).astype(np.int16).astype(np.float64) / 32768.0
-    hw, _ = np.histogram(q, bins=16, range=(-1.0, 1.0))
-    assert np.allclose(feats["wav_a"][0], hw / np.linalg.norm(hw), atol=1e-6)
-    # decoded image features through the SRP near-dup path: a's nearest
-    # neighbor among the images is its perturbed twin b
-    emb = spark.createDataFrame(
-        [(k, [float(x) for x in feats[k][0]]) for k in ("bmp_a", "bmp_b", "bmp_c")],
-        "vec_id string, embedding array<float>",
-    )
-    top = {
-        r["query_id"]: r["neighbor_id"]
-        for r in SIM.bucketed_topk(emb, dim=16, k=1, bits=2).collect()
-    }
-    assert top.get("bmp_a") == "bmp_b" and top.get("bmp_b") == "bmp_a"
-
-
-def test_resize_images_nearest_neighbor(spark):
-    """resize_images: real BMP decode → integer nearest-neighbor map →
-    real BMP re-encode. Identity resize is byte-stable, downscale picks the
-    exact floor(i·src/dst) pixels, non-BMP payloads get typed errors, and
-    the resized table chains into extract_features."""
-    import numpy as np
-
-    from xlink_spark.operators import multimodal as MM
-
-    rng = np.random.RandomState(5)
-    px = rng.randint(0, 256, size=(4, 4, 3)).astype(np.uint8)
-    rows = [
-        ("img", "image", bytearray(MM.make_bmp(px))),
-        ("bad", "image", bytearray(b"not an image at all")),
-    ]
-    assets = spark.createDataFrame(rows, "media_ref string, kind string, payload binary")
-
-    same = {r["media_ref"]: r for r in MM.resize_images(assets, 4, 4).collect()}
-    assert bytes(same["img"]["payload"]) == MM.make_bmp(px)  # identity round-trip
-    assert same["bad"]["payload"] is None and same["bad"]["decode_error"]
-
-    small = {r["media_ref"]: r for r in MM.resize_images(assets, 2, 2).collect()}
-    assert (small["img"]["width"], small["img"]["height"]) == (2, 2)
-    expected = px[[0, 2]][:, [0, 2]]  # floor(i*4/2) index map
-    assert bytes(small["img"]["payload"]) == MM.make_bmp(expected)
-
-    # chains into the feature extractor as a normal asset table
-    resized_assets = spark.createDataFrame(
-        [("img", "image", small["img"]["payload"])],
-        "media_ref string, kind string, payload binary",
-    )
-    feats = {r["media_ref"]: r for r in MM.extract_features(resized_assets, dim=8).collect()}
-    assert feats["img"]["decode_error"] is None and len(feats["img"]["feature"]) == 8
-
-
-def test_sample_frames_every_ms(spark):
-    """Frame sampling over the XLV1 test container: first frame at/after
-    each every_ms boundary is emitted with its index and timestamp; frames
-    are real BMP payloads; real video formats yield a typed decode_error
-    (no demuxer in this environment — the documented stub)."""
-    import numpy as np
-
-    from xlink_spark.operators import multimodal as MM
-
-    rng = np.random.RandomState(9)
-    frames = []
-    for t in (0, 400, 800, 1200, 2000):
-        img = rng.randint(0, 256, size=(2, 2, 3)).astype(np.uint8)
-        frames.append((t, MM.make_bmp(img)))
-    rows = [
-        ("vid", "video", bytearray(MM.make_video(frames))),
-        ("mp4", "video", bytearray(b"\x00\x00\x00 ftypisom rest-of-an-mp4")),
-    ]
-    assets = spark.createDataFrame(rows, "media_ref string, kind string, payload binary")
-    got = MM.sample_frames(assets, every_ms=1000).collect()
-    vid = sorted(
-        ((r["frame_idx"], r["t_ms"]) for r in got if r["media_ref"] == "vid"),
-    )
-    assert vid == [(0, 0), (3, 1200), (4, 2000)]  # one per 1000ms window
-    sampled = {r["frame_idx"]: r for r in got if r["media_ref"] == "vid"}
-    assert bytes(sampled[3]["frame"]) == frames[3][1]  # the real BMP bytes
-    mp4 = [r for r in got if r["media_ref"] == "mp4"]
-    assert len(mp4) == 1 and mp4[0]["decode_error"] and mp4[0]["frame"] is None
-    # sampled frames chain into the image feature extractor
-    fa = spark.createDataFrame(
-        [(f"vid#{r}", "image", sampled[r]["frame"]) for r in sampled],
-        "media_ref string, kind string, payload binary",
-    )
-    feats = MM.extract_features(fa, dim=8).collect()
-    assert all(r["decode_error"] is None for r in feats)
-    # output flushing (batch_rows) never loses rows: every frame qualifies
-    # at every_ms=1 and a 2-row flush cap still emits all five
-    allf = MM.sample_frames(assets, every_ms=1, batch_rows=2).collect()
-    assert sorted(r["frame_idx"] for r in allf if r["media_ref"] == "vid") == [0, 1, 2, 3, 4]
 
 
 def test_bucketed_topk_multiprobe_improves_recall(spark):
@@ -564,77 +380,6 @@ def test_quantizer_assignment_plan_shapes(spark, quantizer_emb):
 
     m = _re.search(r"Exchange hashpartitioning\(vec_id[^\n]*\n[^\n]*", join_plan)
     assert m and "cvec" not in m.group(0) and "embedding" not in m.group(0)
-
-
-def test_hier_quantizer_full_probe_equals_flat(spark, quantizer_emb):
-    """Two-level assignment with ALL coarse cells probed reproduces the
-    flat join assignment EXACTLY (every centroid scored, same d², same
-    tie-break); and with centroids placed on the data points, the top-1
-    probe under partial coarse probing is always the vector's own centroid
-    (its nearest coarse cell is by construction its centroid's cell)."""
-    emb, cents = quantizer_emb
-    flat = {
-        r["vec_id"]: list(r["_probes"])
-        for r in SIM.assign_probe_clusters(
-            emb, cents, 2, literal_centroid_max=1
-        ).collect()
-    }
-    full = {
-        r["vec_id"]: list(r["_probes"])
-        for r in SIM.assign_probe_clusters_hier(
-            emb, cents, 2, n_coarse=5, nprobe_coarse=5
-        ).collect()
-    }
-    assert flat == full
-    # centroids == first 24 data vectors: those vectors' top-1 probe must be
-    # their own centroid even under partial probing (nprobe_coarse=1)
-    part = {
-        r["vec_id"]: list(r["_probes"])
-        for r in SIM.assign_probe_clusters_hier(
-            emb, cents, 1, n_coarse=5, nprobe_coarse=1
-        ).collect()
-    }
-    for cid, _ in cents:
-        assert part[cid][0] == cid
-    # growing the coarse probe set never worsens the best distance found:
-    # the full-probe top-1 equals the flat top-1 for every vector
-    assert all(full[v][0] == flat[v][0] for v in flat)
-
-
-def test_hier_quantizer_exact_on_clustered_data(spark):
-    """The operator's target setting: on well-separated blob-structured
-    embeddings, partial coarse probing (2 of 8 cells) agrees with the flat
-    assignment EXACTLY — coarse cells capture the real neighborhoods.
-    (On unstructured Gaussian data agreement drops to ~0.35-0.40, the
-    textbook IVF behavior; the docstring records that measurement.)"""
-    import numpy as np
-
-    rng = np.random.RandomState(0)
-    blobs = rng.normal(scale=0.05, size=(8, 1, 16)) + rng.normal(
-        scale=10, size=(8, 1, 16)
-    )
-    cents = [
-        (i, (blobs[i % 8, 0] + rng.normal(scale=0.05, size=16)).tolist())
-        for i in range(96)
-    ]
-    vecs = [
-        (i, (blobs[i % 8, 0] + rng.normal(scale=0.05, size=16)).tolist())
-        for i in range(200)
-    ]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    flat = {
-        r["vec_id"]: r["_probes"][0]
-        for r in SIM.assign_probe_clusters(
-            emb, cents, 1, literal_centroid_max=1
-        ).collect()
-    }
-    hier = {
-        r["vec_id"]: r["_probes"][0]
-        for r in SIM.assign_probe_clusters_hier(
-            emb, cents, 1, n_coarse=8, nprobe_coarse=2
-        ).collect()
-    }
-    assert flat == hier
 
 
 def test_ivf_and_semantic_dedup_identical_through_join_quantizer(spark, quantizer_emb):
@@ -941,88 +686,6 @@ def test_pack_sequences_deterministic_across_sessions_and_layouts(spark, tmp_pat
     assert a == c
 
 
-def test_coarse_cells_never_empty_and_hier_loses_no_rows(spark):
-    """Row-loss guard: Lloyd over a duplicate-heavy quantizer leaves coarse
-    cells with ZERO member centroids (ties all resolve to the smallest cell
-    id); a vector whose probed cells were all empty would silently vanish
-    through the hier path's final inner join. coarse_cells must therefore
-    never return an empty cell — and hier assignment must preserve row
-    count for every vector."""
-    # 8 duplicate centroids + 2 off to the side: seeds 0,2,4,6,8 collapse —
-    # every [10,10] centroid ties to the smallest duplicate cell, leaving
-    # the other duplicate-seeded cells memberless
-    cents = [(i, [10.0, 10.0]) for i in range(8)] + [
-        (8, [0.0, 0.0]), (9, [0.1, 0.0])
-    ]
-    coarse, cell_of = SIM.coarse_cells(cents, 5)
-    member_cells = set(cell_of.values())
-    assert {c for c, _ in coarse} == member_cells  # no empty cell survives
-    assert set(cell_of) == {i for i in range(10)}  # every centroid assigned
-    # end-to-end: every input vector appears in the hier assignment output,
-    # wherever its probes land
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    vecs = [(i, (rng.normal(scale=8, size=2)).tolist()) for i in range(40)]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    out = SIM.assign_probe_clusters_hier(
-        emb, cents, nprobe=1, n_coarse=5, nprobe_coarse=1
-    )
-    assert out.count() == 40
-
-
-def test_ivf_hier_opt_in_matches_flat_on_full_probe(spark, quantizer_emb):
-    """ivf_topk(hier=True) with all coarse cells probed returns exactly the
-    flat-path answers (the ergonomic wrapper adds no drift), and
-    hier_agreement_rate reads 1.0 in that regime."""
-    emb, cents = quantizer_emb
-    flat = sorted(
-        map(tuple, SIM.ivf_topk(emb, k=3, nprobe=2, centroids=cents).collect())
-    )
-    hier = sorted(
-        map(tuple, SIM.ivf_topk(
-            emb, k=3, nprobe=2, centroids=cents,
-            hier=True, n_coarse=5, nprobe_coarse=5,
-        ).collect())
-    )
-    assert flat == hier and len(flat) > 0
-    rate = SIM.hier_agreement_rate(
-        emb, cents, nprobe=1, n_coarse=5, nprobe_coarse=5, sample_rows=500
-    )
-    assert rate == 1.0
-
-
-def test_hier_agreement_rate_blob_data(spark):
-    """The go/no-go gauge on the operator's target setting: on separated
-    blob-structured embeddings, partial coarse probing (2 of 8 cells)
-    agrees with the flat assignment for every sampled vector."""
-    import numpy as np
-
-    rng = np.random.RandomState(0)
-    blobs = rng.normal(scale=0.05, size=(8, 1, 16)) + rng.normal(
-        scale=10, size=(8, 1, 16)
-    )
-    cents = [
-        (i, (blobs[i % 8, 0] + rng.normal(scale=0.05, size=16)).tolist())
-        for i in range(96)
-    ]
-    vecs = [
-        (i, (blobs[i % 8, 0] + rng.normal(scale=0.05, size=16)).tolist())
-        for i in range(200)
-    ]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    rate = SIM.hier_agreement_rate(
-        emb, cents, nprobe=1, n_coarse=8, nprobe_coarse=2, sample_rows=100
-    )
-    assert rate == 1.0
-    # and semantic_dedup's opt-in hier path agrees with its flat path here
-    flat = sorted(map(tuple, DD.semantic_dedup(emb, cents, threshold=0.95).collect()))
-    hier = sorted(map(tuple, DD.semantic_dedup(
-        emb, cents, threshold=0.95, hier=True, n_coarse=8, nprobe_coarse=2
-    ).collect()))
-    assert flat == hier
-
-
 def test_ivf_default_training_is_bounded_sample(spark):
     """The convenience KMeans training path samples by DEFAULT once the
     input exceeds the row cap (no accidental full-corpus iterative ML job),
@@ -1049,61 +712,6 @@ def test_ivf_default_training_is_bounded_sample(spark):
     # frozen-centroid path (all oracles) is unaffected by the default change
     got = SIM.ivf_topk(emb, k=2, n_clusters=4, nprobe=2, train_row_cap=50)
     assert got.count() > 0
-
-
-def test_resize_images_hostile_header_is_data_error(spark):
-    """A BMP header declaring huge dimensions over a tiny payload must land
-    on the typed decode_error path BEFORE any allocation — never an OOM-risk
-    np.zeros from untrusted header fields."""
-    import struct
-
-    from xlink_spark.operators import multimodal as MM
-
-    def fake_bmp(w, h):
-        off = 54
-        header = struct.pack("<2sIHHI", b"BM", off + 16, 0, 0, off)
-        info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, 16, 2835, 2835, 0, 0)
-        return header + info + b"\x00" * 16  # 16 bytes of "pixels"
-
-    rows = [
-        ("huge", "image", bytearray(fake_bmp(30000, 30000))),     # payload-size lie
-        ("absurd", "image", bytearray(fake_bmp(1 << 20, 4))),     # dimension cap
-        ("negw", "image", bytearray(fake_bmp(-5, 4))),
-    ]
-    assets = spark.createDataFrame(rows, "media_ref string, kind string, payload binary")
-    got = {r["media_ref"]: r for r in MM.resize_images(assets, 2, 2).collect()}
-    for ref in ("huge", "absurd", "negw"):
-        assert got[ref]["payload"] is None
-        assert got[ref]["decode_error"] and "ValueError" in got[ref]["decode_error"]
-
-
-def test_sample_frames_truncated_container_is_data_error(spark):
-    """A frame length field overrunning the XLV1 buffer must yield a typed
-    decode_error row — never silently-truncated garbage frame bytes with
-    decode_error=None (Python slicing does not raise on overrun)."""
-    import struct
-
-    import numpy as np
-
-    from xlink_spark.operators import multimodal as MM
-
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    good = MM.make_bmp(img)
-    # frame 0 intact, frame 1 declares 10_000 bytes but the buffer ends
-    lying = (
-        MM.VIDEO_MAGIC + struct.pack("<I", 2)
-        + struct.pack("<II", 0, len(good)) + good
-        + struct.pack("<II", 1000, 10_000) + b"\x01\x02\x03"
-    )
-    assets = spark.createDataFrame(
-        [("trunc", "video", bytearray(lying))],
-        "media_ref string, kind string, payload binary",
-    )
-    got = MM.sample_frames(assets, every_ms=1).collect()
-    errs = [r for r in got if r["decode_error"]]
-    assert len(errs) == 1 and "truncated XLV1" in errs[0]["decode_error"]
-    # no garbage frame row was emitted for the overrunning frame
-    assert all(r["t_ms"] != 1000 for r in got if r["decode_error"] is None)
 
 
 def test_winnow_fingerprint_guarantee_and_discrimination(spark):
@@ -1440,81 +1048,3 @@ def test_histogram_drift_hand_values_and_invariants(spark):
     }
     assert rows2[9]["prev_ppm"] == 100  # clamped epsilon
     assert rows2[9]["psi_micro"] > 0
-
-
-def test_image_info_header_sniffing_all_formats(spark):
-    """Header-only dimension extraction for JPEG/PNG/GIF/BMP from
-    hand-built minimal containers — JPEG requires walking past non-frame
-    markers to SOF0; truncated and foreign payloads become typed
-    decode_error DATA rows."""
-    import struct
-
-    from xlink_spark.operators.multimodal import image_info
-
-    def jpeg(w, h):
-        # SOI + APP0 + a DHT segment (must be SKIPPED) + SOF0 + EOI
-        app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-        dht = b"\xff\xc4" + struct.pack(">H", 5) + b"\x00\x00\x00"
-        sof = b"\xff\xc0" + struct.pack(">H", 11) + b"\x08" + struct.pack(
-            ">HH", h, w
-        ) + b"\x03\x01\x11\x00"
-        return b"\xff\xd8" + app0 + dht + sof + b"\xff\xd9"
-
-    def png(w, h):
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + struct.pack(">I", 13)
-            + b"IHDR"
-            + struct.pack(">II", w, h)
-            + b"\x08\x02\x00\x00\x00"
-        )
-
-    def gif(w, h):
-        return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00" * 6
-
-    def bmp(w, h):
-        # "BM" + 12 header bytes + DIB size 40 (BITMAPINFOHEADER) + i32 dims
-        return (
-            b"BM" + b"\x00" * 12 + struct.pack("<I", 40)
-            + struct.pack("<ii", w, h) + b"\x00" * 8
-        )
-
-    def bmp_core(w, h):
-        # BITMAPCOREHEADER: DIB size 12 at offset 14, u16 dims at 18/20,
-        # then u16 planes=1 / u16 bpp=8 — the bytes that would misparse as
-        # garbage i32 dims if the DIB size were not dispatched on
-        return (
-            b"BM" + b"\x00" * 12
-            + struct.pack("<I", 12)
-            + struct.pack("<HHHH", w, h, 1, 8)
-        )
-
-    def jpeg_fill(w, h):
-        # spec-valid: 0xFF fill byte padding before the SOF marker
-        sof = b"\xff\xc0" + struct.pack(">H", 11) + b"\x08" + struct.pack(
-            ">HH", h, w
-        ) + b"\x03\x01\x11\x00"
-        return b"\xff\xd8" + b"\xff" + sof + b"\xff\xd9"
-
-    rows = [
-        ("j", jpeg(640, 480)), ("p", png(320, 200)), ("g", gif(16, 8)),
-        ("b", bmp(32, 24)), ("bneg", bmp(10, -20)),  # top-down BMP: |h|
-        ("bcore", bmp_core(100, 10)),                # OS/2 core header
-        ("jfill", jpeg_fill(12, 34)),                # 0xFF fill padding
-        ("bdib16", b"BM" + b"\x00" * 12 + struct.pack("<I", 16) + b"\x00" * 10),
-        ("trunc", b"\x89PNG\r\n\x1a\n\x00\x00"), ("alien", b"RIFFxxxxWEBP"),
-        ("null", None),
-    ]
-    media = spark.createDataFrame(rows, "media_ref string, payload binary")
-    out = {r["media_ref"]: r for r in image_info(media).collect()}
-    assert (out["j"]["format"], out["j"]["width"], out["j"]["height"]) == ("jpeg", 640, 480)
-    assert (out["p"]["format"], out["p"]["width"], out["p"]["height"]) == ("png", 320, 200)
-    assert (out["g"]["format"], out["g"]["width"], out["g"]["height"]) == ("gif", 16, 8)
-    assert (out["b"]["format"], out["b"]["width"], out["b"]["height"]) == ("bmp", 32, 24)
-    assert out["bneg"]["height"] == 20
-    assert (out["bcore"]["format"], out["bcore"]["width"], out["bcore"]["height"]) == ("bmp", 100, 10)
-    assert (out["jfill"]["format"], out["jfill"]["width"], out["jfill"]["height"]) == ("jpeg", 12, 34)
-    assert out["bdib16"]["decode_error"] is not None  # unsupported DIB size
-    for bad in ("trunc", "alien", "null"):
-        assert out[bad]["decode_error"] is not None and out[bad]["format"] is None
-    assert out["j"]["n_bytes"] == len(jpeg(640, 480))

@@ -1,8 +1,6 @@
-"""Detection + conflict resolution + salted blocking join (J1, W1/W2)."""
+"""Detection + conflict resolution + join-path detection (J1, W1/W2)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from xlink_spark.operators import detect as DT
 
@@ -105,60 +103,6 @@ def test_join_path_detection_equals_broadcast_path(spark):
     # the double-space doc matched "new york city"'s pieces but NOT the
     # space-normalized bigram "deep learning" — on BOTH paths
     assert not any(s == "deep learning" and d == "d2" for d, _, _, s, _ in bcast)
-
-
-def test_bucketed_dictionary_detection_same_matches_no_dict_exchange(spark):
-    """Publish-once bucketed dictionary: detect_with_bucketed_dictionary
-    returns the same matches as detect_mentions_join over the raw dict, the
-    publish step dedups (so assume_deduped is sound), and the dict side of
-    the blocking join reads straight from its buckets — the ONLY Exchange
-    left in the plan is the probe (n-gram) side."""
-    from xlink_spark.sources.bucketed import (
-        detect_with_bucketed_dictionary,
-        write_bucketed_dictionary,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            ("d1", "we study deep learning and graph theory"),
-            ("d2", "new york city has deep learning labs"),
-            ("d3", "x marks the spot x"),
-        ],
-        "doc_id string, text string",
-    )
-    surfaces = ["deep learning", "learning", "graph", "new york", "york city", "x"]
-    # duplicates in the raw dict PLUS a payload column whose values differ
-    # across duplicate keys: publish must dedup on (mention, parse_from) —
-    # the key the assume_deduped join trusts — not on the full row
-    dict_df = spark.createDataFrame(
-        [(s, "ma", i) for i, s in enumerate(surfaces)]
-        + [(s, "ma", 99) for s in surfaces[:3]],
-        "mention string, parse_from string, freq int",
-    )
-    key = lambda df: sorted(
-        (r["doc_id"], r["start"], r["end"], r["surface"], r["parse_from"])
-        for r in df.collect()
-    )
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed_dictionary(dict_df, "t_bkt_dict", num_buckets=8)
-        assert spark.table("t_bkt_dict").count() == len(surfaces)  # publish dedups
-
-        got = detect_with_bucketed_dictionary(docs, "t_bkt_dict")
-        want = DT.detect_mentions_join(docs, dict_df)
-        assert key(got) == key(want) and got.count() > 0
-
-        # AQE's toString repeats the plan under "== Initial Plan ==" — count
-        # Exchanges only in the final section
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        final = plan.split("== Initial Plan ==")[0]
-        assert "Bucketed: true" in final, plan
-        assert final.count("Exchange hashpartitioning") == 1, plan  # probe side only
-        assert "BroadcastExchange" not in final, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("drop table if exists t_bkt_dict")
 
 
 def test_detect_resolve_matches_reference_spec_randomized(spark):

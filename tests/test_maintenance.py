@@ -1,4 +1,4 @@
-"""Lake maintenance pins: compaction, expiration, squash (plans/maintenance)."""
+"""Snapshot-trail maintenance pins: squash, crash recovery, retraction fold."""
 
 from __future__ import annotations
 
@@ -7,83 +7,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from xlink_spark.plans.maintenance import (
-    compact_iteration,
-    compact_table,
-    expire_iterations,
-    plan_file_count,
-)
 from xlink_spark.plans.snapshots import SnapshotStore
 
 
 def _vals(df):
     return sorted(r["v"] for r in df.collect())
-
-
-def test_plan_file_count_exact_ceil():
-    assert plan_file_count(0, 100) == 1
-    assert plan_file_count(100, 100) == 1
-    assert plan_file_count(101, 100) == 2
-    assert plan_file_count(1000, 1) == 1000
-
-
-def test_compact_table_preserves_rows_and_shrinks_files(spark, tmp_path):
-    store = SnapshotStore(str(tmp_path / "s"))
-    df = spark.range(1000).select(F.col("id").alias("v")).repartition(8)
-    store.commit_table("t", df, metrics={"origin": "test"})
-    before = store.manifest("t")
-    assert before["partitions"] == 8
-    expected = _vals(store.read_table(spark, "t"))
-
-    man = compact_table(store, spark, "t", target_rows_per_file=500)
-    assert man is not None and man["rows"] == 1000
-    assert man["partitions"] == 2
-    # provenance recorded, prior metrics carried
-    assert man["metrics"]["compacted_from_files"] == 8
-    assert man["metrics"]["origin"] == "test"
-    assert _vals(store.read_table(spark, "t")) == expected
-
-    # already at target: no rewrite
-    assert compact_table(store, spark, "t", target_rows_per_file=500) is None
-
-
-def test_compact_iteration(spark, tmp_path):
-    store = SnapshotStore(str(tmp_path / "s"))
-    store.commit("cc", 3, spark.range(100).select(F.col("id").alias("v")).repartition(10))
-    man = compact_iteration(store, spark, "cc", 3, target_rows_per_file=100)
-    assert man["partitions"] == 1 and man["rows"] == 100
-    assert store.iterations("cc") == [3]
-    assert compact_iteration(store, spark, "cc", 3, target_rows_per_file=100) is None
-
-
-def test_compact_table_catalog_backend(spark):
-    from xlink_spark.plans.snapshots import CatalogSnapshotStore
-
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(wh, ignore_errors=True)
-    store = CatalogSnapshotStore(spark, namespace="maint")
-    store.commit_table("t", spark.range(50).select(F.col("id").alias("v")))
-    expected = _vals(store.read_table(spark, "t"))
-    man = compact_table(store, spark, "t", target_rows_per_file=25)
-    # catalog manifests carry no file count -> compaction always rewrites
-    assert man is not None and man["rows"] == 50
-    assert _vals(store.read_table(spark, "t")) == expected
-
-
-def test_expire_iterations_last_wins(spark, tmp_path):
-    store = SnapshotStore(str(tmp_path / "s"))
-    for k in range(4):
-        store.commit("cc", k, spark.range(k + 1).select(F.col("id").alias("v")))
-    dropped = expire_iterations(store, "cc", keep_last=2)
-    assert dropped == [0, 1]
-    assert store.iterations("cc") == [2, 3]
-    # resume point intact
-    last = store.last_iteration("cc")
-    assert last[0] == 3 and last[1](spark).count() == 4
-    with pytest.raises(ValueError):
-        expire_iterations(store, "cc", keep_last=0)
 
 
 def test_squash_iterations_preserves_union(spark, tmp_path):

@@ -14,11 +14,7 @@ from pyspark.sql import functions as F
 from xlink_spark.config import DEFAULT
 from xlink_spark.eval.f1 import linking_prf, mention_prf
 from xlink_spark.operators.spans import plain_text, span_sequence_key
-from xlink_spark.plans.pipeline import (
-    build_dictionary,
-    link_and_cluster,
-    link_corpus,
-)
+from xlink_spark.plans.pipeline import build_dictionary, link_corpus
 from xlink_spark.plans.snapshots import SnapshotStore
 
 

@@ -35,13 +35,10 @@ def test_empty_context_conventions(spark):
     egm = spark.createDataFrame([("aa", "e1", 1.0)], "mention string, entity_id string, p double")
     emb = spark.createDataFrame([("e1", [1.0, 0.0])], "key string, vec array<double>")
     cands = SC.candidate_table(mentions, egm, emb)
-    seeds = spark.createDataFrame(
-        [], "doc_id string, start int, end int, seed_vec array<double>"
-    )
     doc_agg = spark.createDataFrame(
         [], "doc_id string, doc_sum array<double>, doc_seed_cnt long"
     )
-    scored_cands = SC.context_entity_vector(cands, seeds, doc_agg, entity_emb=emb)
+    scored_cands = SC.context_entity_vector(cands, doc_agg, entity_emb=emb)
     has_prob = scored_cands.collect()[0]
     assert has_prob["ctx_word_sim"] == 0.0
     assert has_prob["ctx_ent_sim"] == 1.0
@@ -119,9 +116,7 @@ def test_pool_exclusion_modes(spark):
     # has-prob semantics: pool = ALL seeds ⇒ [1,1] for both mentions
     got = {
         r["entity_id"]: r["ctx_ent_sim"]
-        for r in SC.context_entity_vector(
-            cands, seeds, doc_agg, entity_emb=emb, exclusion="none"
-        ).collect()
+        for r in SC.context_entity_vector(cands, doc_agg, entity_emb=emb).collect()
     }
     assert got["e1"] == pytest.approx(1 / math.sqrt(2))
     assert got["e2"] == pytest.approx(1 / math.sqrt(2))
@@ -130,7 +125,7 @@ def test_pool_exclusion_modes(spark):
     got = {
         r["entity_id"]: r["ctx_ent_sim"]
         for r in SC.context_entity_vector(
-            cands, seeds, doc_agg, entity_emb=emb, exclusion="candidate_overlap"
+            cands, doc_agg, entity_emb=emb, exclude_seeds=seeds
         ).collect()
     }
     assert got["e1"] == pytest.approx(0.0)
@@ -153,9 +148,7 @@ def test_candidate_overlap_spares_unseeded_mentions(spark):
         "mention string, entity_id string, p double",
     )
     seeds, doc_agg = SC.seed_pool(cands, emb)
-    out = SC.context_entity_vector(
-        cands, seeds, doc_agg, entity_emb=emb, exclusion="candidate_overlap"
-    )
+    out = SC.context_entity_vector(cands, doc_agg, entity_emb=emb, exclude_seeds=seeds)
     got = {(r["start"], r["entity_id"]): r["ctx_ent_sim"] for r in out.collect()}
     # m1 unseeded ⇒ pool = [1,0] (the e1 seed stays despite the overlap)
     assert got[(0, "e1")] == pytest.approx(1.0)
@@ -179,9 +172,9 @@ def test_scoring_plan_construction_runs_no_spark_job(spark):
     emb = _two_axis_emb(spark)
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup() or [])
-    seeds, doc_agg = SC.seed_pool_from_dictionary(mentions, egm, emb)
+    _, doc_agg = SC.seed_pool_from_dictionary(mentions, egm, emb)
     cands = SC.context_entity_vector(
-        SC.candidate_table(mentions, egm, emb), seeds, doc_agg, entity_emb=emb
+        SC.candidate_table(mentions, egm, emb), doc_agg, entity_emb=emb
     )
     assert set(tracker.getJobIdsForGroup() or []) - before == set()
     got = {

@@ -1,10 +1,10 @@
-"""Pins for the data-driven skew salting (operators/skew)."""
+"""Pins for the data-driven skew plans (operators/skew)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from xlink_spark.operators.skew import apply_salt_plan, join_salt_plan
+from xlink_spark.operators.skew import join_salt_plan
 
 
 def _probe(spark):
@@ -36,50 +36,6 @@ def test_join_salt_plan_exact_ceil(spark):
     assert got["hot"]["n_probe"] == 6 and got["hot"]["n_build"] == 5
     assert got["hot"]["est_rows"] == 30 and got["hot"]["salt_factor"] == 8
     assert got["warm"]["est_rows"] == 6 and got["warm"]["salt_factor"] == 2
-
-
-def test_apply_salt_plan_equals_plain_join(spark):
-    probe, build = _probe(spark), _build(spark)
-    plan = join_salt_plan(probe, build, "key", target_rows_per_task=4)
-    plain = probe.join(build, "key", "inner")
-    salted = apply_salt_plan(probe, build, plan, "key", probe_entropy=("doc_id",))
-    cols = ["key", "doc_id", "entity"]
-    assert sorted(map(tuple, plain.select(*cols).collect())) == sorted(
-        map(tuple, salted.select(*cols).collect())
-    )
-    # empty plan (nothing hot) degrades to the plain join too
-    empty = plan.filter(F.lit(False))
-    salted0 = apply_salt_plan(probe, build, empty, "key", probe_entropy=("doc_id",))
-    assert sorted(map(tuple, plain.select(*cols).collect())) == sorted(
-        map(tuple, salted0.select(*cols).collect())
-    )
-
-
-def test_salted_build_replication_matches_plan(spark):
-    """Build side replicates each planned key exactly salt_factor times and
-    probe rows of a planned key spread across its buckets."""
-    probe, build = _probe(spark), _build(spark)
-    plan = join_salt_plan(probe, build, "key", target_rows_per_task=4)
-    factors = {r["key"]: r["salt_factor"] for r in plan.collect()}
-
-    b = build.join(F.broadcast(plan.select("key", "salt_factor")), "key", "left")
-    b = b.withColumn(
-        "_salt",
-        F.explode(
-            F.sequence(F.lit(0), F.coalesce(F.col("salt_factor"), F.lit(1)) - 1)
-        ),
-    )
-    counts = {
-        (r["key"], r["entity"]): r["n"]
-        for r in b.groupBy("key", "entity").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    for (key, _), n in counts.items():
-        assert n == factors.get(key, 1)
-
-    # probe scatter is deterministic: same entropy ⇒ same bucket on rerun
-    salted1 = apply_salt_plan(probe, build, plan, "key").collect()
-    salted2 = apply_salt_plan(probe, build, plan, "key").collect()
-    assert sorted(map(tuple, salted1)) == sorted(map(tuple, salted2))
 
 
 def _blocked(spark):
@@ -186,22 +142,3 @@ def test_block_split_rejects_bad_target(spark):
 
     with pytest.raises(ValueError):
         block_split_plan(_blocked(spark), max_pairs_per_task=0).collect()
-
-
-def test_salt_plan_pinned_partitions_identical_output(spark):
-    """num_partitions pins the salted exchange against AQE input-size
-    coalescing (the BlockSplit lesson); output stays row-identical to
-    the plain join."""
-    probe, build = _probe(spark), _build(spark)
-    plan = join_salt_plan(probe, build, "key", target_rows_per_task=4)
-    plain = sorted(
-        map(tuple, probe.join(build, "key").select(
-            "key", "doc_id", "entity").collect())
-    )
-    pinned = sorted(
-        map(tuple, apply_salt_plan(
-            probe, build, plan, "key",
-            probe_entropy=("doc_id",), num_partitions=16,
-        ).select("key", "doc_id", "entity").collect())
-    )
-    assert pinned == plain

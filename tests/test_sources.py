@@ -6,7 +6,6 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from xlink_spark.sources import corpus as CS
 from xlink_spark.sources import embeddings as EM
@@ -287,48 +286,3 @@ def test_aida_conll_blank_line_after_docstart_offsets(spark, tmp_path):
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
     for r in gold.collect():
         assert texts[r["doc_id"]][r["start"]:r["end"]] == r["mention"], r
-
-
-def test_bucketed_join_is_shuffle_free_and_one_file_per_bucket(spark):
-    """Same-bucketed sides merge-join with ZERO Exchange (the recurring
-    per-batch KB shuffle this module exists to delete), and the write lays
-    down exactly one file per bucket (no N-partitions x B-buckets small-file
-    explosion)."""
-    import glob
-    import os
-
-    from xlink_spark.sources.bucketed import bucketed_join, read_bucketed, write_bucketed
-
-    kb = spark.createDataFrame(
-        [(f"surf{i % 50}", i, f"ent{i}") for i in range(500)],
-        "surface_norm string, freq int, entity_id string",
-    )
-    mentions = spark.createDataFrame(
-        [(f"surf{i % 50}", f"doc{i}") for i in range(1000)],
-        "surface_norm string, doc_id string",
-    )
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(kb, "t_bkt_kb", "surface_norm", num_buckets=8)
-        write_bucketed(mentions, "t_bkt_mentions", "surface_norm", num_buckets=8)
-
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        files = glob.glob(os.path.join(wh, "t_bkt_kb", "*.parquet"))
-        assert len(files) == 8  # one_file_per_bucket
-
-        j = bucketed_join(spark, "t_bkt_mentions", "t_bkt_kb", "surface_norm")
-        assert j.count() == 50 * 20 * 10  # 50 surfaces x 20 mentions x 10 kb rows
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange hashpartitioning") == 0, plan
-        assert plan.count("BroadcastExchange") == 0, plan
-        assert "SortMergeJoin" in plan
-        assert "Bucketed: true" in plan
-
-        # overwrite semantics: a refreshed KB replaces the table in place
-        write_bucketed(kb.limit(100), "t_bkt_kb", "surface_norm", num_buckets=8)
-        assert read_bucketed(spark, "t_bkt_kb").count() == 100
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        for t in ("t_bkt_kb", "t_bkt_mentions"):
-            spark.sql(f"drop table if exists {t}")

@@ -8,7 +8,8 @@ parquet/Iceberg lake of interleaved text+media documents.
 Design stance (SURVEY.md §7.0):
   * pyspark.sql DataFrames everywhere; no RDDs, no per-row Python.
   * Python surface restricted to vectorized pandas/Arrow UDFs.
-  * Broadcast dictionaries for mention detection; salting + AQE for skew.
+  * Broadcast dictionaries for mention detection; AQE skew-join splitting
+    and BlockSplit for skew.
   * Iterative large-star/small-star connected components for clustering.
   * Snapshot-directory checkpointing with a manifest for resumability.
 """

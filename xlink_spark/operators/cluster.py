@@ -22,8 +22,6 @@ Node ids are 64-bit longs; string keys are mapped through ``ids_for`` (hash
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

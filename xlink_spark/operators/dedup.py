@@ -481,9 +481,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     literal_centroid_max: int | None = None,
-    hier: bool = False,
-    n_coarse: int | None = None,
-    nprobe_coarse: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style pruning (Abbas et al. '23): per-cluster cosine dedup.
 
@@ -507,26 +504,14 @@ def semantic_dedup(
     from xlink_spark.operators.similarity import (
         LITERAL_CENTROID_MAX,
         assign_probe_clusters,
-        assign_probe_clusters_hier,
     )
 
     if literal_centroid_max is None:
         literal_centroid_max = LITERAL_CENTROID_MAX
-    if hier:
-        # EXPLICIT opt-in two-level assignment for 10⁴-10⁵-centroid
-        # quantizers on CLUSTERED embedding spaces — gauge with
-        # similarity.hier_agreement_rate first (partial coarse probing is
-        # approximate on unstructured data).
-        assigned = assign_probe_clusters_hier(
-            emb, centroids, nprobe=1, n_coarse=n_coarse,
-            nprobe_coarse=nprobe_coarse, id_col=id_col, vec_col=vec_col,
-        )
-    else:
-        assigned = assign_probe_clusters(
-            emb, centroids, nprobe=1, id_col=id_col, vec_col=vec_col,
-            literal_centroid_max=literal_centroid_max,
-        )
-    assigned = assigned.select(
+    assigned = assign_probe_clusters(
+        emb, centroids, nprobe=1, id_col=id_col, vec_col=vec_col,
+        literal_centroid_max=literal_centroid_max,
+    ).select(
         F.col(id_col),
         F.col(vec_col),
         F.element_at("_probes", 1).alias("cluster"),

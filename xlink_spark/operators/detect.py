@@ -16,13 +16,12 @@ Spark-first redesign:
   ``max(end)`` marks transitive-overlap group boundaries, then one
   ``row_number`` per group picks the winner (weight desc, length desc,
   start asc). No UDF, no heap — the reference's k-way heap merge
-  (MentionParser.py:141-210) is an artifact of streaming.
+  (MentionParser.py:141-210) is an artifact of its one-pass parse.
 * ``detect_mentions_join`` — the big-dictionary path: when the dictionary
   exceeds broadcast limits, the n-gram spans equi-join the dictionary as a
   table. The candidate explosion that follows (scoring.candidate_table)
   then shuffles on the surface key, and AQE's skew-join splitting
-  (session.py) breaks up Zipf-head ("china"-like) surfaces; a
-  data-planned salted join is skew.apply_salt_plan.
+  (session.py) breaks up Zipf-head ("china"-like) surfaces.
 """
 
 from __future__ import annotations
@@ -35,7 +34,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -102,7 +100,6 @@ def detect_mentions(
     docs_plain: DataFrame,
     surface_dict: dict[str, tuple[int, str]],
     max_words: int = 4,
-    passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """Scan plain text for dictionary surfaces; emit candidate mentions.
 
@@ -115,10 +112,6 @@ def detect_mentions(
     mixed ma+tt dictionary: a short 'ma' surface must be able to beat a
     longer same-start 'tt' surface, which a longest-per-start scanner would
     silently suppress.
-
-    ``passthrough`` columns are copied onto every emitted mention row —
-    used by the streaming path to carry event time without a stream-stream
-    join.
     """
     spark = docs_plain.sparkSession
     # first-token index, built ONCE here and shipped with the dict — a
@@ -135,20 +128,13 @@ def detect_mentions(
             first_max[ft] = nw_
     bc = spark.sparkContext.broadcast((surface_dict, first_max))
     limit = max(max_words, max((nw for nw, _ in surface_dict.values()), default=1))
-    pt = list(passthrough)
-    in_fields = {f.name: f for f in docs_plain.schema.fields}
-    out_schema = StructType(
-        list(_DETECTED.fields) + [in_fields[c] for c in pt]
-    )
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sd, first_max = bc.value
-        cols = ["doc_id", "start", "end", "surface", "parse_from", *pt]
+        cols = ["doc_id", "start", "end", "surface", "parse_from"]
         for pdf in batches:
             out: list[tuple] = []
-            extra_iters = [pdf[c] for c in pt]
-            for row in zip(pdf["doc_id"], pdf["text"], *extra_iters):
-                doc_id, text, extras = row[0], row[1], row[2:]
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 if not text:
                     continue
                 toks = [(m.start(), m.end()) for m in _TOKEN_RE.finditer(text)]
@@ -168,7 +154,7 @@ def detect_mentions(
                         s, e = toks[i][0], toks[i + w - 1][1]
                         cand = low[s:e] if aligned else text[s:e].lower()
                         if cand in sd:
-                            out.append((doc_id, s, e, cand, sd[cand][1], *extras))
+                            out.append((doc_id, s, e, cand, sd[cand][1]))
                     # always advance one token: matches beginning INSIDE an
                     # earlier match must still be emitted ("new york" +
                     # "york city" both reach resolve_conflicts, which picks
@@ -176,7 +162,7 @@ def detect_mentions(
                     i += 1
             yield pd.DataFrame(out, columns=cols)
 
-    return docs_plain.select("doc_id", "text", *pt).mapInPandas(scan, out_schema)
+    return docs_plain.select("doc_id", "text").mapInPandas(scan, _DETECTED)
 
 
 _NGRAM = StructType(
@@ -260,7 +246,6 @@ def detect_mentions_join(
     dictionary: DataFrame,
     max_words: int | None = None,
     first_token_max_rows: int = 5_000_000,
-    assume_deduped: bool = False,
 ) -> DataFrame:
     """Join-path detection for dictionaries too large to broadcast.
 
@@ -282,13 +267,7 @@ def detect_mentions_join(
     # is still correct, just with max_words x more generated rows
     first_tokens = first_token_set(dictionary, "mention", first_token_max_rows)
     grams = ngram_spans(docs_plain, max_words=max_words, first_tokens=first_tokens)
-    # assume_deduped: a PUBLISHED dictionary snapshot (e.g. the bucketed
-    # layout sources/bucketed.write_bucketed_dictionary lays down) is
-    # already distinct — the defensive .distinct() here would re-shuffle it
-    # on (surface, parse_from) and throw the bucket co-location away
-    d = dictionary.select(F.col("mention").alias("surface"), "parse_from")
-    if not assume_deduped:
-        d = d.distinct()
+    d = dictionary.select(F.col("mention").alias("surface"), "parse_from").distinct()
     return grams.join(d, "surface", "inner").select(
         "doc_id", "start", "end", "surface", "parse_from"
     )

@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xlink_spark.functions.text import strip_punct, tokens_lower
-from xlink_spark.operators.spans import plain_text
 
 
 def entity_abstract_embedding(

@@ -3191,7 +3191,7 @@ def edit_distance_join(
 
     The candidate join is EXPLICITLY repartitioned to ``num_partitions``
     (default: the session's shuffle partitions) — the
-    BlockSplit/apply_salt_plan lesson: the prefix rows are a few MB, so
+    BlockSplit lesson (skew.block_split_pairs): the prefix rows are a few MB, so
     AQE's input-size coalescing would merge the exchange to ONE task,
     blind to the join's output explosion and to the per-candidate
     levenshtein verification that pipelines behind it in the SAME stage

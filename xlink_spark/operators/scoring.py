@@ -340,22 +340,21 @@ def doc_agg_from_seeds(seeds: DataFrame) -> DataFrame:
 
 def context_entity_vector(
     candidates: DataFrame,
-    seeds: DataFrame,
     doc_agg: DataFrame,
     entity_emb: DataFrame,
-    exclusion: str = "none",
+    exclude_seeds: DataFrame | None = None,
 ) -> DataFrame:
     """A8 + U3: per-candidate context-entity similarity.
 
-    ``exclusion`` selects the reference pass's pool semantics:
+    ``exclude_seeds`` selects the reference pass's pool semantics:
 
-    * ``"none"`` — has-prob pass (xlink.py:157-161): the pool is ALL
+    * ``None`` — has-prob pass (xlink.py:157-161): the pool is ALL
       unambiguous seeds of the doc, INCLUDING the mention's own seed
       (the reference applies no exclusion there).
-    * ``"candidate_overlap"`` — no-prob pass (xlink.py:241-254): a SEEDED
-      mention's pool drops every seed whose entity_id matches any of the
-      mention's candidates; unseeded mentions keep the full pool. Requires
-      ``seeds`` to carry a ``seed_eid`` column.
+    * a seed frame (MENTION_KEY, ``seed_eid``, ``seed_vec``) — no-prob pass
+      (xlink.py:241-254): a SEEDED mention's pool drops every seed whose
+      entity_id matches any of the mention's candidates; unseeded mentions
+      keep the full pool.
 
     The pool vector is materialized per MENTION (not per candidate) and
     joined to the exploded candidates last — at 10^12 docs the wide columns
@@ -367,7 +366,7 @@ def context_entity_vector(
     pool scores 1 on BOTH passes — the reference's shared
     cal_candidate_context_entities_sim (xlink.py:329-334).
     """
-    if exclusion == "none":
+    if exclude_seeds is None:
         # the pool is a PER-DOC quantity here (no per-mention exclusion):
         # skip the mention-grain distinct + mention-keyed join entirely and
         # attach the doc pool by doc_id — doc_agg is orders of magnitude
@@ -380,9 +379,10 @@ def context_entity_vector(
         pool_key = list(MENTION_KEY)
         mention_keys = candidates.select(*MENTION_KEY).distinct()
         mp = mention_keys.join(doc_agg, "doc_id", "left")
-    if exclusion == "candidate_overlap":
-        seeded = seeds.select(*MENTION_KEY).distinct().withColumn("_seeded", F.lit(1))
-        doc_seeds = seeds.select(
+        seeded = (
+            exclude_seeds.select(*MENTION_KEY).distinct().withColumn("_seeded", F.lit(1))
+        )
+        doc_seeds = exclude_seeds.select(
             "doc_id", F.col("seed_eid").alias("entity_id"), "seed_vec"
         )
         # per-mention sum of doc seeds sharing an entity with ANY of the
@@ -418,8 +418,6 @@ def context_entity_vector(
             .withColumn("_ex_vec", F.when(F.col("_seeded") == 1, F.col("_ex_all")))
             .drop("_seeded", "_ex_all", "_exn")
         )
-    elif exclusion != "none":  # pragma: no cover - guard typos at call sites
-        raise ValueError(f"unknown exclusion mode: {exclusion!r}")
     zero = F.transform(F.col("doc_sum"), lambda x: x * 0)
     pool_cnt = F.coalesce(F.col("doc_seed_cnt"), F.lit(0)) - F.col("_ex_cnt")
     pool_raw = F.when(

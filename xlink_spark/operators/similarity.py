@@ -282,192 +282,6 @@ def assign_probe_clusters(
     return pre.join(probes, id_col)
 
 
-def coarse_cells(
-    centroids: list[tuple[int, list[float]]], n_cells: int
-) -> tuple[list[tuple[int, list[float]]], dict[int, int]]:
-    """Deterministic driver-side coarse layer over a flat quantizer.
-
-    Coarse cells are every ⌈C/M⌉-th centroid in id order (a frozen,
-    data-derived subsample — no RNG, no training pass); every centroid is
-    assigned to its nearest coarse cell by full d² with ties to the smaller
-    cell id. Pure numpy over a C×M matrix — the quantizer is a tiny
-    artifact, this never touches the cluster.
-
-    Returns (coarse_centroids, cell_of_centroid).
-    """
-    import numpy as np
-
-    srt = sorted(centroids)
-    CC = np.asarray([v for _, v in srt], dtype=np.float64)
-    # Lloyd iterations over the CENTROIDS (driver-side, C×M matrix math):
-    # an every-k-th subsample seed alone leaves heavily skewed cells in high
-    # dimension (measured: no fanout win at all) — a few balancing sweeps
-    # are what make cell sizes ~C/M so probing npc cells prunes real work
-    step = max(1, (len(srt) + n_cells - 1) // n_cells)
-    CM = CC[::step].copy()
-    cc2 = (CC * CC).sum(1)[:, None]
-    assign = None
-    for _ in range(10):
-        d2 = cc2 - 2.0 * CC @ CM.T + (CM * CM).sum(1)[None, :]
-        new_assign = d2.argmin(1)
-        if assign is not None and (new_assign == assign).all():
-            break
-        assign = new_assign
-        for m in range(CM.shape[0]):
-            members = CC[assign == m]
-            if len(members):
-                CM[m] = members.mean(0)
-    # final assignment with the exact d² + smaller-id tie-break
-    d2 = cc2 - 2.0 * CC @ CM.T + (CM * CM).sum(1)[None, :]
-    cell_of = {cid: int(d2[row].argmin()) for row, (cid, _) in enumerate(srt)}
-    # INVARIANT: every returned cell has ≥1 member centroid. Lloyd can leave
-    # cells empty (duplicate-heavy quantizers; ties all resolve to the
-    # smallest cell id) — an empty cell that ranks among a vector's
-    # nprobe_coarse nearest would contribute zero candidate rows, and a
-    # vector whose probed cells are ALL empty would vanish through the final
-    # inner join (row loss, not approximation). Dropping empty cells and
-    # reindexing (order-preserving, so the smaller-id tie-break is stable)
-    # guarantees every probed cell yields candidates, hence every vector
-    # survives — pinned by test_coarse_cells_never_empty.
-    used = sorted(set(cell_of.values()))
-    if len(used) < CM.shape[0]:
-        remap = {old: new for new, old in enumerate(used)}
-        CM = CM[used]
-        cell_of = {cid: remap[c] for cid, c in cell_of.items()}
-    coarse = [(i, CM[i].tolist()) for i in range(CM.shape[0])]
-    return coarse, cell_of
-
-
-def assign_probe_clusters_hier(
-    emb: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    nprobe: int,
-    n_coarse: int | None = None,
-    nprobe_coarse: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-level quantizer assignment for the 10⁴–10⁵-centroid regime —
-    OPT-IN, for CLUSTERED embedding spaces only.
-
-    The flat join path scores every vector against ALL C centroids — linear
-    in C (measured: 2.3s/3.8s/15s at C=1024/4096/16384 on the bench table).
-    This prunes with a coarse layer: ``n_coarse`` (default ≈ √C, ≤ 64)
-    coarse cells — balanced by driver-side Lloyd sweeps over the centroid
-    matrix — are ranked first as a scan-speed literal expression, then only
-    the centroids of the ``nprobe_coarse`` nearest cells are scored: the
-    per-vector fanout drops from C to ~nprobe_coarse·C/M.
-
-    APPROXIMATE by design (standard IVF practice): the true nearest
-    centroid can live in an unprobed cell. ``nprobe_coarse = n_coarse``
-    reproduces the flat assignment EXACTLY (every centroid scored, same d²
-    arithmetic, same tie-break — pinned by test); recall under partial
-    probing depends entirely on CLUSTER STRUCTURE in the data. Measured
-    honestly on this repo's synthetic Gaussian test vectors — which have NO
-    structure to exploit — default partial probing agrees with flat top-1
-    only ~0.35–0.40 of the time and saves wall-clock only at C ≥ 16384
-    (10.0s vs 13.9s); that is the expected textbook behavior, not a defect,
-    and it is why ``ivf_topk``/``semantic_dedup`` do NOT route through this
-    path automatically. On CLUSTERED embeddings — the SemDeDup production
-    setting, where coarse cells capture real neighborhoods — partial
-    probing is near-exact (pinned: 1.0 top-1 agreement on separated blobs
-    probing 2 of 8 cells). Output schema matches
-    ``assign_probe_clusters``: (id, vec, _sd, _probes).
-    """
-    import math
-
-    C = len(centroids)
-    M = n_coarse if n_coarse is not None else min(64, max(2, int(math.isqrt(C))))
-    npc = nprobe_coarse if nprobe_coarse is not None else max(1, M // 8)
-    coarse, cell_of = coarse_cells(centroids, M)
-    spark = emb.sparkSession
-
-    pre = emb.select(
-        F.col(id_col), F.col(vec_col), dot(vec_col, vec_col).alias("_sd")
-    )
-    par = spark.sparkContext.defaultParallelism
-    if pre.rdd.getNumPartitions() < par:
-        pre = pre.repartition(par, id_col)
-    # stage 1: coarse ranking — literal expression, zero shuffle
-    pre = pre.withColumn(
-        "_cells",
-        centroid_probe_clusters(
-            F.col(vec_col), coarse, min(npc, len(coarse)), selfdot=F.col("_sd")
-        ),
-    )
-    # stage 2: score ONLY the centroids of the probed cells (broadcast
-    # equi-join on cell — fanout ≈ npc·C/M per vector, not C), then the
-    # same narrow-rows window ranking as the flat join path
-    rows = []
-    for cid, cvec in centroids:
-        cc = 0.0  # Python left fold == the JVM's sequential fold
-        for x in cvec:
-            cc += float(x) * float(x)
-        rows.append((int(cid), [float(x) for x in cvec], cc, cell_of[int(cid)]))
-    cents = spark.createDataFrame(
-        rows, "cluster int, cvec array<double>, cc double, cell int"
-    )
-    d2 = F.col("_sd") - 2 * dot(vec_col, F.col("cvec")) + F.col("cc")
-    narrow = (
-        pre.select(id_col, vec_col, "_sd", F.explode("_cells").alias("cell"))
-        .join(F.broadcast(cents), "cell")
-        .select(F.col(id_col), F.col("cluster"), d2.alias("_d2"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("_d2").asc(), F.col("cluster").asc())
-    probes = (
-        narrow.withColumn("_pr", F.row_number().over(w))
-        .filter(F.col("_pr") <= nprobe)
-        .groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(F.struct("_pr", "cluster"))).alias("_ps"))
-        .select(id_col, F.transform("_ps", lambda s: s["cluster"]).alias("_probes"))
-    )
-    return pre.drop("_cells").join(probes, id_col)
-
-
-def hier_agreement_rate(
-    emb: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    nprobe: int = 1,
-    n_coarse: int | None = None,
-    nprobe_coarse: int | None = None,
-    sample_rows: int = 2000,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> float:
-    """Sampled flat-vs-hier agreement probe: the go/no-go gauge for ``hier``.
-
-    Runs both quantizer assignments on a bounded sample and returns the
-    fraction of vectors whose NEAREST probe cluster (element 1 of _probes)
-    agrees. Near 1.0 → the embedding space is clustered enough for partial
-    coarse probing (turn ``hier=True`` on in ivf_topk/semantic_dedup);
-    ~1/n_coarse-ish → unstructured space, stay on the flat path. The sample
-    is deterministic (seed) and bounded, so the probe costs two small
-    assignment jobs regardless of corpus size — run it once per quantizer,
-    not per query.
-    """
-    n = emb.count()
-    frac = min(1.0, sample_rows / n) if n > sample_rows else 1.0
-    s = emb if frac >= 1.0 else emb.sample(frac, seed=seed)
-    s = s.select(id_col, vec_col)
-    flat = assign_probe_clusters(emb=s, centroids=centroids, nprobe=nprobe,
-                                 id_col=id_col, vec_col=vec_col)
-    hier = assign_probe_clusters_hier(
-        emb=s, centroids=centroids, nprobe=nprobe, n_coarse=n_coarse,
-        nprobe_coarse=nprobe_coarse, id_col=id_col, vec_col=vec_col,
-    )
-    agree = (
-        flat.select(id_col, F.element_at("_probes", 1).alias("_f"))
-        .join(hier.select(id_col, F.element_at("_probes", 1).alias("_h")), id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("_f") == F.col("_h"), 1).otherwise(0)).alias("same"),
-        )
-        .first()
-    )
-    return float(agree["same"] / agree["n"]) if agree and agree["n"] else 0.0
-
-
 def quantizer_training_frame(
     emb: DataFrame,
     vec_col: str = "embedding",
@@ -512,9 +326,6 @@ def ivf_topk(
     centroids: list[tuple[int, list[float]]] | None = None,
     literal_centroid_max: int = LITERAL_CENTROID_MAX,
     train_row_cap: int | None = None,
-    hier: bool = False,
-    n_coarse: int | None = None,
-    nprobe_coarse: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: coarse quantizer + in-cluster search.
 
@@ -547,20 +358,10 @@ def ivf_topk(
         ]
     # one self-fold per vector serves BOTH the probe ranking (v·v term of
     # d²) and the unit normalization (‖v‖ = √(v·v), same fold, same value)
-    if hier:
-        # EXPLICIT opt-in for the 10⁴-10⁵-centroid regime on CLUSTERED
-        # embedding spaces: partial coarse probing is approximate on
-        # unstructured data (see assign_probe_clusters_hier) — measure with
-        # hier_agreement_rate before turning this on.
-        pre = assign_probe_clusters_hier(
-            emb, centroids, nprobe, n_coarse=n_coarse,
-            nprobe_coarse=nprobe_coarse, id_col=id_col, vec_col=vec_col,
-        )
-    else:
-        pre = assign_probe_clusters(
-            emb, centroids, nprobe, id_col, vec_col,
-            literal_centroid_max=literal_centroid_max,
-        )
+    pre = assign_probe_clusters(
+        emb, centroids, nprobe, id_col, vec_col,
+        literal_centroid_max=literal_centroid_max,
+    )
     nrm = F.sqrt(F.col("_sd"))
     unit = F.when(nrm > 0, F.transform(F.col(vec_col), lambda x: x.cast("double") / nrm))
     base = pre.select(F.col(id_col), "_probes", unit.alias("_u"))

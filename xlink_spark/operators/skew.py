@@ -1,26 +1,18 @@
-"""Data-driven skew handling for the blocking join.
+"""Data-driven skew planning for joins and blocking.
 
-The north rule calls for salting hot blocking keys explicitly. A FIXED
-replication factor over a hand-picked hot-key list does not scale: at
-10^12 documents the hot set and the right replication factor per key are
-data, not configuration — a country-name anchor may need 500 salt buckets
-while a merely-warm surface needs 3. This module derives the plan from
-observed counts and applies it:
+A FIXED replication factor over a hand-picked hot-key list does not scale:
+at 10^12 documents the hot set and the right split per key are data, not
+configuration — a country-name anchor may need 500 salt buckets while a
+merely-warm surface needs 3. This module derives such plans from observed
+counts:
 
 * ``join_salt_plan`` — per-key estimated join output = n_probe · n_build
   (the actual cost a reducer pays for that key, not either side's count
   alone); keys whose estimate exceeds ``target_rows_per_task`` get
   ``salt_factor = ceil(est / target)``. Two map-side-combinable counts and
-  one narrow (key, count) join — never touches the wide rows.
-* ``apply_salt_plan`` — a variable-factor salted join: probe rows of a
-  planned key scatter to ``pmod(hash(entropy), salt_factor)``; the build
-  side replicates that key
-  ``salt_factor`` times. Unplanned keys keep salt 0 with no replication.
-  Output is row-identical to the plain join (pinned by test); no reducer
-  owns more than ~target rows of any key.
-
-The plan frame is small by construction (only keys above the threshold —
-at web scale, the Zipf head), so it broadcasts.
+  one narrow (key, count) join — never touches the wide rows. The plan is
+  a report (the ``skew_salt_plan`` query): the linking joins themselves rely on
+  AQE's skew-join splitting (session.py), which needs no plan.
 
 The second half of the module load-balances the COMPARISON space of
 key-equality blocking (pair generation within blocks, the quadratic
@@ -37,8 +29,6 @@ document at a time in Python.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -79,67 +69,6 @@ def join_salt_plan(
         )
         .filter(F.col("salt_factor") >= 2)
     )
-
-
-def apply_salt_plan(
-    probe: DataFrame,
-    build: DataFrame,
-    plan: DataFrame,
-    key_col: str = "key",
-    probe_entropy: Sequence[str] = ("doc_id",),
-    *,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Inner-join probe ⋈ build on ``key_col`` with per-key variable salting.
-
-    ``plan`` is ``join_salt_plan`` output (or any (key, salt_factor ≥ 2)
-    frame). Probe rows of a planned key scatter across its salt buckets by
-    ``pmod(hash(*probe_entropy), salt_factor)`` — deterministic, layout-
-    independent; the build side replicates planned keys ``salt_factor``
-    ways via a sequence explode. The join then includes the salt column, so
-    a hot key's work spreads over salt_factor reducers while output equals
-    the unsalted join exactly.
-
-    ``num_partitions`` (opt-in) explicitly repartitions both sides on
-    (key, salt) before the join. Set it whenever the join INPUT is small
-    enough for AQE's input-size coalescing to merge the salted exchange
-    back down (the BlockSplit lesson in this module: AQE is blind to a
-    join's output explosion, and a coalesced salted join is slower than
-    no salting). Leave it None at true probe×build scale — TB-sized
-    inputs keep their partitions, and when the build side is broadcast-
-    small you should not be salting at all (the broadcast join is
-    already skew-immune).
-    """
-    factors = F.broadcast(
-        plan.select(F.col(key_col), F.col("salt_factor").cast("int"))
-    )
-    p = (
-        probe.join(factors, key_col, "left")
-        .withColumn(
-            "_salt",
-            F.when(
-                F.col("salt_factor").isNotNull(),
-                F.pmod(F.hash(*probe_entropy), F.col("salt_factor")),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("salt_factor")
-    )
-    b = (
-        build.join(factors, key_col, "left")
-        .withColumn(
-            "_salt",
-            F.explode(
-                F.sequence(
-                    F.lit(0), F.coalesce(F.col("salt_factor"), F.lit(1)) - 1
-                )
-            ),
-        )
-        .drop("salt_factor")
-    )
-    if num_partitions is not None:
-        p = p.repartition(int(num_partitions), key_col, "_salt")
-        b = b.repartition(int(num_partitions), key_col, "_salt")
-    return p.join(b, [key_col, "_salt"], "inner").drop("_salt")
 
 
 def _chunk_width(max_pairs_per_task: int) -> int:

@@ -12,9 +12,8 @@ incremental path on top of the snapshot store:
   committed).
 
 Dictionary refresh stays a periodic batch job (build_dictionary over the
-full corpus or streaming.running_anchor_totals feeding deltas) — the
-standard lambda split: cheap incremental links now, exact stats refresh on
-a cadence.
+full corpus) — cheap incremental links now, exact stats refresh on a
+cadence.
 """
 
 from __future__ import annotations
@@ -61,21 +60,18 @@ def link_increment(
     word_emb: DataFrame,
     entity_emb: DataFrame,
     cfg: EngineConfig = DEFAULT,
-    dictionary=None,
 ) -> DataFrame:
     """Link one new-document batch against the frozen dictionary.
 
     Idempotent per batch_id: an already-committed batch is returned from its
-    snapshot without recomputation (safe to re-run after a crash).
-    ``dictionary``: pass a preloaded Dictionary to skip the per-call
-    snapshot reads (streaming loads it once for the whole query). The
+    snapshot without recomputation (safe to re-run after a crash). The
     linking plan's cached and checkpointed frames are freed after the
     commit — repeated batches must not accumulate cached blocks.
     """
     spark = new_docs_plain.sparkSession
     if batch_id in store.iterations("links"):
         return store.read_iteration(spark, "links", batch_id)
-    d = dictionary if dictionary is not None else load_dictionary(spark, store)
+    d = load_dictionary(spark, store)
     # the scope also closes on a failed commit: it must not leak cached
     # blocks into the retry
     with scope():

@@ -123,15 +123,13 @@ def link_has_prob(
     # seeds derive from the dictionary + mentions at SURFACE grain — the
     # exploded candidate table is consumed exactly once (a linear chain, no
     # 20x-exploded persist)
-    seeds, doc_agg = SC.seed_pool_from_dictionary(
+    _, doc_agg = SC.seed_pool_from_dictionary(
         mentions, e_given_m, entity_emb, broadcast_dict=broadcast_dict
     )
     cands = SC.candidate_table(ctx, e_given_m, entity_emb, broadcast_dict=broadcast_dict)
     # has-prob pool: ALL unambiguous seeds, own seed included; empty ⇒ 1
     # (xlink.py:157-161, 329-334)
-    cands = SC.context_entity_vector(
-        cands, seeds, doc_agg, entity_emb=entity_emb, exclusion="none"
-    )
+    cands = SC.context_entity_vector(cands, doc_agg, entity_emb=entity_emb)
     return SC.score_has_prob(cands, link_prob, pcfg, entity_prior=entity_prior)
 
 
@@ -212,8 +210,8 @@ def link_corpus(
     # (xlink.py:241-254); empty pool ⇒ 1, SAME as the has-prob pass — the
     # shared cal_candidate_context_entities_sim (xlink.py:329-334)
     tt_cands = SC.context_entity_vector(
-        tt_cands, tt_seeds, SC.doc_agg_from_seeds(tt_seeds), entity_emb=entity_emb,
-        exclusion="candidate_overlap",
+        tt_cands, SC.doc_agg_from_seeds(tt_seeds), entity_emb=entity_emb,
+        exclude_seeds=tt_seeds,
     )
     return SC.merge_results(
         prob_links, SC.score_no_prob(tt_cands, pcfg),

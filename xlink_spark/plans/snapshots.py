@@ -8,9 +8,10 @@ manifest exists, so a killed writer can never leave a half-snapshot that
 reads as committed. Resume = read the newest valid snapshot.
 
 This is the same commit protocol Iceberg gives via metadata pointers; the
-algorithms only assume atomic snapshot dirs + a manifest (SURVEY §7.0), so
-tests run on plain local parquet and production swaps in an Iceberg catalog
-(`df.writeTo(...).createOrReplace()`) without touching operator code.
+algorithms only assume atomic snapshot dirs + a manifest (SURVEY §7.0).
+Compaction and snapshot expiry are left to the table format: the only
+trail maintenance here is `squash_iterations`, which
+plans/incremental.fold_retractions builds on.
 """
 
 from __future__ import annotations
@@ -185,11 +186,6 @@ class SnapshotStore:
         path = self.iteration_data_path(stage, k)
         return k, lambda spark: spark.read.parquet(path)
 
-    def drop_iteration(self, stage: str, iteration: int) -> None:
-        """Remove one committed iteration (maintenance; see
-        plans/maintenance.expire_iterations for the semantics guard)."""
-        shutil.rmtree(self._dir(stage, iteration), ignore_errors=True)
-
     def squash_iterations(
         self,
         spark: SparkSession,
@@ -220,7 +216,7 @@ class SnapshotStore:
         manifest, or None when there is nothing to squash.
 
         ``frame``: replacement content for the squashed iteration (defaults
-        to the plain union). plans/maintenance.fold_retractions passes the
+        to the plain union). plans/incremental.fold_retractions passes the
         retraction-folded current view here, so fold = squash with a
         smarter frame; with a frame given, even a single-iteration stage is
         rewritten (the content changes, not just the file layout).
@@ -282,181 +278,3 @@ class SnapshotStore:
             self.commit_table(name, compute(), metrics)
         return self.read_table(spark, name)
 
-
-class CatalogSnapshotStore:
-    """The same commit protocol over catalog tables (``df.writeTo``).
-
-    Drop-in for :class:`SnapshotStore` — identical method surface, so every
-    consumer (build_dictionary stage memoization, the CC loop,
-    link_increment/all_links) runs unchanged against either backend; the
-    resume tests pin both.
-
-    Data lands via ``df.writeTo(ns_name).using("parquet").createOrReplace()``
-    and the manifest is a single-row JSON table written LAST — a snapshot is
-    valid iff its ``__manifest`` table exists, the same manifest-last rule as
-    the directory store. With an Iceberg catalog configured (production),
-    ``createOrReplace`` is an atomic metadata swap and every commit is an
-    Iceberg snapshot with time travel for free. This container ships no
-    Iceberg jar, so tests run against Spark's built-in session catalog: the
-    same code, functionally identical, minus the catalog-side atomicity that
-    the manifest-last rule covers anyway.
-
-    ``rows`` in the manifest comes from a count over the committed table
-    (the session catalog exposes no file-footer shortcut); per-partition
-    lineage stays with the directory store, whose parquet footers are
-    directly readable.
-
-    Session-catalog wart (absent with a real metastore): table METADATA is
-    in-memory per session while managed LOCATIONS persist under the
-    warehouse dir, so a fresh session re-creating a table name fails with
-    LOCATION_ALREADY_EXISTS until the stale location is removed — the test
-    suite clears the warehouse up front; production (Hive/Iceberg) keeps
-    metadata durable and never hits it.
-    """
-
-    def __init__(self, spark: SparkSession, namespace: str = "snap"):
-        self.spark = spark
-        self.ns = namespace
-
-    # -- naming --------------------------------------------------------------
-    def _t(self, name: str, iteration: int | None = None) -> str:
-        base = f"{self.ns}_{name}"
-        return base if iteration is None else f"{base}_iter_{iteration:05d}"
-
-    # -- low-level commit ----------------------------------------------------
-    def _write(self, tbl: str, df: DataFrame) -> None:
-        """writeTo().createOrReplace() where the catalog supports it (v2 —
-        Iceberg's atomic metadata swap), else a STAGED v1 swap: write the
-        new data to ``<tbl>__stage``, drop the old table, rename the stage
-        in (the built-in session catalog rejects REPLACE TABLE AS SELECT,
-        and a plain overwrite would destroy the old data for the whole
-        duration of the new write — the same crash window the directory
-        store's .old- protocol closes). At every instant a COMPLETE copy of
-        the stage's data exists under some table name; a crash between drop
-        and rename leaves it in ``__stage``, swept only once the NEXT
-        commit's data table is fully in place (the sweep precedes that
-        commit's manifest, so the guarantee is about data copies, not about
-        commit visibility)."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            df.writeTo(tbl).using("parquet").createOrReplace()
-            return
-        except AnalysisException:
-            pass
-        stage = tbl + "__stage"
-        if self.spark.catalog.tableExists(tbl):
-            # old table intact through the (long) write of the new data
-            self.spark.sql(f"DROP TABLE IF EXISTS {stage}")  # superseded copy
-            df.write.format("parquet").mode("overwrite").saveAsTable(stage)
-            self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            self.spark.sql(f"ALTER TABLE {stage} RENAME TO {tbl}")
-        else:
-            # tbl absent: a prior crash may have left the ONLY copy in
-            # __stage — write the fresh table first, sweep the stale stage
-            # only once the new commit's data is in place
-            df.write.format("parquet").mode("overwrite").saveAsTable(tbl)
-            self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
-
-    def _commit(
-        self,
-        tbl: str,
-        df: DataFrame,
-        metrics: dict | None,
-        metrics_fn: Callable[[], dict] | None = None,
-    ) -> dict:
-        # OVERWRITE commits must invalidate first: without this, a crash
-        # while the data table is being replaced would leave the PREVIOUS
-        # commit's manifest pointing at a half-replaced table that reads as
-        # valid. Dropping the manifest up front restores the manifest-last
-        # guarantee for re-commits; on a v2 catalog the data swap itself is
-        # also atomic.
-        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}__manifest")
-        self._write(tbl, df)
-        resolved = dict(metrics or {})
-        if metrics_fn is not None:
-            resolved.update(metrics_fn() or {})
-        manifest = {
-            "rows": self.spark.table(tbl).count(),
-            "committed_at": time.time(),
-            "metrics": resolved,
-        }
-        self._write(
-            tbl + "__manifest",
-            self.spark.createDataFrame([(json.dumps(manifest),)], "manifest string"),
-        )
-        return manifest
-
-    def _is_valid(self, tbl: str) -> bool:
-        return self.spark.catalog.tableExists(tbl + "__manifest")
-
-    # -- iteration snapshots -------------------------------------------------
-    def commit(self, stage: str, iteration: int, df: DataFrame, metrics: dict | None = None) -> dict:
-        return self._commit(self._t(stage, iteration), df, metrics)
-
-    def iterations(self, stage: str) -> list[int]:
-        pat = re.compile(rf"^{re.escape(self._t(stage))}_iter_(\d{{5,}})$")
-        out = []
-        for t in self.spark.catalog.listTables():
-            m = pat.match(t.name)
-            if m and self._is_valid(t.name):
-                out.append(int(m.group(1)))
-        return sorted(out)
-
-    def read_iteration(self, spark: SparkSession, stage: str, iteration: int) -> DataFrame:
-        return spark.table(self._t(stage, iteration))
-
-    def read_iterations_union(self, spark: SparkSession, stage: str) -> DataFrame:
-        iters = self.iterations(stage)
-        if not iters:
-            raise FileNotFoundError(f"no committed iterations for {stage}")
-        out = None
-        for k in iters:
-            df = self.read_iteration(spark, stage, k)
-            out = df if out is None else out.unionByName(df)
-        return out
-
-    def last_iteration(
-        self, stage: str
-    ) -> tuple[int, Callable[[SparkSession], DataFrame]] | None:
-        iters = self.iterations(stage)
-        if not iters:
-            return None
-        k = iters[-1]
-        return k, lambda spark: self.read_iteration(spark, stage, k)
-
-    def drop_iteration(self, stage: str, iteration: int) -> None:
-        """Remove one committed iteration. Manifest first — a crash between
-        the two drops leaves an orphan data table that ``_is_valid`` already
-        treats as invisible (manifest-last, inverted)."""
-        tbl = self._t(stage, iteration)
-        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}__manifest")
-        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-    # -- named stage tables --------------------------------------------------
-    def commit_table(
-        self,
-        name: str,
-        df: DataFrame,
-        metrics: dict | None = None,
-        metrics_fn: Callable[[], dict] | None = None,
-    ) -> dict:
-        return self._commit(self._t(name), df, metrics, metrics_fn)
-
-    def has_table(self, name: str) -> bool:
-        return self._is_valid(self._t(name))
-
-    def read_table(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.table(self._t(name))
-
-    def manifest(self, name: str, iteration: int | None = None) -> dict:
-        row = self.spark.table(self._t(name, iteration) + "__manifest").first()
-        return json.loads(row["manifest"])
-
-    def get_or_compute(
-        self, spark: SparkSession, name: str, compute: Callable[[], DataFrame],
-        metrics: dict | None = None,
-    ) -> DataFrame:
-        if not self.has_table(name):
-            self.commit_table(name, compute(), metrics)
-        return self.read_table(spark, name)
