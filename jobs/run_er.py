@@ -884,10 +884,9 @@ def build_parser() -> argparse.ArgumentParser:
     )
     ap.add_argument(
         "--edjoin-method",
-        choices=["prefix", "chunk", "delete"],
+        choices=["prefix", "delete"],
         help="edjoin candidate generation (default prefix): gram prefixes "
-        "for natural text, Pass-Join chunks for long variable keys, "
-        "FastSS deletion neighborhood (k <= 2) for dense identifiers "
+        "for natural text, FastSS deletion neighborhood (k <= 2) for dense identifiers "
         "and constant-affix corpora — see the operator docstring's "
         "measured regime map",
     )

@@ -35,8 +35,6 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F  # noqa: F401
-
     from xlink_spark.operators.spans import plain_text
     from xlink_spark.plans.pipeline import build_dictionary, link_and_cluster
     from xlink_spark.plans.snapshots import SnapshotStore

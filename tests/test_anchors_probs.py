@@ -7,7 +7,6 @@ The micro-fixture pins cal_4_prob_from_mention_anchors semantics
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from xlink_spark.config import DictionaryConfig
 from xlink_spark.operators import anchors as AN
@@ -67,16 +66,6 @@ def test_extract_mention_anchors_counts(sdfs, corpus):
 
 
 
-def test_extract_out_links_distinct_per_doc(sdfs, corpus):
-    """G1: one (doc, entity) edge per distinct anchor target of the doc."""
-    docs, *_ = sdfs
-    got = sorted(map(tuple, AN.extract_out_links(docs).collect()))
-    want = sorted(
-        set(zip(corpus.gold_mentions["doc_id"], corpus.gold_mentions["entity_id"]))
-    )
-    assert got == want and len(got) < len(corpus.gold_mentions)
-
-
 def test_filter_mention_anchors_thresholds(spark):
     ma = spark.createDataFrame(
         [("a", "e1", 5), ("b", "e2", 1), ("c", "e3", 3), ("c", "e4", 1)],
@@ -128,15 +117,6 @@ def test_embedding_filters(spark):
     emb = spark.createDataFrame([("e1", [0.1, 0.2])], "key string, vec array<float>")
     out = AN.filter_by_entity_embedding(ma, emb)
     assert [(r["mention"], r["entity_id"]) for r in out.collect()] == [("m", "e1")]
-
-
-def test_corpus_stats(spark, sdfs):
-    docs, *_ = sdfs
-    ma = AN.extract_mention_anchors(docs)
-    row = AN.corpus_stats(ma).collect()[0]
-    assert row["n_mentions"] == ma.select("mention").distinct().count()
-    assert row["n_unambiguous"] + row["n_ambig_2_5"] + row["n_ambig_gt5"] == row["n_mentions"]
-    assert row["total_links"] == ma.agg(F.sum("cnt")).collect()[0][0]
 
 
 def test_decayed_anchor_counts_exact_halvings(spark):

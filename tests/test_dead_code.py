@@ -1,6 +1,6 @@
 """Dead-code guard: every top-level function and class of the library is
-reached from a product root, and no library module imports a name it never
-uses."""
+reached from a product root, and no module of the library, its tests, jobs
+or tools imports a name it never uses."""
 
 from __future__ import annotations
 
@@ -19,52 +19,9 @@ DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 # Defs that only tests reach. The list may only shrink: the guard fails when
 # a listed def becomes reached (move it off the list) or disappears.
 TEST_ONLY = {
-    # parity references and fixture helpers, kept on purpose
+    # parity references, kept on purpose
     "xlink_spark/fixtures/generate.py:to_spark",
     "xlink_spark/operators/scoring.py:seed_pool",
-    # offline raw-dump readers and writers: wire into a job or delete
-    "xlink_spark/sources/corpus.py:read_raw_corpus",
-    "xlink_spark/sources/corpus.py:resolve_doc_entity",
-    "xlink_spark/sources/corpus.py:standardize_corpus",
-    "xlink_spark/sources/corpus.py:mark_title_mentions",
-    "xlink_spark/sources/corpus.py:infobox_pre_refine",
-    "xlink_spark/sources/corpus.py:read_ttl_entities",
-    "xlink_spark/sources/corpus.py:read_gold_dataset",
-    "xlink_spark/sources/corpus.py:in_links",
-    "xlink_spark/sources/dictionary.py:read_entity_dictionary",
-    "xlink_spark/sources/dictionary.py:write_entity_dictionary",
-    "xlink_spark/sources/embeddings.py:parse_word2vec_binary",
-    "xlink_spark/sources/embeddings.py:read_word2vec_binary",
-    "xlink_spark/sources/embeddings.py:write_word2vec_binary",
-    "xlink_spark/sources/jsonl.py:write_jsonl_corpus",
-    # embedding training
-    "xlink_spark/operators/embedding.py:entity_abstract_embedding",
-    "xlink_spark/operators/embedding.py:anchor_train_sentences",
-    "xlink_spark/operators/embedding.py:train_word2vec",
-    # report views beside the queried operators
-    "xlink_spark/operators/dedup.py:exact_dup_drops",
-    "xlink_spark/operators/dedup.py:lsh_dropped_buckets",
-    "xlink_spark/operators/dedup.py:simhash",
-    "xlink_spark/operators/dedup.py:simhash_duplicates",
-    "xlink_spark/operators/dedup.py:simhash_dup_drops",
-    "xlink_spark/operators/textstats.py:word_token_count",
-    "xlink_spark/operators/textstats.py:punct_ratio",
-    "xlink_spark/operators/textstats.py:stopword_ratio",
-    "xlink_spark/operators/textstats.py:text_stats",
-    "xlink_spark/operators/cluster.py:cluster_memberships",
-    "xlink_spark/operators/cluster.py:largest_clusters",
-    "xlink_spark/operators/anchors.py:extract_out_links",
-    "xlink_spark/operators/anchors.py:corpus_stats",
-    "xlink_spark/plans/incremental.py:all_links",
-    "xlink_spark/plans/incremental.py:snapshot_diff",
-    # span and text helpers
-    "xlink_spark/operators/spans.py:links_to_annotated_doc",
-    "xlink_spark/operators/spans.py:normalize_spans",
-    "xlink_spark/functions/text.py:strip_zh_spaces",
-    "xlink_spark/functions/text.py:make_tokenize_zh_udf",
-    # sequence packing
-    "xlink_spark/operators/packing.py:pack_sequences",
-    "xlink_spark/operators/packing.py:pack_summary",
 }
 
 
@@ -152,10 +109,12 @@ def test_every_library_def_is_reached_from_a_product_root():
 
 
 def test_no_unused_module_imports_in_library():
-    """Every name a library module imports at module level is used in that
-    module, or re-exported through ``__all__``."""
+    """Every name a module of the library, tests/, jobs/ or tools/ imports at
+    module level is used in that module, or re-exported through
+    ``__all__``."""
     unused = []
-    for path in _py_files(LIBRARY):
+    paths = [p for top in (LIBRARY, "tests", "jobs", "tools") for p in _py_files(top)]
+    for path in paths:
         tree = _parse(path)
         used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
         for node in tree.body:

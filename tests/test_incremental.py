@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from xlink_spark.fixtures.generate import generate_corpus, to_spark
 from xlink_spark.operators.spans import plain_text
-from xlink_spark.plans.incremental import all_links, link_increment, load_dictionary
+from xlink_spark.plans.incremental import link_increment, load_dictionary
 from xlink_spark.plans.pipeline import build_dictionary, link_corpus
 from xlink_spark.plans.snapshots import SnapshotStore
 
@@ -58,7 +58,7 @@ def test_all_links_unions_batches(spark, inc_setup):
     second_half = newb.filter(F.col("doc_id") >= "d000075")
     n0 = link_increment(store, 0, newb, wemb, eemb).count()  # cached batch 0
     link_increment(store, 1, second_half, wemb, eemb)
-    total = all_links(spark, store).count()
+    total = store.read_iterations_union(spark, "links").count()
     assert total == n0 + link_increment(store, 1, second_half, wemb, eemb).count()
 
 
@@ -89,7 +89,8 @@ def test_crash_window_dirs_are_invisible(spark, tmp_path):
     with a manifest INSIDE (the exact pre-os.replace crash state that used to
     crash last_iteration with ValueError), (b) a new-namespace .tmp- dir, and
     (c) a manifest-less iter_00002 with readable parquet (crashed before the
-    manifest write). iterations/last_iteration/all_links must all ignore them.
+    manifest write). iterations/last_iteration/read_iterations_union must all
+    ignore them.
     """
     import json
     import os
@@ -116,7 +117,7 @@ def test_crash_window_dirs_are_invisible(spark, tmp_path):
     k, reader = store.last_iteration("links")
     assert k == 0
     assert reader(spark).count() == 5
-    assert all_links(spark, store).count() == 5
+    assert store.read_iterations_union(spark, "links").count() == 5
 
     # %05d grows past five digits at 100000 — six-digit iterations must
     # still list (regression: a strict \d{5} pattern silently dropped them)
@@ -124,7 +125,7 @@ def test_crash_window_dirs_are_invisible(spark, tmp_path):
     assert store.iterations("links") == [0, 100000]
     k2, reader2 = store.last_iteration("links")
     assert k2 == 100000 and reader2(spark).count() == 3
-    assert all_links(spark, store).count() == 8
+    assert store.read_iterations_union(spark, "links").count() == 8
 
 
 def test_overwrite_commit_never_deletes_last_snapshot(spark, tmp_path, monkeypatch):
@@ -220,7 +221,7 @@ def test_table_diff_null_safety_and_validation(spark):
 def test_snapshot_diff_between_committed_iterations(spark, tmp_path):
     """End-to-end through the store: commit corpus v0 and v1 as iterations,
     diff them, and check only the real changes surface."""
-    from xlink_spark.plans.incremental import snapshot_diff
+    from xlink_spark.plans.incremental import table_diff
 
     store = SnapshotStore(str(tmp_path / "snap"))
     v0 = spark.createDataFrame(
@@ -233,7 +234,11 @@ def test_snapshot_diff_between_committed_iterations(spark, tmp_path):
     store.commit("corpus", 1, v1)
     got = {
         (r["doc_id"], r["change"])
-        for r in snapshot_diff(spark, store, "corpus", 0, 1, ["doc_id"]).collect()
+        for r in table_diff(
+            store.read_iteration(spark, "corpus", 0),
+            store.read_iteration(spark, "corpus", 1),
+            ["doc_id"],
+        ).collect()
     }
     assert got == {(2, "changed"), (3, "removed"), (4, "added")}
 

@@ -1428,3 +1428,71 @@ def test_run_er_job_edjoin_blocking(spark, tmp_path):
             for r in spark.read.parquet(f"{args.output}/clusters").collect()
         }
         assert sum(1 for i in range(1, 31) if asg[i] == asg[i + 1000]) == 30
+
+
+def test_run_ingest_converts_reference_files(spark, tmp_path):
+    """The ingest job end to end: a reference-format raw corpus, entity
+    dictionary and word2vec binaries become the parquet inputs run_pipeline
+    reads; every rejected corpus line is counted by reason in the snapshot
+    manifest, and the dictionary build runs on the outputs."""
+    sys.path.insert(0, _JOBS_DIR)
+    from reference_files import write_entity_dictionary, write_word2vec_binary
+    from run_ingest import run_ingest_job
+
+    from xlink_spark import schemas
+    from xlink_spark.plans.pipeline import build_dictionary
+    from xlink_spark.plans.snapshots import SnapshotStore
+
+    kb = spark.createDataFrame(
+        [
+            ("e1", "Paris", "", ["http://kb/paris"]),
+            ("e2", "France", "", ["http://kb/france"]),
+            ("e3", "Lyon", "（city）", ["http://kb/lyon"]),
+        ],
+        "entity_id string, title string, sub_title string, uris array<string>",
+    )
+    write_entity_dictionary(kb, str(tmp_path / "dict"))
+    (tmp_path / "raw.txt").write_text(
+        "Paris\t\t\t\thttp://KB/paris\t\t[[e1|paris]] is in [[e2|france]]\n"
+        "France\t\t\t\thttp://kb/france\t\t[[e2|france]] holds [[e1|paris]]\n"
+        "Lyon\t\t（city）\t\tmissing://lyon\t\tfar from [[e1|paris]]\n"  # by full title
+        "Gamma\t\t\t\tmissing://gamma\t\tno entity here\n"  # unresolved
+        "only one column\n"  # bad shape
+        "Paris\t\t\t\thttp://kb/paris\t\tbroken [[e2|anchor\n"  # invalid markup
+    )
+    words = [("paris", [1.0, 0.0]), ("france", [0.0, 1.0]), ("far", [0.5, 0.5])]
+    ents = [("e1", [1.0, 0.0]), ("e2", [0.0, 1.0]), ("e3", [0.5, 0.25])]
+    write_word2vec_binary(words, str(tmp_path / "word.bin"))
+    write_word2vec_binary(ents, str(tmp_path / "entity.bin"))
+    out = tmp_path / "out"
+    args = argparse.Namespace(
+        raw_corpus=str(tmp_path / "raw.txt"), entity_dict=str(tmp_path / "dict"),
+        word_vec=str(tmp_path / "word.bin"), entity_vec=str(tmp_path / "entity.bin"),
+        output=str(out), snapshots=str(tmp_path / "snap"), master=None,
+    )
+    m = run_ingest_job(spark, args)
+
+    quarantine = {
+        "rejected": 3, "bad_shape": 1, "unresolved_entity": 1, "invalid_markup": 1
+    }
+    assert m == {
+        "n_docs": 3, "quarantine": quarantine, "n_entities": 3,
+        "n_word_vecs": 3, "n_entity_vecs": 3,
+    }
+    store = SnapshotStore(str(tmp_path / "snap"))
+    assert store.manifest("standard_corpus")["metrics"]["quarantine"] == quarantine
+    docs = spark.read.parquet(str(out / "documents"))
+    kb_out = spark.read.parquet(str(out / "kb"))
+    assert docs.schema.simpleString() == schemas.DOCUMENTS.simpleString()
+    assert kb_out.schema.simpleString() == schemas.KB_ENTITIES.simpleString()
+    assert sorted(r["doc_id"] for r in docs.collect()) == ["e1", "e2", "e3"]
+    emb = {}
+    for name in ("word_emb", "entity_emb"):
+        df = spark.read.parquet(str(out / name))
+        assert df.schema.simpleString() == "struct<key:string,vec:array<float>>"
+        emb.update({r["key"]: r["vec"] for r in df.collect()})
+    assert emb == dict(words + ents)
+
+    d = build_dictionary(docs, kb_out, spark.read.parquet(str(out / "entity_emb")), store)
+    ma = {(r["mention"], r["entity_id"]): r["cnt"] for r in d.mention_anchors.collect()}
+    assert ma[("paris", "e1")] == 3

@@ -2841,9 +2841,9 @@ def test_learned_blocking_pairs_consistency(spark):
 
 
 def test_edit_distance_join_methods_agree(spark):
-    """All three candidate-generation methods are EXACT: chunk (Pass-Join)
-    and delete (FastSS) equal the prefix path and the brute force on a
-    mixed corpus with short/empty/unicode keys and a shared prefix."""
+    """Both candidate-generation methods are EXACT: delete (FastSS) equals
+    the prefix path and the brute force on a mixed corpus with
+    short/empty/unicode keys and a shared prefix."""
     import itertools
 
     from xlink_spark.operators.linkage import edit_distance_join
@@ -2876,7 +2876,7 @@ def test_edit_distance_join_methods_agree(spark):
             for (i, a), (j, b) in itertools.combinations(enumerate(names), 2)
             if lev(a, b) <= k
         }
-        for method in ("prefix", "chunk", "delete"):
+        for method in ("prefix", "delete"):
             got = {
                 (r.id_a, r.id_b, r.ed)
                 for r in edit_distance_join(
@@ -2892,22 +2892,22 @@ def test_edit_distance_join_method_validation(spark):
     from xlink_spark.operators.linkage import edit_distance_join
 
     recs = spark.createDataFrame([(1, "ab")], "id long, key string")
-    with _pt.raises(ValueError):
-        edit_distance_join(recs, "key", "id", method="bogus")
+    for method in ("bogus", "chunk"):
+        with _pt.raises(ValueError):
+            edit_distance_join(recs, "key", "id", method=method)
     with _pt.raises(ValueError):
         edit_distance_join(recs, "key", "id", k=3, method="delete")
-    # chunk/delete stay pure-JVM like the prefix path
-    for method in ("chunk", "delete"):
-        plan = (
-            edit_distance_join(
-                spark.createDataFrame(
-                    [(i, f"key number {i:04d}") for i in range(12)],
-                    "id long, key string",
-                ),
-                "key",
-                "id",
-                method=method,
-            )
-            ._jdf.queryExecution().executedPlan().toString()
+    # delete stays pure-JVM like the prefix path
+    plan = (
+        edit_distance_join(
+            spark.createDataFrame(
+                [(i, f"key number {i:04d}") for i in range(12)],
+                "id long, key string",
+            ),
+            "key",
+            "id",
+            method="delete",
         )
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

@@ -22,7 +22,6 @@ from pyspark.sql.types import (
 )
 
 from xlink_spark.operators.linkage import (
-    fs_score,
     fs_score_levels,
     match_weights,
     match_weights_levels,

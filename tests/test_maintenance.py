@@ -90,11 +90,11 @@ def _fold_store(spark, tmp_path):
 
 
 def test_current_links_applies_wins_and_removals(spark, tmp_path):
-    from xlink_spark.plans.incremental import all_links, current_links
+    from xlink_spark.plans.incremental import current_links
 
     store = _fold_store(spark, tmp_path)
     # raw history keeps everything
-    assert all_links(spark, store).count() == 4
+    assert store.read_iterations_union(spark, "links").count() == 4
     cur = sorted(map(tuple, current_links(spark, store).collect()))
     # A: batch 1 wins (e1 superseded); B: removed at 1 but re-added at 2
     assert cur == [("A", "e9"), ("B", "e5")]
@@ -137,7 +137,7 @@ def test_fold_link_history_pure_frames(spark):
 
 
 def test_fold_retractions_materializes_current_view(spark, tmp_path):
-    from xlink_spark.plans.incremental import all_links, current_links, fold_retractions
+    from xlink_spark.plans.incremental import current_links, fold_retractions
 
     store = _fold_store(spark, tmp_path)
     expected = sorted(map(tuple, current_links(spark, store).collect()))
@@ -146,13 +146,13 @@ def test_fold_retractions_materializes_current_view(spark, tmp_path):
     assert man is not None and man["rows"] == 2
     assert store.iterations("links") == [2]
     # after the fold, RAW union == current view (history folded away)
-    assert sorted(map(tuple, all_links(spark, store).select("doc_id", "entity_id").collect())) == expected
+    assert sorted(map(tuple, store.read_iterations_union(spark, "links").select("doc_id", "entity_id").collect())) == expected
     # retractions squashed empty
     rid = store.iterations("retractions")
     assert len(rid) == 1 and store.manifest("retractions", rid[0])["rows"] == 0
     # idempotent: fold of a folded store is the same view
     fold_retractions(spark, store)
-    assert sorted(map(tuple, all_links(spark, store).select("doc_id", "entity_id").collect())) == expected
+    assert sorted(map(tuple, store.read_iterations_union(spark, "links").select("doc_id", "entity_id").collect())) == expected
     # producers resume past the fold unchanged
     store.commit("links", 3, _links_batch(spark, [("C", "e7")]))
     cur = sorted(map(tuple, current_links(spark, store).collect()))

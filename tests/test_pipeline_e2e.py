@@ -153,21 +153,6 @@ def test_join_path_pipeline_equals_broadcast_pipeline(built, sdfs):
     assert key(joined) == key(links)
 
 
-def test_believe_v1_runs_from_main_pipeline(built, sdfs):
-    """believe_version=1 must be usable through link_corpus — the Dictionary
-    carries entity_prior and the pipeline now passes it to score_has_prob
-    (previously the flag raised ValueError from the main path)."""
-    import dataclasses
-
-    d, plain, _links = built
-    docs, kb, wemb, eemb, gold = sdfs
-    cfg = dataclasses.replace(
-        DEFAULT, predictor=dataclasses.replace(DEFAULT.predictor, believe_version=1)
-    )
-    out = link_corpus(plain, d, wemb, eemb, cfg)
-    assert out.count() > 0
-
-
 def test_blocking_quality_hand_values(spark):
     """PC/RR from group sizes, pinned against a hand-computed case:
     blocks b1=[e1,e1,e2] b2=[e1,e2,e2] → cand=6, true=6, co-blocked=2,

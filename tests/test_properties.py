@@ -55,28 +55,6 @@ def test_email_regex_matches_generated_addresses(local, dom, tld):
 
 @settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
-    st.lists(st.integers(1, 900), min_size=1, max_size=60),
-    st.integers(256, 2048),
-)
-def test_pack_sequences_invariants_hold_for_any_input(spark, sizes, capacity):
-    """For ANY token-count multiset and capacity: every doc packed exactly
-    once, no pack over capacity unless it holds a single oversized doc, and
-    the token total is conserved."""
-    from xlink_spark.operators.packing import pack_sequences, pack_summary
-
-    rows = [(f"d{i:04d}", n) for i, n in enumerate(sizes)]
-    docs = spark.createDataFrame(rows, "doc_id string, n_tokens long")
-    packed = pack_sequences(docs, capacity=capacity, num_partitions=4)
-    got = packed.collect()
-    assert sorted(r["doc_id"] for r in got) == sorted(d for d, _ in rows)
-    summ = pack_summary(packed).collect()
-    for r in summ:
-        assert r["total_tokens"] <= capacity or r["n_docs"] == 1
-    assert sum(r["total_tokens"] for r in summ) == sum(sizes)
-
-
-@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
     st.lists(
         st.tuples(st.integers(0, 80), st.integers(1, 15)), min_size=1, max_size=25
     )

@@ -310,29 +310,6 @@ def test_strict_reference_bug_modes(spark):
     assert [r["parse_from"] for r in strict_merged.collect()] == ["ma"]
 
 
-def test_cluster_memberships(spark):
-    from xlink_spark.operators.cluster import cluster_memberships
-
-    links = spark.createDataFrame(
-        [
-            ("d1", 0, 5, "aa", "e1", 0.9, "ma"),
-            ("d2", 3, 8, "aa", "e1", 0.8, "ma"),
-            ("d1", 9, 12, "bb", "e2", 0.7, "ma"),
-            ("d3", 0, 2, "cc", "e3", 0.1, "ma"),  # below threshold
-        ],
-        "doc_id string, start int, end int, surface string, entity_id string,"
-        "believe double, parse_from string",
-    )
-    m = cluster_memberships(links, threshold=0.5)
-    rows = m.collect()
-    assert len(rows) == 3
-    by_ent = {}
-    for r in rows:
-        by_ent.setdefault(r["entity_id"], set()).add(r["cluster_id"])
-    assert all(len(v) == 1 for v in by_ent.values())  # one cluster per entity
-    assert "e3" not in by_ent
-
-
 def test_seed_pool_from_dictionary_equals_candidate_seed_pool(spark):
     """Unambiguity is a surface property: the dictionary-grain seed pool
     must equal seed_pool over the exploded candidate table."""
@@ -368,29 +345,6 @@ def test_seed_pool_from_dictionary_equals_candidate_seed_pool(spark):
         (r["doc_id"], tuple(r["doc_sum"]), r["doc_seed_cnt"]) for r in df.collect()
     )
     assert akey(agg_old) == akey(agg_new)
-
-
-def test_believe_v1_fusion(spark):
-    """C10 v1 (xlink.py:338-345): P(e)^0.02 · word_sim · ent_sim, with a
-    missing entity prior scoring 0 (the reference's None-guard)."""
-    cfg = PredictorConfig(believe_version=1)
-    cands = spark.createDataFrame(
-        [
-            ("d", 0, 2, "mm", "ma", "mm", "e1", 0.1, 1.0, 1.0),  # has prior
-            ("d", 0, 2, "mm", "ma", "mm", "e2", 0.9, 1.0, 1.0),  # NO prior -> 0
-        ],
-        "doc_id string, start int, end int, surface string, parse_from string,"
-        "mention string, entity_id string, p double, ctx_word_sim double,"
-        "ctx_ent_sim double",
-    )
-    prior = spark.createDataFrame([("e1", 0.4)], "entity_id string, prior double")
-    lp = spark.createDataFrame([("mm", 0.5)], "mention string, link_prob double")
-    got = SC.score_has_prob(cands, lp, cfg, entity_prior=prior).collect()
-    assert len(got) == 1 and got[0]["entity_id"] == "e1"
-    assert got[0]["believe"] == pytest.approx((0.4**0.02 + 0.5) / 2)
-    # v1 without the prior table is a loud error, not silent v2 behavior
-    with pytest.raises(ValueError):
-        SC.score_has_prob(cands, lp, cfg)
 
 
 def test_cjk_context_tokenizer(spark):

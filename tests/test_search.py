@@ -5,7 +5,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from xlink_spark.operators.search import bm25_topk, corpus_search_stats
 

@@ -1,12 +1,12 @@
-"""Sources/sinks: corpus standardization (S1/S2/S3), word2vec binary (S6),
-gold dataset (S9), in-links (S12)."""
+"""Sources: corpus standardization (S1), word2vec binary (S6), AIDA
+CoNLL (S10)."""
 
 from __future__ import annotations
 
-import json
-
 import pytest
+from reference_files import write_word2vec_binary
 
+from xlink_spark.plans.snapshots import SnapshotStore
 from xlink_spark.sources import corpus as CS
 from xlink_spark.sources import embeddings as EM
 
@@ -37,7 +37,8 @@ def test_standardize_corpus(spark, tmp_path, kb):
     ]
     p = tmp_path / "raw.txt"
     p.write_text("\n".join(lines))
-    docs, quarantined = CS.standardize_corpus(spark, str(p), kb_uris, kb_entities)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    docs, quarantined = CS.standardize_corpus(spark, str(p), kb_uris, kb_entities, store)
     got = {r["doc_id"]: r["spans"] for r in docs.collect()}
     assert set(got) == {"e1", "e2"}
     anchors = [s for s in got["e1"] if s["kind"] == "anchor"]
@@ -47,11 +48,9 @@ def test_standardize_corpus(spark, tmp_path, kb):
 
 
 def test_standardize_corpus_manifests_quarantine_counters(spark, tmp_path, kb):
-    """With a store, the stage manifest records the observed error_no
+    """The stage manifest records the observed error_no
     tallies: per-reason reject counts + accepted rows — and both committed
     tables read back resume-style."""
-    from xlink_spark.plans.snapshots import SnapshotStore
-
     kb_entities, kb_uris = kb
     lines = [
         "Alpha\t\t\t\thttp://KB/e1\t\tsome [[e2|beta]] text",
@@ -76,56 +75,13 @@ def test_standardize_corpus_manifests_quarantine_counters(spark, tmp_path, kb):
     assert qm["rows"] == 4 and qm["metrics"]["quarantine"]["rejected"] == 4
 
 
-def test_infobox_pre_refine(spark):
-    df = spark.createDataFrame([('{"born":"1900","field":"math"}',)], "content string")
-    got = CS.infobox_pre_refine(df).collect()[0]["flat_text"]
-    assert got == "born 1900 field math"
-
-
-def test_read_ttl_entities(spark, tmp_path):
-    ttl = tmp_path / "dump.ttl"
-    ttl.write_text(
-        '<http://kb.example/resource/E42> rdfs:label "The Answer"@en .\n'
-        '<http://kb.example/resource/E42> property:supplement "(disamb)" .\n'
-        '<http://kb.example/resource/E7> rdfs:label "Seven" .\n'
-        "# comment line\n"
-    )
-    got = {r["entity_id"]: (r["label"], r["supplement"]) for r in
-           CS.read_ttl_entities(spark.getActiveSession() or spark, str(ttl)).collect()}
-    assert got["E42"] == ("The Answer", "(disamb)")
-    assert got["E7"] == ("Seven", None)
-
-
 def test_word2vec_binary_roundtrip(spark, tmp_path):
     rows = [("hello", [1.0, 2.0, 3.0]), ("世界", [0.5, -0.5, 0.25])]
     p = tmp_path / "vectors.bin"
-    EM.write_word2vec_binary(rows, str(p))
+    write_word2vec_binary(rows, str(p))
     got = {r["key"]: r["vec"] for r in EM.read_word2vec_binary(spark, str(p)).collect()}
     assert got["hello"] == [1.0, 2.0, 3.0]
     assert got["世界"] == [0.5, -0.5, 0.25]
-
-
-def test_gold_dataset_source(spark, tmp_path):
-    (tmp_path / "docs.json").write_text(json.dumps(["ab cd", "xy"]))
-    (tmp_path / "annotations.json").write_text(
-        json.dumps([[[0, 2, "ab", "e1"], [3, 5, "cd", "NIL"]], []])
-    )
-    got = CS.read_gold_dataset(
-        spark, str(tmp_path / "docs.json"), str(tmp_path / "annotations.json")
-    ).collect()
-    assert [(r["doc_id"], r["start"], r["entity_id"]) for r in got] == [
-        ("d000000", 0, "e1"),
-        ("d000000", 3, "NIL"),
-    ]
-
-
-def test_in_links(spark, kb):
-    kb_entities, _ = kb
-    out_links = spark.createDataFrame(
-        [("e1", "e2"), ("e2", "e2"), ("e1", "e9")], "doc_id string, entity_id string"
-    )
-    got = sorted(r["doc_id"] for r in CS.in_links(out_links, "e2", kb_entities).collect())
-    assert got == ["e1", "e2"]
 
 
 def test_aida_conll_source(spark, tmp_path):

@@ -175,14 +175,13 @@ def main() -> None:
     )
     ap.add_argument(
         "--edjoin-method",
-        choices=["prefix", "chunk", "delete"],
+        choices=["prefix", "delete"],
         default="prefix",
         help="edjoin candidate generation. The measured regime map on "
         "THIS corpus (constant 'Customer#' prefix + dense digits): "
         "prefix q=2 killed at 25 min (rarest grams in ~8k prefixes), "
-        "q=4 straggler-stuck, chunk stuck on the constant first "
-        "chunk; delete (FastSS neighborhood) finishes the 192k x64 "
-        "corpus in 15s — use delete here",
+        "q=4 straggler-stuck; delete (FastSS neighborhood) finishes "
+        "the 192k x64 corpus in 15s — use delete here",
     )
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--workdir", default="/tmp/er_scale_bench")

@@ -38,11 +38,6 @@ class PredictorConfig:
     # the reference uses jieba, WordParser.py:76-79)
     context_tokenizer: str = "ws"
     prior_power: float = 0.02         # entity_popularity_power — xlink.py:28
-    # believe fusion version (C10): 2 = P(e|m)^α·P(C|e)·P(N|e) (xlink.py:347,
-    # what predict actually calls at xlink.py:161); 1 = P(e)^α·P(C|e)·P(N|e)
-    # (xlink.py:338-345 — dead code in the reference, kept for completeness;
-    # requires entity_prior to be passed to score_has_prob)
-    believe_version: int = 2
     link_prob_th: float = 0.008       # mention gate — xlink.py:29
     believe_th: float = 0.2           # mention believe gate — xlink.py:30
     # no-prob (title-dict) path — xlink.py:32-36

@@ -1401,7 +1401,7 @@ def _simhash16_fingerprints(docs):
 
     Bit j of token t := parity of hex digit j of md5(t); per-doc fingerprint
     = majority vote per bit (Charikar '02 construction over a portable hash
-    family; the production 64-bit xxhash64 variant is dedup.simhash)."""
+    family)."""
     toks = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.explode(F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != F.lit(""))).alias("tok"),
@@ -1451,9 +1451,8 @@ def q_simhash_near_pairs(spark, sf_dir):
     Banded Hamming LSH on the portable 16-bit fingerprint: 4 bands of 4
     bits — by pigeonhole, recall is perfect for Hamming < 4; candidates are
     verified with one bit_count(xor). k=1 because a 16-bit fingerprint is
-    coarse (the production path is the same operator over the 64-bit
-    dedup.simhash, whose 16-bit band keys give real bucketing); this checks
-    the banded join + xor-verify mechanics end to end."""
+    coarse (64-bit fingerprints give 16-bit band keys and real bucketing);
+    this checks the banded join + xor-verify mechanics end to end."""
     fp = _simhash16_fingerprints(_doc_pairs_corpus(spark, sf_dir))
     return DD.simhash_near_pairs(fp, k=1, bands=4, sim_col="simhash16", bits=16)
 
@@ -9659,11 +9658,11 @@ def q_edit_distance_pairs_delete(spark, sf_dir):
     FastSS deletion neighborhood (linkage.edit_distance_join
     method='delete' — the dense-alphabet/constant-affix regime's scheme,
     the one that survives the 192k replicated-ID corpus where gram
-    prefixes and Pass-Join chunks both stall; see the operator
+    prefixes stall; see the operator
     docstring's measured regime map). The oracle is the INDEPENDENT
     q-gram prefix formulation in DuckDB, so a green hash here proves
     delete-neighborhood == prefix-filtering == DuckDB on real data, on
-    top of the three-method brute-parity unit tests."""
+    top of the two-method brute-parity unit tests."""
     from xlink_spark.operators.linkage import edit_distance_join
 
     recs = _linkage_records(spark, sf_dir)

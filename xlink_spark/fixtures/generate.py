@@ -241,8 +241,6 @@ def generate_corpus(
 
 def to_spark(spark, corpus: SyntheticCorpus):
     """Create the five Spark DataFrames with explicit schemas."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     from xlink_spark import schemas
 
     docs = spark.createDataFrame(

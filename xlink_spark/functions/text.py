@@ -12,13 +12,6 @@ from pyspark.sql import functions as F
 # Parenthetical subtitle: both full-width （…） and ASCII (…) forms.
 _PARENTHETICAL = r"[（(][^）)]*[）)]$"
 
-# zh+en punctuation set used by the reference when cleaning train text —
-# datatool/pipeline/tools.py:4, extract_embedding_train.py:9.
-PUNCT_PATTERN = (
-    r"[\"'!#$%&()*+,\-./:;<=>?@\[\]^_`{|}~“”‘’！？｡。＂＃＄％＆＇（）＊＋，－／："
-    r"；＜＝＞＠［＼］＾＿｀｛｜｝～《》〈〉「」『』【】〔〕·、]"
-)
-
 
 def surface_norm(title: Column | str) -> Column:
     """Normalized surface form — THE blocking key.
@@ -46,25 +39,6 @@ def normalize_uri(uri: Column | str) -> Column:
     return F.lower(F.trim(c))
 
 
-def strip_zh_spaces(text: Column | str) -> Column:
-    """Remove a single space between two non-ASCII-letter chars.
-
-    Reference: ``re.sub(r'([^a-zA-Z])( )([^a-zA-Z])', r'\\1\\3')`` —
-    calculate_entity_embedding.py:94, extract_embedding_train.py:40.
-    Applied twice because overlapping matches ("中 文 字") need a second pass,
-    same as repeated scans in the reference loop.
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    once = F.regexp_replace(c, r"([^a-zA-Z]) ([^a-zA-Z])", "$1$2")
-    return F.regexp_replace(once, r"([^a-zA-Z]) ([^a-zA-Z])", "$1$2")
-
-
-def strip_punct(text: Column | str) -> Column:
-    """Strip the reference's zh+en punctuation set (tools.py:29-52)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_replace(c, PUNCT_PATTERN, " ")
-
-
 def tokenize_ws(text: Column | str) -> Column:
     """Whitespace tokenization (en path of WordParser.py:81-83).
 
@@ -82,45 +56,12 @@ def tokens_lower(text: Column | str) -> Column:
 
 def tokens_lower_cjk(text: Column | str) -> Column:
     """CJK-aware lower-cased tokens as a PURE expression: each CJK char is
-    its own token, non-CJK word runs stay whole — the same degradation as
-    C7's jieba-less fallback (make_tokenize_zh_udf), but JVM-side so the
-    context-word path stays inside codegen. zh context words then hit a
-    char/word-keyed embedding table instead of matching nothing.
+    its own token, non-CJK word runs stay whole — a char-unigram stand-in
+    for C7's jieba segmentation, JVM-side so the context-word path stays
+    inside codegen. zh context words then hit a char/word-keyed embedding
+    table instead of matching nothing.
     """
     c = F.col(text) if isinstance(text, str) else text
     # (?U): Java \s is ASCII-only by default; Unicode mode matches the
     # Python scanner's tokenization (NBSP, ideographic space)
     return F.regexp_extract_all(F.lower(c), F.lit(r"(?U)[一-鿿]|[^\s一-鿿]+"), 0)
-
-
-def make_tokenize_zh_udf():
-    """C7: zh word segmentation as an Arrow-batched pandas UDF.
-
-    Reference: WordParser.py:76-79 lazy-loads jieba per process. jieba is
-    optional in this environment — when absent, the fallback segments CJK
-    runs into single characters and keeps ASCII word runs whole (a standard
-    degradation: char-unigram zh tokens are what the reference's freq scan
-    effectively counts for single-char dictionary surfaces anyway).
-    """
-    import re
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    cjk_or_word = re.compile(r"[一-鿿]|[A-Za-z0-9_]+")
-
-    def tokenize_zh(texts):
-        try:
-            import jieba  # noqa: PLC0415
-
-            cut = lambda t: [w for w in jieba.cut(t) if w.strip()]  # noqa: E731
-        except ImportError:
-            cut = lambda t: cjk_or_word.findall(t)  # noqa: E731
-        return texts.map(lambda t: cut(t) if t else [])
-
-    # set REAL (non-stringified) annotations: this module uses
-    # `from __future__ import annotations`, which would otherwise leave
-    # pyspark's type-hint inference with unevaluated strings
-    tokenize_zh.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return pandas_udf(tokenize_zh, ArrayType(StringType()))

@@ -47,14 +47,6 @@ def extract_mention_anchors(docs: DataFrame, cfg: DictionaryConfig | None = None
     )
 
 
-def extract_out_links(docs: DataFrame) -> DataFrame:
-    """A1/U2/G1: per-doc distinct outgoing entity links.
-
-    Reference: extract_mention_anchors.py:38-47 (set add per doc).
-    """
-    return anchor_spans(docs).select("doc_id", "entity_id").distinct()
-
-
 def extract_self_links(docs: DataFrame) -> DataFrame:
     """A1: mentions whose anchor target is the containing doc itself.
 
@@ -227,27 +219,6 @@ def filter_title_entities(
         surface_token_count("mention") <= cfg.max_surface_words
     ).join(
         entity_embeddings.select(F.col("key").alias("entity_id")), "entity_id", "left_semi"
-    )
-
-
-def corpus_stats(mention_anchors: DataFrame) -> DataFrame:
-    """A10: distribution sanity stats (tools.py:7-104, stats.py:7-51).
-
-    Returns one row: mention count, entity count, total links, and the
-    candidate-cardinality histogram buckets the reference prints
-    (#mentions with 1 / 2-5 / >5 candidates).
-    """
-    per_m = mention_anchors.groupBy("mention").agg(
-        F.count(F.lit(1)).alias("n_cands"), F.sum("cnt").alias("links")
-    )
-    return per_m.agg(
-        F.count(F.lit(1)).alias("n_mentions"),
-        F.sum("links").alias("total_links"),
-        F.sum(F.when(F.col("n_cands") == 1, 1).otherwise(0)).alias("n_unambiguous"),
-        F.sum(F.when((F.col("n_cands") >= 2) & (F.col("n_cands") <= 5), 1).otherwise(0)).alias(
-            "n_ambig_2_5"
-        ),
-        F.sum(F.when(F.col("n_cands") > 5, 1).otherwise(0)).alias("n_ambig_gt5"),
     )
 
 

@@ -181,21 +181,6 @@ def cluster_links(links: DataFrame, threshold: float = 0.0) -> DataFrame:
     return entity_clusters(links.select("entity_id"), comp)
 
 
-def cluster_memberships(links: DataFrame, threshold: float = 0.0) -> DataFrame:
-    """Mention-level cluster assignment: every linked mention occurrence
-    with its entity and cluster id — the coreference view of the clusters
-    (cluster_links gives only the entity→cluster projection).
-
-    Output: (doc_id, start, end, surface, entity_id, cluster_id).
-    """
-    clusters = cluster_links(links, threshold)
-    return (
-        links.filter(F.col("believe") >= F.lit(threshold))
-        .join(clusters, "entity_id")
-        .select("doc_id", "start", "end", "surface", "entity_id", "cluster_id")
-    )
-
-
 def cluster_size_histogram(assignments: DataFrame) -> DataFrame:
     """Cluster-size distribution of a (node, component) assignment frame.
 
@@ -216,15 +201,6 @@ def cluster_size_histogram(assignments: DataFrame) -> DataFrame:
             (F.col("size") * F.col("n_clusters")).alias("n_nodes"),
         )
     )
-
-
-def largest_clusters(assignments: DataFrame, k: int = 100) -> DataFrame:
-    """Top-k components by member count, deterministic total order
-    (size desc, component asc) — the explicit head-cluster report that
-    feeds skew decisions. TakeOrderedAndProject shape: per-partition heap
-    of k, never a global sort."""
-    sizes = assignments.groupBy("component").agg(F.count(F.lit(1)).alias("size"))
-    return sizes.orderBy(F.col("size").desc(), F.col("component").asc()).limit(k)
 
 
 def incremental_components(prev: DataFrame, new_edges: DataFrame) -> DataFrame:

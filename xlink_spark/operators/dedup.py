@@ -10,9 +10,8 @@ standard operators a 100 TB training-data pipeline needs, built Spark-first:
   md5(seed ⊕ token) and the minimum is taken LEXICOGRAPHICALLY over the hex
   strings — deterministic across engines (used by the DuckDB oracle) and
   just as uniform as integer minima.
-* simhash: 64-bit Charikar fingerprint via per-bit majority vote over
-  token-hash bits; near-dups = equal fingerprints (or Hamming ≤ k via
-  band rotation)
+* simhash_near_pairs: Hamming-≤k pairs over SimHash fingerprints via
+  banded Hamming LSH (the fingerprints are the caller's)
 * ngram_jaccard: blocked pairwise n-gram Jaccard (block = cheap prefix key
   so the self-join never goes quadratic in the corpus)
 * embedding near-dup: cosine ≥ τ pairs over an embedding column, LSH-style
@@ -38,8 +37,8 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     keeper = min(doc_id) — the deterministic survivor. REPORT/AUDIT view
     only: ``doc_ids`` materializes a whole hash group into one array on one
     reducer, and at corpus scale the degenerate groups (billions of empty or
-    boilerplate docs sharing one hash) are exactly the ones that exist — use
-    :func:`exact_dup_drops` as the drop path, never this.
+    boilerplate docs sharing one hash) are exactly the ones that exist — the
+    drop path is the ``row_number`` window of ``plans.curation``, never this.
     """
     return (
         docs.select(id_col, F.md5(F.col(text_col)).alias("content_hash"))
@@ -49,22 +48,6 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
             F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
             F.min(id_col).alias("keeper"),
         )
-    )
-
-
-def exact_dup_drops(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Ids of the non-keeper copies of byte-identical documents (one id
-    column). The scale-safe drop path: one ``row_number`` window on the
-    content-hash exchange — every row streams through its reducer, nothing
-    per-group is ever materialized, so a hash group of 10^9 empty docs costs
-    the same per row as a group of 2. Same survivor rule as
-    ``exact_duplicates`` (keeper = min id)."""
-    w = Window.partitionBy("content_hash").orderBy(id_col)
-    return (
-        docs.select(id_col, F.md5(F.col(text_col)).alias("content_hash"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > 1)
-        .select(id_col)
     )
 
 
@@ -114,8 +97,7 @@ def lsh_candidate_pairs(
     (boilerplate, empty docs) can dominate the whole job at corpus scale —
     buckets wider than the cap are dropped (their members are usually
     caught in another band; exact-dup buckets belong to exact_duplicates
-    anyway). NO silent truncation: capped buckets are observable via
-    ``lsh_dropped_buckets``.
+    anyway).
 
     ``num_hashes`` is the signature width the caller built (minhash_dedup
     always has it). Pass it: plan construction is then action-free. The
@@ -161,44 +143,6 @@ def lsh_candidate_pairs(
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
-    )
-
-
-def lsh_dropped_buckets(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 4,
-    max_bucket: int = 1000,
-    num_hashes: int | None = None,
-) -> DataFrame:
-    """Audit view of buckets a ``max_bucket`` cap would drop: (band, key, width).
-
-    Pass ``num_hashes`` (the signature width) to keep plan construction
-    action-free; the ``first()`` probe is the ad-hoc fallback only."""
-    n = (
-        num_hashes
-        if num_hashes is not None
-        else signatures.select(F.size("sig")).first()[0]
-    )
-    rows_per_band = max(n // bands, 1)
-    banded = signatures.select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.concat_ws(
-                        "|", F.slice("sig", b * rows_per_band + 1, rows_per_band)
-                    ).alias("key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select(F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    return (
-        banded.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("width"))
-        .filter(F.col("width") > max_bucket)
     )
 
 
@@ -248,9 +192,8 @@ def minhash_dedup(
 
     ``max_bucket`` is ON by default: one degenerate LSH bucket (empty or
     boilerplate docs sharing a band key) is O(b²) join rows and can own the
-    whole job at corpus scale. Dropped buckets stay observable via
-    ``lsh_dropped_buckets(sig, bands=bands, max_bucket=max_bucket)``; pass
-    ``max_bucket=None`` to disable (exact small-corpus parity runs).
+    whole job at corpus scale. Pass ``max_bucket=None`` to disable (exact
+    small-corpus parity runs).
 
     The shingle table feeds FOUR consumers (signatures, both sides of the
     intersection join, set sizes); persisting it beats re-exploding the
@@ -263,76 +206,6 @@ def minhash_dedup(
         sig, id_col, bands, max_bucket=max_bucket, num_hashes=num_hashes
     )
     return jaccard_verify(cand, sh, id_col, threshold)
-
-
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 64) -> DataFrame:
-    """64-bit SimHash fingerprints: (doc_id, simhash: long).
-
-    Per-bit majority over token hashes (Charikar '02). Token hash bits come
-    from xxhash64(token); the per-bit vote is an explode over bit positions
-    with a map-side-combinable sum — no UDF.
-    """
-    toks = docs.select(id_col, F.explode(tokens_lower(text_col)).alias("tok"))
-    toks = toks.withColumn("h", F.xxhash64("tok"))
-    # bit b's weight as a signed long (b=63 is the sign bit: -2^63)
-    weights = [(1 << b) if b < 63 else -(1 << 63) for b in range(bits)]
-    votes = toks.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("bit"),
-                        F.when(
-                            F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1
-                        ).otherwise(-1).alias("vote"),
-                    )
-                    for b in range(bits)
-                ]
-            )
-        ).alias("bv"),
-    ).select(id_col, F.col("bv.bit").alias("bit"), F.col("bv.vote").alias("vote"))
-    bitsum = votes.groupBy(id_col, "bit").agg(F.sum("vote").alias("s"))
-    weight_lookup = F.element_at(
-        F.array(*[F.lit(w).cast("long") for w in weights]), F.col("bit") + 1
-    )
-    fp = bitsum.groupBy(id_col).agg(
-        F.sum(F.when(F.col("s") > 0, weight_lookup).otherwise(F.lit(0).cast("long"))).alias(
-            "simhash"
-        )
-    )
-    return fp
-
-
-def simhash_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Docs sharing an identical SimHash fingerprint (Hamming-0 near-dups).
-
-    REPORT/AUDIT view (same caveat as ``exact_duplicates``): ``doc_ids``
-    materializes a whole fingerprint group on one reducer, and degenerate
-    groups (empty/boilerplate corpora collapsing to one fingerprint) are
-    the ones that exist at corpus scale — use :func:`simhash_dup_drops` as
-    the drop path."""
-    fp = simhash(docs, text_col, id_col)
-    return (
-        fp.groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sort_array(F.collect_list(id_col)).alias("doc_ids"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
-def simhash_dup_drops(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Ids of the non-keeper members of each identical-SimHash group (one id
-    column; keeper = min id). The scale-safe drop path: a ``row_number``
-    window on the fingerprint exchange — rows stream through the reducer,
-    no per-group array ever materializes (the same construction as
-    ``exact_dup_drops``)."""
-    fp = simhash(docs, text_col, id_col)
-    w = Window.partitionBy("simhash").orderBy(id_col)
-    return (
-        fp.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > 1)
-        .select(id_col)
-    )
 
 
 def simhash_near_pairs(
@@ -355,7 +228,7 @@ def simhash_near_pairs(
     policy as ``lsh_candidate_pairs``) drops degenerate band buckets —
     empty/boilerplate corpora collapse to one fingerprint whose bucket
     would be O(b²) join rows; pass ``None`` for exact-parity runs. Exact
-    twins belong to ``simhash_duplicates`` / ``exact_duplicates`` anyway.
+    twins belong to ``exact_duplicates`` anyway.
 
     Output: (doc_a, doc_b, hamming), doc_a < doc_b, hamming ≤ k.
     """

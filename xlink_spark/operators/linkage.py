@@ -3202,28 +3202,6 @@ def edit_distance_join(
     values and every bucket is huge — q=4 (10^4+ gram types) restores the
     rare-gram tail the prefix filter needs.
 
-    ``method='chunk'`` switches candidate generation to Pass-Join chunk
-    signatures (Li, Deng & Feng ICDE 2011) — the DENSE-ALPHABET regime's
-    exact path. Frequency-ordered prefixes assume a rare-gram tail
-    exists; on uniform digit-string corpora it does not (measured on a
-    192k-record replicated ID corpus, the rarest prefix grams still sat
-    in ~8,000 records' prefixes — a billion-candidate space, and the
-    local[8] arm had to be killed). Chunking instead splits each key
-    into k+1 disjoint even chunks; <= k edits touch <= k of them, so one
-    chunk of either side survives VERBATIM in the other at a start
-    position shifted by <= k — candidates come from a chunk-vs-substring
-    equi-join on ~len/(k+1)-char signatures whose buckets stay tiny on
-    exactly the corpora that defeat grams. Probe fan-out is
-    len x (few lengths) rows per record, chunk side k+1 rows; both sides
-    ride the same pinned repartition; the verify stage is shared. Honest
-    limit, measured: a corpus-wide CONSTANT region defeats chunking too —
-    on the replicated ID corpus the first chunk is the shared
-    "Customer#00" (one 192k-member bucket), and the planted edit always
-    sits in chunk 2, so the constant bucket is exactly the one carrying
-    the matches and cannot be purged. Strip constant affixes first
-    (exact: common-affix trimming preserves unit-cost Levenshtein — the
-    standard diff-tool lemma) or use ``method='delete'``.
-
     ``method='delete'`` (k <= 2) is the FastSS / SymSpell deletion
     neighborhood (Bocek et al. 2007) in symmetric self-join form:
     ed(s,t) <= k implies a common string is reachable from both sides by
@@ -3234,27 +3212,25 @@ def edit_distance_join(
     dense alphabets AND constant affixes, at the cost of L+1 variants
     per key (k=1; +C(L,2) at k=2; refuses k>2). The regime map,
     measured on the 192k replicated-ID corpus at local[32]: prefix q=2
-    killed after 25 min single-task crawl, q=4 straggler-stuck, chunk
-    stuck on the constant bucket — delete finishes in 15.2s (7.49M
-    exact pairs, 96000/96000 planted twins). On natural text all three
-    agree (brute-parity-pinned); prefix is the cheapest there.
+    killed after 25 min single-task crawl, q=4 straggler-stuck — delete
+    finishes in 15.2s (7.49M exact pairs, 96000/96000 planted twins). On
+    natural text both agree (brute-parity-pinned); prefix is the
+    cheapest there.
 
-    All methods return the SAME exact result set (cross-method equality
+    Both methods return the SAME exact result set (cross-method equality
     is hash-checked by the driver oracle), so the choice is purely a
-    performance call: prefix for natural text, delete for identifiers
-    and small k, chunk for long variable keys at larger k."""
+    performance call: prefix for natural text and k > 2, delete for
+    identifiers and constant-affix corpora at small k."""
     if k < 1:
         raise ValueError("k must be >= 1 (use exact dedup for k = 0)")
     if q < 1:
         raise ValueError("q must be >= 1")
-    if method not in ("prefix", "chunk", "delete"):
-        raise ValueError(
-            f"unknown method {method!r} (use 'prefix', 'chunk' or 'delete')"
-        )
+    if method not in ("prefix", "delete"):
+        raise ValueError(f"unknown method {method!r} (use 'prefix' or 'delete')")
     if method == "delete" and k > 2:
         raise ValueError(
             "method='delete' supports k <= 2 (the deletion neighborhood is "
-            "C(len, k) variants per key — use 'prefix' or 'chunk' beyond)"
+            "C(len, k) variants per key — use 'prefix' beyond)"
         )
     recs = records.select(
         F.col(id_col).alias("_id"),
@@ -3311,68 +3287,7 @@ def edit_distance_join(
             )
             .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         )
-    elif method == "chunk":
-        # Pass-Join chunk signatures (Li, Deng & Feng ICDE 2011): split
-        # each key into k+1 disjoint even chunks; <= k edits touch <= k
-        # chunks, so one chunk of EITHER side survives verbatim in the
-        # other at a start position shifted by at most k. Candidates =
-        # chunks(x) equi-joined against ALL substrings of y at the
-        # possible chunk lengths with |pos shift| <= k. The signature
-        # keys are ~len/(k+1) chars, so buckets stay tiny even on dense
-        # digit corpora where every q-gram is shared by thousands — the
-        # regime the prefix path's frequency order cannot rescue.
-        nch = k + 1
-        chunks = (
-            recs.where(F.col("_len") >= nch)
-            .select(
-                F.col("_id").alias("id_c"),
-                "_key",
-                F.expr(
-                    f"explode(transform(sequence(0, {k}), i -> struct("
-                    f"cast((i * _len) div {nch} + 1 as int) as cpos,"
-                    f"cast(((i + 1) * _len) div {nch}"
-                    f" - (i * _len) div {nch} as int) as clen)))"
-                ).alias("c"),
-            )
-            .select(
-                "id_c",
-                F.expr("substring(_key, c.cpos, c.clen)").alias("sig"),
-                F.col("c.cpos").alias("cpos"),
-            )
-            .repartition(int(num_partitions), "sig")
-        )
-        probes = (
-            recs.where(F.col("_len") >= 1)
-            .select(
-                F.col("_id").alias("id_p"),
-                F.expr(
-                    "explode(flatten(transform("
-                    f"sequence(greatest((_len - {k}) div {nch}, 1),"
-                    f" least((_len + {k}) div {nch} + 1, _len)),"
-                    " l -> transform(sequence(1, _len - l + 1),"
-                    " p -> struct(substring(_key, p, cast(l as int)) as sig,"
-                    " cast(p as int) as ppos)))))"
-                ).alias("s"),
-            )
-            .select("id_p", F.col("s.sig").alias("sig"), F.col("s.ppos").alias("ppos"))
-            .repartition(int(num_partitions), "sig")
-        )
-        cand_main = (
-            chunks.join(probes, "sig")
-            .where(
-                (F.col("id_c") != F.col("id_p"))
-                & (F.abs(F.col("cpos") - F.col("ppos")) <= k)
-            )
-            .select(
-                F.least("id_c", "id_p").alias("id_a"),
-                F.greatest("id_c", "id_p").alias("id_b"),
-            )
-        )
-        # degenerate = keys too short to cut k+1 non-empty chunks; pairs
-        # where EITHER side chunks are complete above (both directions
-        # are generated), so only short x short needs the band fallback
-        degen = recs.where(F.col("_len") < nch).select("_id", "_len")
-    if method == "delete":
+    else:
         # FastSS / SymSpell deletion neighborhood (Bocek et al. 2007),
         # symmetric self-join form: ed(s,t) <= k implies some string is
         # reachable from BOTH by deleting <= k chars (a substitution is
@@ -3381,7 +3296,7 @@ def edit_distance_join(
         # a complete candidate generator. Buckets contain only keys
         # within ed 2k of each other BY CONSTRUCTION — immune to shared
         # constant affixes and dense alphabets, the regimes that defeat
-        # gram prefixes and chunks (the scale story in the docstring).
+        # gram prefixes (the scale story in the docstring).
         # Cost: L+1 variants per key at k=1, +C(L,2) at k=2.
         d1 = (
             "transform(sequence(1, cast(_len as int)),"

@@ -1,106 +1,13 @@
-"""Sequence packing: fill fixed token budgets for LLM training batches.
+"""Long-document chunking: overlapping token windows for context prep.
 
-Given per-document token counts, assign each document to a pack such that
-no pack exceeds ``capacity`` tokens (an oversized single document gets its
-own pack — truncation is the tokenizer's job, not the packer's).
-
-Spark shape: packing is inherently sequential, so the unit of sequential
-work is the PARTITION — hash repartitioning on the id with a PINNED
-partition count assigns every doc to ``pmod(hash(doc_id), P)``, a pure
-function of the id: partition membership (and therefore every pack id) is
-bit-identical across sessions, upstream layouts and parallelism levels,
-unlike range partitioning whose boundaries are SAMPLED from the input's
-physical layout. Each partition packs its ids in sorted order inside one
-Arrow-batched ``mapInPandas`` pass (state carries across batches within a
-partition). Pack ids are globally unique via
-``partition_id << 40 | local_pack``. Per-partition greedy wastes at most
-one partial pack per partition versus a global sequential fill — at 10^12
-docs that is noise, and it is what makes the operator embarrassingly
-parallel.
+``chunk_documents`` is pure column expressions over the token array — one
+projection, no shuffle, no UDF.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-_PACKED = StructType(
-    [
-        StructField("pack_id", LongType(), False),
-        StructField("doc_id", StringType(), False),
-        StructField("n_tokens", LongType(), False),
-    ]
-)
-
-
-def pack_sequences(
-    doc_tokens: DataFrame,
-    capacity: int,
-    id_col: str = "doc_id",
-    count_col: str = "n_tokens",
-    num_partitions: int = 1024,
-) -> DataFrame:
-    """(doc_id, n_tokens) → (pack_id, doc_id, n_tokens), deterministic.
-
-    Sequential next-fit in id order within hash partitions: a document
-    that would overflow the open pack closes it and starts the next. Every
-    pack satisfies ``total ≤ capacity`` unless it holds exactly one
-    oversized document.
-
-    Determinism contract: for a fixed ``(capacity, num_partitions)``, every
-    (pack_id, doc_id) assignment is bit-identical across Spark sessions,
-    input file layouts, and cluster sizes — partition membership is
-    ``pmod(hash(doc_id), num_partitions)``, a pure function of the id
-    (NEVER a sampled range boundary or the session's shuffle-partition
-    config). Changing ``num_partitions`` is a repack — and that includes
-    DEFAULT changes across library versions (the default was 64 before it
-    became 1024): any caller whose pack ids must survive an upgrade should
-    pin ``num_partitions`` explicitly rather than rely on the default.
-
-    ``num_partitions`` is ALSO the operator's parallelism ceiling — each
-    partition packs sequentially in one mapInPandas task. The default (1024)
-    saturates a mid-size cluster; for 10^9+-doc inputs SIZE IT EXPLICITLY
-    (docs_per_partition ≈ n_docs / num_partitions is the unit of sequential
-    work; pack_id's ``partition_id << 40`` layout supports P up to 2^23).
-    A small-data caller wanting few tasks should likewise pass a small P.
-    """
-    base = (
-        doc_tokens.select(
-            F.col(id_col).cast("string").alias("doc_id"),
-            F.col(count_col).cast("long").alias("n_tokens"),
-        )
-        .repartition(num_partitions, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        local, used = 0, 0
-        for pdf in batches:
-            rows = []
-            for d, n in zip(pdf["doc_id"], pdf["n_tokens"]):
-                n = int(n)
-                if used > 0 and used + n > capacity:
-                    local += 1
-                    used = 0
-                used += n
-                rows.append(((pid << 40) | local, d, n))
-            yield pd.DataFrame(rows, columns=["pack_id", "doc_id", "n_tokens"])
-
-    return base.mapInPandas(run, _PACKED)
-
-
-def pack_summary(packed: DataFrame) -> DataFrame:
-    """(pack_id, n_docs, total_tokens) — the training-loader manifest."""
-    return packed.groupBy("pack_id").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("total_tokens")
-    )
 
 
 def chunk_documents(

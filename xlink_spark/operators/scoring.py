@@ -452,7 +452,6 @@ def score_has_prob(
     candidates: DataFrame,
     link_prob: DataFrame,
     cfg: PredictorConfig | None = None,
-    entity_prior: DataFrame | None = None,
 ) -> DataFrame:
     """The has-prob scoring path (xlink.py:147-176, 347-354).
 
@@ -464,36 +463,17 @@ def score_has_prob(
       mention_believe = (best_cand_believe + link_prob)/2 (xlink.py:172-173)
       gates: link_prob > link_prob_th AND believe > believe_th
 
-    ``cfg.believe_version == 1`` (C10 v1, xlink.py:338-345 — dead code in
-    the reference but part of its API surface) swaps the prior term for the
-    entity prior P(e): pass ``entity_prior`` = (entity_id, prior); a
-    candidate with no prior row scores 0, as in the reference's
-    None-guard.
+    This is the reference's believe_score_v2 (xlink.py:347, what predict
+    calls at xlink.py:161); its v1 fusion over P(e) (xlink.py:338-345) is
+    dead code there and is not built.
     """
     cfg = cfg or PredictorConfig()
-    if cfg.believe_version == 1:
-        if entity_prior is None:
-            raise ValueError("believe_version=1 requires entity_prior")
-        scored = candidates.join(
-            F.broadcast(entity_prior.select("entity_id", "prior")),
-            "entity_id",
-            "left",
-        ).withColumn(
-            "cand_believe",
-            F.coalesce(
-                F.pow("prior", F.lit(cfg.prior_power))
-                * F.col("ctx_word_sim")
-                * F.col("ctx_ent_sim"),
-                F.lit(0.0),
-            ),
-        )
-    else:
-        scored = candidates.withColumn(
-            "cand_believe",
-            F.pow("p", F.lit(cfg.prior_power))
-            * F.col("ctx_word_sim")
-            * F.col("ctx_ent_sim"),
-        )
+    scored = candidates.withColumn(
+        "cand_believe",
+        F.pow("p", F.lit(cfg.prior_power))
+        * F.col("ctx_word_sim")
+        * F.col("ctx_ent_sim"),
+    )
     scored = _drop_arrays(scored)  # narrow rows through the top-1 sort
     top = Window.partitionBy(*MENTION_KEY).orderBy(
         F.col("cand_believe").desc(), F.col("entity_id").asc()

@@ -246,111 +246,6 @@ def spans_to_markup(spans: Column | str) -> Column:
     )
 
 
-def links_to_annotated_doc(
-    docs_plain: DataFrame, links: DataFrame, style: str = "zh"
-) -> DataFrame:
-    """S11: rebuild annotated text from linked mentions, per output style.
-
-    Reference OutputFormatter variants:
-      * ``"zh"``     — ``【mention|entity_id】``  (format_as_annotated_doc,
-        OutputFormatter.py:59-73)
-      * ``"zh_url"`` — ``【mention|[eid](xlore-url)】``
-        (format_as_annotated_doc_with_url, OutputFormatter.py:75-89)
-      * ``"wiki"``   — ``[[entity_id|mention]]`` (the standard-corpus form)
-
-    One JVM-side fold per doc: mentions are collected + sorted per doc_id,
-    then a single ``aggregate`` walks them carrying (acc, pos) — no UDF, no
-    per-mention shuffle. Docs with no links pass through unchanged.
-    Output: (doc_id, annotated).
-    """
-
-    def token(m):
-        if style == "zh":
-            return F.concat(
-                F.lit("【"), m["surface"], F.lit("|"),
-                F.coalesce(m["entity_id"], F.lit("")), F.lit("】"),
-            )
-        if style == "zh_url":
-            url = F.concat(
-                F.lit("https://xlore.org/instance.html?url=http://xlore.org/instance/"),
-                F.coalesce(m["entity_id"], F.lit("")),
-            )
-            return F.concat(
-                F.lit("【"), m["surface"], F.lit("|["),
-                F.coalesce(m["entity_id"], F.lit("")), F.lit("]("), url, F.lit(")】"),
-            )
-        return F.concat(
-            F.lit("[["), F.coalesce(m["entity_id"], F.lit("")),
-            F.lit("|"), m["surface"], F.lit("]]"),
-        )
-
-    per_doc = (
-        links.select("doc_id", "start", "end", "surface", "entity_id")
-        .groupBy("doc_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("start", "end", "surface", "entity_id"))
-            ).alias("ms")
-        )
-    )
-    j = docs_plain.select("doc_id", "text").join(per_doc, "doc_id", "left")
-    folded = F.aggregate(
-        "ms",
-        F.struct(F.lit("").alias("acc"), F.lit(0).alias("pos")),
-        lambda st, m: F.struct(
-            F.concat(
-                st["acc"],
-                F.substring(F.col("text"), st["pos"] + 1, m["start"] - st["pos"]),
-                token(m),
-            ).alias("acc"),
-            m["end"].alias("pos"),
-        ),
-        lambda st: F.concat(
-            st["acc"],
-            F.substring(F.col("text"), st["pos"] + 1, F.length("text") - st["pos"]),
-        ),
-    )
-    return j.select("doc_id", F.coalesce(folded, F.col("text")).alias("annotated"))
-
-
-def normalize_spans(spans: Column | str) -> Column:
-    """Canonical span form: merge runs of consecutive text spans into one.
-
-    The span-struct model can fragment plain text arbitrarily ("ab" ≡
-    "a"+"b"), and the markup serialization cannot represent the boundary —
-    so span-sequence EQUALITY checks must compare the canonical form, where
-    every maximal run of text spans is a single span carrying the first
-    fragment's offset. Anchors and media pass through untouched. One JVM
-    ``aggregate`` fold per row; no shuffle, no UDF."""
-    c = F.col(spans) if isinstance(spans, str) else spans
-    empty = F.array().cast(
-        "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    )
-    return F.aggregate(
-        c,
-        empty,
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1)["kind"] == "text")
-            & (s["kind"] == "text"),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(
-                    F.struct(
-                        F.lit("text").alias("kind"),
-                        F.concat(
-                            F.coalesce(F.element_at(acc, -1)["text"], F.lit("")),
-                            F.coalesce(s["text"], F.lit("")),
-                        ).alias("text"),
-                        F.lit(None).cast("string").alias("media_ref"),
-                        F.element_at(acc, -1)["offset"].alias("offset"),
-                    )
-                ),
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
 def span_sequence_key(spans: Column | str) -> Column:
     """Canonical (kind, text, media_ref, order) sequence fingerprint.
 

@@ -28,25 +28,10 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens_lower(text))
 
 
-def word_token_count(text: Column | str) -> Column:
-    """BPE-ish subword proxy: count of alpha runs + digit runs + punct marks.
-
-    A deterministic stand-in for tokenizer counts (real BPE needs the
-    tokenizer's merges table; this keeps the same order of magnitude and is
-    exactly reproducible in SQL)."""
-    c = F.col(text) if isinstance(text, str) else text
-    pieces = F.regexp_extract_all(c, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0)
-    return F.size(pieces)
-
-
 def punct_ratio_raw(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
     return F.when(F.length(c) > 0, n_punct / F.length(c)).otherwise(F.lit(0.0))
-
-
-def punct_ratio(text: Column | str) -> Column:
-    return F.round(punct_ratio_raw(text), 6)
 
 
 def stopword_ratio_raw(text: Column | str, lang: str = "en") -> Column:
@@ -54,10 +39,6 @@ def stopword_ratio_raw(text: Column | str, lang: str = "en") -> Column:
     sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    return F.round(stopword_ratio_raw(text, lang), 6)
 
 
 def quality_score(text: Column | str) -> Column:
@@ -127,20 +108,6 @@ def fingerprint(text: Column | str, k: int = 8) -> Column:
     toks = tokens_lower(text)
     head = F.concat_ws(" ", F.slice(toks, 1, k))
     return F.md5(head)
-
-
-def text_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One-pass per-doc stat sheet (the curation feature table)."""
-    return docs.select(
-        id_col,
-        F.length(text_col).alias("n_chars"),
-        token_count(text_col).alias("n_tokens"),
-        word_token_count(text_col).alias("n_subtokens"),
-        punct_ratio(text_col).alias("punct_ratio"),
-        stopword_ratio(text_col, "en").alias("stopword_ratio_en"),
-        quality_score(text_col).alias("quality"),
-        fingerprint(text_col).alias("fingerprint"),
-    )
 
 
 def repetition_stats(

@@ -20,7 +20,7 @@ the audit is a per-stage count over the SAME list — so materializing
 (kept, audit) computes each expensive stage (LSH band join, contamination
 join) exactly once when the list is checkpointed (it is id+stage only — a few
 bytes per dropped doc). Nothing per-group is ever collected: the exact-dup
-path is a ``row_number`` window (dedup.exact_dup_drops), not a
+path is a ``row_number`` window, not a
 collect_list, so degenerate hash groups stream through their reducer.
 
 Two structural choices are measurement-driven, not stylistic:

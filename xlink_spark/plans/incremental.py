@@ -85,16 +85,6 @@ def link_increment(
     return store.read_iteration(spark, "links", batch_id)
 
 
-def all_links(spark: SparkSession, store: SnapshotStore) -> DataFrame:
-    """Union of every committed link batch (the lake's links view).
-
-    Enumerates MANIFEST-VALID iterations through the store — never a path
-    glob, which would also match stale ``.tmp-`` dirs from a crashed commit
-    and manifest-less half-written batches.
-    """
-    return store.read_iterations_union(spark, "links")
-
-
 def links_with_batch(
     spark: SparkSession, store: SnapshotStore, stage: str = "links"
 ) -> DataFrame:
@@ -158,9 +148,9 @@ def fold_link_history(
 def current_links(spark: SparkSession, store: SnapshotStore) -> DataFrame:
     """The lake's CURRENT links view: retractions applied, history folded.
 
-    ``all_links`` is raw history (every batch's rows, including links a
-    later batch superseded); this is ``fold_link_history`` over the store's
-    committed trail. Idempotent: folding an already-folded store returns
+    ``store.read_iterations_union(spark, "links")`` is raw history (every
+    batch's rows, including links a later batch superseded); this is
+    ``fold_link_history`` over the store's committed trail. Idempotent: folding an already-folded store returns
     the same rows, which is what makes fold_retractions' two-stage commit
     crash-safe without a cross-stage transaction.
     """
@@ -262,22 +252,4 @@ def table_diff(
             .otherwise(F.lit("changed"))
             .alias("change"),
         )
-    )
-
-
-def snapshot_diff(
-    spark: SparkSession,
-    store: SnapshotStore,
-    stage: str,
-    old_iteration: int,
-    new_iteration: int,
-    key_cols: list[str],
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
-    """table_diff over two committed iterations of a snapshot stage."""
-    return table_diff(
-        store.read_iteration(spark, stage, old_iteration),
-        store.read_iteration(spark, stage, new_iteration),
-        key_cols,
-        compare_cols,
     )

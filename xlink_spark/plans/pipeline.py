@@ -100,15 +100,13 @@ def link_has_prob(
     word_emb: DataFrame,
     entity_emb: DataFrame,
     pcfg: PredictorConfig,
-    entity_prior: DataFrame | None = None,
     broadcast_dict: bool = True,
 ) -> DataFrame:
     """The has-prob ('ma') pass over resolved mentions (xlink.py:107-176):
     context words → unambiguous-seed pool → candidates ⋈ ``e_given_m`` →
     context-entity similarity → believe fusion, gates and top-1.
 
-    ``entity_prior`` is only read when ``pcfg.believe_version == 1`` (C10
-    v1). Output: (doc_id, start, end, surface, entity_id, believe,
+    Output: (doc_id, start, end, surface, entity_id, believe,
     parse_from='ma').
     """
     # fan-out point (ctx branch + seed branch): persist the NARROW mention
@@ -130,7 +128,7 @@ def link_has_prob(
     # has-prob pool: ALL unambiguous seeds, own seed included; empty ⇒ 1
     # (xlink.py:157-161, 329-334)
     cands = SC.context_entity_vector(cands, doc_agg, entity_emb=entity_emb)
-    return SC.score_has_prob(cands, link_prob, pcfg, entity_prior=entity_prior)
+    return SC.score_has_prob(cands, link_prob, pcfg)
 
 
 def link_corpus(
@@ -166,12 +164,9 @@ def link_corpus(
                 "parse_from", F.lit("ma")
             ),
         )
-    # entity_prior is only consumed when pcfg.believe_version == 1 (C10 v1);
-    # passing it unconditionally keeps the flag usable from the main pipeline
     prob_links = link_has_prob(
         DT.resolve_conflicts(ma_detected), docs_plain, d.e_given_m, d.link_prob,
-        word_emb, entity_emb, pcfg, entity_prior=d.entity_prior,
-        broadcast_dict=bcast,
+        word_emb, entity_emb, pcfg, broadcast_dict=bcast,
     )
 
     # ---- no-prob pass (title dict) ------------------------------------------

@@ -30,9 +30,9 @@ MANIFEST = "MANIFEST.json"
 # Committed iteration dirs match EXACTLY this — temp dirs are named outside
 # the namespace (.tmp-iter_...) so a crash mid-commit can never leave a dir
 # that listing code mistakes for a snapshot (int("00001.tmp-ab12") ValueError,
-# or a manifest-less half-write unioned into all_links). \d{5,}: the %05d
-# format grows past five digits at iteration 100000 and those must still
-# list.
+# or a manifest-less half-write unioned into a read of every iteration).
+# \d{5,}: the %05d format grows past five digits at iteration 100000 and
+# those must still list.
 _ITER_RE = re.compile(r"^iter_(\d{5,})$")
 
 

@@ -1,2 +1,3 @@
-"""Sources & sinks (SURVEY §2.1): corpus standardization, dictionary files,
-TTL dumps, word2vec binaries, gold datasets."""
+"""Sources (SURVEY §2.1): raw-corpus standardization, entity-dictionary
+files, word2vec binaries (the readers behind jobs/run_ingest.py), AIDA
+CoNLL and JSONL corpora."""

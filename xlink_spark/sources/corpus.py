@@ -1,4 +1,4 @@
-"""Corpus ingestion & standardization (SURVEY §2.1 S1/S2, §2.2 F9).
+"""Corpus ingestion & standardization (SURVEY §2.1 S1, §2.2 F9).
 
 Reference: corpus_full_refine (prepare_standard_input.py:333-516) reads
 ``title\\t\\tsub_title\\t\\turl\\t\\tcontent`` lines, validates annotation
@@ -14,7 +14,7 @@ no Python.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from xlink_spark.functions.text import normalize_uri
@@ -96,7 +96,7 @@ def standardize_corpus(
     path: str,
     kb_uris: DataFrame,
     kb_entities: DataFrame,
-    store=None,
+    store,
     stage: str = "standard_corpus",
 ) -> tuple[DataFrame, DataFrame]:
     """S1 end-to-end: raw lines → (documents(spans), quarantined).
@@ -108,12 +108,12 @@ def standardize_corpus(
     prepare_standard_input.py:349-398 — but keeping the rows, not just the
     count).
 
-    ``store``: when a SnapshotStore is given, both sides are committed —
+    Both sides are committed to the SnapshotStore ``store`` —
     ``<stage>_quarantine`` first (its write evaluates an observe() on the
     reject stream), then ``<stage>`` with the per-reason reject counters and
     the observed accepted-row count recorded in its manifest metrics: the
     reference's error_no tallies, durably attached to the snapshot they
-    describe.
+    describe. The returned frames read the committed tables back.
     """
     raw = read_raw_corpus(spark, path)
     resolved = resolve_doc_entity(raw, kb_uris, kb_entities)
@@ -131,11 +131,6 @@ def standardize_corpus(
     )
     docs = valid.select(F.col("entity_id").alias("doc_id"), F.col("content").alias("text"))
     spans = parse_markup_to_spans(docs)
-    if store is None:
-        return spans, invalid
-
-    from pyspark.sql import Observation
-
     inv_obs = Observation()
     invalid_observed = invalid.observe(
         inv_obs,
@@ -159,103 +154,3 @@ def standardize_corpus(
         },
     )
     return store.read_table(spark, stage), store.read_table(spark, f"{stage}_quarantine")
-
-
-def mark_title_mentions(resolved: DataFrame) -> DataFrame:
-    """C14/S1 mark_titles option: self-mention injection.
-
-    Reference: prepare_standard_input.py:357-361, 407, 442 — every literal
-    occurrence of the doc's own title in its content becomes an anchor to
-    the doc's entity. Literal (non-regex) replace keeps titles with regex
-    metacharacters safe, mirroring the reference's re.escape.
-    """
-    marked = F.expr(
-        "replace(content, title, concat('[[', entity_id, '|', title, ']]'))"
-    )
-    return resolved.withColumn(
-        "content",
-        F.when(
-            F.col("entity_id").isNotNull()
-            & F.col("title").isNotNull()
-            & (F.length("title") > 0)
-            # don't nest: skip docs whose content already anchors the title
-            & ~F.coalesce("content", F.lit("")).contains(
-                F.concat(F.lit("|"), F.col("title"), F.lit("]]"))
-            ),
-            marked,
-        ).otherwise(F.col("content")),
-    )
-
-
-def infobox_pre_refine(infobox_json: DataFrame, content_col: str = "content") -> DataFrame:
-    """S2: flatten a JSON infobox {k: v} into 'k v k v …' text.
-
-    Reference: infobox_pre_refine (prepare_standard_input.py:99-136).
-    from_json with a map schema + map flattening — no UDF.
-    """
-    parsed = infobox_json.withColumn(
-        "_m", F.from_json(F.col(content_col), "map<string,string>")
-    )
-    flat = F.concat_ws(
-        " ",
-        F.flatten(
-            F.transform(
-                F.map_entries("_m"), lambda e: F.array(e["key"], e["value"])
-            )
-        ),
-    )
-    return parsed.withColumn("flat_text", flat).drop("_m")
-
-
-def read_ttl_entities(spark, path: str) -> DataFrame:
-    """S3: .ttl dump → (entity_id, label, supplement).
-
-    Reference: get_id2title_from_ttl (prepare_standard_input.py:13-40) scans
-    for rdfs:label and property:supplement triples. Regex extracts + one
-    groupBy.
-    """
-    lines = spark.read.text(path)
-    sid = F.regexp_extract("value", r"<[^>]*/([^/>]+)>\s", 1)
-    label = F.regexp_extract("value", r'rdfs:label\s+"([^"]*)"', 1)
-    supp = F.regexp_extract("value", r'property:supplement\s+"([^"]*)"', 1)
-    rows = lines.select(
-        sid.alias("entity_id"), label.alias("label"), supp.alias("supplement")
-    ).filter((F.col("label") != "") | (F.col("supplement") != ""))
-    return rows.groupBy("entity_id").agg(
-        F.max(F.when(F.col("label") != "", F.col("label"))).alias("label"),
-        F.max(F.when(F.col("supplement") != "", F.col("supplement"))).alias("supplement"),
-    )
-
-
-def read_gold_dataset(spark, docs_json: str, annotations_json: str) -> DataFrame:
-    """S9: DatasetLoader format → gold_mentions DataFrame.
-
-    Reference: evaluation/DatasetLoader.py:8-27 — docs.json is List[str],
-    annotations.json is List[List[(start, end, label, entity_id|"NIL")]].
-    """
-    import json
-
-    with open(docs_json) as f:
-        docs = json.load(f)
-    with open(annotations_json) as f:
-        anns = json.load(f)
-    rows = []
-    for i, (doc, ann) in enumerate(zip(docs, anns)):
-        for start, end, label, eid in ann:
-            rows.append((f"d{i:06d}", int(start), int(end), label, eid or "NIL"))
-    return spark.createDataFrame(
-        rows, "doc_id string, start int, end int, surface string, entity_id string"
-    )
-
-
-def in_links(out_links: DataFrame, entity_id: str, kb_entities: DataFrame) -> DataFrame:
-    """S12: docs whose out-links contain X, joined to the entity dict.
-
-    Reference: get_in_links.py:5-19 (CLI --id).
-    """
-    hits = out_links.filter(F.col("entity_id") == entity_id).select("doc_id")
-    return hits.join(
-        kb_entities.select(F.col("entity_id").alias("doc_id"), "title", "full_title"),
-        "doc_id",
-        "left",
-    )

@@ -1,4 +1,4 @@
-"""Entity-dictionary file I/O (SURVEY §2.1 S4/S5).
+"""Entity-dictionary file reader (SURVEY §2.1 S5).
 
 Reference 4-col format ``<title>\\t\\t<sub_title>\\t\\t<uri1::;uri2…>\\t\\t<id>``
 (utils/dictionary.py:57-114, modules/EntityManager.py:24-49): loaded into
@@ -9,7 +9,6 @@ blocking key) + the exploded ``kb_uris`` index.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xlink_spark.functions.text import normalize_uri, surface_norm
@@ -50,18 +49,3 @@ def read_entity_dictionary(spark, path: str, source: str = "bd", lang: str = "zh
         F.explode("uris").alias("raw_uri"), "entity_id"
     ).select(normalize_uri("raw_uri").alias("uri"), "entity_id").distinct()
     return kb, kb_uris
-
-
-def write_entity_dictionary(kb: DataFrame, path: str) -> None:
-    """S4: kb_entities → the reference's 4-col text format (one text file
-    per partition; concatenate or coalesce upstream as needed)."""
-    out = kb.select(
-        F.concat_ws(
-            SEP,
-            F.col("title"),
-            F.coalesce("sub_title", F.lit("")),
-            F.concat_ws(URI_SEP, F.coalesce("uris", F.array())),
-            F.col("entity_id"),
-        ).alias("value")
-    )
-    out.write.mode("overwrite").text(path)

@@ -8,13 +8,12 @@ terminated by ``\\n``.
 Spark path: ``spark.read.format("binaryFile")`` → one mapInPandas over file
 payloads (a vector file is one blob; multiple files parallelize across
 tasks) → (key, vec) rows. Files beyond a few GB should be converted once to
-parquet with this reader and served columnar thereafter — that conversion is
-exactly what this module is for.
+parquet with this reader and served columnar thereafter — jobs/run_ingest.py
+is that conversion.
 """
 
 from __future__ import annotations
 
-import struct
 from collections.abc import Iterator
 
 import numpy as np
@@ -62,18 +61,3 @@ def read_word2vec_binary(spark, path: str) -> DataFrame:
 
     files = spark.read.format("binaryFile").load(path).select("content")
     return files.mapInPandas(parse, _SCHEMA)
-
-
-def write_word2vec_binary(rows: list[tuple[str, list[float]]], path: str) -> None:
-    """Inverse (test fixture writer): [(word, vec)] → reference binary."""
-    if not rows:
-        with open(path, "wb") as f:
-            f.write(b"0 0\n")
-        return
-    dim = len(rows[0][1])
-    with open(path, "wb") as f:
-        f.write(f"{len(rows)} {dim}\n".encode())
-        for word, vec in rows:
-            f.write(word.encode("utf-8") + b" ")
-            f.write(struct.pack(f"<{dim}f", *vec))
-            f.write(b"\n")

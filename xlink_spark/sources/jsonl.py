@@ -55,8 +55,3 @@ def read_jsonl_corpus(
     docs = tagged.filter(F.col("reason").isNull()).drop("_corrupt", "reason")
     quarantined = tagged.filter(F.col("reason").isNotNull())
     return docs, quarantined
-
-
-def write_jsonl_corpus(docs: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write a documents table back out as JSONL (sharded text files)."""
-    docs.write.mode(mode).json(path)
