@@ -764,13 +764,7 @@ def run_er_job(spark, args) -> dict:
         # clusters with the full gauge family over every record whose
         # gold label is non-null, plus the CoNLL-2012 official average
         # (mean of MUC / B³ / CEAF_e) — all exact bigint micro values.
-        from xlink_spark.eval.bcubed import (
-            adjusted_rand,
-            bcubed,
-            blanc,
-            muc,
-            vmeasure,
-        )
+        from xlink_spark.eval.bcubed import cluster_gauges
         from xlink_spark.eval.ceaf import ceaf
 
         glab = recs.select(
@@ -779,22 +773,18 @@ def run_er_job(spark, args) -> dict:
         ).filter(F.col("gold").isNotNull())
         lab = hold(asg.join(glab, "id").select(F.col("cluster").alias("pred"), "gold"))
         try:
-            b = bcubed(lab).collect()[0]
-            m = muc(lab).collect()[0]
-            bl = blanc(lab).collect()[0]
-            ar = adjusted_rand(lab).collect()[0]
-            vm = vmeasure(lab).collect()[0]
+            g = cluster_gauges(lab).collect()[0]
             eval_metrics = {
-                "n_labeled": b["n_items"],
-                "bcubed_f_micro": b["bcubed_f_micro"],
-                "muc_f_micro": m["muc_f_micro"],
-                "blanc_micro": bl["blanc_micro"],
+                "n_labeled": g["n_items"],
+                "bcubed_f_micro": g["bcubed_f_micro"],
+                "muc_f_micro": g["muc_f_micro"],
+                "blanc_micro": g["blanc_micro"],
                 "ari_micro": (
-                    (ar["ari_num"] * 1000000) // ar["ari_den"]
-                    if ar["ari_den"]
+                    (g["ari_num"] * 1000000) // g["ari_den"]
+                    if g["ari_den"]
                     else 1000000
                 ),
-                "v_measure": round(vm["v_measure"], 6),
+                "v_measure": round(g["v_measure"], 6),
             }
             try:
                 ce = ceaf(lab).collect()[0]
@@ -806,8 +796,8 @@ def run_er_job(spark, args) -> dict:
                 eval_metrics["ceafm_f_micro"] = ce["ceafm_f_micro"]
                 eval_metrics["ceafe_f_micro"] = ce["ceafe_f_micro"]
                 eval_metrics["conll_f_micro"] = (
-                    b["bcubed_f_micro"]
-                    + m["muc_f_micro"]
+                    g["bcubed_f_micro"]
+                    + g["muc_f_micro"]
                     + ce["ceafe_f_micro"]
                 ) // 3
         finally:

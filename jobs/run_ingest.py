@@ -15,10 +15,13 @@ Usage (cluster or local), ingest then link:
 
 Inputs, in the reference's formats:
 
-* ``--raw-corpus``: ``title\\t\\tsub_title\\t\\turl\\t\\tcontent`` lines with
-  ``[[entity_id|mention]]`` anchors (SURVEY S1). Each line is resolved to
-  its entity by URI, parent URI or full title against the dictionary;
-  rows of bad shape, unresolved entity or invalid markup are quarantined.
+* ``--raw-corpus``: ``title\\t\\tsub_title\\t\\turl\\t\\tcontent`` lines whose
+  anchors are already ``[[entity_id|mention]]`` (SURVEY S1): every
+  ``[[a|b]]`` is read as entity id ``a``, mention ``b``. The reference's
+  ``[[mention|url]]`` anchors are not rewritten; convert them first. Each
+  line is resolved to its entity by URI, parent URI or full title against
+  the dictionary; rows of bad shape, unresolved entity or invalid markup
+  are quarantined.
 * ``--entity-dict``: ``title\\t\\tsub_title\\t\\turi1::;uri2\\t\\tentity_id``
   lines (S5).
 * ``--word-vec`` / ``--entity-vec``: word2vec binaries (S6).

@@ -407,9 +407,17 @@ def test_ceaf_matches_bruteforce_optimal_alignment(spark):
     from xlink_spark.eval.ceaf import ceaf
 
     M = 1000000
+    labelings = []
     for seed in (13, 29):
         rng = random.Random(seed)
-        rows = [(rng.randint(0, 4), rng.randint(0, 3)) for _ in range(60)]
+        labelings.append([(rng.randint(0, 4), rng.randint(0, 3)) for _ in range(60)])
+    # entangled components next to isolated 1×1 ones (pred 10+k ↔ gold 10+k)
+    rng = random.Random(7)
+    labelings.append(
+        [(rng.randint(0, 3), rng.randint(0, 2)) for _ in range(30)]
+        + [(10 + k, 10 + k) for k in range(3) for _ in range(k + 1)]
+    )
+    for seed, rows in enumerate(labelings):
         cells: dict[tuple[int, int], int] = {}
         np_, ng_ = {}, {}
         for p, g in rows:
@@ -466,3 +474,122 @@ def test_ceaf_penalizes_bcubed_blind_spots(spark):
             spark.createDataFrame(wide, ["pred", "gold"]),
             max_pred_per_component=63,
         )
+
+
+def test_ceaf_runs_components_only_over_entangled_cells(spark, monkeypatch):
+    """A perfect clustering is all isolated 1×1 components: CEAF scores it
+    without the connected-components loop. On a mixed labeling the loop
+    sees exactly the entangled cells."""
+    import pytest as _pytest
+
+    import xlink_spark.eval.ceaf as ceaf_mod
+
+    def _no_cc(edges, *a, **kw):
+        raise AssertionError("connected_components called")
+
+    monkeypatch.setattr(ceaf_mod, "connected_components", _no_cc)
+    perf = spark.createDataFrame([(i % 5, 50 + i % 5) for i in range(20)], ["pred", "gold"])
+    r = ceaf_mod.ceaf(perf).collect()[0]
+    assert (r["phi3_total"], r["phi4_micro_total"]) == (20, 5 * MICRO)
+    assert r["ceafm_f_micro"] == r["ceafe_f_micro"] == MICRO
+    # a width guard still applies to a 1×1 component
+    with _pytest.raises(ValueError, match="gold clusters"):
+        ceaf_mod.ceaf(perf, max_gold_per_component=0)
+
+    from xlink_spark.operators.cluster import connected_components
+
+    seen = []
+
+    def _spy(edges, *a, **kw):
+        seen.append(sorted(tuple(e) for e in edges.collect()))
+        return connected_components(edges, *a, **kw)
+
+    monkeypatch.setattr(ceaf_mod, "connected_components", _spy)
+    # entangled: pred 1 over gold 1, 2 and pred 2 over gold 2; plus 1×1s
+    rows = [(1, 1), (1, 1), (1, 2), (2, 2), (3, 3), (4, 4), (4, 4)]
+    r = ceaf_mod.ceaf(spark.createDataFrame(rows, ["pred", "gold"])).collect()[0]
+    assert seen == [[(2, 3), (2, 5), (4, 5)]]  # nodes 2·pred / 2·gold+1
+    # 1×1s: φ3 1 + 2, φ4 10⁶ each; entangled optimum p1↔g1, p2↔g2
+    assert r["phi3_total"] == 3 + 2 + 1
+    assert r["phi4_micro_total"] == 2 * MICRO + 2 * 2 * MICRO // 5 + 2 * MICRO // 3
+
+
+def _gauge_replica(rows):
+    """Integer sums of every closed-form gauge, counted per cluster in
+    Python from (pred, gold) rows."""
+    from collections import Counter
+
+    cells, np_, ng_ = Counter(rows), Counter(p for p, _ in rows), Counter(g for _, g in rows)
+    n = len(rows)
+
+    def c2(k):
+        return k * (k - 1) // 2
+
+    def parts(side):
+        return Counter(pg[side] for pg in cells)
+
+    pp, pg = parts(0), parts(1)
+    return {
+        "n_items": n,
+        "n": n,
+        "n_pred_clusters": len(np_),
+        "n_gold_clusters": len(ng_),
+        "bcubed_p_micro": (
+            sum(c * c * MICRO // np_[p] for (p, _), c in cells.items()) // n if n else MICRO
+        ),
+        "bcubed_r_micro": (
+            sum(c * c * MICRO // ng_[g] for (_, g), c in cells.items()) // n if n else MICRO
+        ),
+        "muc_p_num": sum(k - pp[p] for p, k in np_.items()),
+        "muc_p_den": sum(k - 1 for k in np_.values()),
+        "muc_r_num": sum(k - pg[g] for g, k in ng_.items()),
+        "muc_r_den": sum(k - 1 for k in ng_.values()),
+        "sum_ij": sum(c2(c) for c in cells.values()),
+        "rc": sum(c2(c) for c in cells.values()),
+        "sum_a": sum(c2(k) for k in np_.values()),
+        "links_pred": sum(c2(k) for k in np_.values()),
+        "sum_b": sum(c2(k) for k in ng_.values()),
+        "links_gold": sum(c2(k) for k in ng_.values()),
+        "c2": c2(n),
+    }
+
+
+def test_cluster_gauges_equal_each_gauge(spark):
+    """cluster_gauges is one row carrying every column of the five
+    closed-form gauges: equal column for column to each public gauge on a
+    seeded random labeling, and its per-cluster sums equal a Python count
+    there and on empty input, all singletons and one cluster over
+    everything (the last two with ari_den = 0)."""
+    import random
+
+    from xlink_spark.eval.bcubed import (
+        adjusted_rand,
+        bcubed,
+        blanc,
+        cluster_gauges,
+        muc,
+        vmeasure,
+    )
+
+    rng = random.Random(11)
+    cases = {
+        "random": [(rng.randint(0, 6), rng.randint(0, 4)) for _ in range(70)],
+        "empty": [],
+        "singletons": [(i, 100 + i) for i in range(5)],
+        "one_cluster": [(3, 8)] * 6,
+    }
+    got = {}
+    for name, rows in cases.items():
+        got[name] = _row(cluster_gauges(spark.createDataFrame(rows, "pred long, gold long")))
+        for k, v in _gauge_replica(rows).items():
+            assert got[name][k] == v, (name, k)
+    df = spark.createDataFrame(cases["random"], "pred long, gold long")
+    for fn in (bcubed, muc, blanc, adjusted_rand, vmeasure):
+        for k, v in _row(fn(df)).items():
+            assert got["random"][k] == v, (fn.__name__, k)
+    empty = got["empty"]
+    assert (empty["ari_num"], empty["ari_den"], empty["ari"]) == (0, 0, None)
+    assert empty["bcubed_f_micro"] == empty["muc_f_micro"] == MICRO
+    assert empty["v_measure"] == 1.0
+    for name in ("singletons", "one_cluster"):
+        assert got[name]["ari_den"] == 0 and got[name]["ari"] is None, name

@@ -1,22 +1,29 @@
-"""B-cubed clustering precision / recall / F1 — the record-linkage
-community's standard cluster-quality metric (Bagga & Baldwin 1998).
+"""The closed-form cluster gauges: B³, MUC, BLANC, ARI and V-measure.
 
 The reference evaluates mention-level micro F1 only
 (MentionParsingEval.py:12-69); an entity-resolution engine whose final
 product is transitive CLUSTERS (north rule: blocking → pairwise scoring →
-transitive clustering) needs the cluster-grain gauge too. Per item i,
-B³-precision(i) = |pred(i) ∩ gold(i)| / |pred(i)| and B³-recall(i) swaps
-the denominator; the reported numbers are the means over items.
+transitive clustering) needs cluster-grain gauges too. B³ (Bagga & Baldwin
+1998) is item-averaged: B³-precision(i) = |pred(i) ∩ gold(i)| / |pred(i)|,
+B³-recall(i) swaps the denominator, and the reported numbers are the means
+over items.
 
-Scale shape — identical to eval/blocking.py: both means are pure functions
-of GROUP SIZES. Every item in the (pred=p, gold=g) contingency cell of
-size n_pg shares pred-cluster size n_p and gold-cluster size n_g, so
+Scale shape — one contingency pass for all five gauges. Every one of them
+is a function of the (pred=p, gold=g) contingency cells alone: a cell of
+size n_pg knows its pred-cluster size n_p, its gold-cluster size n_g and
+the number of cells parts_p / parts_g its two clusters split into, e.g.
 
     B³P = (1/N) Σ_cells n_pg² / n_p      B³R = (1/N) Σ_cells n_pg² / n_g
 
-— three map-side-combinable groupBy counts plus two narrow (key, count)
-equi-joins; no pair or item-pair is ever materialized, so the job is
-linear in records even when clusters hold 10⁶ members.
+``cluster_gauges`` builds the cells with one map-side-combinable groupBy
+and one window over each marginal (which also flags one cell per cluster,
+so per-cluster terms are summed once), then takes every sum of every gauge
+from ONE aggregate over the cells; the item count N rides a broadcast
+because each V-measure term divides by it. No pair or item-pair is ever
+materialized, so the job is linear in records even when clusters hold 10⁶
+members. ``bcubed`` / ``muc`` / ``blanc`` / ``adjusted_rand`` /
+``vmeasure`` are projections of that one row, so a caller that wants
+several gauges collects ``cluster_gauges`` once.
 
 Exactness: each cell contributes floor(n_pg² · 10⁶ / n_den) in bigint
 arithmetic, the contributions are summed, and the mean is one more integer
@@ -32,8 +39,199 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 _MICRO = 1_000_000
+
+
+def _contingency(assignments: DataFrame, pred_col: str, gold_col: str) -> DataFrame:
+    """The (pred, gold) contingency cells ``(p, g, n_pg)`` of non-null
+    labels, each with its marginal sizes ``n_p`` / ``n_g``, the number of
+    cells ``parts_p`` / ``parts_g`` of its pred and gold cluster, and
+    ``first_p`` / ``first_g``: true on exactly one cell of each cluster
+    (the one with the smallest label on the other side)."""
+    cells = assignments.groupBy(
+        F.col(pred_col).alias("p"), F.col(gold_col).alias("g")
+    ).agg(F.count(F.lit(1)).alias("n_pg"))
+    wp, wg = Window.partitionBy("p"), Window.partitionBy("g")
+    return cells.select(
+        "p",
+        "g",
+        "n_pg",
+        F.sum("n_pg").over(wp).alias("n_p"),
+        F.count(F.lit(1)).over(wp).alias("parts_p"),
+        (F.col("g") == F.min("g").over(wp)).alias("first_p"),
+        F.sum("n_pg").over(wg).alias("n_g"),
+        F.count(F.lit(1)).over(wg).alias("parts_g"),
+        (F.col("p") == F.min("p").over(wg)).alias("first_g"),
+    )
+
+
+def cluster_gauges(
+    assignments: DataFrame,
+    *,
+    pred_col: str = "pred",
+    gold_col: str = "gold",
+) -> DataFrame:
+    """ONE row carrying the output columns of ``bcubed``, ``muc``,
+    ``blanc``, ``adjusted_rand`` and ``vmeasure`` over (pred, gold)
+    labeled items (non-null labels; callers filter first), every sum taken
+    from one aggregate over the contingency cells (module docstring).
+    ``n_items`` and ``n`` are both the item count; ARI's ``sum_ij`` /
+    ``sum_a`` / ``sum_b`` equal BLANC's ``rc`` / ``links_pred`` /
+    ``links_gold``. Empty input reports the per-gauge vacuous values."""
+    cells = _contingency(assignments, pred_col, gold_col).crossJoin(
+        F.broadcast(assignments.agg(F.count(F.lit(1)).alias("_n")))
+    )
+
+    def _sum(c: F.Column) -> F.Column:  # empty input ⇒ 0, not NULL
+        return F.coalesce(F.sum(c), F.lit(0)).cast("long")
+
+    def _per_cluster(side: str, c: F.Column) -> F.Column:
+        return _sum(F.when(F.col(f"first_{side}"), c))
+
+    def _c2(c: str) -> F.Column:
+        return F.expr(f"({c} * ({c} - 1)) div 2")
+
+    def _term(cnt: str, marg: str) -> F.Column:
+        # floor((1e6 * cnt * ln(marg / cnt)) / n) — keep this exact
+        # operation order in lockstep with the SQL oracle
+        return F.floor(
+            (
+                F.lit(1000000.0)
+                * F.col(cnt).cast("double")
+                * F.log(F.col(marg).cast("double") / F.col(cnt).cast("double"))
+            )
+            / F.col("_n").cast("double")
+        ).cast("long")
+
+    one = cells.agg(
+        _sum(F.col("n_pg")).alias("n_items"),
+        F.count(F.when(F.col("first_p"), 1)).alias("n_pred_clusters"),
+        F.count(F.when(F.col("first_g"), 1)).alias("n_gold_clusters"),
+        _sum(F.expr(f"n_pg * n_pg * {_MICRO} div n_p")).alias("_psum"),
+        _sum(F.expr(f"n_pg * n_pg * {_MICRO} div n_g")).alias("_rsum"),
+        _per_cluster("g", F.col("n_g") - F.col("parts_g")).alias("muc_r_num"),
+        _per_cluster("g", F.col("n_g") - F.lit(1)).alias("muc_r_den"),
+        _per_cluster("p", F.col("n_p") - F.col("parts_p")).alias("muc_p_num"),
+        _per_cluster("p", F.col("n_p") - F.lit(1)).alias("muc_p_den"),
+        _sum(_c2("n_pg")).alias("rc"),
+        _per_cluster("p", _c2("n_p")).alias("links_pred"),
+        _per_cluster("g", _c2("n_g")).alias("links_gold"),
+        _sum(_term("n_pg", "n_p")).alias("h_gold_given_pred_micro"),
+        _per_cluster("g", _term("n_g", "_n")).alias("h_gold_micro"),
+        _sum(_term("n_pg", "n_g")).alias("h_pred_given_gold_micro"),
+        _per_cluster("p", _term("n_p", "_n")).alias("h_pred_micro"),
+    ).select(
+        "*",
+        F.col("n_items").alias("n"),
+        F.col("rc").alias("sum_ij"),
+        F.col("links_pred").alias("sum_a"),
+        F.col("links_gold").alias("sum_b"),
+        F.expr("(n_items * (n_items - 1)) div 2").cast("long").alias("c2"),
+    )
+
+    _MU = F.lit(_MICRO).cast("long")
+
+    def _micro(num: str, den: str, vacuous: F.Column) -> F.Column:
+        return (
+            F.when(F.expr(den) > 0, F.expr(f"{num} * {_MICRO} div ({den})"))
+            .otherwise(vacuous)
+            .cast("long")
+        )
+
+    def _f1(p: str, r: str) -> F.Column:
+        return (
+            F.when(
+                F.col(p) + F.col(r) > 0,
+                F.expr(f"2 * {p} * {r} div ({p} + {r})"),
+            )
+            .otherwise(F.lit(0))
+            .cast("long")
+        )
+
+    h = F.when(F.col("h_gold_micro") == 0, F.lit(1.0)).otherwise(
+        F.lit(1.0)
+        - F.col("h_gold_given_pred_micro").cast("double")
+        / F.col("h_gold_micro").cast("double")
+    )
+    c = F.when(F.col("h_pred_micro") == 0, F.lit(1.0)).otherwise(
+        F.lit(1.0)
+        - F.col("h_pred_given_gold_micro").cast("double")
+        / F.col("h_pred_micro").cast("double")
+    )
+    one = one.select(
+        "*",
+        F.when(F.col("n_items") > 0, F.expr("_psum div n_items"))
+        .otherwise(_MU)
+        .cast("long")
+        .alias("bcubed_p_micro"),
+        F.when(F.col("n_items") > 0, F.expr("_rsum div n_items"))
+        .otherwise(_MU)
+        .cast("long")
+        .alias("bcubed_r_micro"),
+        _micro("muc_p_num", "muc_p_den", _MU).alias("muc_p_micro"),
+        _micro("muc_r_num", "muc_r_den", _MU).alias("muc_r_micro"),
+        (F.lit(2) * (F.col("c2") * F.col("sum_ij") - F.col("sum_a") * F.col("sum_b")))
+        .cast("long")
+        .alias("ari_num"),
+        (
+            F.col("c2") * (F.col("sum_a") + F.col("sum_b"))
+            - F.lit(2) * F.col("sum_a") * F.col("sum_b")
+        )
+        .cast("long")
+        .alias("ari_den"),
+        (F.col("c2") - F.col("links_pred") - F.col("links_gold") + F.col("rc"))
+        .cast("long")
+        .alias("rn"),
+        h.alias("homogeneity"),
+        c.alias("completeness"),
+    )
+    one = one.select(
+        "*",
+        _f1("bcubed_p_micro", "bcubed_r_micro").alias("bcubed_f_micro"),
+        _f1("muc_p_micro", "muc_r_micro").alias("muc_f_micro"),
+        F.when(
+            F.col("ari_den") != 0,
+            F.col("ari_num").cast("double") / F.col("ari_den").cast("double"),
+        ).alias("ari"),
+        _micro("rc", "links_pred", F.lit(0)).alias("blanc_pc_micro"),
+        _micro("rc", "links_gold", F.lit(0)).alias("blanc_rc_micro"),
+        # the SQL oracle spells the non-link denominators inline too
+        _micro("rn", "c2 - links_pred", F.lit(0)).alias("blanc_pn_micro"),
+        _micro("rn", "c2 - links_gold", F.lit(0)).alias("blanc_rn_micro"),
+        F.when(
+            F.col("homogeneity") + F.col("completeness") == 0, F.lit(0.0)
+        )
+        .otherwise(
+            F.lit(2.0)
+            * F.col("homogeneity")
+            * F.col("completeness")
+            / (F.col("homogeneity") + F.col("completeness"))
+        )
+        .alias("v_measure"),
+    )
+    one = one.select(
+        "*",
+        _f1("blanc_pc_micro", "blanc_rc_micro").alias("blanc_fc_micro"),
+        _f1("blanc_pn_micro", "blanc_rn_micro").alias("blanc_fn_micro"),
+    )
+    return one.drop("_psum", "_rsum").select(
+        "*",
+        F.when(
+            F.col("links_pred") + F.col("links_gold") == 0,
+            F.col("blanc_fn_micro"),
+        )
+        .when(
+            (F.col("c2") - F.col("links_pred"))
+            + (F.col("c2") - F.col("links_gold"))
+            == 0,
+            F.col("blanc_fc_micro"),
+        )
+        .otherwise(F.expr("(blanc_fc_micro + blanc_fn_micro) div 2"))
+        .cast("long")
+        .alias("blanc_micro"),
+    )
 
 
 def bcubed(
@@ -50,54 +248,13 @@ def bcubed(
     integer sum-of-floors (see module docstring). Empty input reports the
     vacuous 10⁶ for all three, mirroring eval/blocking.py's convention.
     """
-    r = records.select(F.col(pred_col).alias("p"), F.col(gold_col).alias("g"))
-    cells = r.groupBy("p", "g").agg(F.count(F.lit(1)).alias("n_pg"))
-    preds = r.groupBy("p").agg(F.count(F.lit(1)).alias("n_p"))
-    golds = r.groupBy("g").agg(F.count(F.lit(1)).alias("n_g"))
-    j = cells.join(preds, "p").join(golds, "g")
-
-    _z = lambda c: F.coalesce(c, F.lit(0))  # empty input ⇒ 0, not NULL
-    agg = j.agg(
-        _z(F.sum("n_pg")).cast("long").alias("n_items"),
-        F.count(F.lit(1)).cast("long").alias("n_cells"),
-        _z(F.sum(F.expr(f"n_pg * n_pg * {_MICRO} div n_p")))
-        .cast("long")
-        .alias("psum"),
-        _z(F.sum(F.expr(f"n_pg * n_pg * {_MICRO} div n_g")))
-        .cast("long")
-        .alias("rsum"),
-    )
-    counts = (
-        preds.agg(F.count(F.lit(1)).cast("long").alias("n_pred_clusters"))
-        .crossJoin(
-            golds.agg(F.count(F.lit(1)).cast("long").alias("n_gold_clusters"))
-        )
-    )
-    out = agg.crossJoin(counts).select(
+    return cluster_gauges(records, pred_col=pred_col, gold_col=gold_col).select(
         "n_items",
         "n_pred_clusters",
         "n_gold_clusters",
-        F.when(F.col("n_items") > 0, F.expr("psum div n_items"))
-        .otherwise(F.lit(_MICRO))
-        .cast("long")
-        .alias("bcubed_p_micro"),
-        F.when(F.col("n_items") > 0, F.expr("rsum div n_items"))
-        .otherwise(F.lit(_MICRO))
-        .cast("long")
-        .alias("bcubed_r_micro"),
-    )
-    return out.select(
-        "*",
-        F.when(
-            F.col("bcubed_p_micro") + F.col("bcubed_r_micro") > 0,
-            F.expr(
-                "2 * bcubed_p_micro * bcubed_r_micro"
-                " div (bcubed_p_micro + bcubed_r_micro)"
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("bcubed_f_micro"),
+        "bcubed_p_micro",
+        "bcubed_r_micro",
+        "bcubed_f_micro",
     )
 
 
@@ -126,65 +283,12 @@ def adjusted_rand(
     when ari_den = 0, i.e. both clusterings are all-singletons or one
     cluster covers everything on both sides — ARI is undefined there).
 
-    Scale shape: three map-combinable group counts (cell, pred marginal,
-    gold marginal) over (pred, gold) label rows — no pair is ever
-    materialized, so the job is linear in items. Bigint bound: c2·sum_ij
-    < 2⁶³ holds through n ≈ 3·10⁹ items; past that, run over a
-    deterministic hash-sample (the metric is a ratio of pair-count
-    moments, sample-stable) — the B³ precedent."""
-    lab = assignments.select(
-        F.col(pred_col).alias("_p"), F.col(gold_col).alias("_g")
-    )
-
-    def _c2(cnt):
-        return F.coalesce(
-            F.sum(F.expr(f"({cnt} * ({cnt} - 1)) div 2")), F.lit(0)
-        ).cast("long")
-
-    cells = (
-        lab.groupBy("_p", "_g")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(_c2("_n").alias("sum_ij"), F.sum("_n").cast("long").alias("n"))
-    )
-    rows_ = (
-        lab.groupBy("_p")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(_c2("_n").alias("sum_a"))
-    )
-    cols_ = (
-        lab.groupBy("_g")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(_c2("_n").alias("sum_b"))
-    )
-    one = cells.crossJoin(F.broadcast(rows_)).crossJoin(F.broadcast(cols_))
-    return one.select(
-        "n",
-        "sum_ij",
-        "sum_a",
-        "sum_b",
-        F.expr("(n * (n - 1)) div 2").cast("long").alias("c2"),
-    ).select(
-        "n",
-        "sum_ij",
-        "sum_a",
-        "sum_b",
-        "c2",
-        (F.lit(2) * (F.col("c2") * F.col("sum_ij") - F.col("sum_a") * F.col("sum_b")))
-        .cast("long")
-        .alias("ari_num"),
-        (
-            F.col("c2") * (F.col("sum_a") + F.col("sum_b"))
-            - F.lit(2) * F.col("sum_a") * F.col("sum_b")
-        )
-        .cast("long")
-        .alias("ari_den"),
-    ).withColumn(
-        "ari",
-        F.when(
-            F.col("ari_den") != 0,
-            F.col("ari_num").cast("double") / F.col("ari_den").cast("double"),
-        ),
-    )
+    Bigint bound: c2·sum_ij < 2⁶³ holds through n ≈ 3·10⁹ items; past
+    that, run over a deterministic hash-sample (the metric is a ratio of
+    pair-count moments, sample-stable) — the B³ precedent."""
+    return cluster_gauges(
+        assignments, pred_col=pred_col, gold_col=gold_col
+    ).select("n", "sum_ij", "sum_a", "sum_b", "c2", "ari_num", "ari_den", "ari")
 
 
 def vmeasure(
@@ -210,93 +314,27 @@ def vmeasure(
         completeness c = 1 − H(pred|gold)/H(pred)   (1 when H(pred) = 0)
         v            = 2hc / (h + c)                (0 when h + c = 0)
 
-    Caveat: the H = 0 branch fires on the MICRO-FLOORED sum, so a
-    near-degenerate marginal whose every term floors to zero (e.g. one
-    gold class of n−1 plus a singleton at n ≈ 10⁸ — true entropy ≈ 2e-7)
-    saturates h (or c) to exactly 1. Cross-engine consistent (the oracle
-    floors identically); if sub-µ entropies matter, raise the µ scale.
-
     from the exact bigint micro sums — single correctly-rounded double
     divisions, bit-identical cross-engine. ONE output row carries the four
     exact entropy sums plus the three derived doubles.
 
-    Scale shape: three map-combinable group counts (cell, pred marginal,
-    gold marginal) + two narrow marginal joins back onto the cell table —
-    no pair materialized, linear in items, the ARI shape exactly."""
-    lab = assignments.select(
-        F.col(pred_col).alias("_p"), F.col(gold_col).alias("_g")
-    )
-    cells = lab.groupBy("_p", "_g").agg(F.count(F.lit(1)).alias("n_ck"))
-    pk = lab.groupBy("_p").agg(F.count(F.lit(1)).alias("n_k"))
-    gk = lab.groupBy("_g").agg(F.count(F.lit(1)).alias("m_c"))
-    n_total = lab.agg(F.count(F.lit(1)).cast("long").alias("n"))
-
-    def _term(cnt: str, marg: str) -> F.Column:
-        # floor((1e6 * cnt * ln(marg / cnt)) / n) — keep this exact
-        # operation order in lockstep with the SQL oracle
-        return F.floor(
-            (
-                F.lit(1000000.0)
-                * F.col(cnt).cast("double")
-                * F.log(F.col(marg).cast("double") / F.col(cnt).cast("double"))
-            )
-            / F.col("n").cast("double")
-        ).cast("long")
-
-    joined = (
-        cells.join(pk, "_p").join(gk, "_g").crossJoin(F.broadcast(n_total))
-    )
-    conds = joined.agg(
-        F.coalesce(F.sum(_term("n_ck", "n_k")), F.lit(0))
-        .cast("long")
-        .alias("h_gold_given_pred_micro"),
-        F.coalesce(F.sum(_term("n_ck", "m_c")), F.lit(0))
-        .cast("long")
-        .alias("h_pred_given_gold_micro"),
-    )
-    h_gold = (
-        gk.crossJoin(F.broadcast(n_total))
-        .agg(F.coalesce(F.sum(_term("m_c", "n")), F.lit(0)).cast("long"))
-        .toDF("h_gold_micro")
-    )
-    h_pred = (
-        pk.crossJoin(F.broadcast(n_total))
-        .agg(F.coalesce(F.sum(_term("n_k", "n")), F.lit(0)).cast("long"))
-        .toDF("h_pred_micro")
-    )
-    one = (
-        n_total.crossJoin(F.broadcast(conds))
-        .crossJoin(F.broadcast(h_gold))
-        .crossJoin(F.broadcast(h_pred))
-    )
-    h = F.when(F.col("h_gold_micro") == 0, F.lit(1.0)).otherwise(
-        F.lit(1.0)
-        - F.col("h_gold_given_pred_micro").cast("double")
-        / F.col("h_gold_micro").cast("double")
-    )
-    c = F.when(F.col("h_pred_micro") == 0, F.lit(1.0)).otherwise(
-        F.lit(1.0)
-        - F.col("h_pred_given_gold_micro").cast("double")
-        / F.col("h_pred_micro").cast("double")
-    )
-    one = one.select(
+    Caveat: the H = 0 branch fires on the MICRO-FLOORED sum, so a
+    near-degenerate marginal whose every term floors to zero (e.g. one
+    gold class of n−1 plus a singleton at n ≈ 10⁸ — true entropy ≈ 2e-7)
+    saturates h (or c) to exactly 1. Cross-engine consistent (the oracle
+    floors identically); if sub-µ entropies matter, raise the µ scale."""
+    return cluster_gauges(
+        assignments, pred_col=pred_col, gold_col=gold_col
+    ).select(
         "n",
         "h_gold_given_pred_micro",
         "h_gold_micro",
         "h_pred_given_gold_micro",
         "h_pred_micro",
-        h.alias("homogeneity"),
-        c.alias("completeness"),
+        "homogeneity",
+        "completeness",
+        "v_measure",
     )
-    v = F.when(
-        F.col("homogeneity") + F.col("completeness") == 0, F.lit(0.0)
-    ).otherwise(
-        F.lit(2.0)
-        * F.col("homogeneity")
-        * F.col("completeness")
-        / (F.col("homogeneity") + F.col("completeness"))
-    )
-    return one.select("*", v.alias("v_measure"))
 
 
 def muc(
@@ -325,66 +363,18 @@ def muc(
     micro values are floor(num · 10⁶ / den) single integer divisions, and
     F1 is the harmonic mean of the two micros in integers — bit-identical
     on any engine. A zero denominator (that side is all singletons: no
-    links to get right) reports the vacuous 10⁶, the module's convention.
-
-    Scale shape: the B³ shape exactly — one (pred, gold) cell count and
-    two marginal counts, all map-side combinable; parts(·) per marginal is
-    a count over cell rows, never a pair; linear in items."""
-    r = assignments.select(
-        F.col(pred_col).alias("_p"), F.col(gold_col).alias("_g")
-    )
-    cells = r.groupBy("_p", "_g").agg(F.count(F.lit(1)).alias("n_pg"))
-    # per gold cluster: size and the number of pred parts it shatters into
-    by_g = cells.groupBy("_g").agg(
-        F.sum("n_pg").alias("n_g"), F.count(F.lit(1)).alias("parts_g")
-    )
-    by_p = cells.groupBy("_p").agg(
-        F.sum("n_pg").alias("n_p"), F.count(F.lit(1)).alias("parts_p")
-    )
-    _z = lambda c: F.coalesce(c, F.lit(0)).cast("long")
-    rsums = by_g.agg(
-        _z(F.sum("n_g")).alias("n_items"),
-        _z(F.sum(F.col("n_g") - F.col("parts_g"))).alias("muc_r_num"),
-        _z(F.sum(F.col("n_g") - F.lit(1))).alias("muc_r_den"),
-    )
-    psums = by_p.agg(
-        _z(F.sum(F.col("n_p") - F.col("parts_p"))).alias("muc_p_num"),
-        _z(F.sum(F.col("n_p") - F.lit(1))).alias("muc_p_den"),
-    )
-    _MU = F.lit(_MICRO).cast("long")
-    one = rsums.crossJoin(F.broadcast(psums)).select(
+    links to get right) reports the vacuous 10⁶, the module's convention."""
+    return cluster_gauges(
+        assignments, pred_col=pred_col, gold_col=gold_col
+    ).select(
         "n_items",
         "muc_r_num",
         "muc_r_den",
         "muc_p_num",
         "muc_p_den",
-        F.when(
-            F.col("muc_p_den") > 0,
-            F.expr(f"muc_p_num * {_MICRO} div muc_p_den"),
-        )
-        .otherwise(_MU)
-        .cast("long")
-        .alias("muc_p_micro"),
-        F.when(
-            F.col("muc_r_den") > 0,
-            F.expr(f"muc_r_num * {_MICRO} div muc_r_den"),
-        )
-        .otherwise(_MU)
-        .cast("long")
-        .alias("muc_r_micro"),
-    )
-    return one.select(
-        "*",
-        F.when(
-            F.col("muc_p_micro") + F.col("muc_r_micro") > 0,
-            F.expr(
-                "2 * muc_p_micro * muc_r_micro"
-                " div (muc_p_micro + muc_r_micro)"
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("muc_f_micro"),
+        "muc_p_micro",
+        "muc_r_micro",
+        "muc_f_micro",
     )
 
 
@@ -426,104 +416,22 @@ def blanc(
     n ≤ ~4·10⁶ items; beyond that run over a deterministic hash-sample
     (the B³/ARI precedent — every term is a ratio of pair-count moments,
     sample-stable)."""
-    lab = assignments.select(
-        F.col(pred_col).alias("_p"), F.col(gold_col).alias("_g")
-    )
-
-    def _c2(cnt):
-        return F.coalesce(
-            F.sum(F.expr(f"({cnt} * ({cnt} - 1)) div 2")), F.lit(0)
-        ).cast("long")
-
-    cells = (
-        lab.groupBy("_p", "_g")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(
-            _c2("_n").alias("rc"),
-            F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("n"),
-        )
-    )
-    rows_ = (
-        lab.groupBy("_p")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(_c2("_n").alias("links_pred"))
-    )
-    cols_ = (
-        lab.groupBy("_g")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(_c2("_n").alias("links_gold"))
-    )
-    one = (
-        cells.crossJoin(F.broadcast(rows_))
-        .crossJoin(F.broadcast(cols_))
-        .select(
-            "n",
-            "rc",
-            "links_pred",
-            "links_gold",
-            F.expr("(n * (n - 1)) div 2").cast("long").alias("c2"),
-        )
-        .select(
-            "*",
-            (F.col("c2") - F.col("links_pred") - F.col("links_gold") + F.col("rc"))
-            .cast("long")
-            .alias("rn"),
-        )
-    )
-
-    def _micro(num, den):
-        return (
-            F.when(
-                F.expr(den) > 0, F.expr(f"{num} * {_MICRO} div ({den})")
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-        )
-
-    def _f1(p, r):
-        return (
-            F.when(
-                F.col(p) + F.col(r) > 0,
-                F.expr(f"2 * {p} * {r} div ({p} + {r})"),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-        )
-
-    one = one.select(
-        "*",
-        _micro("rc", "links_pred").alias("blanc_pc_micro"),
-        _micro("rc", "links_gold").alias("blanc_rc_micro"),
+    return cluster_gauges(
+        assignments, pred_col=pred_col, gold_col=gold_col
     ).select(
-        "*",
-        _micro("rn", "c2 - links_pred").alias("blanc_pn_micro"),
-        _micro("rn", "c2 - links_gold").alias("blanc_rn_micro"),
-    )
-    # DuckDB cannot divide by an expression alias inside div cleanly the
-    # same way, so the non-link denominators above are spelled inline in
-    # the oracle too (kept in lockstep by the clustering_blanc row)
-    one = one.select(
-        "*",
-        _f1("blanc_pc_micro", "blanc_rc_micro").alias("blanc_fc_micro"),
-        _f1("blanc_pn_micro", "blanc_rn_micro").alias("blanc_fn_micro"),
-    )
-    return one.select(
-        "*",
-        F.when(
-            F.col("links_pred") + F.col("links_gold") == 0,
-            F.col("blanc_fn_micro"),
-        )
-        .when(
-            (F.col("c2") - F.col("links_pred"))
-            + (F.col("c2") - F.col("links_gold"))
-            == 0,
-            F.col("blanc_fc_micro"),
-        )
-        .otherwise(
-            F.expr("(blanc_fc_micro + blanc_fn_micro) div 2")
-        )
-        .cast("long")
-        .alias("blanc_micro"),
+        "n",
+        "rc",
+        "links_pred",
+        "links_gold",
+        "c2",
+        "rn",
+        "blanc_pc_micro",
+        "blanc_rc_micro",
+        "blanc_pn_micro",
+        "blanc_rn_micro",
+        "blanc_fc_micro",
+        "blanc_fn_micro",
+        "blanc_micro",
     )
 
 

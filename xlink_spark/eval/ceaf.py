@@ -21,9 +21,16 @@ problem. The engine-friendly observation: φ is nonzero ONLY on overlapping
 of the bipartite cluster-overlap graph, and a good clustering's components
 are tiny (a perfect one's are 1×1). Distributed shape:
 
-1. contingency cells (pred, gold, n_pg) + marginal sizes — the B³ counts;
+1. contingency cells (pred, gold, n_pg) with marginal sizes and per-cluster
+   cell counts — the closed-form gauges' table (eval/bcubed.py). A cell
+   that is the only cell of both its clusters (parts_p = parts_g = 1) is an
+   isolated 1×1 component whose optimum is the cell itself (w3 = n_pg,
+   w4 = floor(2·n_pg·10⁶ / (n_p + n_g))). ONE driver action returns the
+   counts, these trivial sums and the number of ENTANGLED cells (the rest);
+   steps 2-3 run over the entangled cells only, and not at all when there
+   are none — a perfect clustering costs one aggregation;
 2. bipartite connected components over DISTINCT cluster pairs via the
-   existing large-star/small-star operator (operators/cluster.py:66),
+   existing large-star/small-star operator (cluster.connected_components),
    node-encoded 2·pred / 2·gold+1 (labels must be bigints, |label| < 2⁶²);
 3. per component, an exact subset-DP over response-cluster bitmasks:
    gold clusters are ranked 0..k−1 (dense_rank per component — skew-safe,
@@ -35,6 +42,10 @@ are tiny (a perfect one's are 1×1). Distributed shape:
    connected-components precedent), lineage truncated via localCheckpoint.
    Both φ totals ride ONE loop: per-(component, mask) max distributes over
    each weight column independently, so two DPs share every shuffle.
+
+The totals are the trivial sums plus the DP optimum of the entangled
+components — the optimum decomposes over components, so this equals the
+DP over all of them by construction.
 
 Exactness: φ3 is a pure bigint count; φ4 is the documented floor-micro
 sum — each edge carries floor(2·n_pg·10⁶ / (n_p + n_g)) and the DP
@@ -48,8 +59,9 @@ Guards (exact DP, exponential in component width): components wider than
 than ``max_gold_per_component`` gold clusters raise ValueError — at that
 entanglement CEAF's alignment is ill-conditioned anyway; run over a
 deterministic hash-sample (operators/sampling.py), the family's documented
-fallback. The guard shares the one tiny driver action the level loop
-already needs (the global level count).
+fallback. A 1×1 component spans one cluster per side; the entangled
+widths share the one tiny driver action the level loop already needs (the
+global level count).
 """
 
 from __future__ import annotations
@@ -58,6 +70,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from xlink_spark.eval.bcubed import _contingency
 from xlink_spark.operators.cluster import connected_components
 from xlink_spark.plans.storage import cut
 
@@ -82,31 +95,123 @@ def ceaf(
     ceafe_f_micro`` — micro values floor(x·10⁶) in bigint arithmetic (see
     module docstring). Empty input reports the vacuous 10⁶, the family
     convention. NOTE: unlike the closed-form gauges, plan construction
-    runs Spark jobs (the component loop — the connected_components
-    precedent).
+    runs Spark jobs (one over the cells, plus the component loop when a
+    component is entangled — the connected_components precedent).
     """
     if max_pred_per_component > 62:
         raise ValueError("max_pred_per_component exceeds the 62-bit mask bound")
-    lab = assignments.select(
-        F.col(pred_col).cast("long").alias("_p"),
-        F.col(gold_col).cast("long").alias("_g"),
-    )
-    cells = lab.groupBy("_p", "_g").agg(F.count(F.lit(1)).alias("n_pg"))
-    psz = cells.groupBy("_p").agg(F.sum("n_pg").alias("n_p"))
-    gsz = cells.groupBy("_g").agg(F.sum("n_pg").alias("n_g"))
-    wcell = (
-        cells.join(psz, "_p")
-        .join(gsz, "_g")
-        .select(
+    # LAZY cut: the one action below materializes the cells, the entangled
+    # pass rereads them
+    cells = cut(
+        _contingency(
+            assignments.select(
+                F.col(pred_col).cast("long").alias("_p"),
+                F.col(gold_col).cast("long").alias("_g"),
+            ),
             "_p",
             "_g",
-            F.col("n_pg").cast("long").alias("w3"),
-            F.expr(f"2 * n_pg * {_MICRO} div (n_p + n_g)")
+        ),
+        eager=False,
+    )
+    # a cell alone in both of its clusters is an isolated 1×1 component:
+    # its optimum alignment is the cell itself
+    trivial = (F.col("parts_p") == 1) & (F.col("parts_g") == 1)
+    w4 = F.expr(f"2 * n_pg * {_MICRO} div (n_p + n_g)").cast("long")
+    s = cells.agg(
+        F.coalesce(F.sum("n_pg"), F.lit(0)).cast("long").alias("n_items"),
+        F.count(F.when(F.col("first_p"), 1)).alias("n_pred_clusters"),
+        F.count(F.when(F.col("first_g"), 1)).alias("n_gold_clusters"),
+        F.coalesce(F.sum(F.when(trivial, F.col("n_pg"))), F.lit(0)).alias("t3"),
+        F.coalesce(F.sum(F.when(trivial, w4)), F.lit(0)).alias("t4"),
+        F.count(F.when(trivial, 1)).alias("n_trivial"),
+        F.count(F.when(~trivial, 1)).alias("n_entangled"),
+    ).collect()[0]
+
+    # a 1×1 component spans one cluster per side
+    gold_max = pred_max = min(s["n_trivial"], 1)
+    if s["n_entangled"]:
+        ranked, kmax, g, p = _entangled_components(
+            cells.filter(~trivial).select(
+                F.col("p").alias("_p"),
+                F.col("g").alias("_g"),
+                F.col("n_pg").cast("long").alias("w3"),
+                w4.alias("w4"),
+            )
+        )
+        gold_max, pred_max = max(gold_max, g), max(pred_max, p)
+    if pred_max > max_pred_per_component:
+        raise ValueError(
+            f"a component spans {pred_max} response clusters "
+            f"(> max_pred_per_component={max_pred_per_component}); "
+            "run CEAF over a deterministic hash-sample"
+        )
+    if gold_max > max_gold_per_component:
+        raise ValueError(
+            f"a component spans {gold_max} gold clusters "
+            f"(> max_gold_per_component={max_gold_per_component}); "
+            "run CEAF over a deterministic hash-sample"
+        )
+    if s["n_entangled"]:
+        opt = _subset_dp(ranked, kmax, checkpoint_every)
+    else:
+        opt = cells.sparkSession.range(1).select(
+            F.lit(0).alias("b3"), F.lit(0).alias("b4")
+        )
+
+    _MU = F.lit(_MICRO).cast("long")
+
+    def _micro(num: str, den: str) -> F.Column:
+        return (
+            F.when(F.col(den) > 0, F.expr(f"{num} div {den}"))
+            .otherwise(_MU)
             .cast("long")
-            .alias("w4"),
+        )
+
+    def _f1(p: str, r: str) -> F.Column:
+        return (
+            F.when(
+                F.col(p) + F.col(r) > 0,
+                F.expr(f"2 * {p} * {r} div ({p} + {r})"),
+            )
+            .otherwise(F.lit(0))
+            .cast("long")
+        )
+
+    one = (
+        opt.select(
+            *(
+                F.lit(s[c]).cast("long").alias(c)
+                for c in ("n_items", "n_pred_clusters", "n_gold_clusters")
+            ),
+            (F.lit(s["t3"]) + F.col("b3")).cast("long").alias("phi3_total"),
+            (F.lit(s["t4"]) + F.col("b4")).cast("long").alias("phi4_micro_total"),
+        )
+        .withColumn("_m3", (F.col("phi3_total") * _MU).cast("long"))
+        .select(
+            "n_items",
+            "n_pred_clusters",
+            "n_gold_clusters",
+            "phi3_total",
+            "phi4_micro_total",
+            _micro("_m3", "n_items").alias("ceafm_p_micro"),
+            _micro("_m3", "n_items").alias("ceafm_r_micro"),
+            _micro("phi4_micro_total", "n_pred_clusters").alias("ceafe_p_micro"),
+            _micro("phi4_micro_total", "n_gold_clusters").alias("ceafe_r_micro"),
         )
     )
+    return one.select(
+        "*",
+        _f1("ceafm_p_micro", "ceafm_r_micro").alias("ceafm_f_micro"),
+        _f1("ceafe_p_micro", "ceafe_r_micro").alias("ceafe_f_micro"),
+    )
 
+
+def _entangled_components(
+    wcell: DataFrame,
+) -> tuple[DataFrame, int, int, int]:
+    """(_p, _g, w3, w4) cells of entangled components → the cut, ranked
+    DP input (component, _flip, li, mbit, w3, w4), the oriented level count
+    and the widest component's gold and response cluster counts."""
     # bipartite overlap components over DISTINCT cluster pairs — the graph
     # is cluster-grain (≤ one node per cluster), not item-grain
     edges = wcell.select(
@@ -174,9 +279,9 @@ def ceaf(
     ranked = cut(ranked, eager=False)
 
     # ONE tiny driver action on the checkpointed frame: the oriented
-    # level count plus the width guards (guards on the UNFLIPPED dims —
+    # level count plus the widths the guards check (on the UNFLIPPED dims —
     # unchanged acceptance; levels on the oriented ones)
-    stats = (
+    st = (
         ranked.groupBy("component", "_flip")
         .agg(F.max("li").alias("kl"), F.max("mbit").alias("km"))
         .agg(
@@ -188,28 +293,14 @@ def ceaf(
                 F.when(F.col("_flip"), F.col("kl")).otherwise(F.col("km"))
             ).alias("kp0"),
         )
-        .collect()
+        .collect()[0]
     )
-    kmax = (stats[0]["kl"] + 1) if stats and stats[0]["kl"] is not None else 0
-    gold_max = (
-        (stats[0]["kg0"] + 1) if stats and stats[0]["kg0"] is not None else 0
-    )
-    pred_max = (
-        (stats[0]["kp0"] + 1) if stats and stats[0]["kp0"] is not None else 0
-    )
-    if pred_max > max_pred_per_component:
-        raise ValueError(
-            f"a component spans {pred_max} response clusters "
-            f"(> max_pred_per_component={max_pred_per_component}); "
-            "run CEAF over a deterministic hash-sample"
-        )
-    if gold_max > max_gold_per_component:
-        raise ValueError(
-            f"a component spans {gold_max} gold clusters "
-            f"(> max_gold_per_component={max_gold_per_component}); "
-            "run CEAF over a deterministic hash-sample"
-        )
+    return ranked, st["kl"] + 1, st["kg0"] + 1, st["kp0"] + 1
 
+
+def _subset_dp(ranked: DataFrame, kmax: int, checkpoint_every: int) -> DataFrame:
+    """The one-row (b3, b4) optimum of the ranked entangled components:
+    the per-component maxima of both φ totals, summed."""
     # subset-DP, both φ totals on one state table: per-(component, mask)
     # max distributes over each weight column independently
     dp = (
@@ -253,59 +344,7 @@ def ceaf(
     per_comp = dp.groupBy("component").agg(
         F.max("best3").alias("b3"), F.max("best4").alias("b4")
     )
-    totals = per_comp.agg(
-        F.coalesce(F.sum("b3"), F.lit(0)).cast("long").alias("phi3_total"),
-        F.coalesce(F.sum("b4"), F.lit(0)).cast("long").alias("phi4_micro_total"),
-    )
-    counts = (
-        lab.agg(F.count(F.lit(1)).cast("long").alias("n_items"))
-        .crossJoin(
-            F.broadcast(
-                psz.agg(F.count(F.lit(1)).cast("long").alias("n_pred_clusters"))
-            )
-        )
-        .crossJoin(
-            F.broadcast(
-                gsz.agg(F.count(F.lit(1)).cast("long").alias("n_gold_clusters"))
-            )
-        )
-    )
-    _MU = F.lit(_MICRO).cast("long")
-
-    def _micro(num: str, den: str) -> F.Column:
-        return (
-            F.when(F.col(den) > 0, F.expr(f"{num} div {den}"))
-            .otherwise(_MU)
-            .cast("long")
-        )
-
-    def _f1(p: str, r: str) -> F.Column:
-        return (
-            F.when(
-                F.col(p) + F.col(r) > 0,
-                F.expr(f"2 * {p} * {r} div ({p} + {r})"),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-        )
-
-    one = (
-        counts.crossJoin(F.broadcast(totals))
-        .withColumn("_m3", (F.col("phi3_total") * _MU).cast("long"))
-        .select(
-            "n_items",
-            "n_pred_clusters",
-            "n_gold_clusters",
-            "phi3_total",
-            "phi4_micro_total",
-            _micro("_m3", "n_items").alias("ceafm_p_micro"),
-            _micro("_m3", "n_items").alias("ceafm_r_micro"),
-            _micro("phi4_micro_total", "n_pred_clusters").alias("ceafe_p_micro"),
-            _micro("phi4_micro_total", "n_gold_clusters").alias("ceafe_r_micro"),
-        )
-    )
-    return one.select(
-        "*",
-        _f1("ceafm_p_micro", "ceafm_r_micro").alias("ceafm_f_micro"),
-        _f1("ceafe_p_micro", "ceafe_r_micro").alias("ceafe_f_micro"),
+    return per_comp.agg(
+        F.coalesce(F.sum("b3"), F.lit(0)).alias("b3"),
+        F.coalesce(F.sum("b4"), F.lit(0)).alias("b4"),
     )

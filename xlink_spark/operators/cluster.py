@@ -71,6 +71,16 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out
 
 
+def _signature(edges: DataFrame) -> tuple[int, int]:
+    """Cheap convergence signature of an edge set: count + xor of hashes
+    (order-free, overflow-free under ANSI mode)."""
+    sig = edges.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
+    ).collect()[0]
+    return sig["n"], sig["h"]
+
+
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
@@ -92,15 +102,18 @@ def connected_components(
         last = store.last_iteration(stage)
         if last is not None:
             start_iter, cur, resumed = last[0] + 1, last[1](spark), True
-    # eager: the first large-star consumes cur on BOTH union branches, so
-    # the blocks must exist before the loop's first job
-    cur = cut(cur, eager=True)
+    # the first large-star consumes cur on BOTH union branches, so the
+    # blocks must exist before the loop's first job: the signature of cur
+    # materializes them, and seeds the convergence check — an input that
+    # is already a fixed point (a star forest rooted at each component
+    # minimum, e.g. all 2-node components) stops after round 1
+    cur = cut(cur, eager=False)
+    prev_sig = _signature(cur)
     # the canonical INPUT edges (full original node set), reused by the
     # roots pass below — only valid when the loop started from the input,
     # not from a resumed mid-run snapshot
     cur0 = None if resumed else cur
 
-    prev_sig = None
     for it in range(start_iter, max_iterations):
         # large-star output feeds small-star WITHOUT an intermediate
         # distinct: duplicates cannot multiply through the window-min
@@ -117,13 +130,7 @@ def connected_components(
         # is driver/job-overhead-bound, so this halves the round cost;
         # at cluster scale it removes one full pass over the edge state.
         small = cut(_canonical(_small_star(big)), eager=False)
-        # cheap convergence signature: count + xor of hashes (order-free,
-        # overflow-free under ANSI mode)
-        sig = small.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        sig = (sig["n"], sig["h"])
+        sig = _signature(small)
         if store is not None:
             store.commit(stage, it, small, metrics={"edges": sig[0]})
         cur = small

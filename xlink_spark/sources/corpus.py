@@ -6,10 +6,15 @@ brackets, resolves each doc to its entity via the URI index with a
 full-title fallback (J2), rewrites ``[[mention|url]]`` anchors to
 ``[[entity_id|mention]]``, and counts rejects (error_no).
 
+Input contract: the content's anchors must ALREADY be in the standardized
+``[[entity_id|mention]]`` form (SURVEY S1). Every ``[[a|b]]`` is read as
+``entity_id=a, surface=b``; the reference's ``[[mention|url]]`` rewrite
+through the URI index is not built, so a raw dump in that form would yield
+anchors whose entity id is the mention text.
+
 Spark redesign: spark.read.text → split on the double-tab separator →
 quarantine_split on validity predicates → broadcast joins against kb_uris /
-kb_entities → JVM-side anchor-URL rewrite → parse_markup_to_spans. One scan,
-no Python.
+kb_entities (doc → entity) → parse_markup_to_spans. One scan, no Python.
 """
 
 from __future__ import annotations
